@@ -111,3 +111,29 @@ def sketch_from_bytes(data: bytes):
     if cls is None:
         raise ValueError(f"unknown sketch type id {type_id}")
     return cls._from_parts(header, payload)
+
+
+def fold_blobs(blobs, context: str | None = None):
+    """Deserialize and merge sketch blobs into ONE sketch, in the order
+    given — the single fold behind every merge path (partial merge,
+    rollup, incremental update, SQL ``sketch_merge``, heavy hitters).
+
+    The caller owns the order: lattice sketches (Bloom/HLL/CMS/theta)
+    merge bitwise-identically under any order, but the lossy quantile
+    sketches (KLL/t-digest) do not, so each entry point passes its
+    blobs already sorted by its documented total order. A kernel
+    ``ValueError`` (incompatible params, corrupt blob) is re-raised
+    with ``context`` prefixed when one is given."""
+    it = iter(blobs)
+    first = next(it, None)
+    if first is None:
+        raise ValueError("fold_blobs needs at least one blob")
+    sk = sketch_from_bytes(bytes(first))
+    for blob in it:
+        try:
+            sk.merge(sketch_from_bytes(bytes(blob)))
+        except ValueError as e:
+            if context:
+                raise ValueError(f"{context}: {e}") from e
+            raise
+    return sk

@@ -40,7 +40,7 @@ from sketchlib.core.cms import CountMinSketch
 from sketchlib.core.sample import WeightedBottomKSample
 from sketchlib.core.countsketch import CountSketch
 from sketchlib.core.params import bloom_params
-from sketchlib.core.serde import sketch_from_bytes
+from sketchlib.core.serde import fold_blobs
 from sketchlib.spark.specs import SketchSpec
 
 
@@ -290,18 +290,59 @@ def build_partials(df: DataFrame, group_cols: list[str],
     return sel.mapInPandas(fn, schema)
 
 
-def _merged_schema(partials: DataFrame, group_cols: list[str]) -> StructType:
-    return StructType(_group_fields(partials, group_cols) + [
+def _table_schema(df: DataFrame, group_cols: list[str],
+                  readout: list | None = None) -> StructType:
+    """The sketch-table shape every merge path emits:
+    (group_cols..., sketch_name, sketch, n_rows, n_partials) plus one
+    column per ``readout`` entry."""
+    from pyspark.sql.types import _parse_datatype_string
+    return StructType(_group_fields(df, group_cols) + [
         StructField("sketch_name", StringType(), False),
         StructField("sketch", BinaryType(), False),
         StructField("n_rows", LongType(), False),
         StructField("n_partials", LongType(), False),
-    ])
+    ] + [StructField(col, _parse_datatype_string(dtype), True)
+         for col, dtype, _fn in readout or ()])
 
 
-def _parse_dtype(dtype: str):
-    from pyspark.sql.types import _parse_datatype_string
-    return _parse_datatype_string(dtype)
+def _table_row(keys: list[str], readout: list | None = None):
+    """The ``_group_fold`` emit that writes one ``_table_schema`` row:
+    group ``key`` (values of ``keys``, sketch_name last) folded into
+    ``sk`` from its input rows ``pdf``. Raw partials carry no
+    n_partials column and count one each; merged inputs sum theirs.
+    ``readout=[(col, dtype, fn), ...]`` appends ``fn(sketch_name, sk)``
+    per entry, computed right after the fold in the same task."""
+    def emit(key, sk, pdf: pd.DataFrame) -> pd.DataFrame:
+        row = {c: [v] for c, v in zip(keys, key)}
+        row.update(sketch=[sk.to_bytes()], n_rows=[int(pdf["n_rows"].sum())],
+                   n_partials=[int(pdf["n_partials"].sum())
+                               if "n_partials" in pdf else len(pdf)])
+        for col, _dtype, fn in readout or ():
+            row[col] = [fn(key[-1], sk)]
+        return pd.DataFrame(row)
+    return emit
+
+
+def _group_fold(blob_col: str, emit, by=None, ascending=True, context=None):
+    """Per-group merge task: stable-sort the group's rows by ``by`` (the
+    entry point's fold order; None keeps arrival order), fold
+    ``blob_col`` with ``fold_blobs`` and return ``emit(key, sketch,
+    sorted_rows)``. ``context(key)`` prefixes kernel merge errors."""
+    def fn(key, pdf):
+        if by:
+            pdf = pdf.sort_values(by, ascending=ascending, kind="stable")
+        sk = fold_blobs(pdf[blob_col], context(key) if context else None)
+        return emit(key, sk, pdf)
+    return fn
+
+
+def _merge_groups(df: DataFrame, keys: list[str], schema: StructType,
+                  blob_col: str, emit, by=None, ascending=True,
+                  context=None) -> DataFrame:
+    """``groupBy(keys).applyInPandas`` of one ``_group_fold`` task per
+    group — the shuffle merge shared by every merge entry point."""
+    return df.groupBy(*keys).applyInPandas(
+        _group_fold(blob_col, emit, by, ascending, context), schema)
 
 
 def merge_partials(partials: DataFrame, group_cols: list[str],
@@ -342,37 +383,10 @@ def merge_partials(partials: DataFrame, group_cols: list[str],
     if fanout == "auto":
         nparts = partials.rdd.getNumPartitions()
         fanout = _auto_fanout(nparts)
-    out_schema = _merged_schema(partials, group_cols)
-    if readout is not None:
-        out_schema = StructType(out_schema.fields + [
-            StructField(col, _parse_dtype(dtype), True)
-            for col, dtype, _fn in readout])
+    out_schema = _table_schema(partials, group_cols, readout)
     keys = [*group_cols, "sketch_name"]
-
-    def _fold_sorted(pdf):
-        """Deterministic fold shared by both merge levels."""
-        pdf = pdf.sort_values(["partition_id", "chunk"], kind="stable")
-        sk = sketch_from_bytes(bytes(pdf["partial"].iloc[0]))
-        for blob in pdf["partial"].iloc[1:]:
-            sk.merge(sketch_from_bytes(bytes(blob)))
-        return sk, pdf
-
-    def merge_fn(key, pdf):
-        sk, pdf = _fold_sorted(pdf)
-        extra = {}
-        if readout is not None:
-            name = key[len(keys) - 1]
-            for col, _dtype, fn in readout:
-                extra[col] = [fn(name, sk)]
-        return pd.DataFrame({
-            **{c: [key[i]] for i, c in enumerate(keys)},
-            "sketch": [sk.to_bytes()],
-            "n_rows": [int(pdf["n_rows"].sum())],
-            "n_partials": [int(pdf["n_partials"].sum()) if "n_partials" in pdf
-                           else len(pdf)],
-            **extra,
-        })
-
+    order = ["partition_id", "chunk"]
+    final_row = _table_row(keys, readout)
     plan = list(fanout) if isinstance(fanout, (list, tuple)) else \
         ([int(fanout)] if fanout and fanout > 1 else [])
     if not plan and nparts is None:
@@ -384,21 +398,21 @@ def merge_partials(partials: DataFrame, group_cols: list[str],
         # Exchange, no extra stage wave: it pipelines with the partial
         # build in the same task (measurably faster on small inputs,
         # where the shuffle stage latency dominates the whole query).
-        # Fold order is the same (partition_id, chunk) sort, so the
-        # result is bitwise-identical to the shuffle path.
+        # Same per-group task and (partition_id, chunk) order as the
+        # shuffle path, so the result is bitwise-identical to it.
         #
         # Memory shape: batches accumulate per GROUP and each group is
         # folded (and its accumulation freed) independently, so the
-        # transient is all partial blobs once plus ONE group's frame —
-        # never a single concat of every group's dense partials. For
-        # inputs where even that is too much (a large checkpoint store
-        # read back as one partition), callers pass allow_narrow=False
-        # and take the shuffle path, which holds one group per task.
+        # transient is all partial blobs once plus ONE group's frame.
+        # For inputs where even that is too much (a large checkpoint
+        # store read back as one partition), callers pass
+        # allow_narrow=False and take the shuffle path, which holds
+        # one group per task.
+        fold = _group_fold("partial", final_row, by=order)
+
         def fold_partition(batches):
             groups: dict = {}
             for pdf in batches:
-                if not len(pdf):
-                    continue
                 for key, sub in pdf.groupby(keys, sort=False, dropna=False):
                     if not isinstance(key, tuple):
                         key = (key,)
@@ -407,65 +421,31 @@ def merge_partials(partials: DataFrame, group_cols: list[str],
                     # spanning multiple Arrow batches would otherwise
                     # split into duplicate partial rows (review r5)
                     groups.setdefault(_norm_nan(key), []).append(sub)
-            if not groups:
-                return
-            out = []
-            for key in list(groups):
-                sub = pd.concat(groups.pop(key), ignore_index=True)
-                out.append(merge_fn(key, sub))
-            yield pd.concat(out, ignore_index=True)
+            if groups:
+                yield pd.concat([fold(key, pd.concat(groups.pop(key),
+                                                     ignore_index=True))
+                                 for key in list(groups)], ignore_index=True)
 
         return partials.mapInPandas(fold_partition, out_schema)
 
-    if plan:
-        mid_schema = StructType(_group_fields(partials, group_cols) + [
-            StructField("sketch_name", StringType(), False),
-            StructField("partial", BinaryType(), False),
-            StructField("n_rows", LongType(), False),
-            StructField("partition_id", IntegerType(), False),
-            StructField("chunk", IntegerType(), False),
-            StructField("n_partials", LongType(), False),
-        ])
+    level_schema = StructType(_partials_schema(partials, group_cols).fields
+                              + [StructField("n_partials", LongType(), False)])
 
-        def level_fn(key, pdf, bucket):
-            sk, pdf = _fold_sorted(pdf)
-            return pd.DataFrame({
-                **{c: [key[i]] for i, c in enumerate(keys)},
-                "partial": [sk.to_bytes()],
-                "n_rows": [int(pdf["n_rows"].sum())],
-                # bucket index becomes next level's partition_id: the
-                # fold order at every level is then a pure function of
-                # the tree shape, not of task scheduling
-                "partition_id": [int(bucket)],
-                "chunk": [0],
-                "n_partials": [int(pdf["n_partials"].sum())
-                               if "n_partials" in pdf else len(pdf)],
-            })
+    def level_row(key, sk, pdf):
+        # the bucket index (last key) becomes the next level's
+        # partition_id: the fold order at every level is then a pure
+        # function of the tree shape, not of task scheduling
+        return (_table_row(keys)(key[:-1], sk, pdf)
+                .rename(columns={"sketch": "partial"})
+                .assign(partition_id=int(key[-1]), chunk=0))
 
-        level = partials
-        for buckets in plan:
-            salted = level.withColumn(
-                "salt", F.pmod(F.col("partition_id"), F.lit(int(buckets))))
-            level = (salted.groupBy(*keys, "salt")
-                     .applyInPandas(lambda k, p: level_fn(k[:-1], p, k[-1]),
-                                    mid_schema))
-        return level.groupBy(*keys).applyInPandas(merge_fn, out_schema)
-
-    return partials.groupBy(*keys).applyInPandas(merge_fn, out_schema)
-
-
-def _fold_blobs(pdf: pd.DataFrame, context: str | None = None):
-    """Deserialize + fold-merge one group's sketch blobs (shared by
-    rollup_sketches and incremental_update merge tasks)."""
-    sk = sketch_from_bytes(bytes(pdf["sketch"].iloc[0]))
-    for blob in pdf["sketch"].iloc[1:]:
-        try:
-            sk.merge(sketch_from_bytes(bytes(blob)))
-        except ValueError as e:
-            if context:
-                raise ValueError(f"{context}: {e}") from e
-            raise
-    return sk
+    for buckets in plan:
+        salted = partials.withColumn(
+            "salt", F.pmod(F.col("partition_id"), F.lit(int(buckets))))
+        partials = _merge_groups(salted, [*keys, "salt"], level_schema,
+                                 "partial", level_row, by=order)
+    return _merge_groups(partials, keys, out_schema, "partial", final_row,
+                         by=order)
 
 
 def rollup_sketches(sketches: DataFrame, from_cols: list[str],
@@ -496,42 +476,16 @@ def rollup_sketches(sketches: DataFrame, from_cols: list[str],
         raise ValueError(f"to_cols {missing} not in from_cols {from_cols}")
     dropped = [c for c in from_cols if c not in to_cols]
     keys = [*to_cols, "sketch_name"]
-    out_schema = StructType(_group_fields(sketches, to_cols) + [
-        StructField("sketch_name", StringType(), False),
-        StructField("sketch", BinaryType(), False),
-        StructField("n_rows", LongType(), False),
-        StructField("n_partials", LongType(), False),
-    ])
-    if readout is not None:
-        out_schema = StructType(out_schema.fields + [
-            StructField(col, _parse_dtype(dtype), True)
-            for col, dtype, _fn in readout])
-
-    def merge_fn(key, pdf):
-        if dropped:
-            pdf = pdf.sort_values(dropped, kind="stable")
-        # e.g. per-group Bloom params: each fine group has its own
-        # (m, k), so states across the dropped key cannot merge
-        sk = _fold_blobs(pdf, context=(
+    # e.g. per-group Bloom params: each fine group has its own (m, k),
+    # so states across the dropped key cannot merge
+    return _merge_groups(
+        sketches, keys, _table_schema(sketches, to_cols, readout), "sketch",
+        _table_row(keys, readout), by=dropped, context=lambda key: (
             f"cannot roll up group {key}: states across the dropped "
             f"key(s) {dropped} have incompatible params; rollup "
             "requires params uniform over the dropped keys "
             "(HLL/CMS/theta/KLL/t-digest with fixed params qualify; "
             "per-group-calibrated Bloom does not)"))
-        extra = {}
-        if readout is not None:
-            name = key[len(keys) - 1]
-            for col, _dtype, fn in readout:
-                extra[col] = [fn(name, sk)]
-        return pd.DataFrame({
-            **{c: [key[i]] for i, c in enumerate(keys)},
-            "sketch": [sk.to_bytes()],
-            "n_rows": [int(pdf["n_rows"].sum())],
-            "n_partials": [int(pdf["n_partials"].sum())],
-            **extra,
-        })
-
-    return sketches.groupBy(*keys).applyInPandas(merge_fn, out_schema)
 
 
 def build_sketches(df: DataFrame, group_cols: list[str],
@@ -576,16 +530,11 @@ def build_sketches_local(df: DataFrame, group_cols: list[str],
                 "partial").collect()
     groups = defaultdict(list)
     for r in parts:
-        key = tuple(r[c] for c in group_cols) + (r["sketch_name"],)
-        groups[key].append((r["partition_id"], r["chunk"], r["partial"]))
-    out = {}
-    for key, lst in groups.items():
-        lst.sort(key=lambda t: (t[0], t[1]))
-        sk = sketch_from_bytes(bytes(lst[0][2]))
-        for _pid, _chunk, blob in lst[1:]:
-            sk.merge(sketch_from_bytes(bytes(blob)))
-        out[key if len(key) > 2 else (key[0], key[1])] = sk
-    return out
+        groups[tuple(r[c] for c in group_cols) + (r["sketch_name"],)] \
+            .append(r)
+    return {key: fold_blobs(r["partial"] for r in sorted(
+                rows, key=lambda r: (r["partition_id"], r["chunk"])))
+            for key, rows in groups.items()}
 
 
 def _auto_fanout(parts: int) -> list[int] | None:
@@ -634,43 +583,18 @@ def incremental_update(sketch_table: DataFrame, new_df: DataFrame,
     both = (sketch_table.select(*keys, "sketch", "n_rows", "n_partials")
             .unionByName(delta.select(*keys, "sketch", "n_rows",
                                       "n_partials")))
-    out_schema = StructType(_group_fields(sketch_table, group_cols) + [
-        StructField("sketch_name", StringType(), False),
-        StructField("sketch", BinaryType(), False),
-        StructField("n_rows", LongType(), False),
-        StructField("n_partials", LongType(), False),
-    ])
-    if readout is not None:
-        # same fused-extraction contract as merge_partials(readout=):
-        # estimate columns come out of the update's own merge task
-        out_schema = StructType(out_schema.fields + [
-            StructField(col, _parse_dtype(dtype), True)
-            for col, dtype, _fn in readout])
-
-    def merge_fn(key, pdf):
-        # deterministic merge order for the lossy kernels: base first
-        # (larger n_rows), then delta. Row arrival order inside
-        # applyInPandas is shuffle-dependent, so ties on n_rows (equal
-        # base/delta sizes, repeated updates) need a content-based
-        # secondary key — the blob bytes — to make the fold a total
-        # order independent of arrival order.
-        pdf = pdf.assign(_blob=pdf["sketch"].map(bytes)).sort_values(
-            ["n_rows", "_blob"], ascending=[False, True], kind="stable")
-        sk = _fold_blobs(pdf, context=(
+    # deterministic merge order for the lossy kernels: base first
+    # (larger n_rows), then delta. Row arrival order inside
+    # applyInPandas is shuffle-dependent, so ties on n_rows (equal
+    # base/delta sizes, repeated updates) need a content-based
+    # secondary key — the blob bytes — to make the fold a total order
+    # independent of arrival order. readout= is the same fused
+    # extraction as merge_partials(readout=).
+    return _merge_groups(
+        both, keys, _table_schema(sketch_table, group_cols, readout),
+        "sketch", _table_row(keys, readout),
+        by=["n_rows", "sketch"], ascending=[False, True],
+        context=lambda key: (
             f"cannot update group {key}: the stored state and the "
             "delta build have incompatible params — pass the same "
             "specs that built the sketch table"))
-        extra = {}
-        if readout is not None:
-            name = key[len(keys) - 1]
-            for col, _dtype, fn in readout:
-                extra[col] = [fn(name, sk)]
-        return pd.DataFrame({
-            **{c: [key[i]] for i, c in enumerate(keys)},
-            "sketch": [sk.to_bytes()],
-            "n_rows": [int(pdf["n_rows"].sum())],
-            "n_partials": [int(pdf["n_partials"].sum())],
-            **extra,
-        })
-
-    return both.groupBy(*keys).applyInPandas(merge_fn, out_schema)

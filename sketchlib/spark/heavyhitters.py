@@ -36,8 +36,7 @@ from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from sketchlib.core.cms import CountMinSketch
-from sketchlib.core.serde import sketch_from_bytes
-from sketchlib.spark.build import update_from_token_counts
+from sketchlib.spark.build import _merge_groups, update_from_token_counts
 
 
 class SpaceSaving:
@@ -197,10 +196,7 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
             StructField("rnk", IntegerType(), False),
         ])
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        cms = sketch_from_bytes(bytes(pdf["cms"].iloc[0]))
-        for blob in pdf["cms"].iloc[1:]:
-            cms.merge(sketch_from_bytes(bytes(blob)))
+    def topk_rows(key, cms, pdf: pd.DataFrame) -> pd.DataFrame:
         toks, ests = topk_from_cms(
             cms, {t for lst in pdf["cands"] for t in lst}, k)
         if not toks:
@@ -212,4 +208,6 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
             "rnk": np.arange(1, len(toks) + 1, dtype=np.int32),
         })
 
-    return partials.groupBy(*group_cols).applyInPandas(merge, out_schema)
+    # CMS merge is a cell-wise sum: any order is bitwise-identical, so
+    # the partial tables fold in arrival order
+    return _merge_groups(partials, group_cols, out_schema, "cms", topk_rows)

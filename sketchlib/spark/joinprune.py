@@ -160,11 +160,7 @@ def bloom_prune(fact: DataFrame, fact_key: str, bf: BloomFilter) -> DataFrame:
     def might_contain(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         f = BloomFilter.from_bytes(blob.value)
         for s in it:
-            notna = s.notna().to_numpy()
-            mask = notna.copy()
-            if notna.any():
-                mask[notna] = f.contains_batch(s.to_numpy()[notna])
-            yield pd.Series(mask)
+            yield pd.Series(f.contains_batch(s.to_numpy()))
 
     # ints and strings hash to the same bytes raw as via CAST AS STRING
     # (to_large_binary canonicalizes ints to decimal strings); every
@@ -174,7 +170,10 @@ def bloom_prune(fact: DataFrame, fact_key: str, bf: BloomFilter) -> DataFrame:
     key_col = F.col(fact_key)
     if dt not in ("string", "tinyint", "smallint", "int", "bigint"):
         key_col = key_col.cast("string")
-    return fact.filter(might_contain(key_col))
+    # nulls are dropped JVM-side, below the UDF: a nullable bigint batch
+    # holding a null would reach pandas as float64, which cannot carry
+    # ids >= 2^53 exactly (nor hash like the build side's int64 keys)
+    return fact.filter(F.col(fact_key).isNotNull() & might_contain(key_col))
 
 
 def bloom_semijoin(fact: DataFrame, fact_key: str,

@@ -463,21 +463,6 @@ def q_short_doc_share_lang(spark, sf_dir):
                                .otherwise(0.0)), 4).alias("share_le_500")))
 
 
-def q_kll_cdf_nchars(spark, sf_dir):
-    """Distributed rank/CDF read-out via the sketch_cdf SQL UDF — the
-    inverse of sketch_quantile ('what share of docs are <= T chars?'),
-    answered from the same mergeable KLL state, no raw re-read."""
-    from sketchlib.spark.sqlfuncs import register_sql_functions
-    udfs = register_sql_functions(spark)
-    merged = _doc_sketches(spark, sf_dir,
-                           [SketchSpec("k", "kll", "n_chars", {"k": 256})])
-    cdf = udfs["sketch_cdf"]
-    return (merged.filter(F.col("sketch_name") == "k")
-            .select("lang",
-                    cdf(F.col("sketch"), F.lit(200.0)).alias("share_le_200"),
-                    cdf(F.col("sketch"), F.lit(500.0)).alias("share_le_500")))
-
-
 def q_sketch_accuracy_lang(spark, sf_dir):
     """The validation loop generalized beyond Bloom FPR: per-lang
     est-vs-exact error rows for HLL/theta/sample (distinct rel err vs
@@ -712,21 +697,6 @@ def q_url_canon_dedup(spark, sf_dir):
     return (canon.groupBy("canonical_url")
             .agg(F.min("doc_id").alias("keep_id"),
                  F.count("*").alias("n_variants")))
-
-
-def q_hll_users_daily(spark, sf_dir):
-    """HLL distinct users per (event_type, day) — multi-column grouping
-    through the whole build stack; exact companion: q_distinct_users_daily."""
-    ev = (load(spark, sf_dir, "events")
-          .withColumn("day", F.date_format("ts", "yyyy-MM-dd")))
-    ev = ev.withColumn("user_id_str", F.col("user_id").cast("string"))
-    from sketchlib.spark.sqlfuncs import register_sql_functions
-    udfs = register_sql_functions(spark)
-    merged = build_sketches(ev, ["event_type", "day"],
-                            [SketchSpec("u", "hll", "user_id_str", {"b": 13})])
-    return merged.select(
-        "event_type", "day",
-        udfs["sketch_estimate"](F.col("sketch")).alias("n_users_est"))
 
 
 def q_bloom_membership(spark, sf_dir):

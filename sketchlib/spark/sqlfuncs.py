@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 
-from sketchlib.core.serde import sketch_from_bytes
+from sketchlib.core.serde import fold_blobs, sketch_from_bytes
 from sketchlib.core.bloom import BloomFilter
 from sketchlib.core.cms import CountMinSketch
 from sketchlib.core.hll import HyperLogLog
@@ -172,10 +172,7 @@ def _make_udfs() -> dict:
             if not blobs:  # NULL array, empty array, or all-NULL entries
                 out.append(None)
                 continue
-            sk = sketch_from_bytes(blobs[0])
-            for b in blobs[1:]:
-                sk.merge(sketch_from_bytes(b))
-            out.append(sk.to_bytes())
+            out.append(fold_blobs(blobs).to_bytes())
         return pd.Series(out, dtype=object)
 
     def fd_spectrum(blobs: pd.Series, ks: pd.Series) -> pd.Series:

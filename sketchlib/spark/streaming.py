@@ -314,17 +314,17 @@ class SketchTableSink:
 
     Exactly-once across restarts: each fold writes a new versioned
     table ``<path>/v=<batch_id>`` and then commits it by writing a
-    ``_COMMIT`` marker INSIDE that version dir (through Spark text IO
-    so hdfs:// s3a:// work like file://; the leading underscore keeps
-    parquet readers from seeing it as data). Nothing is ever
-    overwritten, so there is no delete-then-write window: the current
-    state is simply the highest-numbered version whose marker reads
-    back as valid JSON. Structured Streaming replays the in-flight
-    micro-batch after a crash; a replayed ``batch_id <= latest`` is a
-    no-op, and a version dir without a readable marker (crash before
-    or during the commit) is invisible dead weight. Old versions
-    beyond ``keep_versions`` are pruned through the Hadoop FileSystem
-    API (any scheme).
+    ``_COMMIT`` marker INSIDE that version dir (written temp-then-rename
+    through the Hadoop FileSystem API, so hdfs:// s3a:// work like
+    file://; the leading underscore keeps parquet readers from seeing
+    it as data). Nothing is ever overwritten, so there is no
+    delete-then-write window: the current state is simply the
+    highest-numbered version whose marker reads back as valid JSON.
+    Structured Streaming replays the in-flight micro-batch after a
+    crash; a replayed ``batch_id <= latest`` is a no-op, and a version
+    dir without a readable marker (crash before or during the commit)
+    is invisible dead weight. Old versions beyond ``keep_versions`` are
+    pruned through the Hadoop FileSystem API (any scheme).
 
     For lattice kernels the maintained table is bitwise-identical to
     a batch rebuild over everything streamed so far (test-enforced);
@@ -377,21 +377,17 @@ class SketchTableSink:
         part files and the r6 single FILE."""
         jvm, fs = self._fs()
         p = jvm.org.apache.hadoop.fs.Path(f"{self.path}/v={v}/_COMMIT")
-        iou = jvm.org.apache.commons.io.IOUtils
 
         def read_one(path) -> str:
             stream = fs.open(path)
             try:
-                return iou.toString(stream, "UTF-8")
+                return stream.readAllBytes().decode("utf-8", "replace")
             finally:
                 stream.close()
 
-        try:
-            st = fs.getFileStatus(p)
-        except Exception as e:
-            if "FileNotFoundException" in str(e):
-                return None  # never committed
-            raise
+        if not fs.exists(p):
+            return None  # never committed
+        st = fs.getFileStatus(p)
         if st.isDirectory():
             parts = [s.getPath() for s in fs.listStatus(p)
                      if s.getPath().getName().startswith("part-")]

@@ -228,13 +228,17 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     # rows at sf1.0 — partial aggregation buys ~nothing). Packing the
     # pair into ONE long (a_id << 32 | b_id) measurably cuts the
     # aggregate's hash+shuffle cost (~1.6x: one 8-byte key vs two);
-    # only taken when ids provably fit 31 bits unsigned — the bounds
-    # probe is one tiny aggregate over the materialized base, and the
-    # general-id fallback keeps the operator total.
-    bounds = base.agg(F.min("doc").alias("lo"), F.max("doc").alias("hi")) \
-        .first()
-    packable = (bounds["lo"] is not None and bounds["lo"] >= 0
-                and bounds["hi"] < (1 << 31))
+    # only taken when ids are integral and provably fit 31 bits
+    # unsigned — the bounds probe is one tiny aggregate over the
+    # materialized base, and the general-id fallback (string ids too)
+    # keeps the operator total.
+    packable = dict(df.dtypes)[id_col] in ("tinyint", "smallint", "int",
+                                           "bigint")
+    if packable:
+        bounds = base.agg(F.min("doc").alias("lo"),
+                          F.max("doc").alias("hi")).first()
+        packable = (bounds["lo"] is not None and bounds["lo"] >= 0
+                    and bounds["hi"] < (1 << 31))
     if packable:
         # Pair counting over ONE packed long (a_id<<32 | b_id), with
         # the two set sizes riding as a second packed long so no sizes

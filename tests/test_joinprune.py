@@ -49,6 +49,20 @@ def test_null_keys_never_pass(spark):
     bf = build_key_bloom(dim, "d_key", p=0.01)
     tags = {r["tag"] for r in bloom_prune(fact, "f_key", bf).collect()}
     assert "b" in tags and "a" not in tags
+    # nulls interleaved with bigint ids >= 2^53 inside one Arrow batch:
+    # a nullable bigint batch holding a null reaches pandas as float64,
+    # which cannot carry these ids — the prune must drop nulls before
+    # the UDF and keep exactly the members
+    base = 1 << 60
+    fact = spark.range(100).select(
+        F.when(F.col("id") % 10 == 0, F.lit(None))
+        .otherwise(F.col("id") + F.lit(base)).alias("f_key"))
+    dim = spark.range(100).filter(F.col("id") % 3 == 0).select(
+        (F.col("id") + F.lit(base)).alias("d_key"))
+    bf = build_key_bloom(dim, "d_key", p=1e-6)
+    got = {r["f_key"] for r in bloom_prune(fact, "f_key", bf).collect()}
+    assert got == {base + i for i in range(100) if i % 3 == 0 and i % 10}
+    assert len(got) == 30
 
 
 def test_prune_plan_has_no_exchange(spark, fact_dim):

@@ -106,6 +106,23 @@ def test_kll_merge_order_within_bound(n_parts):
             assert abs(true_rank - q) < 0.04, (n_parts, perm_seed, q)
 
 
+def test_fold_blobs_is_the_ordered_merge():
+    """fold_blobs folds in exactly the order given (lossy KLL bytes
+    equal the hand fold in that order) and prefixes kernel errors
+    with the caller's context."""
+    from sketchlib.core.serde import fold_blobs
+    parts = _split(VALUES, 5, 0)
+    blobs = [KLL(k=64).update_batch(p).to_bytes() for p in parts]
+    order = [3, 0, 4, 1, 2]
+    want = _merge_in_order([KLL.from_bytes(b) for b in blobs], order)
+    assert fold_blobs(blobs[i] for i in order).to_bytes() == want.to_bytes()
+    odd = KLL(k=32).update_batch(parts[0]).to_bytes()
+    with pytest.raises(ValueError, match="^group x: "):
+        fold_blobs([blobs[0], odd], context="group x")
+    with pytest.raises(ValueError):
+        fold_blobs([])
+
+
 @settings(max_examples=25, deadline=None)
 @given(st.lists(st.text(min_size=0, max_size=40), min_size=1, max_size=200),
        st.integers(min_value=2, max_value=6))

@@ -22,6 +22,12 @@ def test_ngram_jaccard_short_docs_no_crash(spark):
     rows = textops.ngram_jaccard_pairs(df, "doc_id", "text",
                                        n=3, threshold=0.3).collect()
     assert {(r["a_id"], r["b_id"]) for r in rows} == {(2, 3)}
+    # string ids cannot pack into one long: the two-column pair
+    # aggregate answers instead of the bounds probe failing
+    sdf = df.selectExpr("concat('d', doc_id) AS doc_id", "text")
+    rows = textops.ngram_jaccard_pairs(sdf, "doc_id", "text",
+                                       n=3, threshold=0.3).collect()
+    assert {(r["a_id"], r["b_id"]) for r in rows} == {("d2", "d3")}
 
 
 def test_ngram_jaccard_skew_guard_bounds_fanout(spark):

@@ -241,17 +241,26 @@ class TestFusedReadout:
         self._check(pages_tiny.coalesce(1), "auto")       # narrow path
 
 
-def test_build_sketches_local_bitwise_matches_distributed(pages_tiny):
+@pytest.mark.parametrize("narrow", [False, True],
+                         ids=["repartition7", "coalesce1"])
+def test_build_sketches_local_bitwise_matches_distributed(pages_tiny,
+                                                          narrow):
     """Driver-side fold (one python stage) must equal the distributed
-    merge bitwise — same (partition_id, chunk) total order."""
+    merge bitwise — same (partition_id, chunk) total order. The
+    single-partition input takes merge_partials' narrow per-partition
+    fold, so the lossy KLL/t-digest folds are checked on that path
+    too, not just the shuffle merge."""
     from sketchlib.spark.build import build_sketches_local
     specs = [SketchSpec("k", "kll", "html_len", {"k": 128}),
              SketchSpec("h", "hll", "url", {"b": 10}),
              SketchSpec("t", "tdigest", "html_len", {"delta": 100})]
-    d = pages_tiny.repartition(7).withColumn(
-        "html_len", F.length("html").cast("double"))
+    d = (pages_tiny.coalesce(1) if narrow else pages_tiny.repartition(7)) \
+        .withColumn("html_len", F.length("html").cast("double"))
+    built = build_sketches(d, ["lang"], specs)
+    plan = built._jdf.queryExecution().executedPlan().toString()
+    assert ("FlatMapGroupsInPandas" in plan) != narrow, plan
     dist = {(r["lang"], r["sketch_name"]): bytes(r["sketch"])
-            for r in build_sketches(d, ["lang"], specs).collect()}
+            for r in built.collect()}
     local = {k: sk.to_bytes()
              for k, sk in build_sketches_local(d, ["lang"], specs).items()}
     assert local == dist
