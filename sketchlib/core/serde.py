@@ -3,7 +3,7 @@
 The reference serialized its only value type as a Hadoop Writable
 (``int k, int m, int len, long[] words`` —
 /root/reference/hadoop/.../model/BloomFilter.java:77-98). Ours is a
-self-describing envelope so sketch bytes stored in a parquet/Iceberg
+self-describing envelope so sketch bytes stored in a parquet
 ``binary`` column survive schema evolution:
 
     magic 'SKB1' | u8 version | u8 type_id | u32 header_len |

@@ -11,7 +11,7 @@ Catalyst FileSourceScan with pushdown/pruning for every format.
 Format is explicit or inferred from the path suffix. Prefer parquet
 (columnar pruning + predicate pushdown reach the footer); text formats
 are for parity with the reference's inputs and one-off ingests — the
-scale posture is "transcode to parquet/Iceberg at ingest".
+scale posture is "transcode to parquet at ingest".
 """
 
 from __future__ import annotations

@@ -18,12 +18,9 @@ bitwise-identical to an uninterrupted run (test-enforced).
 
 Storage: a parquet partial table + a single-row JSON manifest, both
 written through Spark IO so any Hadoop-compatible filesystem works
-(file://, hdfs://, s3a://). ``iceberg_available()`` probes whether an
-Iceberg catalog is usable so callers can layer an Iceberg table on
-top; this sandbox has no Iceberg runtime, so the shipped store is the
-parquet one. The manifest records the spec fingerprint so a resume
-against changed specs or input is refused instead of silently mixing
-states.
+(file://, hdfs://, s3a://). The manifest records the spec fingerprint
+so a resume against changed specs or input is refused instead of
+silently mixing states.
 """
 
 from __future__ import annotations
@@ -37,29 +34,6 @@ import pyspark.sql.functions as F
 
 from sketchlib.spark.build import build_partials, merge_partials
 from sketchlib.spark.specs import SketchSpec
-
-_ICEBERG_STATE: dict = {}
-
-
-def _is_path_missing(e: Exception) -> bool:
-    msg = str(e)
-    return ("PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-            or "FileNotFoundException" in msg)
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True iff an Iceberg catalog is usable in this session."""
-    key = id(spark)
-    if key not in _ICEBERG_STATE:
-        try:
-            spark.sql("CREATE TABLE IF NOT EXISTS sketchlib_iceberg_probe "
-                      "(x INT) USING iceberg")
-            spark.sql("DROP TABLE IF EXISTS sketchlib_iceberg_probe")
-            _ICEBERG_STATE[key] = True
-        except Exception:
-            _ICEBERG_STATE[key] = False
-    return _ICEBERG_STATE[key]
-
 
 def spec_fingerprint(df: DataFrame, group_cols: list[str],
                      specs: list[SketchSpec]) -> str:
@@ -144,7 +118,7 @@ def _partial_counters(stored: DataFrame) -> dict:
 
 
 class PartialCheckpoint:
-    """Parquet-backed (Iceberg-ready) per-partition partial store."""
+    """Parquet-backed per-partition partial store."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -154,13 +128,15 @@ class PartialCheckpoint:
         # paths (hdfs://, s3a://) work the same as local ones
         self.manifest_path = path.rstrip("/") + "/MANIFEST"
 
+    def _exists(self, path: str) -> bool:
+        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        return fs.exists(jpath)
+
     def manifest(self) -> dict | None:
-        try:
-            rows = self.spark.read.text(self.manifest_path).collect()
-        except Exception as e:
-            if _is_path_missing(e):
-                return None
-            raise
+        if not self._exists(self.manifest_path):
+            return None
+        rows = self.spark.read.text(self.manifest_path).collect()
         return json.loads("".join(r["value"] for r in rows))
 
     def completed_partitions(self) -> list[int]:
@@ -168,15 +144,10 @@ class PartialCheckpoint:
         any other read error propagates — treating a corrupt store as
         'nothing done' would append duplicate partials and silently
         double-count every merge thereafter."""
-        if self.manifest() is None:
+        if self.manifest() is None or not self._exists(self.data_path):
             return []
-        try:
-            rows = (self.spark.read.parquet(self.data_path)
-                    .select("partition_id").distinct().collect())
-        except Exception as e:
-            if _is_path_missing(e):
-                return []
-            raise
+        rows = (self.spark.read.parquet(self.data_path)
+                .select("partition_id").distinct().collect())
         return sorted(r["partition_id"] for r in rows)
 
     def read_partials(self) -> DataFrame:
@@ -196,102 +167,14 @@ class PartialCheckpoint:
         return man
 
 
-class SparkIcebergOps:
-    """The ONLY code that touches an Iceberg catalog — six one-line
-    calls. Everything above it (``IcebergPartialCheckpoint``) is
-    engine-agnostic orchestration, unit-tested against a stub
-    implementation of this same interface, so the untested surface in
-    a no-Iceberg sandbox is exactly these DDL strings. On a real
-    cluster add the iceberg-spark-runtime jar + a catalog config and
-    the probe (``iceberg_available``) flips to True."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def table_exists(self, name: str) -> bool:
-        return self.spark.catalog.tableExists(name)
-
-    def read(self, name: str) -> DataFrame:
-        return self.spark.read.table(name)
-
-    def append(self, df: DataFrame, name: str) -> None:
-        df.writeTo(name).append()
-
-    def create_replace(self, df: DataFrame, name: str) -> None:
-        df.writeTo(name).using("iceberg").createOrReplace()
-
-    def get_property(self, name: str, key: str) -> str | None:
-        for r in self.spark.sql(f"SHOW TBLPROPERTIES {name}").collect():
-            if r["key"] == key:
-                return r["value"]
-        return None
-
-    def set_property(self, name: str, key: str, value: str) -> None:
-        v = value.replace("'", "''")
-        self.spark.sql(
-            f"ALTER TABLE {name} SET TBLPROPERTIES ('{key}'='{v}')")
-
-
-class IcebergPartialCheckpoint:
-    """Iceberg-table partial store: the same contract as
-    ``PartialCheckpoint`` (manifest / completed_partitions /
-    read_partials / write) with the partial table living in an Iceberg
-    catalog — ACID appends give resume-after-failure snapshot
-    isolation for free, and the manifest rides on the table as a
-    TBLPROPERTY so store+manifest commit through one catalog. All
-    catalog calls go through the ``ops`` seam (``SparkIcebergOps``);
-    tests substitute a stub to exercise this class without the
-    runtime jar."""
-
-    MANIFEST_PROP = "sketchlib.manifest"
-
-    def __init__(self, spark: SparkSession, table: str, ops=None):
-        self.spark = spark
-        self.table = table
-        self.ops = ops if ops is not None else SparkIcebergOps(spark)
-
-    def manifest(self) -> dict | None:
-        if not self.ops.table_exists(self.table):
-            return None
-        v = self.ops.get_property(self.table, self.MANIFEST_PROP)
-        return json.loads(v) if v else None
-
-    def completed_partitions(self) -> list[int]:
-        if self.manifest() is None:
-            return []
-        rows = (self.ops.read(self.table)
-                .select("partition_id").distinct().collect())
-        return sorted(r["partition_id"] for r in rows)
-
-    def read_partials(self) -> DataFrame:
-        return self.ops.read(self.table)
-
-    def write(self, partials: DataFrame, fingerprint: str,
-              append: bool = False) -> dict:
-        if append and self.ops.table_exists(self.table):
-            self.ops.append(partials, self.table)
-        else:
-            self.ops.create_replace(partials, self.table)
-        man = {
-            "fingerprint": fingerprint,
-            "format": "iceberg",
-            "counters": _partial_counters(self.read_partials()),
-        }
-        self.ops.set_property(self.table, self.MANIFEST_PROP,
-                              json.dumps(man))
-        return man
-
-
 def build_sketches_checkpointed(df: DataFrame, group_cols: list[str],
-                                specs: list[SketchSpec], ckpt_path,
+                                specs: list[SketchSpec], ckpt_path: str,
                                 fanout: int | str | None = "auto",
                                 readout: list | None = None) -> DataFrame:
     """build_sketches with a partial-level checkpoint at ``ckpt_path``.
 
-    ``ckpt_path`` selects the store: a filesystem path uses the
-    parquet store; ``"iceberg:<table>"`` uses the Iceberg store; a
-    store INSTANCE (anything with manifest/completed_partitions/
-    read_partials/write) is used as-is.
+    ``ckpt_path`` is a directory on any Hadoop-compatible filesystem;
+    it holds the parquet partial table and its manifest.
 
     First run: builds all partials, checkpoints them, merges.
     Resumed run (manifest present, fingerprint matches): rebuilds only
@@ -299,13 +182,7 @@ def build_sketches_checkpointed(df: DataFrame, group_cols: list[str],
     Fingerprint mismatch raises (changed specs/input require a fresh
     checkpoint dir).
     """
-    spark = df.sparkSession
-    if hasattr(ckpt_path, "write") and hasattr(ckpt_path, "manifest"):
-        ckpt = ckpt_path
-    elif isinstance(ckpt_path, str) and ckpt_path.startswith("iceberg:"):
-        ckpt = IcebergPartialCheckpoint(spark, ckpt_path[len("iceberg:"):])
-    else:
-        ckpt = PartialCheckpoint(spark, ckpt_path)
+    ckpt = PartialCheckpoint(df.sparkSession, ckpt_path)
     fp = spec_fingerprint(df, group_cols, specs)
     man = ckpt.manifest()
     if man is not None:

@@ -88,31 +88,11 @@ class SpaceSaving:
         """[(token, count_upper, err)] — count_upper - err <= true <= count_upper."""
         return [(t, v[0], v[1]) for t, v in self.counters.items()]
 
-    def to_state(self) -> tuple[list, list, list]:
-        """(tokens, counts, errs) — a stable external snapshot for
-        checkpointed/streaming state; inverse of ``from_state``."""
-        items = self.items()
-        return ([t for t, _, _ in items],
-                [int(c) for _, c, _ in items],
-                [int(e) for _, _, e in items])
-
-    @classmethod
-    def from_state(cls, capacity: int, tokens, counts, errs) -> "SpaceSaving":
-        """Rebuild from a ``to_state`` snapshot (restores the heap
-        invariant internally — callers never touch counters/_heap)."""
-        ss = cls(capacity)
-        ss.counters = {t: [int(c), int(e)]
-                       for t, c, e in zip(tokens, counts, errs)}
-        ss._heap = [(int(c), t) for t, c in zip(tokens, counts)]
-        heapq.heapify(ss._heap)
-        return ss
-
 
 def topk_from_cms(cms: CountMinSketch, candidates,
                   k: int) -> tuple[list, list]:
     """Rank candidates by CMS estimate (desc, then token asc); returns
-    (top_tokens, top_estimates) — shared by the batch merge and the
-    streaming emit so the ranking rule lives in one place."""
+    (top_tokens, top_estimates)."""
     cands = sorted(candidates)
     if not cands:
         return [], []

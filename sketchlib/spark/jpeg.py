@@ -108,10 +108,6 @@ def _dct_matrix() -> np.ndarray:
 _C = _dct_matrix()
 
 
-def _idct2(block: np.ndarray) -> np.ndarray:
-    return _C.T @ block @ _C
-
-
 def _dct2(block: np.ndarray) -> np.ndarray:
     return _C @ block @ _C.T
 

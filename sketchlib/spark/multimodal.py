@@ -987,9 +987,7 @@ def encode_mp3_stub(duration_ms: int, bitrate_kbps: int = 128,
 def _mp3_header_at(payload: bytes, pos: int) -> dict | None:
     """Parse a candidate MPEG-audio frame header at ``pos``; None when
     the 4 bytes there are not a valid header. Returns the decoded
-    fields plus the computed frame length — shared by ``probe_mp3``
-    (first-frame metadata) and ``mp3_extract_frames`` (full walk,
-    where VBR streams change bitrate per frame)."""
+    fields plus the computed frame length, used by ``probe_mp3``."""
     n = len(payload)
     if pos + 4 > n or payload[pos] != 0xFF \
             or (payload[pos + 1] & 0xE0) != 0xE0:
@@ -1016,49 +1014,6 @@ def _mp3_header_at(payload: bytes, pos: int) -> dict | None:
     return {"b1": b1, "version": version, "vgrp": vgrp, "lyr": lyr,
             "kbps": kbps, "rate": rate, "pad": pad, "mode": mode,
             "flen": flen, "spf": spf}
-
-
-def mp3_extract_frames(payload: bytes, max_frames: int | None = None
-                       ) -> list[bytes]:
-    """Pull the raw per-frame byte payloads out of an MPEG-audio
-    stream — the mp3 counterpart of ``mp4_extract_samples``: each
-    returned element is one complete frame (header + side info +
-    main data), the unit a real decoder consumes and the unit a
-    frame-sampling curation pipeline ships. Handles ID3v2 skip and
-    per-frame lengths (VBR streams change bitrate frame to frame),
-    stops at the first non-frame byte after at least one frame (APE /
-    ID3v1 trailers), and raises ValueError when no verified sync
-    exists (same acceptance rule as ``probe_mp3``). Frame DECODE
-    (Huffman + IMDCT synthesis) stays honestly stubbed — no stdlib
-    path; the frames come back as opaque bytes.
-    """
-    probe_mp3(payload)  # validates the stream shape up front
-    pos = 0
-    if payload[:3] == b"ID3" and len(payload) >= 10:
-        size = ((payload[6] & 0x7F) << 21) | ((payload[7] & 0x7F) << 14) \
-            | ((payload[8] & 0x7F) << 7) | (payload[9] & 0x7F)
-        pos = 10 + size
-    n = len(payload)
-    # sync on the first verified frame (same rule as probe_mp3)
-    while pos + 4 <= n:
-        h = _mp3_header_at(payload, pos)
-        if h is not None:
-            nxt = pos + h["flen"]
-            if nxt + 2 > n or (payload[nxt] == 0xFF
-                               and (payload[nxt + 1] & 0xE0) == 0xE0):
-                break
-        pos += 1
-    frames: list[bytes] = []
-    while pos + 4 <= n:
-        h = _mp3_header_at(payload, pos)
-        if h is None:
-            break  # trailer (ID3v1/APE) or corruption: stop cleanly
-        end = min(pos + h["flen"], n)
-        frames.append(payload[pos:end])
-        pos = end
-        if max_frames is not None and len(frames) >= max_frames:
-            break
-    return frames
 
 
 def probe_mp3(payload: bytes) -> dict:
@@ -1308,18 +1263,6 @@ def extract_features(df: DataFrame, id_col: str = "media_id",
                                 "feature": feats})
 
     return sel.mapInPandas(fn, schema)
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Deterministic frame-sampling plan for video rows: one output row
-    per sampled timestamp (JVM-side sequence explode; the decode of
-    each sampled frame is the stubbed step)."""
-    vids = df.filter(F.col("kind") == "video").select(
-        "media_id", "duration_ms")
-    return vids.select(
-        "media_id",
-        F.explode(F.sequence(F.lit(0), F.col("duration_ms"),
-                             F.lit(int(every_ms)))).alias("sample_ms"))
 
 
 def fake_media_rows(n: int = 300, seed: int = 5) -> list:

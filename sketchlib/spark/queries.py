@@ -839,34 +839,9 @@ def q_user_containment_exact(spark, sf_dir):
                             / F.col("n_a"), 4).alias("containment")))
 
 
-def q_hll_user_containment(spark, sf_dir):
-    """HLL inclusion coefficient between event_type user sets — the
-    VLDB-2018 technique: containment from ALREADY-STORED per-group
-    HLLs via register-max union + inclusion-exclusion, no second
-    sketch type. Self-join of the HLL table + the hll_inclusion SQL
-    UDF; exact companion q_user_containment_exact (accuracy note:
-    error grows as the intersection shrinks — theta is the
-    small-overlap tool)."""
-    from sketchlib.spark.sqlfuncs import register_sql_functions
-    udfs = register_sql_functions(spark)
-    ev = (load(spark, sf_dir, "events")
-          .withColumn("uid", F.col("user_id").cast("string")))
-    sk = build_sketches(ev, ["event_type"],
-                        [SketchSpec("h", "hll", "uid", {"b": 13})])
-    a = sk.select(F.col("event_type").alias("type_a"),
-                  F.col("sketch").alias("sk_a"))
-    b = sk.select(F.col("event_type").alias("type_b"),
-                  F.col("sketch").alias("sk_b"))
-    return (a.join(b, F.col("type_a") != F.col("type_b"))
-            .select("type_a", "type_b",
-                    F.round(udfs["hll_inclusion"](F.col("sk_a"),
-                                                  F.col("sk_b")), 4)
-                    .alias("containment_est")))
-
-
 def q_user_jaccard_exact(spark, sf_dir):
     """Exact Jaccard of user sets between event_type pairs — the
-    companion of q_theta_user_overlap's jaccard_est column:
+    companion of q_sketch_set_algebra's jaccard_est column:
     J = shared / (|A| + |B| - shared)."""
     u = (load(spark, sf_dir, "events")
          .select("event_type", "user_id").distinct())
@@ -933,51 +908,6 @@ def q_user_difference_exact(spark, sf_dir):
             .select("type_a", "type_b",
                     (F.col("n_a") - F.coalesce("n_shared", F.lit(0)))
                     .alias("n_only_a")))
-
-
-def _theta_sketch_table(spark, sf_dir) -> DataFrame:
-    ev = (load(spark, sf_dir, "events")
-          .withColumn("uid", F.col("user_id").cast("string")))
-    return build_sketches(ev, ["event_type"],
-                          [SketchSpec("t", "theta", "uid", {"k": 4096})])
-
-
-def q_theta_user_difference(spark, sf_dir):
-    """Theta a-not-b: estimated users in type_a not in type_b — a
-    SELF-JOIN of the sketch table with the theta_difference SQL UDF
-    (pairwise set algebra without collecting sketches to the driver);
-    exact companion q_user_difference_exact."""
-    from sketchlib.spark.sqlfuncs import register_sql_functions
-    udfs = register_sql_functions(spark)
-    sk = _theta_sketch_table(spark, sf_dir)
-    a = sk.select(F.col("event_type").alias("type_a"),
-                  F.col("sketch").alias("sk_a"))
-    b = sk.select(F.col("event_type").alias("type_b"),
-                  F.col("sketch").alias("sk_b"))
-    return (a.join(b, F.col("type_a") != F.col("type_b"))
-            .select("type_a", "type_b",
-                    udfs["theta_difference"](F.col("sk_a"), F.col("sk_b"))
-                    .alias("n_only_a_est")))
-
-
-def q_theta_user_overlap(spark, sf_dir):
-    """Theta-sketch estimated shared users / Jaccard between event_type
-    pairs — set algebra register sketches can't do. Self-join + theta
-    SQL UDFs, fully distributed (rows-only; exact companion
-    q_user_overlap_exact)."""
-    from sketchlib.spark.sqlfuncs import register_sql_functions
-    udfs = register_sql_functions(spark)
-    sk = _theta_sketch_table(spark, sf_dir)
-    a = sk.select(F.col("event_type").alias("type_a"),
-                  F.col("sketch").alias("sk_a"))
-    b = sk.select(F.col("event_type").alias("type_b"),
-                  F.col("sketch").alias("sk_b"))
-    return (a.join(b, F.col("type_a") < F.col("type_b"))
-            .select("type_a", "type_b",
-                    udfs["theta_intersect"](F.col("sk_a"), F.col("sk_b"))
-                    .alias("n_shared_est"),
-                    F.round(udfs["theta_jaccard"](F.col("sk_a"), F.col("sk_b")),
-                            4).alias("jaccard_est")))
 
 
 # ---------------------------------------------------------------------------

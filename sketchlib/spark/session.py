@@ -113,7 +113,7 @@ def get_spark(app_name: str = "sketchlib", cpus: int | str = "*",
         # is fine — there the input is thousands of files)
         .config("spark.sql.files.maxPartitionBytes",
                 os.environ.get("SKETCHLIB_MAX_PARTITION_BYTES", "33554432"))
-        # pinned session timezone: day-bucketing (date_format) and the
+        # pinned session timezone: per-day grouping (date_format) and the
         # DuckDB oracle comparisons must not depend on the host TZ
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

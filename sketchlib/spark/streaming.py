@@ -89,69 +89,6 @@ def streaming_build(stream_df: DataFrame, group_cols: list[str],
                                     "update", GroupStateTimeout.NoTimeout))
 
 
-def streaming_heavy_hitters(stream_df: DataFrame, group_cols: list[str],
-                            text_col: str, k: int = 10,
-                            capacity: int = 256, w: int = 16384, d: int = 5,
-                            seed: int = 0) -> DataFrame:
-    """Continuously-maintained top-k tokens per group — the streaming
-    twin of ``heavyhitters.cms_heavy_hitters``.
-
-    State per group = one conservative-update CMS (counts) + one
-    SpaceSaving summary (candidate retention with the freq > N/capacity
-    guarantee), both carried across micro-batches. Each update emits the
-    group's refreshed top-k: (group_cols..., token, est_cnt, rnk).
-
-    Same skew note as streaming_build: keyed state hash-partitions raw
-    rows by group; salt upstream for giant groups.
-    """
-    import numpy as np
-    from pyspark.sql.types import ArrayType, IntegerType
-    from sketchlib.core.cms import CountMinSketch
-    from sketchlib.spark.build import update_from_token_counts
-    from sketchlib.spark.heavyhitters import SpaceSaving, topk_from_cms
-
-    out_schema = StructType(_group_fields(stream_df, group_cols) + [
-        StructField("token", StringType(), False),
-        StructField("est_cnt", LongType(), False),
-        StructField("rnk", IntegerType(), False),
-    ])
-    state_schema = StructType([
-        StructField("cms", BinaryType(), True),
-        StructField("toks", ArrayType(StringType()), True),
-        StructField("cnts", ArrayType(LongType()), True),
-        StructField("errs", ArrayType(LongType()), True),
-    ])
-
-    def fn(key: tuple, pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cms_b, toks, cnts, errs = state.get
-            cms = sketch_from_bytes(bytes(cms_b))
-            ss = SpaceSaving.from_state(capacity, toks, cnts, errs)
-        else:
-            cms = CountMinSketch(w, d, seed, conservative=True)
-            ss = SpaceSaving(capacity)
-        for pdf in pdfs:
-            update_from_token_counts(cms, ss, pdf[text_col])
-        toks, cnts, errs = ss.to_state()
-        state.update((cms.to_bytes(), toks, cnts, errs))
-        top_toks, top_ests = topk_from_cms(cms, toks, k)
-        if not top_toks:
-            return
-        yield pd.DataFrame({
-            **{c: [key[i]] * len(top_toks) for i, c in enumerate(group_cols)},
-            "token": top_toks,
-            "est_cnt": top_ests,
-            "rnk": np.arange(1, len(top_toks) + 1, dtype=np.int32),
-        })
-
-    sel_cols = [*group_cols] + ([text_col] if text_col not in group_cols
-                                else [])
-    return (stream_df.select(*sel_cols).groupBy(*group_cols)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
-
-
 def streaming_dedup(stream_df: DataFrame, key_col: str,
                     n_expected: int, p: float = 0.001,
                     shards: int = 64, seed: int = 0) -> DataFrame:

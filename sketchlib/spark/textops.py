@@ -1019,146 +1019,3 @@ def html_to_text(df: DataFrame, html_col: str,
     s = F.regexp_replace(s, r"^\s+|\s+$", "")
     return df.withColumn(out_col, s)
 
-
-def dup_span_flags(df: DataFrame, id_col: str, text_col: str,
-                   span_tokens: int = 50, winnow: int = 1,
-                   min_count: int = 2) -> DataFrame:
-    """Corpus-wide duplicated-SPAN detection — the substring-level rung
-    of the dedup ladder (the "exact substring dedup" of Deduplicating
-    Training Data Makes Language Models Better / RefinedWeb, which
-    document-level dedup misses: boilerplate paragraphs, licence
-    blocks, templated intros shared across otherwise-distinct pages).
-
-    A span is ``span_tokens`` consecutive whitespace tokens. With
-    ``winnow=1`` (default) EVERY span's 64-bit hash ships: per doc,
-    (doc_id, n_spans, n_dup_spans, dup_frac) where a span is
-    duplicated when its hash occurs >= ``min_count`` times across the
-    whole corpus (within-doc repeats count — a doc repeating its own
-    boilerplate flags itself). ``dup_frac`` is the gate value
-    (RefinedWeb drops or trims docs above a threshold).
-
-    ``winnow=w > 1`` switches to WINNOWING fingerprint selection
-    (Schleimer et al., SIGMOD 2003): per doc, the DISTINCT minima of
-    every w consecutive span hashes are the fingerprints (~2/(w+1)
-    selection density), and counting runs over fingerprints. The
-    winnowing guarantee holds because selection is CONTENT-defined —
-    a fixed position stride has no cross-document alignment and
-    detects nothing off-phase: any substring of length >=
-    span_tokens + w - 1 tokens shared by two docs contains a full
-    w-run of identical span hashes in BOTH docs, whose minimum both
-    select. Per-doc distinct selection means within-doc
-    self-repeats no longer self-flag (cross-doc duplication only).
-
-    Columns become (n_fingerprints, n_spans_considered,
-    n_dup_fingerprints, dup_frac).
-
-    Scale shape — the published method is a suffix array, which does
-    not distribute on a DataFrame engine. The winnow=1 plan is
-    entirely JVM-side (tokenize -> span hashes via transform(sequence)
-    -> explode -> count -> join back, whole-stage codegen); winnow>1
-    keeps the string-heavy hashing JVM-side and runs the sliding
-    minima in ONE Arrow-batched numpy kernel per doc
-    (sliding_window_view) — a pure array-expression winnow measured
-    ~10x slower than the whole un-winnowed pipeline because
-    higher-order lambdas evaluate interpreted per element:
-    - exploded rows ~= n_tokens per doc at winnow=1, ~2/(w+1) of that
-      at winnow=w — at 10^12 docs run span=50, winnow=50 for ~4%
-      density with the >= 99-token detection guarantee.
-    - the count side is a partial-aggregated groupBy on the hash, and
-      the flag join-back is an equi-join of the span rows against a
-      DISTINCT-hash set: each span row matches at most once, so
-      output <= |spans| — there is NO f^2 fan-out anywhere, and no
-      hot-span cap is needed (an earlier draft had one; it would have
-      UN-flagged exactly the heaviest boilerplate — review r5).
-
-    64-bit hashing: at N shipped hashes expect ~N^2/2^65 false
-    collisions — a handful per 10^9 — acceptable for a keep/trim gate.
-
-    SHORT DOCS PRODUCE NO ROW (ADVICE r5): a doc with fewer than
-    span_tokens + winnow - 1 tokens has no span to evaluate and is
-    absent from the output entirely (not dup_frac=0). Consumers gating
-    a corpus must LEFT-join this table and coalesce dup_frac to 0 —
-    an inner join would silently drop every short doc.
-    """
-    if span_tokens < 1 or winnow < 1:
-        raise ValueError("span_tokens and winnow must be >= 1")
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    base = (df.select(F.col(id_col).alias("_id"), toks.alias("_t"))
-            .withColumn("_n", F.size("_t"))
-            .filter(F.col("_n") >= span_tokens + winnow - 1))
-    # greatest(..., 0): the optimizer infers size()/isnotnull
-    # predicates from the downstream explode and pushes them into the
-    # eligibility Filter, where codegen may evaluate this expression
-    # BEFORE the n >= span conjunct — on a short doc an unclamped
-    # sequence(0, negative) DESCENDS and slice(start=0) throws. The
-    # clamp makes the expression total; clamped rows are filtered out
-    # anyway, so their (meaningless) hashes never surface.
-    hashes = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.col("_n") - span_tokens,
-                                        F.lit(0))),
-        lambda i: F.xxhash64(F.concat_ws(" ",
-                                         F.slice("_t", i + 1, span_tokens))))
-    if winnow > 1:
-        # JVM computes the span-hash ARRAY (the string-heavy part);
-        # the sliding minima run in ONE Arrow-batched numpy kernel
-        # (sliding_window_view + min + unique per doc). A pure
-        # array-expression winnow (transform + array_min(slice))
-        # measured ~10x slower than the whole winnow=1 pipeline:
-        # higher-order lambdas evaluate interpreted per element, and
-        # per-j slice allocation is O(n*w) boxed work per doc.
-        arr = base.withColumn("_fp0", hashes).select("_id", "_fp0")
-        id_field = [f for f in arr.schema.fields if f.name == "_id"][0]
-        span_schema = StructType([
-            StructField("_id", id_field.dataType, False),
-            StructField("_nsp", LongType(), False),
-            StructField("_h", LongType(), False),
-        ])
-        w = int(winnow)
-
-        def fp_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids, nsps, hs = [], [], []
-                for _id, fp0 in zip(pdf["_id"], pdf["_fp0"]):
-                    a = np.asarray(fp0, dtype=np.int64)
-                    if len(a) < w:
-                        continue  # filtered upstream; belt-and-braces
-                    mins = np.unique(np.lib.stride_tricks
-                                     .sliding_window_view(a, w).min(axis=1))
-                    ids.append(np.full(len(mins), _id))
-                    nsps.append(np.full(len(mins), len(a), dtype=np.int64))
-                    hs.append(mins)
-                if ids:
-                    yield pd.DataFrame({"_id": np.concatenate(ids),
-                                        "_nsp": np.concatenate(nsps),
-                                        "_h": np.concatenate(hs)})
-
-        spans_src = arr.mapInPandas(fp_fn, span_schema)
-        n_col, d_col = "n_fingerprints", "n_dup_fingerprints"
-    else:
-        sel = (base.withColumn("_fp", hashes)
-               .select("_id", F.size("_fp").alias("_nsp"), "_fp"))
-        spans_src = sel.select("_id", "_nsp", F.explode("_fp").alias("_h"))
-        n_col, d_col = "n_spans", "n_dup_spans"
-    # ONE physical pass computes the fingerprints: the exploded frame
-    # feeds per-doc totals, the corpus-wide count, and the flag join
-    # (without the eager materialization each consumer branch would
-    # recompute tokenization + hashing). At 10^12 docs this is the
-    # step to write to a fingerprint TABLE instead.
-    spans = _materialize(spans_src)
-    counts = spans.groupBy("_h").agg(F.count("*").alias("_c"))
-    dup = counts.filter(F.col("_c") >= int(min_count))
-    per_doc = (spans.groupBy("_id")
-               .agg(F.count("*").alias("_nfp"),
-                    F.first("_nsp").alias("_nsp")))
-    flagged = (spans.join(dup.select("_h"), "_h")
-               .groupBy("_id").agg(F.count("*").alias("_dup")))
-    extra = ([F.col("_nsp").alias("n_spans_considered")]
-             if winnow > 1 else [])
-    return (per_doc.join(flagged, "_id", "left")
-            .select(F.col("_id").alias(id_col),
-                    F.col("_nfp").alias(n_col), *extra,
-                    F.coalesce("_dup", F.lit(0)).alias(d_col),
-                    F.round(F.coalesce("_dup", F.lit(0))
-                            / F.col("_nfp"), 4).alias("dup_frac")))

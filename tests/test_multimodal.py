@@ -4,9 +4,8 @@ import numpy as np
 import pytest
 
 from sketchlib.spark.multimodal import (decode_stub, decode_wav, encode_wav,
-                                        extract_features, frame_sample_plan,
-                                        make_fake_media, media_metadata,
-                                        wav_feature_vector)
+                                        extract_features, make_fake_media,
+                                        media_metadata, wav_feature_vector)
 
 
 @pytest.fixture(scope="module")
@@ -147,14 +146,6 @@ class TestPpmCodec:
             want = image_feature_vector(dec(payload))
             assert np.allclose(feats[row["media_id"]], want, atol=1e-6)
         assert len(seen) == 3  # fixture carries PPM, PNG, and JPEG rows
-
-
-def test_frame_sample_plan(spark, media):
-    plan = frame_sample_plan(media, every_ms=5000)
-    rows = plan.collect()
-    vids = media.filter("kind = 'video'").count()
-    assert len({r["media_id"] for r in rows}) == vids
-    assert all(r["sample_ms"] % 5000 == 0 for r in rows)
 
 
 class TestPngCodec:
@@ -927,57 +918,3 @@ def test_media_features_catalog_query(spark):
             assert r["probe_w"] is None
     again = q_media_features(spark, "/root/testdata/sf0.001").collect()
     assert again == rows
-
-
-class TestMp3FrameExtraction:
-    """mp3_extract_frames — the mp3 counterpart of mp4_extract_samples
-    (round 5): per-frame demux with ID3 skip, VBR frame lengths, and
-    clean trailer stop; decode stays the honest stub."""
-
-    def test_cbr_roundtrip(self):
-        from sketchlib.spark.multimodal import (encode_mp3_stub,
-                                                mp3_extract_frames)
-        stream = encode_mp3_stub(3000, bitrate_kbps=128)
-        frames = mp3_extract_frames(stream)
-        assert len(frames) > 1
-        assert b"".join(frames) == stream
-        flen = 144 * 128 * 1000 // 44100
-        for f in frames:
-            assert f[:2] == b"\xFF\xFB" and len(f) == flen
-
-    def test_id3v2_skip_and_id3v1_trailer_stop(self):
-        from sketchlib.spark.multimodal import (encode_mp3_stub,
-                                                mp3_extract_frames)
-        body = encode_mp3_stub(2000)
-        n_body = len(mp3_extract_frames(body))
-        tag_size = 100
-        id3v2 = b"ID3\x04\x00\x00" + bytes(
-            [0, 0, tag_size >> 7, tag_size & 0x7F]) + b"\x00" * tag_size
-        id3v1 = b"TAG" + b"\x00" * 125
-        frames = mp3_extract_frames(id3v2 + body + id3v1)
-        assert len(frames) == n_body
-        assert b"".join(frames) == body
-
-    def test_vbr_per_frame_lengths(self):
-        """Frames at different bitrates: each length comes from ITS
-        OWN header, not the first frame's."""
-        from sketchlib.spark.multimodal import (_MP3_BITRATES, _MP3_RATES,
-                                                mp3_extract_frames)
-        def frame(kbps):
-            br_idx = _MP3_BITRATES[(1, 3)].index(kbps)
-            sr_idx = _MP3_RATES[3].index(44100)
-            hdr = bytes([0xFF, 0xFB, (br_idx << 4) | (sr_idx << 2), 0x00])
-            return hdr + b"\x00" * (144 * kbps * 1000 // 44100 - 4)
-        stream = frame(128) + frame(320) + frame(64) + frame(128)
-        frames = mp3_extract_frames(stream)
-        assert [len(f) for f in frames] == [
-            144 * k * 1000 // 44100 for k in (128, 320, 64, 128)]
-
-    def test_max_frames_and_reject_junk(self):
-        import pytest
-        from sketchlib.spark.multimodal import (encode_mp3_stub,
-                                                mp3_extract_frames)
-        stream = encode_mp3_stub(3000)
-        assert len(mp3_extract_frames(stream, max_frames=2)) == 2
-        with pytest.raises(ValueError, match="sync"):
-            mp3_extract_frames(b"\x00\x01\x02" * 400)

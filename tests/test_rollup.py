@@ -125,12 +125,14 @@ def test_query_hll_rollup_matches_direct(spark):
     assert roll == direct  # bitwise-identical states -> identical estimates
 
 
+def _pairs(rows, col):
+    return {(r["type_a"], r["type_b"]): r[col] for r in rows}
+
+
 def test_query_theta_difference_vs_exact(spark):
     from sketchlib.spark import queries as Q
-    est = {(r["type_a"], r["type_b"]): r["n_only_a_est"]
-           for r in Q.q_theta_user_difference(spark, SF).collect()}
-    exact = {(r["type_a"], r["type_b"]): r["n_only_a"]
-             for r in Q.q_user_difference_exact(spark, SF).collect()}
+    est = _pairs(Q.q_sketch_set_algebra(spark, SF).collect(), "n_only_a_est")
+    exact = _pairs(Q.q_user_difference_exact(spark, SF).collect(), "n_only_a")
     assert set(est) == set(exact)
     for pair, n in exact.items():
         # sf0.001 user sets are far below k=4096 -> theta is exact
@@ -229,24 +231,34 @@ def test_query_kll_readout_single_python_boundary(spark):
 
 
 def test_sketch_set_algebra_matches_component_queries(spark):
-    """The merged set-algebra entry must reproduce the round-4
-    per-technique queries' values (same kernels, same params)."""
+    """Every column of the set-algebra entry against its exact
+    companion: theta (k=4096, exact below k) columns equal the exact
+    overlap and Jaccard; the HLL containment stays within a stated
+    bound of the exact inclusion coefficient."""
     from sketchlib.spark import queries as Q
-    merged = {(r["type_a"], r["type_b"]): r
-              for r in Q.q_sketch_set_algebra(spark, SF).collect()}
-    theta_d = {(r["type_a"], r["type_b"]): r["n_only_a_est"]
-               for r in Q.q_theta_user_difference(spark, SF).collect()}
-    hll_c = {(r["type_a"], r["type_b"]): r["containment_est"]
-             for r in Q.q_hll_user_containment(spark, SF).collect()}
-    assert set(merged) == set(theta_d) == set(hll_c)
-    for k, r in merged.items():
-        assert r["n_only_a_est"] == theta_d[k], k
-        assert r["containment_est"] == hll_c[k], k
-    ov = {(r["type_a"], r["type_b"]): (r["n_shared_est"], r["jaccard_est"])
-          for r in Q.q_theta_user_overlap(spark, SF).collect()}
-    for k, (shared, jac) in ov.items():  # overlap uses < ordering only
-        assert merged[k]["n_shared_est"] == shared, k
-        assert merged[k]["jaccard_est"] == jac, k
+    merged = Q.q_sketch_set_algebra(spark, SF).collect()
+    ov = _pairs(Q.q_user_overlap_exact(spark, SF).collect(), "n_shared")
+    jac = _pairs(Q.q_user_jaccard_exact(spark, SF).collect(), "jaccard")
+    contain = _pairs(Q.q_user_containment_exact(spark, SF).collect(),
+                     "containment")
+    assert ov and set(ov) == set(jac)
+    shared_est = _pairs(merged, "n_shared_est")
+    jac_est = _pairs(merged, "jaccard_est")
+    for k in ov:  # the exact overlap/Jaccard use type_a < type_b only
+        assert (shared_est[k], jac_est[k]) == (ov[k], jac[k]), k
+    # containment = (|A| + |B| - |A u B|) / |A| from three HLL
+    # estimates, each within 3 sigma = 3 * 1.04 / sqrt(2^13) relative
+    # error (b=13); worst case the three errors add
+    n = {r["event_type"]: r["n"] for r in
+         spark.read.parquet(f"{SF}/events.parquet").groupBy("event_type")
+         .agg(F.countDistinct("user_id").alias("n")).collect()}
+    sigma3 = 3 * 1.04 / np.sqrt(2 ** 13)
+    est = _pairs(merged, "containment_est")
+    assert set(est) == set(contain)
+    for (a, b), c in contain.items():
+        n_union = n[a] + n[b] - c * n[a]
+        tol = sigma3 * (n[a] + n[b] + n_union) / n[a] + 1e-4  # + rounding
+        assert abs(est[(a, b)] - c) <= tol, ((a, b), est[(a, b)], c, tol)
 
 
 def test_rollup_fused_readout(spark):
