@@ -36,7 +36,8 @@ from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from sketchlib.core.cms import CountMinSketch
-from sketchlib.spark.build import _merge_groups, update_from_token_counts
+from sketchlib.spark.build import (_merge_groups, _norm_nan,
+                                   update_from_token_counts)
 
 
 class SpaceSaving:
@@ -155,6 +156,9 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
             for gkey, sub in pdf.groupby(group_cols, sort=False, dropna=False):
                 if not isinstance(gkey, tuple):
                     gkey = (gkey,)
+                # NaN keys are unequal, so a null group would otherwise
+                # take a new slot in every Arrow batch (as in build_partials)
+                gkey = _norm_nan(gkey)
                 slot = acc.get(gkey)
                 if slot is None:
                     slot = [CountMinSketch(w, d, seed, conservative=conservative),

@@ -23,7 +23,7 @@ from sketchlib.spark.specs import SketchSpec
 from sketchlib.spark.build import (calibrate, bloom_params_by_group,
                                    build_sketches)
 from sketchlib.spark.validate import collect_sketches, bloom_validate
-from sketchlib.spark import textops
+from sketchlib.spark import sqlfuncs, textops
 
 BLOOM_P = 0.01
 
@@ -204,13 +204,11 @@ def q_fd_embedding_spectrum(spark, sf_dir):
     values + the sketch's spectral error bound. The one-pass input to
     PCA whitening / IVF seeding at 10^12 rows; accuracy vs the exact
     eigenvalues is test-enforced (test_fd)."""
-    from sketchlib.spark.sqlfuncs import register_sql_functions
-    udfs = register_sql_functions(spark)
     emb = (load(spark, sf_dir, "embeddings")
            .select(F.lit(1).alias("g"), "embedding"))
     merged = build_sketches(emb, ["g"],
                             [SketchSpec("f", "fd", "embedding", {"l": 32})])
-    spec = udfs["fd_spectrum"](F.col("sketch"), F.lit(5))
+    spec = sqlfuncs.fd_spectrum(F.col("sketch"), F.lit(5))
     return (merged.select(F.posexplode(spec).alias("rnk", "sq_singular"))
             .select((F.col("rnk") + 1).alias("rnk"), "sq_singular"))
 
@@ -388,8 +386,6 @@ def q_cms_join_size(spark, sf_dir):
     answers 'how big is lineitem ⋈ orders' without running the join.
     Exact companion: join_size_exact. At 10^12 rows each side is one
     partial-build pass; the estimate itself is O(w*d)."""
-    from sketchlib.spark.sqlfuncs import register_sql_functions
-    udfs = register_sql_functions(spark)
     params = {"w": 1 << 19, "d": 3}
     # measured r6: a (key, count) pre-aggregate before the weighted
     # build and input coalescing both came out ~equal to this raw
@@ -405,7 +401,7 @@ def q_cms_join_size(spark, sf_dir):
                        [SketchSpec("b", "cms", "o_orderkey", params)])
     return (a.select("g", F.col("sketch").alias("sk_a"))
             .join(b.select("g", F.col("sketch").alias("sk_b")), "g")
-            .select(udfs["cms_join_size"](F.col("sk_a"), F.col("sk_b"))
+            .select(sqlfuncs.cms_join_size(F.col("sk_a"), F.col("sk_b"))
                     .alias("join_rows_est")))
 
 
@@ -491,15 +487,13 @@ def q_sample_docs_lang(spark, sf_dir):
     uniformity laws are test-enforced (test_sample_kernel). At 10^12
     docs this is the 'show me 20 random documents per lang' query with
     O(#groups x k) output and no full-table shuffle."""
-    from sketchlib.spark.sqlfuncs import register_sql_functions
-    udfs = register_sql_functions(spark)
     merged = _doc_sketches(spark, sf_dir,
                            [SketchSpec("s", "sample", "doc_id", {"k": 20})])
     return (merged.filter(F.col("sketch_name") == "s")
             .select("lang",
-                    F.explode(udfs["sample_values"](F.col("sketch")))
+                    F.explode(sqlfuncs.sample_values(F.col("sketch")))
                     .alias("doc_id"),
-                    udfs["sketch_estimate"](F.col("sketch"))
+                    sqlfuncs.sketch_estimate(F.col("sketch"))
                     .alias("n_distinct_est")))
 
 
@@ -517,16 +511,14 @@ def q_bloom_fpr_validation(spark, sf_dir):
 
 def q_hll_distinct_lang(spark, sf_dir):
     """Distributed estimate read-out: the sketch table stays a
-    DataFrame; `sketch_estimate` (registered pandas UDF) evaluates on
+    DataFrame; `sketch_estimate` (a pandas UDF) evaluates on
     executors — no driver-side collect/loop."""
-    from sketchlib.spark.sqlfuncs import register_sql_functions
-    udfs = register_sql_functions(spark)
     merged = _doc_sketches(spark, sf_dir,
                            [SketchSpec("h", "hll", "text", {"b": 14})])
     rel = 1.04 / (1 << 14) ** 0.5
     return (merged.filter(F.col("sketch_name") == "h")
             .select("lang",
-                    udfs["sketch_estimate"](F.col("sketch"))
+                    sqlfuncs.sketch_estimate(F.col("sketch"))
                     .alias("n_distinct_est"),
                     F.lit(float(rel)).alias("rel_error")))
 
@@ -558,8 +550,6 @@ def q_countsketch_token_freq(spark, sf_dir):
     in distributedly; exact companion heavy_tokens_lang). Estimates are
     two-sided noise around the truth — the right read-out when the
     counts feed downstream statistics rather than a keep/drop gate."""
-    from sketchlib.spark.sqlfuncs import register_sql_functions
-    udfs = register_sql_functions(spark)
     merged = _doc_sketches(
         spark, sf_dir,
         [SketchSpec("cs", "countsketch", "text", {"w": 16384, "d": 5},
@@ -567,7 +557,7 @@ def q_countsketch_token_freq(spark, sf_dir):
     top = q_heavy_tokens_lang(spark, sf_dir).select("lang", "token", "rnk")
     return (top.join(merged.filter(F.col("sketch_name") == "cs"), "lang")
             .select("lang", "token", "rnk",
-                    udfs["cms_count"](F.col("sketch"), F.col("token"))
+                    sqlfuncs.cms_count(F.col("sketch"), F.col("token"))
                     .alias("est_cnt")))
 
 
@@ -582,8 +572,6 @@ def q_kll_quantiles_nchars(spark, sf_dir):
     (inverse read-out, exact companion short_doc_share_lang) ride the
     same boundary for free — this query also absorbs round 4's
     separate kll_cdf_nchars catalog entry."""
-    from sketchlib.spark.sqlfuncs import register_sql_functions
-    udfs = register_sql_functions(spark)
     merged = _doc_sketches(
         spark, sf_dir,
         [SketchSpec("k", "kll", "n_chars", {"k": 256}),
@@ -595,11 +583,11 @@ def q_kll_quantiles_nchars(spark, sf_dir):
                 ignorenulls=True).alias("tsk"))
     sel = wide.select(
         "lang",
-        udfs["sketch_quantiles"](
+        sqlfuncs.sketch_quantiles(
             F.col("ksk"), F.array(F.lit(0.5), F.lit(0.9))).alias("kq"),
-        udfs["sketch_quantiles"](
+        sqlfuncs.sketch_quantiles(
             F.col("tsk"), F.array(F.lit(0.5), F.lit(0.9))).alias("tq"),
-        udfs["sketch_cdfs"](
+        sqlfuncs.sketch_cdfs(
             F.col("ksk"), F.array(F.lit(200.0), F.lit(500.0))).alias("kc"))
     return sel.select(
         "lang",
@@ -874,8 +862,7 @@ def q_hll_rollup_lang(spark, sf_dir):
     estimates match q_hll_distinct_lang exactly (tests assert this);
     exact companion: q_distinct_texts_lang.
     """
-    from sketchlib.spark.sqlfuncs import register_sql_functions
-    register_sql_functions(spark)
+    sqlfuncs.register_sql_functions(spark)
     docs = load(spark, sf_dir, "documents")
     fine = build_sketches(docs, ["lang", "source"],
                           [SketchSpec("h", "hll", "text", {"b": 14})])
@@ -946,8 +933,6 @@ def q_sketch_set_algebra(spark, sf_dir):
     four UDF calls sit in a single projection -> one ArrowEvalPython
     stage. Exact companions: user_overlap_exact, user_jaccard_exact,
     user_difference_exact, user_containment_exact."""
-    from sketchlib.spark.sqlfuncs import register_sql_functions
-    udfs = register_sql_functions(spark)
     ev = (load(spark, sf_dir, "events")
           .withColumn("uid", F.col("user_id").cast("string")))
     sk = build_sketches(ev, ["event_type"],
@@ -964,13 +949,13 @@ def q_sketch_set_algebra(spark, sf_dir):
                     F.col("tsk").alias("tb"), F.col("hsk").alias("hb"))
     return (a.join(b, F.col("type_a") != F.col("type_b"))
             .select("type_a", "type_b",
-                    udfs["theta_intersect"](F.col("ta"), F.col("tb"))
+                    sqlfuncs.theta_intersect(F.col("ta"), F.col("tb"))
                     .alias("n_shared_est"),
-                    F.round(udfs["theta_jaccard"](F.col("ta"), F.col("tb")),
+                    F.round(sqlfuncs.theta_jaccard(F.col("ta"), F.col("tb")),
                             4).alias("jaccard_est"),
-                    udfs["theta_difference"](F.col("ta"), F.col("tb"))
+                    sqlfuncs.theta_difference(F.col("ta"), F.col("tb"))
                     .alias("n_only_a_est"),
-                    F.round(udfs["hll_inclusion"](F.col("ha"), F.col("hb")),
+                    F.round(sqlfuncs.hll_inclusion(F.col("ha"), F.col("hb")),
                             4).alias("containment_est")))
 
 
@@ -983,8 +968,6 @@ def q_token_freq_sketch_accuracy(spark, sf_dir):
     round 4's cms_top_tokens / countsketch_token_freq entries; exact
     companion heavy_tokens_lang."""
     from sketchlib.spark.heavyhitters import cms_heavy_hitters
-    from sketchlib.spark.sqlfuncs import register_sql_functions
-    udfs = register_sql_functions(spark)
     docs = load(spark, sf_dir, "documents")
     est = (cms_heavy_hitters(docs, ["lang"], "text", k=10)
            .select("lang", "token", F.col("est_cnt").alias("cms_cnt")))
@@ -995,7 +978,7 @@ def q_token_freq_sketch_accuracy(spark, sf_dir):
     with_cs = (est.join(cs.filter(F.col("sketch_name") == "cs")
                         .select("lang", "sketch"), "lang")
                .select("lang", "token", "cms_cnt",
-                       udfs["cms_count"](F.col("sketch"), F.col("token"))
+                       sqlfuncs.cms_count(F.col("sketch"), F.col("token"))
                        .alias("cs_cnt")))
     toks = F.filter(F.split("text", " "), lambda x: x != "")
     exact = (docs.select("lang", F.explode(toks).alias("token"))

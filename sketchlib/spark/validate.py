@@ -22,11 +22,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from sketchlib.core.serde import sketch_from_bytes
+from sketchlib.spark import sqlfuncs
 from sketchlib.spark.build import _norm_nan
 
 
@@ -75,7 +76,6 @@ def bloom_validate(df: DataFrame, filters: dict, group_cols: list[str],
     (default 1 GiB ~ executor broadcast comfort) instead of melting the
     cluster; shard the groups across calls or validate per-partition.
     """
-    spark = SparkSession.getActiveSession()
     blobs = {k: v.to_bytes() for k, v in filters.items()}
     # budget the INFLATED size (sum of m/8): blobs ship sparse-encoded,
     # but every executor deserializes each filter to its full bit
@@ -91,7 +91,7 @@ def bloom_validate(df: DataFrame, filters: dict, group_cols: list[str],
             "probes every row against every group's filter, so cost "
             "scales with #groups x scan — shard the groups across calls "
             "(or raise the budget deliberately)")
-    bc = spark.sparkContext.broadcast(blobs)
+    bc = df.sparkSession.sparkContext.broadcast(blobs)
     single = len(group_cols) == 1
     sel = df.select(*group_cols, value_col)
     group_fields = [f for f in sel.schema.fields if f.name in group_cols]
@@ -179,10 +179,7 @@ def accuracy_table(df: DataFrame, group_cols: list[str], specs,
     metric, est, exact, err, bound, within_bound).
     """
     from sketchlib.spark.build import build_sketches
-    from sketchlib.spark.sqlfuncs import register_sql_functions
 
-    spark = SparkSession.getActiveSession()
-    udfs = register_sql_functions(spark)
     distinct_kinds = {"hll", "theta", "sample"}
     quantile_kinds = {"kll", "tdigest"}
     todo = [s for s in specs
@@ -227,7 +224,7 @@ def accuracy_table(df: DataFrame, group_cols: list[str], specs,
         for spec in dist_specs:
             est = (merged.filter(F.col("sketch_name") == spec.name)
                    .select(*group_cols, "sketch_name",
-                           udfs["sketch_estimate"]("sketch").alias("est")))
+                           sqlfuncs.sketch_estimate("sketch").alias("est")))
             ex = F.col(f"__ex_{spec.value_col}")
             out.append(
                 _join_groups(est, exact)
@@ -253,7 +250,7 @@ def accuracy_table(df: DataFrame, group_cols: list[str], specs,
             e = (merged.filter(F.col("sketch_name") == spec.name)
                  .select(*group_cols, "sketch_name",
                          F.lit(spec.kind).alias("kind"),
-                         udfs["sketch_quantile"]("sketch", F.lit(0.5))
+                         sqlfuncs.sketch_quantile("sketch", F.lit(0.5))
                          .alias("est")))
             ests = e if ests is None else ests.unionByName(e)
         vals = (df.select(*group_cols, F.col(vcol).alias("_v"))
@@ -292,7 +289,7 @@ def accuracy_table(df: DataFrame, group_cols: list[str], specs,
                .groupBy(*group_cols).agg(F.sum("_mw").alias("__exw")))
         est = (merged.filter(F.col("sketch_name") == spec.name)
                .select(*group_cols, "sketch_name",
-                       udfs["sketch_estimate"]("sketch").alias("est")))
+                       sqlfuncs.sketch_estimate("sketch").alias("est")))
         k = spec.params.get("k", 1024)
         bound = 4.0 / (max(k - 2, 1)) ** 0.5
         ex = F.col("__exw")

@@ -64,3 +64,30 @@ def test_requires_supported_kind(spark):
     with pytest.raises(ValueError, match="bloom_validate"):
         accuracy_table(docs, ["lang"],
                        [SketchSpec("b", "bloom", "text", {"m": 1024, "k": 3})])
+
+
+def test_validation_outside_the_session_thread(spark):
+    """bloom_validate and accuracy_table take the session from the
+    DataFrame: SparkSession.getActiveSession() is None in any thread
+    other than the one that built the session."""
+    import threading
+    from sketchlib.core.bloom import BloomFilter
+    from sketchlib.spark.specs import SketchSpec
+    from sketchlib.spark.validate import accuracy_table, bloom_validate
+    df = spark.createDataFrame([("a", "x"), ("a", "y"), ("b", "z")],
+                               "g string, v string")
+    filters = {"a": BloomFilter(1024, 3).update_batch(["x", "y"]),
+               "b": BloomFilter(1024, 3).update_batch(["z"])}
+    got = {}
+
+    def work():
+        got["bloom"] = bloom_validate(df, filters, ["g"], "v", 0.01).collect()
+        got["acc"] = accuracy_table(
+            df, ["g"], [SketchSpec("h", "hll", "v", {"b": 10})]).collect()
+
+    t = threading.Thread(target=work)
+    t.start()
+    t.join(timeout=600)
+    assert not t.is_alive()
+    assert len(got.get("bloom", [])) == 2
+    assert len(got.get("acc", [])) == 2

@@ -140,3 +140,38 @@ def test_heavy_hitters_flush_preserves_topk(spark, pages_tiny_multifile):
         assert run(1) == unbounded
     finally:
         spark.conf.set(key, old)
+
+
+def test_null_group_key_one_partial_per_partition(spark, monkeypatch):
+    """A null numeric group key spanning many Arrow batches keeps ONE
+    CMS + SpaceSaving slot per partition, like every other group."""
+    from sketchlib.spark import heavyhitters
+    rows = [(None if i % 4 == 0 else i % 3,
+             " ".join(["hot"] * (i % 5 + 1) + [f"t{i % 7}"]))
+            for i in range(200)]
+    df = spark.createDataFrame(rows, "g int, text string").coalesce(1)
+    partials = []
+
+    def spy(parts, *args):
+        partials.append(parts)
+        return real(parts, *args)
+
+    real = heavyhitters._merge_groups
+    monkeypatch.setattr(heavyhitters, "_merge_groups", spy)
+
+    def run():
+        return sorted(((r["g"] is None, r["g"] or 0), r["token"],
+                       r["est_cnt"], r["rnk"])
+                      for r in cms_heavy_hitters(df, ["g"], "text",
+                                                 k=3).collect())
+    default = run()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10")
+    try:
+        assert run() == default
+        per_group = partials[-1].groupBy("g").count().collect()
+    finally:
+        spark.conf.set(key, old)
+    assert len(per_group) == 4  # groups 0, 1, 2 and null
+    assert all(r["count"] == 1 for r in per_group), per_group

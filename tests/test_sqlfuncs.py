@@ -102,3 +102,106 @@ def test_sql_multipoint_null_for_non_quantile_sketch(spark, sketch_view):
                   "sketch_cdfs(sketch, array(1.0D)) AS c FROM sketches "
                   "WHERE sketch_name = 'url_hll'").first()
     assert r["q"] is None and r["c"] is None
+
+
+def test_readme_lists_every_sql_function():
+    """README's SQL-surface paragraph names exactly the registered
+    functions, in sorted order — a function outside the documented
+    public API fails here."""
+    import pathlib
+    import re
+    from sketchlib.spark.sqlfuncs import SQL_FUNCTIONS
+    readme = (pathlib.Path(__file__).parents[1] / "README.md").read_text()
+    para = re.search(r"^SQL surface:(.*?)\n\n", readme, re.S | re.M)
+    assert para, "README has no 'SQL surface:' paragraph"
+    listed = re.findall(r"`(\w+)`", para.group(1).split(". ")[0])
+    assert listed == sorted(SQL_FUNCTIONS)
+
+
+# name -> (blob column, argument columns, a blob column whose kernel has
+# no such read-out, or None when every kernel has one)
+_RULE_CASES = {
+    "bloom_contains": ("bloom", ["key"], "hll"),
+    "cms_count": ("cms", ["key"], "hll"),
+    "cms_join_size": ("cms", ["cms"], "hll"),
+    "fd_spectrum": ("fd", ["k"], "hll"),
+    "hll_inclusion": ("hll", ["hll"], "theta"),
+    "sample_values": ("sample", [], "hll"),
+    "sample_weights": ("wsample", [], "sample"),
+    "sketch_cdf": ("kll", ["x"], "hll"),
+    "sketch_cdfs": ("kll", ["xs"], "hll"),
+    "sketch_estimate": ("hll", [], None),
+    "sketch_merge": ("blobs", [], None),  # array<binary> in, no kind check
+    "sketch_quantile": ("kll", ["q"], "hll"),
+    "sketch_quantiles": ("kll", ["qs"], "hll"),
+    "theta_difference": ("theta", ["theta"], "hll"),
+    "theta_intersect": ("theta", ["theta"], "hll"),
+    "theta_jaccard": ("theta", ["theta"], "hll"),
+}
+_NUMERIC_ARGS = {"k", "q", "x"}
+
+
+@pytest.fixture(scope="module")
+def rule_row(spark):
+    import numpy as np
+    from sketchlib.core.bloom import BloomFilter
+    from sketchlib.core.cms import CountMinSketch
+    from sketchlib.core.fd import FrequentDirections
+    from sketchlib.core.hll import HyperLogLog
+    from sketchlib.core.kll import KLL
+    from sketchlib.core.sample import BottomKSample, WeightedBottomKSample
+    from sketchlib.core.theta import ThetaSketch
+    vals = [f"v{i}" for i in range(50)]
+    nums = np.arange(50.0)
+    hll = HyperLogLog(10).update_batch(vals).to_bytes()
+    blobs = [BloomFilter(1024, 3).update_batch(vals).to_bytes(), hll,
+             CountMinSketch(64, 3).update_batch(vals).to_bytes(),
+             KLL(64).update_batch(nums).to_bytes(),
+             FrequentDirections(l=4).update_batch(
+                 np.stack([nums, nums % 7, nums % 3], axis=1)).to_bytes(),
+             BottomKSample(8).update_batch(vals).to_bytes(),
+             WeightedBottomKSample(8).update_batch(vals, nums + 1).to_bytes(),
+             ThetaSketch(64).update_batch(vals).to_bytes()]
+    return spark.createDataFrame(
+        [(*blobs, [hll, hll], "v1", 0.5, 10.0, 2, [0.5], [10.0])],
+        "bloom binary, hll binary, cms binary, kll binary, fd binary, "
+        "sample binary, wsample binary, theta binary, blobs array<binary>, "
+        "key string, q double, x double, k int, qs array<double>, "
+        "xs array<double>")
+
+
+def test_rule_cases_cover_the_registry():
+    from sketchlib.spark.sqlfuncs import SQL_FUNCTIONS
+    assert sorted(_RULE_CASES) == sorted(SQL_FUNCTIONS)
+
+
+@pytest.mark.parametrize("name", sorted(_RULE_CASES))
+def test_null_rule(rule_row, name):
+    """Every SQL function: NULL blob, NULL argument, NaN numeric
+    argument and a wrong-kind blob each give NULL, while the valid row
+    gives a value."""
+    from sketchlib.spark.sqlfuncs import SQL_FUNCTIONS
+    f = SQL_FUNCTIONS[name]
+    blob, args, wrong = _RULE_CASES[name]
+
+    def null(c):
+        return F.lit(None).cast(rule_row.schema[c].dataType)
+
+    def call(i, arg):  # f with the i-th input (0 = blob) replaced
+        cols = [blob, *args]
+        cols[i] = arg
+        return f(*cols)
+
+    cases = {"ok": f(blob, *args), "null_blob": call(0, null(blob))}
+    for i, a in enumerate(args, start=1):
+        cases[f"null_{a}_{i}"] = call(i, null(a))
+        if a in _NUMERIC_ARGS:
+            cases[f"nan_{a}"] = call(i, F.lit(float("nan")))
+    if wrong is not None:
+        cases["wrong_kind"] = call(0, F.col(wrong))
+        if args == [blob]:  # pair functions: either side
+            cases["wrong_kind_2"] = call(1, F.col(wrong))
+    got = rule_row.select(*[c.alias(k) for k, c in cases.items()]) \
+        .first().asDict()
+    assert got.pop("ok") is not None
+    assert got == dict.fromkeys(got), got
