@@ -1,13 +1,16 @@
 """Our sketch kernels vs Spark's JVM-native approximations.
 
 Honest framing: Spark already ships approx_count_distinct (HLL++) and
-percentile_approx (a KLL-ish quantile summary). This library exists
-because those are QUERY-SCOPED — you cannot persist their state,
-merge yesterday's sketch with today's, roll a (lang, day) sketch table
-up to per-lang, intersect two groups' sets, or probe membership. The
-comparison below quantifies what the persistable/mergeable surface
-costs in wall time and accuracy at the same workload, so the tradeoff
-is a number, not a claim.
+percentile_approx (a KLL-ish quantile summary). Those two are
+QUERY-SCOPED — you cannot persist their state, merge yesterday's
+sketch with today's, roll a (lang, day) sketch table up to per-lang,
+intersect two groups' sets, or probe membership. Spark 4.1 also ships
+persistable, mergeable binary sketches (theta_sketch_agg /
+theta_union_agg, hll_sketch_agg / hll_union_agg, kll_sketch_agg_*);
+this script does not compare against those. The comparison below
+quantifies what this library's persistable/mergeable surface costs in
+wall time and accuracy against the two query-scoped functions at the
+same workload, so the tradeoff is a number, not a claim.
 
 Run: python BENCH/builtin_compare.py  (env: SPARK_GRAFT_SF_DIR,
 SPARK_GRAFT_CPUS). Appends nothing; prints a markdown table.

@@ -16,6 +16,9 @@ OR-merge :139-164) with the Spark-native architecture from SURVEY.md §4:
                           optional two-level (salted) fan-in for very
                           wide clusters, treeAggregate-style.
 
+A single-partition input skips the shuffle: ``build_sketches`` folds
+the partials in the task that built them (one ``mapInPandas``).
+
 At 100 TB: the shuffle volume is (#input_partitions × #groups ×
 sketch_bytes) regardless of row count — the property that makes the
 reference's design scale, preserved verbatim.
@@ -208,26 +211,12 @@ def _feed(spec: SketchSpec, sketch, sub: pd.DataFrame,
         sketch.update_batch(vals)
 
 
-def build_partials(df: DataFrame, group_cols: list[str],
-                   specs: list[SketchSpec],
-                   max_groups_in_flight: int | None = None) -> DataFrame:
-    """Stage 2a: one partial sketch per (input partition, group, spec).
-
-    Column-prunes to exactly the needed columns before the Python
-    boundary so the parquet scan reads only those (ReadSchema check).
-
-    ``max_groups_in_flight`` (default env SKETCHLIB_MAX_GROUPS_IN_FLIGHT
-    or 8192) bounds task memory on HIGH-CARDINALITY group keys: when a
-    task is holding that many (group, spec) states it FLUSHES them as
-    partial rows (tagged with an increasing ``chunk``) and starts
-    fresh, so memory is O(max_groups x state_bytes) instead of
-    O(#groups-in-partition x state_bytes). Flushed chunks are just
-    more partials: lattice kernels merge back bitwise-identical to the
-    unflushed build; the lossy quantile kernels get one more merge
-    boundary — the same effect the partition split already has — and
-    stay deterministic because the merge totally orders partial rows
-    by (partition_id, chunk).
-    """
+def _partial_task(df: DataFrame, group_cols: list[str],
+                  specs: list[SketchSpec],
+                  max_groups_in_flight: int | None):
+    """(projected input, per-partition build, partials schema): the
+    pieces of ``build_partials``, which ``build_sketches`` also composes
+    with the in-task fold."""
     if not specs:
         raise ValueError("at least one SketchSpec required")
     names = [s.name for s in specs]
@@ -242,11 +231,11 @@ def build_partials(df: DataFrame, group_cols: list[str],
                          | {s.weight_col for s in specs if s.weight_col})
                         - set(group_cols))  # a group col can be sketched
     sel = df.select(*group_cols, *value_cols)
-    schema = _partials_schema(df, group_cols)
     n_groups = len(group_cols)
     flush_at = max_groups_in_flight * len(specs)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def build_partition(batches: Iterator[pd.DataFrame]
+                        ) -> Iterator[pd.DataFrame]:
         pid = task_partition_id()
         acc: dict = {}  # (group_tuple, spec_idx) -> [sketch, n_rows]
         chunk = 0
@@ -287,7 +276,32 @@ def build_partials(df: DataFrame, group_cols: list[str],
         if acc:
             yield emit()
 
-    return sel.mapInPandas(fn, schema)
+    return sel, build_partition, _partials_schema(df, group_cols)
+
+
+def build_partials(df: DataFrame, group_cols: list[str],
+                   specs: list[SketchSpec],
+                   max_groups_in_flight: int | None = None) -> DataFrame:
+    """Stage 2a: one partial sketch per (input partition, group, spec).
+
+    Column-prunes to exactly the needed columns before the Python
+    boundary so the parquet scan reads only those (ReadSchema check).
+
+    ``max_groups_in_flight`` (default env SKETCHLIB_MAX_GROUPS_IN_FLIGHT
+    or 8192) bounds task memory on HIGH-CARDINALITY group keys: when a
+    task is holding that many (group, spec) states it FLUSHES them as
+    partial rows (tagged with an increasing ``chunk``) and starts
+    fresh, so memory is O(max_groups x state_bytes) instead of
+    O(#groups-in-partition x state_bytes). Flushed chunks are just
+    more partials: lattice kernels merge back bitwise-identical to the
+    unflushed build; the lossy quantile kernels get one more merge
+    boundary — the same effect the partition split already has — and
+    stay deterministic because the merge totally orders partial rows
+    by (partition_id, chunk).
+    """
+    sel, build, schema = _partial_task(df, group_cols, specs,
+                                       max_groups_in_flight)
+    return sel.mapInPandas(build, schema)
 
 
 def _table_schema(df: DataFrame, group_cols: list[str],
@@ -345,6 +359,113 @@ def _merge_groups(df: DataFrame, keys: list[str], schema: StructType,
         _group_fold(blob_col, emit, by, ascending, context), schema)
 
 
+def _fold_in_task(keys: list[str], group_fold):
+    """The in-task grouped fold: gather the rows of every frame a task
+    sees per ``keys`` group, then run ``group_fold(key, rows)`` (a
+    ``_group_fold`` task) once per group. Complete exactly when all of
+    a group's rows are task-local — a single-partition input.
+
+    Memory shape: the frames' rows are held once, and each group's
+    accumulation is freed as it is folded, so the transient is all
+    rows plus ONE group's frame."""
+    def fold_partition(frames: Iterator[pd.DataFrame]
+                       ) -> Iterator[pd.DataFrame]:
+        groups: dict = {}
+        for pdf in frames:
+            for key, sub in pdf.groupby(keys, sort=False, dropna=False):
+                if not isinstance(key, tuple):
+                    key = (key,)
+                # normalize BEFORE the dict insert: distinct NaN
+                # objects are unequal, so a null numeric group key
+                # spanning multiple Arrow batches would otherwise
+                # split into duplicate rows
+                groups.setdefault(_norm_nan(key), []).append(sub)
+        if groups:
+            yield pd.concat([group_fold(key, pd.concat(groups.pop(key),
+                                                       ignore_index=True))
+                             for key in list(groups)], ignore_index=True)
+    return fold_partition
+
+
+def _build_and_fold(build, fold):
+    """One Python operator for a single-partition input: ``fold`` (an
+    ``_fold_in_task``) consumes the partial frames ``build`` yields, in
+    the task that built them."""
+    def build_and_fold(batches: Iterator[pd.DataFrame]
+                       ) -> Iterator[pd.DataFrame]:
+        return fold(build(batches))
+    return build_and_fold
+
+
+def _fold_partials(group_cols: list[str], readout: list | None):
+    """``_fold_in_task`` over ``_partials_schema`` frames: one
+    ``_table_schema`` row per (group, spec), folded in (partition_id,
+    chunk) order like every level of the shuffle tree."""
+    keys = [*group_cols, "sketch_name"]
+    return _fold_in_task(keys, _group_fold(
+        "partial", _table_row(keys, readout), by=["partition_id", "chunk"]))
+
+
+def _merge_plan(partials: DataFrame, fanout) -> tuple[int | None, list]:
+    """(partition count, salt-level bucket counts) for a merge of
+    ``partials``. The count is needed to resolve "auto" and to detect
+    the single-partition case; an explicit multi-level fanout needs
+    neither, so the DataFrame->RDD plan conversion is skipped then."""
+    nparts = None
+    if fanout == "auto":
+        nparts = partials.rdd.getNumPartitions()
+        fanout = _auto_fanout(nparts)
+    plan = list(fanout) if isinstance(fanout, (list, tuple)) else \
+        ([int(fanout)] if fanout and fanout > 1 else [])
+    if not plan and nparts is None:
+        nparts = partials.rdd.getNumPartitions()
+    return nparts, plan
+
+
+def _merge_tree(partials: DataFrame, group_cols: list[str], plan: list,
+                readout: list | None) -> DataFrame:
+    """The shuffle merge: one salted ``_merge_groups`` level per
+    ``plan`` entry, then the final per-(group, spec) fold."""
+    keys = [*group_cols, "sketch_name"]
+    order = ["partition_id", "chunk"]
+    out_schema = _table_schema(partials, group_cols, readout)
+    level_schema = StructType(_partials_schema(partials, group_cols).fields
+                              + [StructField("n_partials", LongType(), False)])
+
+    def level_row(key, sk, pdf):
+        # the bucket index (last key) becomes the next level's
+        # partition_id: the fold order at every level is then a pure
+        # function of the tree shape, not of task scheduling
+        return (_table_row(keys)(key[:-1], sk, pdf)
+                .rename(columns={"sketch": "partial"})
+                .assign(partition_id=int(key[-1]), chunk=0))
+
+    for buckets in plan:
+        salted = partials.withColumn(
+            "salt", F.pmod(F.col("partition_id"), F.lit(int(buckets))))
+        partials = _merge_groups(salted, [*keys, "salt"], level_schema,
+                                 "partial", level_row, by=order)
+    return _merge_groups(partials, keys, out_schema, "partial",
+                         _table_row(keys, readout), by=order)
+
+
+def _build_merged(sel: DataFrame, build, partials_schema, group_cols,
+                  fanout, readout: list | None) -> DataFrame:
+    """The merged sketch table of the partials ``build`` makes from
+    ``sel``. When ``sel`` is one partition and the plan has no salt
+    level, every partial of a group is task-local, so the partials fold
+    (and read out) in the task that built them: one Python operator, no
+    Exchange, and the same fold order — hence the same bytes — as the
+    shuffle tree, which every other input takes."""
+    partials = sel.mapInPandas(build, partials_schema)
+    nparts, plan = _merge_plan(partials, fanout)
+    if nparts == 1 and not plan:
+        return sel.mapInPandas(
+            _build_and_fold(build, _fold_partials(group_cols, readout)),
+            _table_schema(partials, group_cols, readout))
+    return _merge_tree(partials, group_cols, plan, readout)
+
+
 def merge_partials(partials: DataFrame, group_cols: list[str],
                    fanout: int | str | list[int] | None = None,
                    allow_narrow: bool = True,
@@ -376,76 +497,21 @@ def merge_partials(partials: DataFrame, group_cols: list[str],
     BENCH/builtin_compare.py). The merged blob column still ships, so
     the result stays persistable and mergeable.
     """
-    # nparts is needed to resolve "auto" and to detect the narrow
-    # single-partition case; an explicit multi-level fanout needs
-    # neither, so skip the DataFrame->RDD plan conversion then
-    nparts = None
-    if fanout == "auto":
-        nparts = partials.rdd.getNumPartitions()
-        fanout = _auto_fanout(nparts)
-    out_schema = _table_schema(partials, group_cols, readout)
-    keys = [*group_cols, "sketch_name"]
-    order = ["partition_id", "chunk"]
-    final_row = _table_row(keys, readout)
-    plan = list(fanout) if isinstance(fanout, (list, tuple)) else \
-        ([int(fanout)] if fanout and fanout > 1 else [])
-    if not plan and nparts is None:
-        nparts = partials.rdd.getNumPartitions()
-
+    nparts, plan = _merge_plan(partials, fanout)
     if nparts == 1 and not plan and allow_narrow:
         # every partial row of a (group, spec) lives in the one input
         # partition, so a NARROW per-partition fold is complete — no
-        # Exchange, no extra stage wave: it pipelines with the partial
-        # build in the same task (measurably faster on small inputs,
-        # where the shuffle stage latency dominates the whole query).
-        # Same per-group task and (partition_id, chunk) order as the
-        # shuffle path, so the result is bitwise-identical to it.
-        #
-        # Memory shape: batches accumulate per GROUP and each group is
-        # folded (and its accumulation freed) independently, so the
-        # transient is all partial blobs once plus ONE group's frame.
-        # For inputs where even that is too much (a large checkpoint
+        # Exchange, no extra stage wave. Same per-group task and
+        # (partition_id, chunk) order as the shuffle path, so the
+        # result is bitwise-identical to it. For inputs where holding
+        # all partial blobs in one task is too much (a large checkpoint
         # store read back as one partition), callers pass
         # allow_narrow=False and take the shuffle path, which holds
         # one group per task.
-        fold = _group_fold("partial", final_row, by=order)
-
-        def fold_partition(batches):
-            groups: dict = {}
-            for pdf in batches:
-                for key, sub in pdf.groupby(keys, sort=False, dropna=False):
-                    if not isinstance(key, tuple):
-                        key = (key,)
-                    # normalize BEFORE the dict insert: distinct NaN
-                    # objects are unequal, so a null numeric group key
-                    # spanning multiple Arrow batches would otherwise
-                    # split into duplicate partial rows (review r5)
-                    groups.setdefault(_norm_nan(key), []).append(sub)
-            if groups:
-                yield pd.concat([fold(key, pd.concat(groups.pop(key),
-                                                     ignore_index=True))
-                                 for key in list(groups)], ignore_index=True)
-
-        return partials.mapInPandas(fold_partition, out_schema)
-
-    level_schema = StructType(_partials_schema(partials, group_cols).fields
-                              + [StructField("n_partials", LongType(), False)])
-
-    def level_row(key, sk, pdf):
-        # the bucket index (last key) becomes the next level's
-        # partition_id: the fold order at every level is then a pure
-        # function of the tree shape, not of task scheduling
-        return (_table_row(keys)(key[:-1], sk, pdf)
-                .rename(columns={"sketch": "partial"})
-                .assign(partition_id=int(key[-1]), chunk=0))
-
-    for buckets in plan:
-        salted = partials.withColumn(
-            "salt", F.pmod(F.col("partition_id"), F.lit(int(buckets))))
-        partials = _merge_groups(salted, [*keys, "salt"], level_schema,
-                                 "partial", level_row, by=order)
-    return _merge_groups(partials, keys, out_schema, "partial", final_row,
-                         by=order)
+        return partials.mapInPandas(_fold_partials(group_cols, readout),
+                                    _table_schema(partials, group_cols,
+                                                  readout))
+    return _merge_tree(partials, group_cols, plan, readout)
 
 
 def rollup_sketches(sketches: DataFrame, from_cols: list[str],
@@ -494,17 +560,18 @@ def build_sketches(df: DataFrame, group_cols: list[str],
                    readout: list | None = None) -> DataFrame:
     """Full stage-2: partial build then hierarchical merge.
 
-    ``fanout="auto"`` (default) is resolved inside ``merge_partials``
+    ``fanout="auto"`` (default) is resolved as in ``merge_partials``
     (see ``_auto_fanout``): single fold up to 64 partials per group,
     else a multi-level salt plan bounding every merge task's fan-in
-    AND input bytes; a single-partition input merges in a narrow
-    no-Exchange fold.
+    AND input bytes. A single-partition input builds, folds and reads
+    out (``readout=``, as in ``merge_partials``) in ONE ``mapInPandas``
+    task: no Exchange and no second Python operator.
 
     Returns one row per (group, sketch_name):
     (group_cols..., sketch_name, sketch binary, n_rows, n_partials).
     """
-    return merge_partials(build_partials(df, group_cols, specs),
-                          group_cols, fanout=fanout, readout=readout)
+    sel, build, schema = _partial_task(df, group_cols, specs, None)
+    return _build_merged(sel, build, schema, group_cols, fanout, readout)
 
 
 def build_sketches_local(df: DataFrame, group_cols: list[str],

@@ -36,7 +36,8 @@ from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from sketchlib.core.cms import CountMinSketch
-from sketchlib.spark.build import (_merge_groups, _norm_nan,
+from sketchlib.spark.build import (_build_and_fold, _fold_in_task,
+                                   _group_fold, _merge_groups, _norm_nan,
                                    update_from_token_counts)
 
 
@@ -103,41 +104,12 @@ def topk_from_cms(cms: CountMinSketch, candidates,
     return [cands[i] for i in order], [int(est[i]) for i in order]
 
 
-def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
-                      k: int = 10, capacity: int = 256,
-                      w: int = 16384, d: int = 5, seed: int = 0,
-                      conservative: bool = True,
-                      max_groups_in_flight: int | None = None) -> DataFrame:
-    """Top-k tokens per group with CMS estimates.
-
-    Returns (group_cols..., token, est_cnt, rnk) — est_cnt >= true count
-    (CMS overestimate-only), rnk by (est_cnt desc, token asc).
-    ``capacity`` is the per-(partition, group) SpaceSaving size: any
-    token with global count > N/capacity is certified-nominated.
-    ``conservative`` (default on) uses conservative update for the
-    partial CMS tables — strictly tighter per-partition overestimates;
-    the add-merge of CU partials remains overestimate-only.
-
-    ``max_groups_in_flight`` (default env SKETCHLIB_MAX_GROUPS_IN_FLIGHT
-    or 8192) bounds task memory on high-cardinality group keys exactly
-    like ``build_partials``: full states flush as extra partial rows.
-    Certification survives the split by pigeonhole — if a token's
-    global count > N_total/capacity then some chunk has
-    count_chunk > N_chunk/capacity, so that chunk's SpaceSaving
-    retains it (same argument that covers the partition split). The
-    final merge is order-free (CMS add + candidate-set union).
-    """
-    import os
-    if max_groups_in_flight is None:
-        max_groups_in_flight = int(os.environ.get(
-            "SKETCHLIB_MAX_GROUPS_IN_FLIGHT", "8192"))
-    sel = df.select(*group_cols, text_col)
-    partial_schema = StructType(
-        [f for f in sel.schema.fields if f.name in group_cols] + [
-            StructField("cms", BinaryType(), False),
-            StructField("cands", ArrayType(StringType()), False),
-        ])
-
+def _token_partials(group_cols: list[str], text_col: str, capacity: int,
+                    w: int, d: int, seed: int, conservative: bool,
+                    max_groups_in_flight: int):
+    """Per-partition build of ``cms_heavy_hitters``: one (cms, cands)
+    partial row per group, flushed every ``max_groups_in_flight``
+    groups."""
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc: dict = {}  # gkey -> [cms, SpaceSaving]
 
@@ -170,15 +142,50 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
                     acc.clear()
         if acc:
             yield emit()
+    return build
 
-    partials = sel.mapInPandas(build, partial_schema)
 
-    out_schema = StructType(
-        [f for f in sel.schema.fields if f.name in group_cols] + [
-            StructField("token", StringType(), False),
-            StructField("est_cnt", LongType(), False),
-            StructField("rnk", IntegerType(), False),
-        ])
+def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
+                      k: int = 10, capacity: int = 256,
+                      w: int = 16384, d: int = 5, seed: int = 0,
+                      conservative: bool = True,
+                      max_groups_in_flight: int | None = None) -> DataFrame:
+    """Top-k tokens per group with CMS estimates.
+
+    Returns (group_cols..., token, est_cnt, rnk) — est_cnt >= true count
+    (CMS overestimate-only), rnk by (est_cnt desc, token asc).
+    ``capacity`` is the per-(partition, group) SpaceSaving size: any
+    token with global count > N/capacity is certified-nominated.
+    ``conservative`` (default on) uses conservative update for the
+    partial CMS tables — strictly tighter per-partition overestimates;
+    the add-merge of CU partials remains overestimate-only.
+
+    ``max_groups_in_flight`` (default env SKETCHLIB_MAX_GROUPS_IN_FLIGHT
+    or 8192) bounds task memory on high-cardinality group keys exactly
+    like ``build_partials``: full states flush as extra partial rows.
+    Certification survives the split by pigeonhole — if a token's
+    global count > N_total/capacity then some chunk has
+    count_chunk > N_chunk/capacity, so that chunk's SpaceSaving
+    retains it (same argument that covers the partition split). The
+    final merge is order-free (CMS add + candidate-set union).
+
+    Plan shape: a single-partition input builds and merges in ONE
+    ``mapInPandas`` task; otherwise the partial states shuffle into a
+    grouped merge.
+    """
+    import os
+    if max_groups_in_flight is None:
+        max_groups_in_flight = int(os.environ.get(
+            "SKETCHLIB_MAX_GROUPS_IN_FLIGHT", "8192"))
+    sel = df.select(*group_cols, text_col)
+    group_fields = [f for f in sel.schema.fields if f.name in group_cols]
+    build = _token_partials(group_cols, text_col, capacity, w, d, seed,
+                            conservative, max_groups_in_flight)
+    out_schema = StructType(group_fields + [
+        StructField("token", StringType(), False),
+        StructField("est_cnt", LongType(), False),
+        StructField("rnk", IntegerType(), False),
+    ])
 
     def topk_rows(key, cms, pdf: pd.DataFrame) -> pd.DataFrame:
         toks, ests = topk_from_cms(
@@ -194,4 +201,13 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
 
     # CMS merge is a cell-wise sum: any order is bitwise-identical, so
     # the partial tables fold in arrival order
+    if sel.rdd.getNumPartitions() == 1:
+        # every partial of a group is task-local: fold where built
+        return sel.mapInPandas(
+            _build_and_fold(build, _fold_in_task(
+                group_cols, _group_fold("cms", topk_rows))), out_schema)
+    partials = sel.mapInPandas(build, StructType(group_fields + [
+        StructField("cms", BinaryType(), False),
+        StructField("cands", ArrayType(StringType()), False),
+    ]))
     return _merge_groups(partials, group_cols, out_schema, "cms", topk_rows)

@@ -20,10 +20,10 @@ Scale notes (100 TB):
   cannot be persisted or shared.
 - The build emits one partial filter per input partition
   (sparse-encoded blobs, see ``core.bloom.to_bytes``) and OR-merges
-  them through the SAME salted ``merge_partials`` tree the sketch
-  build uses — the driver collects exactly ONE merged blob, never
-  #partitions of them. At the 100 TB scan's ~800k input partitions
-  the old driver-side OR loop was a memory/CPU funnel; the tree
+  them through the SAME salted merge tree the sketch build uses —
+  the driver collects exactly ONE merged blob, never #partitions of
+  them. At the 100 TB scan's ~800k input partitions the old
+  driver-side OR loop was a memory/CPU funnel; the tree
   bounds every merge task's fan-in at ~sqrt(#partitions) and the
   collect at O(1).
 - The prune is one broadcast of the blob + an Arrow-batched
@@ -62,12 +62,13 @@ def _key_bloom_merged_df(df: DataFrame, key_col: str, p: float,
 
     Plan shape: pruned scan -> mapInPandas partial filters (one sparse
     blob per input partition, merge_partials-shaped rows) -> the SAME
-    salted hierarchical merge tree the sketch build uses
-    (``build.merge_partials``, fanout="auto") -> one (sketch, n_rows)
-    row. No raw key ever shuffles; the driver never sees more than the
-    single merged blob.
+    salted hierarchical merge tree the sketch build uses (fanout="auto")
+    -> one (sketch, n_rows) row; a single-partition input folds its
+    one partial in the build task instead (one mapInPandas, no
+    Exchange). No raw key ever shuffles; the driver never sees more
+    than the single merged blob.
     """
-    from sketchlib.spark.build import merge_partials
+    from sketchlib.spark.build import _build_merged
 
     keyed = _as_key(df, key_col, _KEY).select(_KEY).dropna()
     unpersist = None
@@ -98,10 +99,9 @@ def _key_bloom_merged_df(df: DataFrame, key_col: str, p: float,
                                 "partial": [bf.to_bytes()], "n_rows": [n],
                                 "partition_id": [pid], "chunk": [0]})
 
-    partials = keyed.mapInPandas(
-        fn, schema=("g int, sketch_name string, partial binary, "
-                    "n_rows long, partition_id int, chunk int"))
-    return merge_partials(partials, ["g"], fanout="auto"), unpersist
+    schema = ("g int, sketch_name string, partial binary, "
+              "n_rows long, partition_id int, chunk int")
+    return _build_merged(keyed, fn, schema, ["g"], "auto", None), unpersist
 
 
 def build_key_bloom(df: DataFrame, key_col: str, p: float = 0.01,
@@ -117,10 +117,10 @@ def build_key_bloom(df: DataFrame, key_col: str, p: float = 0.01,
     from table stats or a stage-1 calibrate count and no extra action
     runs at all.
 
-    The OR-merge runs in the cluster via the salted
-    ``build.merge_partials`` tree; the driver collects exactly one
-    merged blob regardless of the input's partition count (Bloom merge
-    is associative+commutative, so the tree result is bitwise-identical
+    The OR-merge runs in the cluster via the sketch build's salted
+    merge tree; the driver collects exactly one merged blob regardless
+    of the input's partition count (Bloom merge is
+    associative+commutative, so the tree result is bitwise-identical
     to any sequential fold).
     """
     merged, cached = _key_bloom_merged_df(df, key_col, p, n_keys, seed)

@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
+from sketchlib.core.serde import sketch_from_bytes
 from sketchlib.spark.specs import SketchSpec
 from sketchlib.spark.build import (calibrate, bloom_params_by_group,
                                    build_sketches)
@@ -395,14 +396,20 @@ def q_cms_join_size(spark, sf_dir):
           .select(F.lit(1).alias("g"), "l_orderkey"))
     orders = (load(spark, sf_dir, "orders")
               .select(F.lit(1).alias("g"), "o_orderkey"))
-    a = build_sketches(li, ["g"],
-                       [SketchSpec("a", "cms", "l_orderkey", params)])
-    b = build_sketches(orders, ["g"],
-                       [SketchSpec("b", "cms", "o_orderkey", params)])
-    return (a.select("g", F.col("sketch").alias("sk_a"))
-            .join(b.select("g", F.col("sketch").alias("sk_b")), "g")
-            .select(sqlfuncs.cms_join_size(F.col("sk_a"), F.col("sk_b"))
-                    .alias("join_rows_est")))
+    # the inner product runs on the driver, not as a UDF chained after
+    # the builds' Python operators: each side is one row whose blob is
+    # at most w*d*8 bytes (12 MiB here), known from params before any job
+    a, b = (build_sketches(t, ["g"], [SketchSpec(n, "cms", c, params)])
+            .select("sketch").collect()
+            for n, t, c in (("a", li, "l_orderkey"),
+                            ("b", orders, "o_orderkey")))
+    est = [F.lit(sqlfuncs.cms_join_size.read(
+        sketch_from_bytes(bytes(x["sketch"])),
+        sketch_from_bytes(bytes(y["sketch"])))) for x in a for y in b]
+    # literals, not createDataFrame: rows from a Python list are
+    # unpickled by Python workers (a second worker pool)
+    return spark.range(1).select(
+        F.explode(F.array(*est).cast("array<long>")).alias("join_rows_est"))
 
 
 def q_shipping_priority(spark, sf_dir):
@@ -440,9 +447,9 @@ def q_langid(spark, sf_dir):
 # sketch queries (estimates; rows-only driver check)
 # ---------------------------------------------------------------------------
 
-def _doc_sketches(spark, sf_dir, specs) -> DataFrame:
+def _doc_sketches(spark, sf_dir, specs, readout=None) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    return build_sketches(docs, ["lang"], specs)
+    return build_sketches(docs, ["lang"], specs, readout=readout)
 
 
 def q_short_doc_share_lang(spark, sf_dir):
@@ -482,19 +489,21 @@ def q_sketch_accuracy_lang(spark, sf_dir):
 
 def q_sample_docs_lang(spark, sf_dir):
     """Uniform per-lang sample of distinct doc_ids via the bottom-k
-    sample kernel, read out in SQL (`explode(sample_values(...))`).
-    Deterministic (hash tags), so row counts are stable; subset/
-    uniformity laws are test-enforced (test_sample_kernel). At 10^12
-    docs this is the 'show me 20 random documents per lang' query with
-    O(#groups x k) output and no full-table shuffle."""
-    merged = _doc_sketches(spark, sf_dir,
-                           [SketchSpec("s", "sample", "doc_id", {"k": 20})])
+    sample kernel: ``sample_values`` and ``sketch_estimate`` are read
+    out inside the build's fold (``readout=``), and the JVM explodes
+    the sampled ids. Deterministic (hash tags), so row counts are
+    stable; subset/uniformity laws are test-enforced
+    (test_sample_kernel). At 10^12 docs this is the 'show me 20 random
+    documents per lang' query with O(#groups x k) output and no
+    full-table shuffle."""
+    merged = _doc_sketches(
+        spark, sf_dir, [SketchSpec("s", "sample", "doc_id", {"k": 20})],
+        readout=[sqlfuncs.readout("doc_ids", sqlfuncs.sample_values),
+                 sqlfuncs.readout("n_distinct_est",
+                                  sqlfuncs.sketch_estimate)])
     return (merged.filter(F.col("sketch_name") == "s")
-            .select("lang",
-                    F.explode(sqlfuncs.sample_values(F.col("sketch")))
-                    .alias("doc_id"),
-                    sqlfuncs.sketch_estimate(F.col("sketch"))
-                    .alias("n_distinct_est")))
+            .select("lang", F.explode("doc_ids").alias("doc_id"),
+                    "n_distinct_est"))
 
 
 def q_bloom_fpr_validation(spark, sf_dir):
@@ -511,15 +520,16 @@ def q_bloom_fpr_validation(spark, sf_dir):
 
 def q_hll_distinct_lang(spark, sf_dir):
     """Distributed estimate read-out: the sketch table stays a
-    DataFrame; `sketch_estimate` (a pandas UDF) evaluates on
-    executors — no driver-side collect/loop."""
-    merged = _doc_sketches(spark, sf_dir,
-                           [SketchSpec("h", "hll", "text", {"b": 14})])
+    DataFrame, and `sketch_estimate` runs on executors inside the
+    build's fold (``readout=``) — no driver-side collect/loop and no
+    separate read-out UDF."""
+    merged = _doc_sketches(
+        spark, sf_dir, [SketchSpec("h", "hll", "text", {"b": 14})],
+        readout=[sqlfuncs.readout("n_distinct_est",
+                                  sqlfuncs.sketch_estimate)])
     rel = 1.04 / (1 << 14) ** 0.5
     return (merged.filter(F.col("sketch_name") == "h")
-            .select("lang",
-                    sqlfuncs.sketch_estimate(F.col("sketch"))
-                    .alias("n_distinct_est"),
+            .select("lang", "n_distinct_est",
                     F.lit(float(rel)).alias("rel_error")))
 
 
@@ -562,33 +572,30 @@ def q_countsketch_token_freq(spark, sf_dir):
 
 
 def q_kll_quantiles_nchars(spark, sf_dir):
-    """Distributed quantile + rank/CDF read-out from ONE python-eval
-    boundary: the KLL and t-digest rows pivot to one wide row per lang
-    (first-over-when — a ≤#groups×#specs-row shuffle), then the three
-    array-in/array-out UDF calls (`sketch_quantiles`, `sketch_cdfs`)
-    sit in a single projection, so Catalyst folds them into one
-    ArrowEvalPython stage. Round 4 paid ~3 Arrow round-trips here
-    (filter+join of per-point scalar UDF columns); the CDF shares
-    (inverse read-out, exact companion short_doc_share_lang) ride the
-    same boundary for free — this query also absorbs round 4's
-    separate kll_cdf_nchars catalog entry."""
+    """Distributed quantile + rank/CDF read-out with no read-out
+    stage: `sketch_quantiles` and `sketch_cdfs` (array in, array out)
+    run inside the build's fold (``readout=``) on both the KLL and the
+    t-digest row, and the JVM pivots the rows to one wide row per lang
+    (first-over-when — a ≤#groups×#specs-row shuffle). Round 4 paid ~3
+    Arrow round-trips here (filter+join of per-point scalar UDF
+    columns); the CDF shares (inverse read-out, exact companion
+    short_doc_share_lang) ride the same fold for free — this query
+    also absorbs round 4's separate kll_cdf_nchars catalog entry."""
     merged = _doc_sketches(
         spark, sf_dir,
         [SketchSpec("k", "kll", "n_chars", {"k": 256}),
-         SketchSpec("t", "tdigest", "n_chars", {"delta": 300})])
-    wide = merged.groupBy("lang").agg(
-        F.first(F.when(F.col("sketch_name") == "k", F.col("sketch")),
-                ignorenulls=True).alias("ksk"),
-        F.first(F.when(F.col("sketch_name") == "t", F.col("sketch")),
-                ignorenulls=True).alias("tsk"))
-    sel = wide.select(
-        "lang",
-        sqlfuncs.sketch_quantiles(
-            F.col("ksk"), F.array(F.lit(0.5), F.lit(0.9))).alias("kq"),
-        sqlfuncs.sketch_quantiles(
-            F.col("tsk"), F.array(F.lit(0.5), F.lit(0.9))).alias("tq"),
-        sqlfuncs.sketch_cdfs(
-            F.col("ksk"), F.array(F.lit(200.0), F.lit(500.0))).alias("kc"))
+         SketchSpec("t", "tdigest", "n_chars", {"delta": 300})],
+        readout=[sqlfuncs.readout("q", sqlfuncs.sketch_quantiles,
+                                  [0.5, 0.9]),
+                 sqlfuncs.readout("c", sqlfuncs.sketch_cdfs,
+                                  [200.0, 500.0])])
+
+    def pick(name, col):
+        return F.first(F.when(F.col("sketch_name") == name, F.col(col)),
+                       ignorenulls=True)
+    sel = merged.groupBy("lang").agg(pick("k", "q").alias("kq"),
+                                     pick("t", "q").alias("tq"),
+                                     pick("k", "c").alias("kc"))
     return sel.select(
         "lang",
         F.col("kq")[0].alias("kll_p50"), F.col("kq")[1].alias("kll_p90"),
@@ -599,11 +606,10 @@ def q_kll_quantiles_nchars(spark, sf_dir):
 
 def q_tdigest_quantiles_value(spark, sf_dir):
     """t-digest read-out over events via the FUSED read-out path: the
-    estimate columns are extracted inside the final merge task
-    (build_sketches readout=), so the whole query is two python
-    stages — partial build and merge — with zero read-out stages.
-    (kll_quantiles_nchars demonstrates the SQL-UDF read-out surface
-    instead; both ride the same kernels.)"""
+    estimate columns are extracted inside the final fold task
+    (build_sketches readout=), so there is no read-out stage — one
+    Python operator in all on a single-partition input (build, fold
+    and read-out in one task), else the partial build plus the merge."""
     ev = load(spark, sf_dir, "events")
     merged = build_sketches(
         ev, ["event_type"],

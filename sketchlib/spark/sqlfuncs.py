@@ -57,15 +57,30 @@ def _read_rows(read, kinds, n_blobs: int, cols) -> pd.Series:
 
 def _sql_function(return_type, kinds=object, blobs: int = 1):
     """Turn ``read(sketch..., arg...)`` into a pandas UDF named after it
-    that follows the read-out rule, and add it to ``SQL_FUNCTIONS``."""
+    that follows the read-out rule, and add it to ``SQL_FUNCTIONS``.
+    The UDF keeps ``read`` and ``kinds`` for ``readout``."""
     def wrap(read):
         def per_batch(*cols: pd.Series) -> pd.Series:
             return _read_rows(read, kinds, blobs, cols)
         per_batch.__name__ = read.__name__
         udf = pandas_udf(per_batch, return_type)
+        udf.read, udf.kinds = read, kinds
         SQL_FUNCTIONS[read.__name__] = udf
         return udf
     return wrap
+
+
+def readout(col: str, udf, *args) -> tuple:
+    """A ``build_sketches(readout=...)`` entry that computes
+    ``udf(sketch, *args)`` inside the fold task: the SQL function's own
+    ``read`` under the same rule (a sketch whose kernel has no such
+    read-out gives NULL), so the fused and SQL read-outs cannot
+    drift."""
+    read, kinds = udf.read, udf.kinds
+
+    def fn(_sketch_name, sk):
+        return read(sk, *args) if isinstance(sk, kinds) else None
+    return (col, udf.returnType.simpleString(), fn)
 
 
 @_sql_function(DoubleType())

@@ -1,6 +1,7 @@
 """Scale-true CMS heavy hitters vs exact token counts."""
 
 import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
@@ -115,11 +116,14 @@ def test_heavy_hitters_match_exact_topk(spark, pages_tiny_multifile):
     assert got == exact_sets
 
 
-def test_heavy_hitters_no_token_shuffle(spark, pages_tiny):
-    hh = cms_heavy_hitters(pages_tiny, ["lang"], "text", k=5)
-    plan = hh._jdf.queryExecution().executedPlan().toString()
-    # exactly one exchange: the partial-state shuffle into the merge
-    assert plan.count("Exchange") == 1, plan
+def test_heavy_hitters_no_token_shuffle(spark, pages_tiny,
+                                       pages_tiny_multifile):
+    # no raw token ever shuffles: one partition folds in the build task
+    # (no exchange); more than one shuffles only the partial states
+    for df, exchanges in ((pages_tiny, 0), (pages_tiny_multifile, 1)):
+        hh = cms_heavy_hitters(df, ["lang"], "text", k=5)
+        plan = hh._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") == exchanges, plan
 
 
 def test_heavy_hitters_flush_preserves_topk(spark, pages_tiny_multifile):
@@ -142,36 +146,35 @@ def test_heavy_hitters_flush_preserves_topk(spark, pages_tiny_multifile):
         spark.conf.set(key, old)
 
 
-def test_null_group_key_one_partial_per_partition(spark, monkeypatch):
+def test_null_group_key_one_partial_per_partition(spark):
     """A null numeric group key spanning many Arrow batches keeps ONE
     CMS + SpaceSaving slot per partition, like every other group."""
-    from sketchlib.spark import heavyhitters
+    from sketchlib.spark.heavyhitters import _token_partials
     rows = [(None if i % 4 == 0 else i % 3,
              " ".join(["hot"] * (i % 5 + 1) + [f"t{i % 7}"]))
             for i in range(200)]
-    df = spark.createDataFrame(rows, "g int, text string").coalesce(1)
-    partials = []
+    # the partition's Arrow batches as the build sees them: 10 rows
+    # each, the nullable int key as float64 with NaN for null
+    pdf = pd.DataFrame(rows, columns=["g", "text"]).astype({"g": "float64"})
+    build = _token_partials(["g"], "text", 256, 16384, 5, 0, True, 8192)
+    partials = pd.concat(build(pdf.iloc[i:i + 10]
+                               for i in range(0, len(pdf), 10)))
+    assert len(partials) == 4  # groups 0, 1, 2 and null
+    assert partials["g"].isna().sum() == 1
 
-    def spy(parts, *args):
-        partials.append(parts)
-        return real(parts, *args)
+    df = spark.createDataFrame(rows, "g int, text string")
 
-    real = heavyhitters._merge_groups
-    monkeypatch.setattr(heavyhitters, "_merge_groups", spy)
-
-    def run():
+    def run(d):
         return sorted(((r["g"] is None, r["g"] or 0), r["token"],
                        r["est_cnt"], r["rnk"])
-                      for r in cms_heavy_hitters(df, ["g"], "text",
+                      for r in cms_heavy_hitters(d, ["g"], "text",
                                                  k=3).collect())
-    default = run()
+    default = run(df.coalesce(1))
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "10")
     try:
-        assert run() == default
-        per_group = partials[-1].groupBy("g").count().collect()
+        # the fused fold (one partition) and the shuffle merge agree
+        assert run(df.coalesce(1)) == run(df.repartition(3)) == default
     finally:
         spark.conf.set(key, old)
-    assert len(per_group) == 4  # groups 0, 1, 2 and null
-    assert all(r["count"] == 1 for r in per_group), per_group

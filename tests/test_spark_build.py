@@ -149,10 +149,11 @@ def test_auto_fanout_multi_level_on_wide_input(spark, pages_tiny):
     narrow = build_sketches(pages_tiny, ["lang"],
                             [SketchSpec("h", "hll", "url", {"b": 8})])
     plan_n = narrow._jdf.queryExecution().executedPlan().toString()
-    # single-partition input: the merge is a NARROW per-partition fold
-    # pipelined with the build — no groupBy stage, no Exchange at all
+    # single-partition input: build and fold run in ONE mapInPandas
+    # task — no groupBy stage, no Exchange at all
     assert plan_n.count("FlatMapGroupsInPandas") == 0, plan_n
-    assert "fold_partition" in plan_n and "Exchange" not in plan_n, plan_n
+    assert plan_n.count("MapInPandas") == 1, plan_n
+    assert "Exchange" not in plan_n, plan_n
     # results identical either way (lattice merge)
     a = {(r["lang"]): bytes(r["sketch"]) for r in df.collect()}
     b = {(r["lang"]): bytes(r["sketch"]) for r in narrow.collect()}
@@ -270,7 +271,9 @@ def test_narrow_fold_null_numeric_group_key_across_batches(spark):
     """Review r5: the narrow single-partition fold keys its group dict
     on normalized keys — a null numeric group key spanning multiple
     Arrow batches must fold to ONE row per (group, spec), not split
-    into duplicate partials (NaN != NaN as dict keys)."""
+    into duplicate partials (NaN != NaN as dict keys). Checked on the
+    fused build and on merge_partials' narrow fold of a partials
+    DataFrame, whose rows arrive in Arrow batches."""
     import os
     # interleave the null and non-null groups and force a 1-group
     # in-flight budget so the build FLUSHES many chunked partial rows
@@ -286,17 +289,19 @@ def test_narrow_fold_null_numeric_group_key_across_batches(spark):
         "spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
     os.environ["SKETCHLIB_MAX_GROUPS_IN_FLIGHT"] = "1"
+    specs = [SketchSpec("h", "hll", "url", {"b": 10})]
     try:
-        out = build_sketches(df, ["g"],
-                             [SketchSpec("h", "hll", "url", {"b": 10})],
-                             fanout="auto").collect()
+        outs = [build_sketches(df, ["g"], specs, fanout="auto").collect(),
+                merge_partials(build_partials(df, ["g"], specs), ["g"],
+                               fanout="auto").collect()]
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
                        old_batch)
         del os.environ["SKETCHLIB_MAX_GROUPS_IN_FLIGHT"]
-    keys = [(r["g"], r["sketch_name"]) for r in out]
-    assert len(keys) == len(set(map(str, keys))) == 2, keys
-    for r in out:
-        assert r["n_rows"] == 40, r
-        # the scenario really happened: many chunked partials folded
-        assert r["n_partials"] > 1, r
+    for out in outs:
+        keys = [(r["g"], r["sketch_name"]) for r in out]
+        assert len(keys) == len(set(map(str, keys))) == 2, keys
+        for r in out:
+            assert r["n_rows"] == 40, r
+            # the scenario really happened: many chunked partials folded
+            assert r["n_partials"] > 1, r
