@@ -82,9 +82,10 @@ def main():
         docs.groupBy("lang").agg(
             F.percentile_approx("n_chars", 0.5, 10000).alias("q")).collect()})
     def ours_q():
-        # interactive-latency path: ONE python stage (partials), fold
-        # of the <= #parts x #groups tiny blobs on the driver —
-        # bitwise-identical to the distributed merge (same fold order)
+        # interactive-latency path: build_sketches' driver fold — ONE
+        # python stage (partials), fold of the byte-bounded blobs on
+        # the driver, bitwise-identical to the distributed merge (same
+        # fold order)
         from sketchlib.spark.build import build_sketches_local
         sks = build_sketches_local(
             docs, ["lang"], [SketchSpec("k", "kll", "n_chars", {"k": 256})])

@@ -26,6 +26,8 @@ import pyspark.sql.functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, LongType, StructField,
                                StructType)
 
+from sketchlib.spark.dfutil import local_table
+
 
 def with_norm(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """(vid, emb, norm) — shared by every cosine path so precision /
@@ -277,9 +279,11 @@ def ann_ivf_topk(df: DataFrame, id_col: str, vec_col: str, dim: int,
     # nprobe nearest cells per query: tiny driver-free cross join against
     # the broadcast centroid table (n_centroids rows)
     spark = df.sparkSession
-    cent_rows = [(int(i), [float(x) for x in c])
-                 for i, c in enumerate(centroids)]
-    cent_df = spark.createDataFrame(cent_rows, "cid long, cvec array<double>")
+    cent_df = local_table(spark, pd.DataFrame({
+        "cid": range(len(centroids)),
+        "cvec": [[float(x) for x in c] for c in centroids]}),
+        StructType([StructField("cid", LongType()),
+                    StructField("cvec", ArrayType(DoubleType()))]))
     qc = (qn.crossJoin(F.broadcast(cent_df))
           .withColumn("cscore", dot_expr("q_emb", "cvec"))
           .withColumn("crnk", F.row_number().over(

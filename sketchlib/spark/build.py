@@ -16,8 +16,18 @@ OR-merge :139-164) with the Spark-native architecture from SURVEY.md §4:
                           optional two-level (salted) fan-in for very
                           wide clusters, treeAggregate-style.
 
-A single-partition input skips the shuffle: ``build_sketches`` folds
-the partials in the task that built them (one ``mapInPandas``).
+``build_sketches`` picks one of three merge shapes, all folding a
+group's partials in the same (partition_id, chunk) order, so all write
+the same bytes:
+
+  - in-task: a single-partition input folds its partials in the task
+    that built them (one ``mapInPandas``, lazy);
+  - driver: a plan with no salt level whose partials fit Spark's
+    ``spark.sql.execution.arrow.localRelationThreshold`` is built in
+    one job, collected and folded on the driver, and returned as a
+    ``LocalRelation`` (eager: the job runs at call time);
+  - tree: every other input shuffles its partials through
+    ``merge_partials``' salted ``applyInPandas`` tree.
 
 At 100 TB: the shuffle volume is (#input_partitions × #groups ×
 sketch_bytes) regardless of row count — the property that makes the
@@ -29,6 +39,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import os
+import warnings
 
 import numpy as np
 import pandas as pd
@@ -43,7 +54,8 @@ from sketchlib.core.cms import CountMinSketch
 from sketchlib.core.sample import WeightedBottomKSample
 from sketchlib.core.countsketch import CountSketch
 from sketchlib.core.params import bloom_params
-from sketchlib.core.serde import fold_blobs
+from sketchlib.core.serde import fold_blobs, sketch_from_bytes
+from sketchlib.spark.dfutil import local_table
 from sketchlib.spark.specs import SketchSpec
 
 
@@ -408,9 +420,10 @@ def _fold_partials(group_cols: list[str], readout: list | None):
 
 def _merge_plan(partials: DataFrame, fanout) -> tuple[int | None, list]:
     """(partition count, salt-level bucket counts) for a merge of
-    ``partials``. The count is needed to resolve "auto" and to detect
-    the single-partition case; an explicit multi-level fanout needs
-    neither, so the DataFrame->RDD plan conversion is skipped then."""
+    ``partials``. The count is needed to resolve "auto", to detect the
+    single-partition case and to split the driver fold's byte budget;
+    an explicit multi-level fanout needs none of them, so the
+    DataFrame->RDD plan conversion is skipped then."""
     nparts = None
     if fanout == "auto":
         nparts = partials.rdd.getNumPartitions()
@@ -449,20 +462,81 @@ def _merge_tree(partials: DataFrame, group_cols: list[str], plan: list,
                          _table_row(keys, readout), by=order)
 
 
+def _within_share(build, share: int, blob_col: str, nbytes):
+    """``build`` that gives up once the ``nbytes`` of the frames it has
+    yielded pass ``share``: it then yields ONE overflow marker (a row
+    whose ``blob_col`` is empty, which no serialized state is) and
+    stops reading its partition."""
+    def bounded(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        used = 0
+        for frame in build(batches):
+            used += nbytes(frame)
+            if used > share:
+                yield frame.iloc[:1].assign(**{blob_col: [b""]})
+                return
+            yield frame
+    return bounded
+
+
+def _fold_once(sel: DataFrame, build, partials_schema, fold, out_schema,
+               nparts: int, min_bytes: int | None = 0,
+               blob_col: str = "partial", nbytes=None) -> DataFrame | None:
+    """The merged table of ``fold`` (an ``_fold_in_task``) over the
+    partials ``build`` makes from ``sel``'s ``nparts`` partitions, with
+    no shuffle — or None when the partials do not fit the driver, and
+    the caller merges through its shuffle tree.
+
+    One partition: the fold runs in the task that built the partials
+    (lazy). More: one job builds and collects the partials, the driver
+    folds them and returns a ``LocalRelation``. The collect is bounded
+    by Spark's Arrow local-relation threshold twice: before any job,
+    ``nparts * min_bytes`` (the params-fixed bytes of one group's
+    partial in every partition) must fit; in the job, each task stops
+    at budget / nparts bytes of partials and sends an overflow marker
+    instead, and one marker sends the build to the tree.
+    ``min_bytes=None`` keeps the fold off the driver."""
+    if nparts == 1:
+        return sel.mapInPandas(_build_and_fold(build, fold), out_schema)
+    spark = sel.sparkSession
+    # Spark's own spark.sql.execution.arrow.localRelationThreshold: the
+    # size under which the Arrow table returned is a LocalRelation
+    budget = int(spark._jconf.arrowLocalRelationThreshold())
+    if min_bytes is None or nparts * min_bytes > budget:
+        return None
+    share = budget // max(nparts, 1)
+    nbytes = nbytes or (lambda frame: int(frame[blob_col].map(len).sum()))
+    parts = sel.mapInPandas(_within_share(build, share, blob_col, nbytes),
+                            partials_schema).toArrow().to_pandas()
+    if (parts[blob_col].map(len) == 0).any():
+        return None
+    with warnings.catch_warnings():
+        # pandas warns when it concatenates one-row frames holding a
+        # null key or read-out; the Arrow schema fixes the types anyway
+        warnings.simplefilter("ignore", FutureWarning)
+        folded = list(fold([parts]))
+    return local_table(spark, pd.concat(folded or [
+        pd.DataFrame(columns=out_schema.names)], ignore_index=True),
+        out_schema)
+
+
 def _build_merged(sel: DataFrame, build, partials_schema, group_cols,
-                  fanout, readout: list | None) -> DataFrame:
+                  fanout, readout: list | None,
+                  min_bytes: int | None = 0) -> DataFrame:
     """The merged sketch table of the partials ``build`` makes from
-    ``sel``. When ``sel`` is one partition and the plan has no salt
-    level, every partial of a group is task-local, so the partials fold
-    (and read out) in the task that built them: one Python operator, no
-    Exchange, and the same fold order — hence the same bytes — as the
-    shuffle tree, which every other input takes."""
+    ``sel``. A plan with no salt level folds without a shuffle when it
+    can (``_fold_once``: in the task for one partition, on the driver
+    within the byte budget); every other input takes the shuffle tree.
+    All three fold in (partition_id, chunk) order, so they write the
+    same bytes."""
     partials = sel.mapInPandas(build, partials_schema)
     nparts, plan = _merge_plan(partials, fanout)
-    if nparts == 1 and not plan:
-        return sel.mapInPandas(
-            _build_and_fold(build, _fold_partials(group_cols, readout)),
-            _table_schema(partials, group_cols, readout))
+    if not plan:
+        merged = _fold_once(sel, build, partials.schema,
+                            _fold_partials(group_cols, readout),
+                            _table_schema(partials, group_cols, readout),
+                            nparts, min_bytes)
+        if merged is not None:
+            return merged
     return _merge_tree(partials, group_cols, plan, readout)
 
 
@@ -563,45 +637,56 @@ def build_sketches(df: DataFrame, group_cols: list[str],
     ``fanout="auto"`` (default) is resolved as in ``merge_partials``
     (see ``_auto_fanout``): single fold up to 64 partials per group,
     else a multi-level salt plan bounding every merge task's fan-in
-    AND input bytes. A single-partition input builds, folds and reads
-    out (``readout=``, as in ``merge_partials``) in ONE ``mapInPandas``
-    task: no Exchange and no second Python operator.
+    AND input bytes. With no salt level the partials fold without a
+    shuffle and read out there (``readout=``, as in ``merge_partials``):
+    a single-partition input in ONE ``mapInPandas`` task; a wider one,
+    when its partials fit ``spark.sql.execution.arrow.localRelationThreshold``
+    (checked before the job from Bloom params, and in every task), on
+    the driver — then the build job runs HERE, at call time, and the
+    result is a ``LocalRelation`` whose actions run no job. Otherwise,
+    and for builds with an FD spec (see ``_plan_bytes``), the partials
+    shuffle through the merge tree.
 
     Returns one row per (group, sketch_name):
     (group_cols..., sketch_name, sketch binary, n_rows, n_partials).
     """
     sel, build, schema = _partial_task(df, group_cols, specs, None)
-    return _build_merged(sel, build, schema, group_cols, fanout, readout)
+    return _build_merged(sel, build, schema, group_cols, fanout, readout,
+                         _plan_bytes(specs))
+
+
+def _plan_bytes(specs: list[SketchSpec]) -> int | None:
+    """Plan-time bytes of one group's partials in one partition, for
+    the driver fold's budget check: each Bloom spec's dense m/8 (the
+    smallest m over its groups); the other kinds' states are not sized
+    by their params and count 0. A partition whose share of a group
+    sets >= m/32 bits ships that much; a sparser partial ships less, so
+    the check can send a build to the tree that would have fit, but
+    never past the budget. None when the partials must not fold on the
+    driver: an FD merge's SVD differs in its last bits with the BLAS
+    thread count, which Spark pins to ``spark.task.cpus`` in Python
+    workers but not on the driver."""
+    if any(s.kind == "fd" for s in specs):
+        return None
+    total = 0
+    for spec in specs:
+        if spec.kind == "bloom":
+            ms = [p["m"] for p in (spec.per_group_params or {}).values()
+                  if "m" in p]
+            if "m" in spec.params:
+                ms.append(spec.params["m"])
+            total += min(ms, default=0) // 8
+    return total
 
 
 def build_sketches_local(df: DataFrame, group_cols: list[str],
                          specs: list[SketchSpec]) -> dict:
-    """ONE-python-stage build for interactive read-outs: build partials
-    distributed, collect the ≤ #partitions × #groups × #specs
-    fixed-size blobs, fold driver-side in (partition_id, chunk) order
-    — bitwise-identical to ``merge_partials`` (same total order), but
-    without the merge shuffle and its second python-eval stage. This
-    closes the read-out latency gap to JVM-native aggregates
-    (BENCH/builtin_compare.py: KLL median read-out 0.35s -> 0.20s vs
-    percentile_approx 0.19s at sf0.1/local[32]).
-
-    Returns {(group_key..., sketch_name): sketch object}; single group
-    col keys collapse to (value, sketch_name). Use ONLY when
-    #groups × #partitions is driver-small (interactive estimates,
-    validation loops); the persisted/mergeable path at 10^12 rows
-    stays ``build_sketches``, whose merge runs on executors.
-    """
-    from collections import defaultdict
-    parts = build_partials(df, group_cols, specs) \
-        .select(*group_cols, "sketch_name", "partition_id", "chunk",
-                "partial").collect()
-    groups = defaultdict(list)
-    for r in parts:
-        groups[tuple(r[c] for c in group_cols) + (r["sketch_name"],)] \
-            .append(r)
-    return {key: fold_blobs(r["partial"] for r in sorted(
-                rows, key=lambda r: (r["partition_id"], r["chunk"])))
-            for key, rows in groups.items()}
+    """``build_sketches`` collected as {(group_key..., sketch_name):
+    sketch object}: its driver fold when the partials fit, its merge
+    tree otherwise."""
+    return {(*(r[c] for c in group_cols), r["sketch_name"]):
+            sketch_from_bytes(bytes(r["sketch"]))
+            for r in build_sketches(df, group_cols, specs).collect()}
 
 
 def _auto_fanout(parts: int) -> list[int] | None:

@@ -29,10 +29,13 @@ import hashlib
 import json
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from sketchlib.spark.build import build_partials, merge_partials
+from sketchlib.spark.dfutil import local_table
 from sketchlib.spark.specs import SketchSpec
 
 def spec_fingerprint(df: DataFrame, group_cols: list[str],
@@ -162,7 +165,8 @@ class PartialCheckpoint:
             "format": "parquet",
             "counters": _partial_counters(self.read_partials()),
         }
-        (self.spark.createDataFrame([(json.dumps(man),)], "value string")
+        (local_table(self.spark, pd.DataFrame({"value": [json.dumps(man)]}),
+                     StructType([StructField("value", StringType())]))
          .coalesce(1).write.mode("overwrite").text(self.manifest_path))
         return man
 

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 
 def ensure_min_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:
@@ -49,3 +52,18 @@ def materialize(df: DataFrame) -> DataFrame:
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def local_table(spark, data: pd.DataFrame | pa.Table,
+                schema: StructType) -> DataFrame:
+    """``data`` as a DataFrame built on the driver from Arrow: a
+    ``LocalRelation`` up to Spark's
+    ``spark.sql.execution.arrow.localRelationThreshold`` (Arrow batches
+    decoded in the JVM above it), so reading it starts no Python
+    worker. ``createDataFrame`` over a Python list instead unpickles
+    its rows in a second pool of Python workers."""
+    if isinstance(data, pd.DataFrame):
+        from pyspark.sql.pandas.types import to_arrow_schema
+        data = pa.Table.from_pandas(data, schema=to_arrow_schema(schema),
+                                    preserve_index=False, safe=False)
+    return spark.createDataFrame(data, schema)

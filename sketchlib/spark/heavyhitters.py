@@ -36,7 +36,7 @@ from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from sketchlib.core.cms import CountMinSketch
-from sketchlib.spark.build import (_build_and_fold, _fold_in_task,
+from sketchlib.spark.build import (_auto_fanout, _fold_in_task, _fold_once,
                                    _group_fold, _merge_groups, _norm_nan,
                                    update_from_token_counts)
 
@@ -169,8 +169,11 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
     retains it (same argument that covers the partition split). The
     final merge is order-free (CMS add + candidate-set union).
 
-    Plan shape: a single-partition input builds and merges in ONE
-    ``mapInPandas`` task; otherwise the partial states shuffle into a
+    Plan shape: the merge shapes of ``build_sketches`` — a
+    single-partition input builds and merges in ONE ``mapInPandas``
+    task; up to 64 partitions whose partial states fit the driver
+    budget merge on the driver after one (eager) build job, returning
+    a ``LocalRelation``; otherwise the partial states shuffle into a
     grouped merge.
     """
     import os
@@ -199,15 +202,24 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
             "rnk": np.arange(1, len(toks) + 1, dtype=np.int32),
         })
 
-    # CMS merge is a cell-wise sum: any order is bitwise-identical, so
-    # the partial tables fold in arrival order
-    if sel.rdd.getNumPartitions() == 1:
-        # every partial of a group is task-local: fold where built
-        return sel.mapInPandas(
-            _build_and_fold(build, _fold_in_task(
-                group_cols, _group_fold("cms", topk_rows))), out_schema)
-    partials = sel.mapInPandas(build, StructType(group_fields + [
+    partials_schema = StructType(group_fields + [
         StructField("cms", BinaryType(), False),
         StructField("cands", ArrayType(StringType()), False),
-    ]))
-    return _merge_groups(partials, group_cols, out_schema, "cms", topk_rows)
+    ])
+    # CMS merge is a cell-wise sum: any order is bitwise-identical, so
+    # the partial tables fold in arrival order
+    nparts = sel.rdd.getNumPartitions()
+    if _auto_fanout(nparts) is None:
+        top = _fold_once(sel, build, partials_schema, _fold_in_task(
+            group_cols, _group_fold("cms", topk_rows)), out_schema, nparts,
+            blob_col="cms", nbytes=_partial_bytes)
+        if top is not None:
+            return top
+    return _merge_groups(sel.mapInPandas(build, partials_schema), group_cols,
+                         out_schema, "cms", topk_rows)
+
+
+def _partial_bytes(frame: pd.DataFrame) -> int:
+    """Bytes of ``_token_partials`` rows: CMS blobs plus candidates."""
+    return int(frame["cms"].map(len).sum()
+               + frame["cands"].map(lambda c: sum(map(len, c))).sum())

@@ -20,12 +20,14 @@ Scale notes (100 TB):
   cannot be persisted or shared.
 - The build emits one partial filter per input partition
   (sparse-encoded blobs, see ``core.bloom.to_bytes``) and OR-merges
-  them through the SAME salted merge tree the sketch build uses —
-  the driver collects exactly ONE merged blob, never #partitions of
-  them. At the 100 TB scan's ~800k input partitions the old
-  driver-side OR loop was a memory/CPU funnel; the tree
-  bounds every merge task's fan-in at ~sqrt(#partitions) and the
-  collect at O(1).
+  them through the sketch build's merge shapes: in the build task for
+  one partition, on the driver when the partials fit the byte budget
+  of ``build._fold_once`` (a filter whose m/8 bytes times the
+  partition count passes it skips that job), else through the SAME
+  salted merge tree the sketch build uses. At the 100 TB scan's ~800k
+  input partitions the old unbounded driver-side OR loop was a
+  memory/CPU funnel; the tree bounds every merge task's fan-in and
+  the collect at one merged blob.
 - The prune is one broadcast of the blob + an Arrow-batched
   ``mapInPandas`` scan; no per-row Python. For a fact table that is
   scanned anyway, the prune is bandwidth-bound, and every pruned row is
@@ -61,12 +63,12 @@ def _key_bloom_merged_df(df: DataFrame, key_col: str, p: float,
     supplied ``n_keys`` and no sizing count was needed).
 
     Plan shape: pruned scan -> mapInPandas partial filters (one sparse
-    blob per input partition, merge_partials-shaped rows) -> the SAME
-    salted hierarchical merge tree the sketch build uses (fanout="auto")
-    -> one (sketch, n_rows) row; a single-partition input folds its
-    one partial in the build task instead (one mapInPandas, no
-    Exchange). No raw key ever shuffles; the driver never sees more
-    than the single merged blob.
+    blob per input partition, merge_partials-shaped rows) -> one
+    (sketch, n_rows) row, merged as ``build_sketches`` merges
+    (fanout="auto"): in the build task for one partition, on the
+    driver within its byte budget (the build job then runs here), else
+    through the salted hierarchical merge tree. No raw key ever
+    shuffles.
     """
     from sketchlib.spark.build import _build_merged
 
@@ -101,7 +103,8 @@ def _key_bloom_merged_df(df: DataFrame, key_col: str, p: float,
 
     schema = ("g int, sketch_name string, partial binary, "
               "n_rows long, partition_id int, chunk int")
-    return _build_merged(keyed, fn, schema, ["g"], "auto", None), unpersist
+    return (_build_merged(keyed, fn, schema, ["g"], "auto", None, m // 8),
+            unpersist)
 
 
 def build_key_bloom(df: DataFrame, key_col: str, p: float = 0.01,
@@ -117,11 +120,11 @@ def build_key_bloom(df: DataFrame, key_col: str, p: float = 0.01,
     from table stats or a stage-1 calibrate count and no extra action
     runs at all.
 
-    The OR-merge runs in the cluster via the sketch build's salted
-    merge tree; the driver collects exactly one merged blob regardless
-    of the input's partition count (Bloom merge is
-    associative+commutative, so the tree result is bitwise-identical
-    to any sequential fold).
+    The OR-merge takes the sketch build's merge shapes: in the build
+    task, on the driver within its byte budget, or through the salted
+    merge tree; the caller gets one merged blob regardless of the
+    input's partition count (Bloom merge is associative+commutative,
+    so every shape is bitwise-identical to any sequential fold).
     """
     merged, cached = _key_bloom_merged_df(df, key_col, p, n_keys, seed)
     try:

@@ -18,11 +18,13 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
+from pyspark.sql.types import StructType
 
 from sketchlib.core.serde import sketch_from_bytes
 from sketchlib.spark.specs import SketchSpec
 from sketchlib.spark.build import (calibrate, bloom_params_by_group,
                                    build_sketches)
+from sketchlib.spark.dfutil import local_table
 from sketchlib.spark.validate import collect_sketches, bloom_validate
 from sketchlib.spark import sqlfuncs, textops
 
@@ -207,10 +209,10 @@ def q_fd_embedding_spectrum(spark, sf_dir):
     eigenvalues is test-enforced (test_fd)."""
     emb = (load(spark, sf_dir, "embeddings")
            .select(F.lit(1).alias("g"), "embedding"))
-    merged = build_sketches(emb, ["g"],
-                            [SketchSpec("f", "fd", "embedding", {"l": 32})])
-    spec = sqlfuncs.fd_spectrum(F.col("sketch"), F.lit(5))
-    return (merged.select(F.posexplode(spec).alias("rnk", "sq_singular"))
+    merged = build_sketches(
+        emb, ["g"], [SketchSpec("f", "fd", "embedding", {"l": 32})],
+        readout=[sqlfuncs.readout("spectrum", sqlfuncs.fd_spectrum, 5)])
+    return (merged.select(F.posexplode("spectrum").alias("rnk", "sq_singular"))
             .select((F.col("rnk") + 1).alias("rnk"), "sq_singular"))
 
 
@@ -259,9 +261,10 @@ def q_embedding_spectrum_exact(spark, sf_dir):
     from collections.abc import Iterator
     import numpy as np
     emb = load(spark, sf_dir, "embeddings").select("embedding")
+    schema = StructType.fromDDL("rnk int, sq_singular double")
     row = emb.first()  # dim probe only; schema says array<float>, not len
     if row is None:
-        return spark.createDataFrame([], "rnk int, sq_singular double")
+        return local_table(spark, pd.DataFrame(columns=schema.names), schema)
     dim = len(row["embedding"])
 
     def gram(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -284,8 +287,9 @@ def q_embedding_spectrum_exact(spark, sf_dir):
     for r in summed:
         g[r["pos"]] = r["v"]
     evals = np.linalg.eigvalsh(g.reshape(dim, dim))[::-1][:5]
-    rows = [(i + 1, round(float(v), 2)) for i, v in enumerate(evals)]
-    return spark.createDataFrame(rows, "rnk int, sq_singular double")
+    return local_table(spark, pd.DataFrame({
+        "rnk": range(1, len(evals) + 1),
+        "sq_singular": [round(float(v), 2) for v in evals]}), schema)
 
 
 def _embedding_dim(emb):
@@ -975,17 +979,23 @@ def q_token_freq_sketch_accuracy(spark, sf_dir):
     companion heavy_tokens_lang."""
     from sketchlib.spark.heavyhitters import cms_heavy_hitters
     docs = load(spark, sf_dir, "documents")
-    est = (cms_heavy_hitters(docs, ["lang"], "text", k=10)
-           .select("lang", "token", F.col("est_cnt").alias("cms_cnt")))
+    hh = cms_heavy_hitters(docs, ["lang"], "text", k=10)
+    # the candidates (<= k per lang) are known before the count sketch
+    # is built, so its fold reads out every candidate's count: one
+    # token -> count map per lang, under cms_count's read-out rule
+    top = hh.toArrow()
+    tokens = sorted(set(top.column("token").to_pylist()))
+    count = sqlfuncs.cms_count.read
     cs = _doc_sketches(
         spark, sf_dir,
         [SketchSpec("cs", "countsketch", "text", {"w": 16384, "d": 5},
-                    tokenize=True)])
-    with_cs = (est.join(cs.filter(F.col("sketch_name") == "cs")
-                        .select("lang", "sketch"), "lang")
-               .select("lang", "token", "cms_cnt",
-                       sqlfuncs.cms_count(F.col("sketch"), F.col("token"))
-                       .alias("cs_cnt")))
+                    tokenize=True)],
+        readout=[("cs_cnts", "map<string,bigint>",
+                  lambda _name, sk: {t: count(sk, t) for t in tokens})])
+    with_cs = (local_table(spark, top, hh.schema)
+               .join(cs.select("lang", "cs_cnts"), "lang")
+               .select("lang", "token", F.col("est_cnt").alias("cms_cnt"),
+                       F.col("cs_cnts")[F.col("token")].alias("cs_cnt")))
     toks = F.filter(F.split("text", " "), lambda x: x != "")
     exact = (docs.select("lang", F.explode(toks).alias("token"))
              .groupBy("lang", "token").agg(F.count("*").alias("exact_cnt")))

@@ -187,8 +187,16 @@ def accuracy_table(df: DataFrame, group_cols: list[str], specs,
     if not todo:
         raise ValueError("accuracy_table needs hll/theta/sample/kll/"
                          "tdigest/wsample specs; bloom has bloom_validate")
+    # the estimates read out in the build's own fold; a caller's
+    # sketch table is read out through the SQL functions instead
     if merged is None:
-        merged = build_sketches(df, group_cols, todo)
+        merged = build_sketches(df, group_cols, todo, readout=[
+            sqlfuncs.readout("__est", sqlfuncs.sketch_estimate),
+            sqlfuncs.readout("__q50", sqlfuncs.sketch_quantile, 0.5)])
+    else:
+        merged = merged.withColumns({
+            "__est": sqlfuncs.sketch_estimate("sketch"),
+            "__q50": sqlfuncs.sketch_quantile("sketch", F.lit(0.5))})
 
     def _bound(spec) -> float:
         if spec.kind == "hll":
@@ -224,7 +232,7 @@ def accuracy_table(df: DataFrame, group_cols: list[str], specs,
         for spec in dist_specs:
             est = (merged.filter(F.col("sketch_name") == spec.name)
                    .select(*group_cols, "sketch_name",
-                           sqlfuncs.sketch_estimate("sketch").alias("est")))
+                           F.col("__est").alias("est")))
             ex = F.col(f"__ex_{spec.value_col}")
             out.append(
                 _join_groups(est, exact)
@@ -245,14 +253,15 @@ def accuracy_table(df: DataFrame, group_cols: list[str], specs,
     for spec in quant_specs:
         by_col.setdefault(spec.value_col, []).append(spec)
     for vcol, col_specs in by_col.items():
-        ests = None
-        for spec in col_specs:
-            e = (merged.filter(F.col("sketch_name") == spec.name)
-                 .select(*group_cols, "sketch_name",
-                         F.lit(spec.kind).alias("kind"),
-                         sqlfuncs.sketch_quantile("sketch", F.lit(0.5))
-                         .alias("est")))
-            ests = e if ests is None else ests.unionByName(e)
+        # one filter of the sketch table for all specs over the column
+        # (not a union of per-spec reads, each its own Python operator)
+        kind = F.create_map(*[F.lit(x) for s in col_specs
+                              for x in (s.name, s.kind)])
+        ests = (merged.filter(F.col("sketch_name")
+                              .isin([s.name for s in col_specs]))
+                .select(*group_cols, "sketch_name",
+                        kind[F.col("sketch_name")].alias("kind"),
+                        F.col("__q50").alias("est")))
         vals = (df.select(*group_cols, F.col(vcol).alias("_v"))
                 .dropna(subset=["_v"]))
         ranked = (_join_groups(ests, vals)
@@ -289,7 +298,7 @@ def accuracy_table(df: DataFrame, group_cols: list[str], specs,
                .groupBy(*group_cols).agg(F.sum("_mw").alias("__exw")))
         est = (merged.filter(F.col("sketch_name") == spec.name)
                .select(*group_cols, "sketch_name",
-                       sqlfuncs.sketch_estimate("sketch").alias("est")))
+                       F.col("__est").alias("est")))
         k = spec.params.get("k", 1024)
         bound = 4.0 / (max(k - 2, 1)) ** 0.5
         ex = F.col("__exw")

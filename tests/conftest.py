@@ -36,3 +36,30 @@ def pages_tiny_multifile(spark, tmp_path_factory):
         part = tbl.slice(i * n, n if i < 3 else tbl.num_rows - 3 * n)
         pq.write_table(part, str(out / f"part-{i:02d}.parquet"))
     return spark.read.parquet(str(out))
+
+
+@pytest.fixture
+def arrow_collects(monkeypatch):
+    """(DataFrame, Arrow table) of every ``toArrow`` collect while the
+    test runs: the build jobs of the driver fold, whose plans the
+    LocalRelation it returns does not show."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    seen = []
+    real = DataFrame.toArrow
+
+    def to_arrow(self):
+        table = real(self)
+        seen.append((self, table))
+        return table
+    monkeypatch.setattr(DataFrame, "toArrow", to_arrow)
+    return seen
+
+
+@pytest.fixture
+def driver_budget(spark):
+    """Set Spark's Arrow local-relation threshold, the driver fold's
+    byte budget, for one test; restored afterwards."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    old = spark.conf.get(key)
+    yield lambda value: spark.conf.set(key, str(value))
+    spark.conf.set(key, old)

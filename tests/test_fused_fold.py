@@ -1,12 +1,15 @@
-"""Single-partition builds fold in the task that built them.
+"""Builds fold without a merge shuffle when they can.
 
 A build whose input is one partition has every partial of a group in
 one task, so ``build_sketches``, ``cms_heavy_hitters`` and the key
 Bloom of ``build_key_bloom`` fold there: one ``mapInPandas``, no
-Exchange. These tests hold that plan shape (at most one Python operator
-per stage, across the benchmarked sketch queries and the builds they
-run eagerly) and that the fused fold writes the same bytes as the
-shuffle merge.
+Exchange. A wider build with no salt level whose partials fit the
+driver budget (Spark's Arrow local-relation threshold) runs one build
+job, folds on the driver and returns a LocalRelation. These tests hold
+those plan shapes (at most one Python operator per stage, across the
+benchmarked sketch queries, three more catalog read-outs and the
+builds they run eagerly), the byte budget, and that both folds write
+the same bytes as the shuffle merge.
 """
 
 import math
@@ -16,7 +19,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from perfbench.workloads import QUERY_NAMES
-from sketchlib.spark import heavyhitters, joinprune, queries, sqlfuncs
+from sketchlib.spark import build, heavyhitters, joinprune, queries, sqlfuncs
 from sketchlib.spark.build import build_partials, build_sketches, merge_partials
 from sketchlib.spark.specs import SketchSpec
 from tools.check_contract import SF_DIR
@@ -33,11 +36,12 @@ def _children(node):
     return [kids.apply(i) for i in range(kids.size())]
 
 
-def python_stages(df) -> list[list[str]]:
-    """Run ``df`` and list the Python operators of each stage of its
-    AQE-final physical plan. Stages split at query stages, exchanges
-    and reused exchanges."""
-    df.collect()
+def python_stages(df, run=True) -> list[list[str]]:
+    """Run ``df`` (unless it already ran) and list the Python operators
+    of each stage of its AQE-final physical plan. Stages split at query
+    stages, exchanges and reused exchanges."""
+    if run:
+        df.collect()
     stages: list[list[str]] = [[]]
 
     def walk(node, stage):
@@ -73,20 +77,34 @@ def _record(monkeypatch, module, name, pick=lambda result: result):
     return built
 
 
-@pytest.mark.parametrize("name", QUERY_NAMES)
+def _is_local(df) -> bool:
+    return (df._jdf.queryExecution().logical().getClass().getSimpleName()
+            == "LocalRelation")
+
+
+# catalog read-outs outside the benchmark that build and read out
+READOUT_QUERIES = ["sketch_accuracy_lang", "token_freq_sketch_accuracy",
+                   "fd_spectrum_vs_exact"]
+
+
+@pytest.mark.parametrize("name", QUERY_NAMES + READOUT_QUERIES)
 def test_at_most_one_python_operator_per_stage(spark, monkeypatch, name):
-    """Every benchmarked sketch query, and every build it runs (the
-    eager ones included: the Bloom build of bloom_fpr_validation and
-    the key Bloom of bloom_semijoin), holds at most one Python operator
-    in any stage: a task never chains two Python workers."""
+    """Every benchmarked sketch query and catalog read-out, and every
+    build it runs (the eager ones included: the Bloom build of
+    bloom_fpr_validation and the key Bloom of bloom_semijoin), holds at
+    most one Python operator in any stage: a task never chains two
+    Python workers."""
     builds = _record(monkeypatch, queries, "build_sketches")
+    # validate.accuracy_table imports build_sketches at call time
+    builds += _record(monkeypatch, build, "build_sketches")
     hh = _record(monkeypatch, heavyhitters, "cms_heavy_hitters")
     kb = _record(monkeypatch, joinprune, "_key_bloom_merged_df",
                  pick=lambda result: result[0])
     out = getattr(queries, f"q_{name}")(spark, SF)
     for df in [out, *builds, *hh, *kb]:
         stages = python_stages(df)
-        assert all(len(s) <= 1 for s in stages), (name, stages)
+        assert all(len(s) <= 1 for s in stages), \
+            (name, [s for s in stages if s])
 
 
 def test_single_partition_builds_are_one_python_operator(spark, pages_tiny):
@@ -127,16 +145,20 @@ def _table(df, keys, readout_cols=()):
             for r in df.collect()}
 
 
-def _fused_vs_shuffle(df, keys, readout=None):
-    """The fused single-partition build against the shuffle merge of
+def _fold_vs_tree(df, keys, readout=None, parts=1):
+    """``build_sketches`` over ``parts`` partitions of ``df`` (one: the
+    in-task fold; more: the driver fold) against the shuffle merge of
     the same partials (``allow_narrow=False``)."""
-    one = df.coalesce(1)
-    fused = build_sketches(one, keys, ALL_KINDS, readout=readout)
-    assert python_stages(fused) == [["MapInPandas"]]
-    shuffled = merge_partials(build_partials(one, keys, ALL_KINDS), keys,
+    split = df.coalesce(1) if parts == 1 else df.repartition(parts)
+    folded = build_sketches(split, keys, ALL_KINDS, readout=readout)
+    if parts == 1:
+        assert python_stages(folded) == [["MapInPandas"]]
+    else:
+        assert _is_local(folded)
+    shuffled = merge_partials(build_partials(split, keys, ALL_KINDS), keys,
                               allow_narrow=False, readout=readout)
     cols = [c for c, _dtype, _fn in readout or ()]
-    return _table(fused, keys, cols), _table(shuffled, keys, cols)
+    return _table(folded, keys, cols), _table(shuffled, keys, cols)
 
 
 @pytest.fixture(scope="module")
@@ -150,14 +172,17 @@ def pages_kinds(pages_tiny):
                         .when(h == 1, F.lit(math.nan)).otherwise(h)))
 
 
-@pytest.mark.parametrize("case", ["string_key", "flush", "null_nan_key",
-                                  "empty"])
-def test_fused_fold_bitwise_equals_shuffle_merge(spark, pages_kinds,
-                                                 monkeypatch, case):
-    """Every kind, byte for byte: string group keys; the memory-bounded
-    flush (max_groups_in_flight=1, many chunks per group); null and NaN
-    group keys across 10-row Arrow batches; empty input."""
-    df, keys = pages_kinds, ["lang"]
+READOUT = [sqlfuncs.readout("est", sqlfuncs.sketch_estimate),
+           sqlfuncs.readout("q", sqlfuncs.sketch_quantiles, [0.5, 0.9]),
+           sqlfuncs.readout("vals", sqlfuncs.sample_values)]
+
+
+def _case_vs_tree(spark, df, monkeypatch, case, parts):
+    """Every kind, byte for byte, on one input ``case``: string group
+    keys; the memory-bounded flush (max_groups_in_flight=1, many chunks
+    per group); null and NaN group keys across 10-row Arrow batches;
+    empty input; ``readout=``."""
+    keys, readout = ["lang"], None
     if case == "flush":
         monkeypatch.setenv("SKETCHLIB_MAX_GROUPS_IN_FLIGHT", "1")
         keys = ["lang", "g"]
@@ -165,28 +190,118 @@ def test_fused_fold_bitwise_equals_shuffle_merge(spark, pages_kinds,
         keys = ["g"]
     elif case == "empty":
         df = df.filter(F.col("url") == "")
+    elif case == "readout":
+        readout = READOUT
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     if case in ("flush", "null_nan_key"):
         spark.conf.set(key, "10")
     try:
-        fused, shuffled = _fused_vs_shuffle(df, keys)
+        folded, shuffled = _fold_vs_tree(df, keys, readout, parts)
     finally:
         spark.conf.set(key, old)
-    assert fused == shuffled
-    assert bool(fused) == (case != "empty")
+    assert folded == shuffled
+    assert bool(folded) == (case != "empty")
     if case == "flush":  # the flush fired: several partials per group
-        assert max(v[2] for v in fused.values()) > 1
+        assert max(v[2] for v in folded.values()) > 1
+    if case == "readout":
+        assert any(v[4] != "None" for v in folded.values())
 
 
-def test_fused_fold_readout_equals_shuffle_merge(pages_kinds):
+@pytest.mark.parametrize("case", ["string_key", "flush", "null_nan_key",
+                                  "empty"])
+def test_fused_fold_bitwise_equals_shuffle_merge(spark, pages_kinds,
+                                                 monkeypatch, case):
+    _case_vs_tree(spark, pages_kinds, monkeypatch, case, 1)
+
+
+def test_fused_fold_readout_equals_shuffle_merge(spark, pages_kinds,
+                                                 monkeypatch):
     """readout= runs in the fused task and reads the same values."""
-    readout = [sqlfuncs.readout("est", sqlfuncs.sketch_estimate),
-               sqlfuncs.readout("q", sqlfuncs.sketch_quantiles, [0.5, 0.9]),
-               sqlfuncs.readout("vals", sqlfuncs.sample_values)]
-    fused, shuffled = _fused_vs_shuffle(pages_kinds, ["lang"], readout)
-    assert fused == shuffled
-    assert any(v[4] != "None" for v in fused.values())
+    _case_vs_tree(spark, pages_kinds, monkeypatch, "readout", 1)
+
+
+@pytest.mark.parametrize("case, parts", [
+    ("string_key", 2), ("string_key", 4), ("string_key", 7), ("flush", 4),
+    ("null_nan_key", 4), ("empty", 4), ("readout", 7)])
+def test_driver_fold_bitwise_equals_shuffle_tree(spark, pages_kinds,
+                                                 monkeypatch, case, parts):
+    _case_vs_tree(spark, pages_kinds, monkeypatch, case, parts)
+
+
+def _jobs(sc, group, action):
+    """Spark job ids that ``action()`` ran, and its result."""
+    sc.setJobGroup(group, group)
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group)), result
+
+
+def test_under_budget_build_is_one_job(spark, pages_tiny_multifile,
+                                       arrow_collects):
+    """Four partitions under the budget: ONE job (one stage, one Python
+    operator, no Exchange) builds and collects the partials; the
+    LocalRelation it returns runs no job when collected."""
+    sc = spark.sparkContext
+    df = pages_tiny_multifile
+    assert df.rdd.getNumPartitions() == 4
+    specs = [SketchSpec("b", "bloom", "url", {"m": 1 << 14, "k": 5}),
+             SketchSpec("h", "hll", "url", {"b": 10})]
+    jobs, out = _jobs(sc, "driver-fold-build", lambda: build_sketches(
+        df, ["lang"], specs, readout=READOUT[:1]))
+    assert len(jobs) == 1, jobs
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
+    ((partials, _table),) = arrow_collects
+    assert python_stages(partials, run=False) == [["MapInPandas"]]
+    assert _is_local(out)
+    jobs, rows = _jobs(sc, "driver-fold-collect", out.collect)
+    assert jobs == [] and rows
+
+
+def test_over_budget_partials_fall_back_to_the_tree(pages_tiny_multifile,
+                                                    arrow_collects,
+                                                    driver_budget):
+    """A budget the plan-time Bloom bytes fit (4 x 2 KiB) but the
+    partials do not: the tasks send overflow markers, the driver holds
+    no more than its budget, and the build re-runs as the shuffle tree
+    with the same bytes."""
+    df = pages_tiny_multifile.withColumn(
+        "html_len", F.length("html").cast("double")).withColumn(
+        "w", (F.length("url") % 13 + 1).cast("double"))
+    budget = 10000
+    driver_budget(budget)
+    out = build_sketches(df, ["lang"], ALL_KINDS)
+    ((_partials, table),) = arrow_collects
+    blobs = table.column("partial").to_pylist()
+    assert b"" in blobs and sum(map(len, blobs)) <= budget
+    assert "FlatMapGroupsInPandas" in \
+        out._jdf.queryExecution().executedPlan().toString()
+    tree = merge_partials(build_partials(df, ["lang"], ALL_KINDS), ["lang"],
+                          allow_narrow=False)
+    assert _table(out, ["lang"]) == _table(tree, ["lang"])
+
+
+def test_bloom_over_budget_goes_straight_to_the_tree(spark,
+                                                     pages_tiny_multifile,
+                                                     arrow_collects,
+                                                     driver_budget):
+    """A key Bloom whose m/8 bytes times the partition count pass the
+    budget plans the shuffle tree before any job runs: no build job is
+    wasted on the driver fold, and the filter is the one-partition
+    build's."""
+    df = pages_tiny_multifile
+    driver_budget(1 << 20)  # 4 partitions x m/8 (1.2 MB) > 1 MiB
+    jobs, (merged, _cached) = _jobs(
+        spark.sparkContext, "bloom-plan-time",
+        lambda: joinprune._key_bloom_merged_df(df, "url", 0.01, 10 ** 6, 0))
+    assert jobs == [] and arrow_collects == []
+    assert "FlatMapGroupsInPandas" in \
+        merged._jdf.queryExecution().executedPlan().toString()
+    (row,) = merged.collect()
+    assert bytes(row["sketch"]) == joinprune.build_key_bloom(
+        df.coalesce(1), "url", 0.01, 10 ** 6).to_bytes()
 
 
 def test_heavy_hitters_same_rows_on_one_or_many_partitions(pages_tiny):
@@ -243,3 +358,41 @@ def test_readout_keeps_the_read_out_rule():
     _col, dtype, fn = sqlfuncs.readout("q", sqlfuncs.sketch_quantiles, [0.5])
     assert dtype == "array<double>"
     assert fn("h", hll) is None
+
+
+def test_driver_tables_are_local_relations(spark, pages_tiny, monkeypatch,
+                                           tmp_path):
+    """Tables the driver makes from Python values (the exact embedding
+    spectrum, the IVF centroid table, a checkpoint manifest) are
+    LocalRelations built from Arrow, not Python RDDs whose rows a
+    second pool of Python workers would unpickle."""
+    from sketchlib.spark.checkpoint import build_sketches_checkpointed
+    made = []
+    real = type(spark).createDataFrame
+
+    def create(self, *args, **kwargs):
+        df = real(self, *args, **kwargs)
+        made.append(df)
+        return df
+    monkeypatch.setattr(type(spark), "createDataFrame", create)
+    assert _is_local(queries.q_embedding_spectrum_exact(spark, SF))
+    assert queries.q_ann_ivf_topk(spark, SF).collect()
+    build_sketches_checkpointed(pages_tiny, ["lang"],
+                                [SketchSpec("h", "hll", "url", {"b": 8})],
+                                str(tmp_path / "ckpt")).collect()
+    assert len(made) == 3 and all(_is_local(df) for df in made)
+
+
+def test_fd_builds_fold_in_workers(spark):
+    """An FD merge's SVD differs in its last bits with the BLAS thread
+    count (one per Python worker, more on the driver), so a wider FD
+    build keeps the tree and its bytes."""
+    emb = (spark.read.parquet(os.path.join(SF, "embeddings.parquet"))
+           .select(F.lit(1).alias("g"), "embedding").repartition(4))
+    spec = [SketchSpec("f", "fd", "embedding", {"l": 32})]
+    out = build_sketches(emb, ["g"], spec)
+    assert "FlatMapGroupsInPandas" in \
+        out._jdf.queryExecution().executedPlan().toString()
+    tree = merge_partials(build_partials(emb, ["g"], spec), ["g"],
+                          allow_narrow=False)
+    assert _table(out, ["g"]) == _table(tree, ["g"])

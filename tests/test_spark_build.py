@@ -246,11 +246,11 @@ class TestFusedReadout:
                          ids=["repartition7", "coalesce1"])
 def test_build_sketches_local_bitwise_matches_distributed(pages_tiny,
                                                           narrow):
-    """Driver-side fold (one python stage) must equal the distributed
-    merge bitwise — same (partition_id, chunk) total order. The
-    single-partition input takes merge_partials' narrow per-partition
-    fold, so the lossy KLL/t-digest folds are checked on that path
-    too, not just the shuffle merge."""
+    """``build_sketches_local`` (``build_sketches`` collected) must
+    equal the shuffle merge tree bitwise — same (partition_id, chunk)
+    total order. Seven partitions take the driver fold (the result is
+    a LocalRelation), one partition the in-task fold, so the lossy
+    KLL/t-digest folds are checked on both against the tree."""
     from sketchlib.spark.build import build_sketches_local
     specs = [SketchSpec("k", "kll", "html_len", {"k": 128}),
              SketchSpec("h", "hll", "url", {"b": 10}),
@@ -259,9 +259,19 @@ def test_build_sketches_local_bitwise_matches_distributed(pages_tiny,
         .withColumn("html_len", F.length("html").cast("double"))
     built = build_sketches(d, ["lang"], specs)
     plan = built._jdf.queryExecution().executedPlan().toString()
-    assert ("FlatMapGroupsInPandas" in plan) != narrow, plan
+    if narrow:
+        assert plan.count("MapInPandas") == 1, plan
+        assert "FlatMapGroupsInPandas" not in plan, plan
+    else:
+        assert plan.startswith("LocalTableScan"), plan
+    tree = merge_partials(build_partials(d, ["lang"], specs), ["lang"],
+                          allow_narrow=False)
+    assert "FlatMapGroupsInPandas" in \
+        tree._jdf.queryExecution().executedPlan().toString()
     dist = {(r["lang"], r["sketch_name"]): bytes(r["sketch"])
-            for r in built.collect()}
+            for r in tree.collect()}
+    assert dist == {(r["lang"], r["sketch_name"]): bytes(r["sketch"])
+                    for r in built.collect()}
     local = {k: sk.to_bytes()
              for k, sk in build_sketches_local(d, ["lang"], specs).items()}
     assert local == dist
