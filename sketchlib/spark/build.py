@@ -27,7 +27,10 @@ the same bytes:
     one job, collected and folded on the driver, and returned as a
     ``LocalRelation`` (eager: the job runs at call time);
   - tree: every other input shuffles its partials through
-    ``merge_partials``' salted ``applyInPandas`` tree.
+    ``merge_partials``' salted ``applyInPandas`` tree. A build whose
+    partials turned out too big for the driver in that one job merges
+    the partials the job left in a local checkpoint: no input is
+    built twice.
 
 At 100 TB: the shuffle volume is (#input_partitions × #groups ×
 sketch_bytes) regardless of row count — the property that makes the
@@ -47,8 +50,8 @@ import pyarrow as pa
 import pyarrow.compute as pa_compute
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
-from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import (BinaryType, BooleanType, IntegerType,
+                               LongType, StringType, StructField, StructType)
 
 from sketchlib.core.cms import CountMinSketch
 from sketchlib.core.sample import WeightedBottomKSample
@@ -110,12 +113,13 @@ def _partials_schema(df: DataFrame, group_cols: list[str]) -> StructType:
 
 
 def _norm_nan(key):
-    """pandas groupby(dropna=False) yields float NaN for null keys while
-    Spark's collect() yields None — normalize to None so per-group param
-    dicts and validation self-exclusion line up across the boundary."""
+    """pandas groupby(dropna=False) yields float NaN (pd.NA on a
+    nullable dtype) for null keys while Spark's collect() yields None —
+    normalize to None so per-group param dicts and validation
+    self-exclusion line up across the boundary."""
     if isinstance(key, tuple):
         return tuple(_norm_nan(k) for k in key)
-    if isinstance(key, float) and np.isnan(key):
+    if key is pd.NA or isinstance(key, float) and np.isnan(key):
         return None
     return key
 
@@ -462,61 +466,93 @@ def _merge_tree(partials: DataFrame, group_cols: list[str], plan: list,
                          _table_row(keys, readout), by=order)
 
 
-def _within_share(build, share: int, blob_col: str, nbytes):
-    """``build`` that gives up once the ``nbytes`` of the frames it has
-    yielded pass ``share``: it then yields ONE overflow marker (a row
-    whose ``blob_col`` is empty, which no serialized state is) and
-    stops reading its partition."""
+# the flag column of the driver fold's build job: True on the rows
+# the driver collects
+_SHIP = "_ship"
+
+
+def _frame_bytes(frame: pd.DataFrame) -> int:
+    """Arrow bytes of ``frame``, every column counted: what its rows
+    add to the table the driver collects."""
+    return pa.Table.from_pandas(frame, preserve_index=False).nbytes
+
+
+def _within_share(build, share: int, blob_col: str):
+    """``build`` with a ``_SHIP`` flag on its rows: True while the
+    frames it has yielded hold at most ``share`` Arrow bytes; past
+    that, the task yields ONE overflow marker (a shipped row whose
+    ``blob_col`` is empty, which no serialized state is) and flags
+    the rest of its rows False. It builds its whole partition either
+    way: the unshipped rows are kept for the merge tree."""
     def bounded(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         used = 0
         for frame in build(batches):
-            used += nbytes(frame)
-            if used > share:
-                yield frame.iloc[:1].assign(**{blob_col: [b""]})
-                return
-            yield frame
+            if used <= share:
+                used += _frame_bytes(frame)
+                if used > share:
+                    yield frame.iloc[:1].assign(**{blob_col: [b""],
+                                                   _SHIP: True})
+            yield frame.assign(**{_SHIP: used <= share})
     return bounded
 
 
-def _fold_once(sel: DataFrame, build, partials_schema, fold, out_schema,
-               nparts: int, min_bytes: int | None = 0,
-               blob_col: str = "partial", nbytes=None) -> DataFrame | None:
-    """The merged table of ``fold`` (an ``_fold_in_task``) over the
-    partials ``build`` makes from ``sel``'s ``nparts`` partitions, with
-    no shuffle — or None when the partials do not fit the driver, and
-    the caller merges through its shuffle tree.
+# Spark's integer types read as pandas' nullable ones: a column holding
+# a null stays exact, where the default float64 merges distinct keys
+# above 2**53 (and pandas' groupby floats an object column of ints too)
+_NULLABLE_INTS = {pa.int8(): pd.Int8Dtype(), pa.int16(): pd.Int16Dtype(),
+                  pa.int32(): pd.Int32Dtype(), pa.int64(): pd.Int64Dtype()}
+
+
+def _fold_once(sel: DataFrame, build, partials: DataFrame, fold,
+               out_schema, nparts: int, min_bytes: int | None = 0,
+               blob_col: str = "partial"
+               ) -> tuple[DataFrame | None, DataFrame]:
+    """(merged, None): the merged table of ``fold`` (an
+    ``_fold_in_task``) over the ``partials`` that ``build`` makes from
+    ``sel``'s ``nparts`` partitions, with no shuffle — or (None,
+    partials) when they do not fit the driver, for the caller's
+    shuffle tree.
 
     One partition: the fold runs in the task that built the partials
-    (lazy). More: one job builds and collects the partials, the driver
-    folds them and returns a ``LocalRelation``. The collect is bounded
-    by Spark's Arrow local-relation threshold twice: before any job,
-    ``nparts * min_bytes`` (the params-fixed bytes of one group's
-    partial in every partition) must fit; in the job, each task stops
-    at budget / nparts bytes of partials and sends an overflow marker
-    instead, and one marker sends the build to the tree.
+    (lazy). More: one job builds the partials and collects them, the
+    driver folds them and returns a ``LocalRelation``. Spark's Arrow
+    local-relation threshold bounds the collect twice: before any
+    job, ``nparts * min_bytes`` (the params-fixed bytes of one group's
+    partial in every partition) must fit, else the lazy ``partials``
+    go to the tree; in the job, each task ships at most
+    budget / nparts Arrow bytes of partial rows, then one overflow
+    marker. The job keeps every partial in a local checkpoint, so on
+    a marker the tree merges those rows instead of building again.
     ``min_bytes=None`` keeps the fold off the driver."""
     if nparts == 1:
-        return sel.mapInPandas(_build_and_fold(build, fold), out_schema)
+        return sel.mapInPandas(_build_and_fold(build, fold), out_schema), None
     spark = sel.sparkSession
     # Spark's own spark.sql.execution.arrow.localRelationThreshold: the
     # size under which the Arrow table returned is a LocalRelation
     budget = int(spark._jconf.arrowLocalRelationThreshold())
     if min_bytes is None or nparts * min_bytes > budget:
-        return None
+        return None, partials
     share = budget // max(nparts, 1)
-    nbytes = nbytes or (lambda frame: int(frame[blob_col].map(len).sum()))
-    parts = sel.mapInPandas(_within_share(build, share, blob_col, nbytes),
-                            partials_schema).toArrow().to_pandas()
-    if (parts[blob_col].map(len) == 0).any():
-        return None
+    flagged = sel.mapInPandas(
+        _within_share(build, share, blob_col),
+        StructType(partials.schema.fields
+                   + [StructField(_SHIP, BooleanType())])
+    ).localCheckpoint(eager=False)
+    parts = flagged.filter(F.col(_SHIP)).drop(_SHIP).toArrow()
+    if pa_compute.any(pa_compute.equal(
+            pa_compute.binary_length(parts[blob_col]), 0)).as_py():
+        return None, flagged.filter(F.length(blob_col) > 0).drop(_SHIP)
+    # every partial was shipped: the checkpoint is not needed
+    flagged._jdf.queryExecution().analyzed().rdd().unpersist(False)
     with warnings.catch_warnings():
         # pandas warns when it concatenates one-row frames holding a
         # null key or read-out; the Arrow schema fixes the types anyway
         warnings.simplefilter("ignore", FutureWarning)
-        folded = list(fold([parts]))
+        folded = list(fold([parts.to_pandas(
+            types_mapper=_NULLABLE_INTS.get)]))
     return local_table(spark, pd.concat(folded or [
         pd.DataFrame(columns=out_schema.names)], ignore_index=True),
-        out_schema)
+        out_schema), None
 
 
 def _build_merged(sel: DataFrame, build, partials_schema, group_cols,
@@ -531,10 +567,9 @@ def _build_merged(sel: DataFrame, build, partials_schema, group_cols,
     partials = sel.mapInPandas(build, partials_schema)
     nparts, plan = _merge_plan(partials, fanout)
     if not plan:
-        merged = _fold_once(sel, build, partials.schema,
-                            _fold_partials(group_cols, readout),
-                            _table_schema(partials, group_cols, readout),
-                            nparts, min_bytes)
+        merged, partials = _fold_once(
+            sel, build, partials, _fold_partials(group_cols, readout),
+            _table_schema(partials, group_cols, readout), nparts, min_bytes)
         if merged is not None:
             return merged
     return _merge_tree(partials, group_cols, plan, readout)

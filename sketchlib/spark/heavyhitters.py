@@ -208,18 +208,12 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
     ])
     # CMS merge is a cell-wise sum: any order is bitwise-identical, so
     # the partial tables fold in arrival order
+    partials = sel.mapInPandas(build, partials_schema)
     nparts = sel.rdd.getNumPartitions()
     if _auto_fanout(nparts) is None:
-        top = _fold_once(sel, build, partials_schema, _fold_in_task(
+        top, partials = _fold_once(sel, build, partials, _fold_in_task(
             group_cols, _group_fold("cms", topk_rows)), out_schema, nparts,
-            blob_col="cms", nbytes=_partial_bytes)
+            blob_col="cms")
         if top is not None:
             return top
-    return _merge_groups(sel.mapInPandas(build, partials_schema), group_cols,
-                         out_schema, "cms", topk_rows)
-
-
-def _partial_bytes(frame: pd.DataFrame) -> int:
-    """Bytes of ``_token_partials`` rows: CMS blobs plus candidates."""
-    return int(frame["cms"].map(len).sum()
-               + frame["cands"].map(lambda c: sum(map(len, c))).sum())
+    return _merge_groups(partials, group_cols, out_schema, "cms", topk_rows)

@@ -40,17 +40,25 @@ def pages_tiny_multifile(spark, tmp_path_factory):
 
 @pytest.fixture
 def arrow_collects(monkeypatch):
-    """(DataFrame, Arrow table) of every ``toArrow`` collect while the
-    test runs: the build jobs of the driver fold, whose plans the
-    LocalRelation it returns does not show."""
+    """(build, Arrow table) of every ``toArrow`` collect while the test
+    runs: the build jobs of the driver fold, whose plans the
+    LocalRelation it returns does not show. The fold collects from a
+    local checkpoint of its build, so ``build`` is the DataFrame last
+    checkpointed before the collect (the collected one if none was)."""
     from pyspark.sql.classic.dataframe import DataFrame
-    seen = []
-    real = DataFrame.toArrow
+    seen, checkpointed = [], []
+    real_collect = DataFrame.toArrow
+    real_checkpoint = DataFrame.localCheckpoint
+
+    def local_checkpoint(self, *args, **kwargs):
+        checkpointed.append(self)
+        return real_checkpoint(self, *args, **kwargs)
 
     def to_arrow(self):
-        table = real(self)
-        seen.append((self, table))
+        table = real_collect(self)
+        seen.append((checkpointed.pop() if checkpointed else self, table))
         return table
+    monkeypatch.setattr(DataFrame, "localCheckpoint", local_checkpoint)
     monkeypatch.setattr(DataFrame, "toArrow", to_arrow)
     return seen
 

@@ -15,6 +15,7 @@ the same bytes as the shuffle merge.
 import math
 import os
 
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 import pytest
 
@@ -260,13 +261,20 @@ def test_under_budget_build_is_one_job(spark, pages_tiny_multifile,
     assert jobs == [] and rows
 
 
+def _shipped_partials(table):
+    """The partial rows of a driver-fold collect, overflow markers
+    (empty blobs) dropped."""
+    return table.filter(pc.greater(pc.binary_length(table["partial"]), 0))
+
+
 def test_over_budget_partials_fall_back_to_the_tree(pages_tiny_multifile,
                                                     arrow_collects,
                                                     driver_budget):
     """A budget the plan-time Bloom bytes fit (4 x 2 KiB) but the
-    partials do not: the tasks send overflow markers, the driver holds
-    no more than its budget, and the build re-runs as the shuffle tree
-    with the same bytes."""
+    partials do not: the tasks send overflow markers, the driver
+    collects no more than its budget, and the shuffle tree merges the
+    partials the build job kept (no second build) into the same
+    bytes."""
     df = pages_tiny_multifile.withColumn(
         "html_len", F.length("html").cast("double")).withColumn(
         "w", (F.length("url") % 13 + 1).cast("double"))
@@ -274,13 +282,58 @@ def test_over_budget_partials_fall_back_to_the_tree(pages_tiny_multifile,
     driver_budget(budget)
     out = build_sketches(df, ["lang"], ALL_KINDS)
     ((_partials, table),) = arrow_collects
-    blobs = table.column("partial").to_pylist()
-    assert b"" in blobs and sum(map(len, blobs)) <= budget
-    assert "FlatMapGroupsInPandas" in \
-        out._jdf.queryExecution().executedPlan().toString()
+    assert b"" in table.column("partial").to_pylist()
+    assert _shipped_partials(table).nbytes <= budget
+    # the tree reads the partials the build job kept: no MapInPandas
+    assert [s for s in python_stages(out) if s] == \
+        [["FlatMapGroupsInPandas"]]
     tree = merge_partials(build_partials(df, ["lang"], ALL_KINDS), ["lang"],
                           allow_narrow=False)
     assert _table(out, ["lang"]) == _table(tree, ["lang"])
+
+
+def test_group_keys_count_against_the_budget(pages_tiny_multifile,
+                                             arrow_collects, driver_budget):
+    """Long group keys next to small states: the budget counts whole
+    partial rows, so keys that pass it send the build to the tree
+    although the blobs alone fit, and the collected rows stay within
+    it."""
+    df = pages_tiny_multifile.withColumn("key", F.repeat("lang", 2000))
+    specs = [SketchSpec("h", "hll", "url", {"b": 4})]
+    tree = merge_partials(build_partials(df, ["key"], specs), ["key"],
+                          allow_narrow=False)
+    partials = build_partials(df, ["key"], specs).toArrow()
+    blobs = sum(pc.binary_length(partials["partial"]).to_pylist())
+    budget = 8 * blobs  # each task's share holds all blobs twice over
+    assert partials.nbytes > 2 * budget
+    driver_budget(budget)
+    out = build_sketches(df, ["key"], specs)
+    (_build, table) = arrow_collects[-1]
+    assert b"" in table.column("partial").to_pylist()
+    assert _shipped_partials(table).nbytes <= budget
+    assert not _is_local(out)
+    assert _table(out, ["key"]) == _table(tree, ["key"])
+
+
+def test_driver_fold_keeps_bigint_keys_exact(spark):
+    """A bigint group key column holding a null, collected to the
+    driver, keeps keys above 2**53 apart: the fold must not read it
+    as float64, which merges them into one group."""
+    big = 2 ** 53 + 1
+    # partition 0: keys big and big + 1; partition 1: the null key
+    df = spark.range(0, 400, numPartitions=2).select(
+        F.when(F.col("id") < 200, F.lit(big) + F.col("id") % 2).alias("k"),
+        F.col("id").cast("string").alias("url"),
+        F.col("id").cast("double").alias("x"))
+    specs = [SketchSpec("h", "hll", "url", {"b": 10}),
+             SketchSpec("q", "kll", "x", {"k": 128})]
+    folded = build_sketches(df, ["k"], specs)
+    assert _is_local(folded)
+    tree = merge_partials(build_partials(df, ["k"], specs), ["k"],
+                          allow_narrow=False)
+    got = _table(folded, ["k"])
+    assert got == _table(tree, ["k"])
+    assert {key[0] for key in got} == {str(big), str(big + 1), "None"}
 
 
 def test_bloom_over_budget_goes_straight_to_the_tree(spark,

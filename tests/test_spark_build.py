@@ -277,6 +277,26 @@ def test_build_sketches_local_bitwise_matches_distributed(pages_tiny,
     assert local == dist
 
 
+def test_build_sketches_local_equals_build_sketches_on_wide_input(
+        pages_tiny):
+    """Over 64 partitions ``build_sketches`` merges through the salted
+    tree, and ``build_sketches_local`` returns that tree's bytes: the
+    KLL/t-digest folds, which depend on the fold order, included."""
+    from sketchlib.spark.build import build_sketches_local
+    specs = [SketchSpec("k", "kll", "html_len", {"k": 128}),
+             SketchSpec("h", "hll", "url", {"b": 10}),
+             SketchSpec("t", "tdigest", "html_len", {"delta": 100})]
+    d = pages_tiny.repartition(100).withColumn(
+        "html_len", F.length("html").cast("double"))
+    built = build_sketches(d, ["lang"], specs)
+    assert "FlatMapGroupsInPandas" in \
+        built._jdf.queryExecution().executedPlan().toString()
+    dist = {(r["lang"], r["sketch_name"]): bytes(r["sketch"])
+            for r in built.collect()}
+    assert {k: sk.to_bytes() for k, sk in
+            build_sketches_local(d, ["lang"], specs).items()} == dist
+
+
 def test_narrow_fold_null_numeric_group_key_across_batches(spark):
     """Review r5: the narrow single-partition fold keys its group dict
     on normalized keys — a null numeric group key spanning multiple
