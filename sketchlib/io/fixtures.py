@@ -129,7 +129,7 @@ def media_path(n: int = 120, seed: int = 5,
     re-encoding the WAV/PNG/JPEG/MP4 payloads inside the query, so its
     bench time measures the probe/extract operators, not fixture
     encoding (the media table is INPUT data, generated deterministically
-    from (n, seed) exactly as ``make_fake_media`` does)."""
+    from (n, seed) by ``multimodal.fake_media_rows``)."""
     base = base_dir or os.path.join(os.path.dirname(os.path.dirname(
         os.path.dirname(os.path.abspath(__file__)))), ".fixtures")
     os.makedirs(base, exist_ok=True)

@@ -227,6 +227,17 @@ def _feed(spec: SketchSpec, sketch, sub: pd.DataFrame,
         sketch.update_batch(vals)
 
 
+def _max_groups_in_flight(value: int | None) -> int:
+    """``value``, or env SKETCHLIB_MAX_GROUPS_IN_FLIGHT (default 8192)
+    when None: the per-task bound on in-memory (group, sketch) states of
+    every partial builder. ValueError below 1."""
+    if value is None:
+        value = int(os.environ.get("SKETCHLIB_MAX_GROUPS_IN_FLIGHT", "8192"))
+    if value < 1:
+        raise ValueError("max_groups_in_flight must be >= 1")
+    return value
+
+
 def _partial_task(df: DataFrame, group_cols: list[str],
                   specs: list[SketchSpec],
                   max_groups_in_flight: int | None):
@@ -238,11 +249,7 @@ def _partial_task(df: DataFrame, group_cols: list[str],
     names = [s.name for s in specs]
     if len(set(names)) != len(names):
         raise ValueError(f"duplicate spec names: {names}")
-    if max_groups_in_flight is None:
-        max_groups_in_flight = int(os.environ.get(
-            "SKETCHLIB_MAX_GROUPS_IN_FLIGHT", "8192"))
-    if max_groups_in_flight < 1:
-        raise ValueError("max_groups_in_flight must be >= 1")
+    max_groups_in_flight = _max_groups_in_flight(max_groups_in_flight)
     value_cols = sorted(({s.value_col for s in specs}
                          | {s.weight_col for s in specs if s.weight_col})
                         - set(group_cols))  # a group col can be sketched

@@ -37,7 +37,8 @@ from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
 
 from sketchlib.core.cms import CountMinSketch
 from sketchlib.spark.build import (_auto_fanout, _fold_in_task, _fold_once,
-                                   _group_fold, _merge_groups, _norm_nan,
+                                   _group_fold, _max_groups_in_flight,
+                                   _merge_groups, _norm_nan,
                                    update_from_token_counts)
 
 
@@ -176,10 +177,7 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
     a ``LocalRelation``; otherwise the partial states shuffle into a
     grouped merge.
     """
-    import os
-    if max_groups_in_flight is None:
-        max_groups_in_flight = int(os.environ.get(
-            "SKETCHLIB_MAX_GROUPS_IN_FLIGHT", "8192"))
+    max_groups_in_flight = _max_groups_in_flight(max_groups_in_flight)
     sel = df.select(*group_cols, text_col)
     group_fields = [f for f in sel.schema.fields if f.name in group_cols]
     build = _token_partials(group_cols, text_col, capacity, w, d, seed,

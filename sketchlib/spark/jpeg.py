@@ -1,21 +1,21 @@
 """Baseline JPEG codec — pure Python/numpy, no external libraries.
 
 Implements the baseline sequential DCT process of the public JPEG
-spec (ITU-T T.81 / ISO 10918-1): DQT/DHT/SOF0/SOS/DRI parsing,
-canonical Huffman decode with byte unstuffing and restart markers,
-dequant + dezigzag, exact orthonormal 8x8 IDCT (matrix form), chroma
-upsampling for 4:4:4 / 4:2:2 / 4:2:0, and JFIF full-range BT.601
-YCbCr -> RGB. ``encode_jpeg`` writes baseline 4:4:4 (or grayscale)
+spec (ITU-T T.81 / ISO 10918-1) for three-component YCbCr streams:
+DQT/DHT/SOF0/SOS parsing, canonical Huffman decode with byte
+unstuffing, dequant + dezigzag, exact orthonormal 8x8 IDCT (matrix
+form), chroma upsampling by any integer ratio (4:4:4, 4:2:2, 4:2:0),
+and JFIF full-range BT.601 YCbCr -> RGB. ``encode_jpeg`` writes such
 streams with the spec's Annex K example quantization and Huffman
-tables so the decoder's every path is round-trip-testable without
-PIL/libjpeg.
+tables; it writes the media fixture.
 
-Scope (documented refusals, ValueError): progressive (SOF2),
-arithmetic coding, 12-bit precision, hierarchical modes. Those are
-rare in web corpora; transcode at ingest. Entropy decoding is a
-per-symbol Python loop — fine for fixture/feature-extraction scale;
-the surrounding Spark plumbing (extract_features) streams Arrow
-batches regardless of codec cost.
+Scope (documented refusals, ValueError): grayscale and CMYK streams,
+restart intervals (DRI), 16-bit quantization tables, progressive
+(SOF2), arithmetic coding, 12-bit precision, hierarchical modes.
+Transcode those at ingest. Entropy decoding is a per-symbol Python
+loop — fine for fixture/feature-extraction scale; the surrounding
+Spark plumbing (extract_features) streams Arrow batches regardless of
+codec cost.
 """
 
 from __future__ import annotations
@@ -108,10 +108,6 @@ def _dct_matrix() -> np.ndarray:
 _C = _dct_matrix()
 
 
-def _dct2(block: np.ndarray) -> np.ndarray:
-    return _C @ block @ _C.T
-
-
 # ---------------------------------------------------------------------------
 # Huffman
 # ---------------------------------------------------------------------------
@@ -154,8 +150,8 @@ def _huff_lut(table: dict) -> tuple[np.ndarray, np.ndarray]:
 
 class _BitReader:
     """MSB-first bit reader over entropy-coded data with FF00
-    unstuffing; stops at any other FFxx marker (restart handling is
-    the caller's job)."""
+    unstuffing; pads with 1-bits at any other FFxx marker and past the
+    end of the data."""
 
     def __init__(self, data: bytes, pos: int):
         self.data = data
@@ -170,38 +166,16 @@ class _BitReader:
         self.acc &= (1 << self.nbits) - 1
         d = self.data
         while self.nbits <= 24:
-            if self.pos >= len(d):
-                self.acc = (self.acc << 8) | 0xFF  # spec: pad with 1s
-                self.nbits += 8
-                continue
-            b = d[self.pos]
-            if b == 0xFF:
-                nxt = d[self.pos + 1] if self.pos + 1 < len(d) else 0xD9
-                if nxt == 0x00:
-                    self.pos += 2
-                elif 0xD0 <= nxt <= 0xD7:
-                    # restart marker: caller resyncs via next_restart()
-                    self.acc = (self.acc << 8) | 0xFF
-                    self.nbits += 8
-                    continue
-                else:  # EOI / next segment: pad
-                    self.acc = (self.acc << 8) | 0xFF
-                    self.nbits += 8
-                    continue
-            else:
+            # past the end, 0xFF pads (spec: pad with 1s) like a marker
+            b = d[self.pos] if self.pos < len(d) else 0xFF
+            if b != 0xFF:
                 self.pos += 1
+            elif self.pos + 1 < len(d) and d[self.pos + 1] == 0x00:
+                self.pos += 2  # stuffed 0xFF data byte
             self.acc = (self.acc << 8) | b
             self.nbits += 8
 
-    def read_bit(self) -> int:
-        if self.nbits == 0:
-            self._fill()
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
-
     def receive(self, n: int) -> int:
-        if n == 0:
-            return 0
         while self.nbits < n:
             self._fill()
         self.nbits -= n
@@ -219,18 +193,6 @@ class _BitReader:
         self.nbits -= int(ln)
         return int(lut[0][word])
 
-    def next_restart(self) -> None:
-        """Skip to just past the next RSTn marker; reset bit state."""
-        d = self.data
-        self.acc = 0
-        self.nbits = 0
-        while self.pos + 1 < len(d):
-            if d[self.pos] == 0xFF and 0xD0 <= d[self.pos + 1] <= 0xD7:
-                self.pos += 2
-                return
-            self.pos += 1
-        raise ValueError("corrupt JPEG: expected restart marker")
-
 
 def _extend(v: int, n: int) -> int:
     """T.81 F.2.2.1: map the n received bits to a signed coefficient."""
@@ -245,10 +207,10 @@ def _extend(v: int, n: int) -> int:
 
 
 def decode_jpeg(payload: bytes) -> np.ndarray:
-    """Baseline JPEG -> uint8 RGB [h, w, 3] (grayscale replicated).
+    """Baseline YCbCr JPEG -> uint8 RGB [h, w, 3].
 
-    ValueError on anything that is not baseline sequential 8-bit
-    Huffman JPEG (progressive, arithmetic, 12-bit, hierarchical) or on
+    ValueError on anything that is not a three-component baseline
+    sequential 8-bit Huffman JPEG without restart intervals, or on
     truncated/corrupt structure.
     """
     if payload[:2] != b"\xFF\xD8":
@@ -256,20 +218,18 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     qt: dict[int, np.ndarray] = {}
     huff: dict[tuple[int, int], dict] = {}  # (class, id) -> table
     frame = None
-    restart = 0
     pos = 2
     n = len(payload)
     while pos + 4 <= n:
         if payload[pos] != 0xFF:
             raise ValueError(f"bad JPEG marker alignment at {pos}")
-        # T.81 B.1.1.2: any number of 0xFF fill bytes may precede a marker
-        while pos + 1 < n and payload[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 4 > n:
-            break
         marker = payload[pos + 1]
-        if marker == 0xD9:  # EOI before SOS
-            break
+        if marker == 0xFF:
+            # T.81 B.1.1.2: 0xFF fill bytes may precede any marker
+            pos += 1
+            continue
+        if marker == 0xD9:
+            raise ValueError("truncated JPEG: EOI before SOS")
         # standalone markers carry NO length field (T.81 B.1.1.3):
         # TEM (0x01) and RSTn (0xD0-0xD7). Reading their next 2 bytes
         # as a segment length would desync the walk — skip just the
@@ -286,13 +246,11 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
             b = 0
             while b < len(body):
                 prec, tid = body[b] >> 4, body[b] & 0xF
-                b += 1
                 if prec:
-                    tbl = np.frombuffer(body[b:b + 128], dtype=">u2")
-                    b += 128
-                else:
-                    tbl = np.frombuffer(body[b:b + 64], dtype=np.uint8)
-                    b += 64
+                    raise ValueError("unsupported JPEG 16-bit "
+                                     "quantization table")
+                tbl = np.frombuffer(body[b + 1:b + 65], dtype=np.uint8)
+                b += 65
                 flat = np.zeros(64, dtype=np.int64)
                 flat[ZIGZAG] = tbl.astype(np.int64)
                 qt[tid] = flat.reshape(8, 8)
@@ -325,11 +283,10 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                     f"JPEG dimensions {fw}x{fh} exceed the decode "
                     f"limit ({MAX_DECODE_PIXELS} px) — a tiny header "
                     "can claim arbitrary dimensions")
-            if nc not in (1, 3):
+            if nc != 3:
                 raise ValueError(
-                    f"unsupported JPEG component count {nc} — grayscale "
-                    "and YCbCr only (4-component CMYK/YCCK: transcode at "
-                    "ingest)")
+                    f"unsupported JPEG component count {nc} — YCbCr "
+                    "only (grayscale, CMYK/YCCK: transcode at ingest)")
             if len(body) < 6 + 3 * nc:
                 raise ValueError("truncated JPEG SOF segment")
             comps = []
@@ -353,10 +310,9 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 "unsupported JPEG mode (progressive/arithmetic/"
                 "hierarchical) — baseline sequential only; transcode at "
                 "ingest")
-        elif marker == 0xDD:  # DRI
-            if len(body) < 2:
-                raise ValueError("truncated JPEG DRI segment")
-            (restart,) = struct.unpack(">H", body[:2])
+        elif marker == 0xDD:
+            raise ValueError("unsupported JPEG restart interval (DRI) — "
+                             "transcode at ingest")
         elif marker == 0xDA:  # SOS -> entropy data follows
             if frame is None:
                 raise ValueError("JPEG SOS before SOF")
@@ -377,13 +333,13 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                     f"multi-scan (components {missing} absent from the "
                     "first scan) — transcode at ingest")
             return _decode_scan(payload, pos + 2 + seglen, frame, qt,
-                                huff, sel, restart)
+                                huff, sel)
         pos += 2 + seglen
     raise ValueError("truncated JPEG: no SOS segment")
 
 
-def _decode_scan(data: bytes, pos: int, frame, qt, huff, sel,
-                 restart: int) -> np.ndarray:
+def _decode_scan(data: bytes, pos: int, frame, qt, huff,
+                 sel) -> np.ndarray:
     comps = frame["comps"]
     fh, fw = frame["h"], frame["w"]
     hmax = max(c["h"] for c in comps)
@@ -399,7 +355,6 @@ def _decode_scan(data: bytes, pos: int, frame, qt, huff, sel,
     # numpy calls dominated decode time otherwise
     n_blk = [mcux * mcuy * c["h"] * c["v"] for c in comps]
     coefs = [np.zeros((nb, 64), dtype=np.int64) for nb in n_blk]
-    blkpos = [np.zeros((nb, 2), dtype=np.int64) for nb in n_blk]
     bi = [0] * len(comps)
     for ci, c in enumerate(comps):
         if ((0, sel[c["id"]][0]) not in luts
@@ -407,47 +362,30 @@ def _decode_scan(data: bytes, pos: int, frame, qt, huff, sel,
                 or c["tq"] not in qt):
             raise ValueError("JPEG scan references missing "
                              "Huffman/quant table")
-    mcu_count = 0
     for my in range(mcuy):
         for mx in range(mcux):
-            if restart and mcu_count and mcu_count % restart == 0:
-                reader.next_restart()
-                pred = [0] * len(comps)
             for ci, c in enumerate(comps):
                 dc_lut = luts[(0, sel[c["id"]][0])]
                 ac_lut = luts[(1, sel[c["id"]][1])]
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        i = bi[ci]
-                        _decode_block(reader, dc_lut, ac_lut, pred, ci,
-                                      coefs[ci][i])
-                        blkpos[ci][i, 0] = (my * c["v"] + by) * 8
-                        blkpos[ci][i, 1] = (mx * c["h"] + bx) * 8
-                        bi[ci] += 1
-            mcu_count += 1
-    planes = []
+                for _ in range(c["v"] * c["h"]):
+                    _decode_block(reader, dc_lut, ac_lut, pred, ci,
+                                  coefs[ci][bi[ci]])
+                    bi[ci] += 1
+    out = []
     for ci, c in enumerate(comps):
+        v, h = c["v"], c["h"]
         nat = np.zeros((n_blk[ci], 64), dtype=np.float64)
         nat[:, ZIGZAG] = coefs[ci]
         blocks = nat.reshape(-1, 8, 8) * qt[c["tq"]][None, :, :]
-        out_blocks = np.einsum("ij,njk,kl->nil", _C.T, blocks, _C)
-        plane = np.zeros((mcuy * 8 * c["v"], mcux * 8 * c["h"]),
-                         dtype=np.float64)
-        for i in range(n_blk[ci]):
-            y0, x0 = blkpos[ci][i]
-            plane[y0:y0 + 8, x0:x0 + 8] = out_blocks[i]
-        planes.append(plane)
-    # upsample to full grid, crop, color-convert
-    out = []
-    for ci, c in enumerate(comps):
-        p = planes[ci]
-        ry, rx = vmax // c["v"], hmax // c["h"]
+        # blocks arrive MCU by MCU, v x h per MCU: lay them out as the
+        # component plane, then upsample to the full grid and crop
+        p = (np.einsum("ij,njk,kl->nil", _C.T, blocks, _C)
+             .reshape(mcuy, mcux, v, h, 8, 8).transpose(0, 2, 4, 1, 3, 5)
+             .reshape(mcuy * v * 8, mcux * h * 8))
+        ry, rx = vmax // v, hmax // h
         if ry > 1 or rx > 1:
             p = np.repeat(np.repeat(p, ry, axis=0), rx, axis=1)
         out.append(p[:fh, :fw])
-    if len(out) == 1:
-        g = np.clip(out[0] + 128.0, 0, 255).round().astype(np.uint8)
-        return np.repeat(g[:, :, None], 3, axis=2)
     y, cb, cr = out[0] + 128.0, out[1], out[2]
     r = y + 1.402 * cr
     g = y - 0.344136 * cb - 0.714136 * cr
@@ -481,7 +419,7 @@ def _decode_block(reader, dc_lut, ac_lut, pred, ci, coef) -> None:
 
 
 # ---------------------------------------------------------------------------
-# encoder (baseline 4:4:4 / grayscale, Annex K tables) — for fixtures
+# encoder (baseline YCbCr, Annex K tables) — for fixtures
 # ---------------------------------------------------------------------------
 
 
@@ -516,7 +454,7 @@ def _category(v: int) -> int:
 
 
 def _encode_block(writer, block, q, dc_codes, ac_codes, pred, ci) -> None:
-    coef = np.rint(_dct2(block) / q).astype(np.int64)
+    coef = np.rint(_C @ block @ _C.T / q).astype(np.int64)
     zz = coef.reshape(-1)[ZIGZAG]
     diff = int(zz[0]) - pred[ci]
     pred[ci] = int(zz[0])
@@ -551,18 +489,13 @@ def _seg(marker: int, body: bytes) -> bytes:
     return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
 
 
-def encode_jpeg(pixels: np.ndarray, grayscale: bool = False,
-                restart_interval: int = 0,
-                subsample: str = "444") -> bytes:
+def encode_jpeg(pixels: np.ndarray, subsample: str = "444") -> bytes:
     """uint8 RGB [h, w, 3] -> baseline JPEG bytes (Annex K tables).
 
-    ``grayscale=True`` writes a single-component stream.
-    ``restart_interval`` > 0 emits DRI + RSTn markers every that many
-    MCUs (exercises the decoder's resync path). ``subsample`` is
-    ``"444"`` (one block of each component per MCU) or ``"420"``
-    (2x2 luma sampling, chroma block-mean-downsampled by 2 — the
-    dominant web-JPEG layout, exercising the decoder's multi-block MCU
-    and upsampling paths)."""
+    ``subsample`` is ``"444"`` (one block of each component per MCU),
+    ``"422"`` (2x1 luma sampling) or ``"420"`` (2x2 luma sampling, the
+    dominant web-JPEG layout); subsampled chroma is block-mean
+    downsampled."""
     px = np.asarray(pixels, dtype=np.uint8)
     if px.ndim != 3 or px.shape[2] != 3:
         raise ValueError(f"expected [h, w, 3] RGB, got shape {px.shape}")
@@ -574,7 +507,7 @@ def encode_jpeg(pixels: np.ndarray, grayscale: bool = False,
     y = 0.299 * r + 0.587 * g + 0.114 * b - 128.0
     cb = -0.168736 * r - 0.331264 * g + 0.5 * b
     cr = 0.5 * r - 0.418688 * g - 0.081312 * b
-    if subsample != "444" and not grayscale:
+    if subsample != "444":
         # chroma block-mean-downsampled: 2x2 for 4:2:0, 2x1 (x only)
         # for 4:2:2; luma padded to the MCU multiple first
         fy, fx = (2, 2) if subsample == "420" else (1, 2)
@@ -587,17 +520,15 @@ def encode_jpeg(pixels: np.ndarray, grayscale: bool = False,
         samp = [(fx, fy), (1, 1), (1, 1)]
     else:
         samp = [(1, 1)] * 3
-    planes = [y] if grayscale else [y, cb, cr]
-    qts = [QUANT_LUMA] if grayscale else [QUANT_LUMA, QUANT_CHROMA,
-                                          QUANT_CHROMA]
-    tq = [0] if grayscale else [0, 1, 1]
+    planes = [y, cb, cr]
+    qts = [QUANT_LUMA, QUANT_CHROMA, QUANT_CHROMA]
+    th = [0, 1, 1]  # quant and Huffman table id per component
     dc_codes = [_huff_codes(DC_LUMA_BITS, DC_LUMA_VALS),
                 _huff_codes(DC_CHROMA_BITS, DC_CHROMA_VALS)]
     ac_codes = [_huff_codes(AC_LUMA_BITS, AC_LUMA_VALS),
                 _huff_codes(AC_CHROMA_BITS, AC_CHROMA_VALS)]
-    th = [0] if grayscale else [0, 1, 1]
-    hmax = max(s[0] for s in samp[:len(planes)])
-    vmax = max(s[1] for s in samp[:len(planes)])
+    hmax = max(s[0] for s in samp)
+    vmax = max(s[1] for s in samp)
     mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
     padded = []
     for ci, p in enumerate(planes):
@@ -607,17 +538,8 @@ def encode_jpeg(pixels: np.ndarray, grayscale: bool = False,
                                  (0, pw - p.shape[1])), mode="edge"))
     writer = _BitWriter()
     pred = [0] * len(planes)
-    mcu = 0
-    rst = 0
-    chunks = []
     for my in range(mcuy):
         for mx in range(mcux):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                chunks.append(writer.flush())
-                chunks.append(bytes([0xFF, 0xD0 + (rst & 7)]))
-                rst += 1
-                writer = _BitWriter()
-                pred = [0] * len(planes)
             for ci, p in enumerate(padded):
                 sh, sv = samp[ci]
                 for by in range(sv):
@@ -627,9 +549,7 @@ def encode_jpeg(pixels: np.ndarray, grayscale: bool = False,
                         _encode_block(writer, p[y0:y0 + 8, x0:x0 + 8],
                                       qts[ci], dc_codes[th[ci]],
                                       ac_codes[th[ci]], pred, ci)
-            mcu += 1
-    chunks.append(writer.flush())
-    scan = b"".join(chunks)
+    scan = writer.flush()
 
     def dqt(tid, tbl):
         return _seg(0xDB, bytes([tid])
@@ -639,24 +559,18 @@ def encode_jpeg(pixels: np.ndarray, grayscale: bool = False,
         return _seg(0xC4, bytes([(cls << 4) | tid]) + bytes(bits)
                     + bytes(vals))
 
-    nc = len(planes)
-    sof = _seg(0xC0, bytes([8]) + struct.pack(">HH", h, w) + bytes([nc])
+    sof = _seg(0xC0, bytes([8]) + struct.pack(">HH", h, w) + bytes([3])
                + b"".join(bytes([i + 1,
-                                 (samp[i][0] << 4) | samp[i][1], tq[i]])
-                          for i in range(nc)))
-    sos = _seg(0xDA, bytes([nc])
+                                 (samp[i][0] << 4) | samp[i][1], th[i]])
+                          for i in range(3)))
+    sos = _seg(0xDA, bytes([3])
                + b"".join(bytes([i + 1, (th[i] << 4) | th[i]])
-                          for i in range(nc))
+                          for i in range(3))
                + bytes([0, 63, 0]))
-    out = [b"\xFF\xD8", dqt(0, QUANT_LUMA)]
-    if nc == 3:
-        out.append(dqt(1, QUANT_CHROMA))
-    out += [dht(0, 0, DC_LUMA_BITS, DC_LUMA_VALS),
-            dht(1, 0, AC_LUMA_BITS, AC_LUMA_VALS)]
-    if nc == 3:
-        out += [dht(0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS),
-                dht(1, 1, AC_CHROMA_BITS, AC_CHROMA_VALS)]
-    if restart_interval:
-        out.append(_seg(0xDD, struct.pack(">H", restart_interval)))
-    out += [sof, sos, scan, b"\xFF\xD9"]
-    return b"".join(out)
+    return b"".join([
+        b"\xFF\xD8", dqt(0, QUANT_LUMA), dqt(1, QUANT_CHROMA),
+        dht(0, 0, DC_LUMA_BITS, DC_LUMA_VALS),
+        dht(1, 0, AC_LUMA_BITS, AC_LUMA_VALS),
+        dht(0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS),
+        dht(1, 1, AC_CHROMA_BITS, AC_CHROMA_VALS),
+        sof, sos, scan, b"\xFF\xD9"])

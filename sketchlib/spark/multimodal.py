@@ -1,48 +1,24 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Image/audio/video content rides as ``binary`` columns next to typed
-metadata (the same posture as ``pages.html``). The Spark-side plumbing
-— schema contracts, Arrow batch shape, partition-friendly UDF
-signatures — is real and tested. Codecs:
+metadata (the same posture as ``pages.html``). The codecs are the ones
+the ``media_features`` catalog entry reads, in stdlib + numpy only:
 
-- **audio/WAV is REAL** (stdlib ``wave``): ``decode_wav`` parses
-  8/16/32-bit PCM to a mono float32 waveform, ``wav_feature_vector``
-  reduces it to the 64-dim RMS-energy envelope the feature contract
-  specifies. ``encode_wav`` synthesizes fixtures.
-- **image/PPM is REAL** (pure numpy): ``decode_ppm`` parses binary
-  P6 (comments, 8/16-bit maxval) to uint8 RGB; ``image_thumbnail`` is
-  the block-mean resize operator; ``image_feature_vector`` emits the
-  64-dim luminance thumbnail. ``encode_ppm`` synthesizes fixtures.
-- **image/PNG is REAL** (stdlib ``zlib`` + numpy): ``decode_png``
-  parses IHDR/PLTE/tRNS/IDAT, inflates, un-filters all five PNG
-  filter types, and handles gray / RGB / palette / alpha at 8- and
-  16-bit depth plus Adam7 interlacing (alpha composited over black,
-  tRNS color keys honored, 16-bit downscaled). ``encode_png``
-  synthesizes fixtures with a chosen filter type and optional
-  interlacing so every un-filter branch is round-trip-tested.
-- **image/JPEG is REAL** (pure Python/numpy, ``sketchlib.spark.jpeg``):
-  baseline sequential Huffman decode per ITU-T T.81 — DQT/DHT/SOF0/
-  SOS/DRI, restart markers, 4:4:4 / 4:2:2 / 4:2:0 upsampling, exact
-  matrix IDCT, JFIF YCbCr→RGB; validated against real libjpeg-encoded
-  files. ``encode_jpeg`` (Annex K tables, 4:4:4/4:2:0/grayscale)
-  synthesizes fixtures. Progressive/arithmetic/12-bit raise ValueError.
-- **video/MP4 container metadata is REAL** (``probe_mp4`` /
-  ``video_metadata``: stdlib ISO-BMFF box walk — brand, duration,
-  per-track handler/resolution, and the stbl sample table: sample
-  count, mean sample size, track bitrate, keyframe cadence — the
-  filter-before-decode stats a video-curation pipeline gates on).
-- **audio/MPEG metadata is REAL** (``probe_mp3`` /
-  ``audio_metadata``: ID3v2 skip + frame-header parse — version,
-  layer, bitrate, sample rate, channels, CBR duration; WAV metadata
-  via stdlib ``wave``).
-  Sample EXTRACTION from MP4 is real (``mp4_extract_samples``:
-  stsz/stsc/stco demux) and MJPEG tracks decode end-to-end through
-  our own JPEG codec (``decode_mp4_frames``). Frame/sample decode for
-  the remaining codecs (H.264/HEVC video, mp3 audio) stays a
-  clearly-marked stub (ffmpeg is not in this container):
-  ``decode_stub`` raises NotImplementedError unless ``fake=True``,
-  which produces a deterministic fake decode so downstream plumbing
-  stays exercisable.
+- **audio**: 16-bit mono PCM WAV. ``decode_wav`` -> ``wav_feature_vector``
+  (64-dim RMS-energy envelope); ``audio_metadata`` reads WAV headers.
+- **image**: binary PPM (P6, maxval 255), 8-bit RGB non-interlaced PNG
+  (all five scanline filters) and baseline YCbCr JPEG
+  (``sketchlib.spark.jpeg``) -> ``image_feature_vector`` (64-dim
+  luminance thumbnail).
+- **video**: ISO-BMFF (MP4) container probe (``probe_mp4`` /
+  ``video_metadata``: brand, duration, per-track dimensions and sample
+  table stats) and MJPEG-in-MP4 frame decode (``decode_mp4_frames``).
+  Other video codecs need ffmpeg, which is not a dependency: they go
+  through ``decode_stub``, a deterministic pseudo-decode.
+
+Other variants of these formats refuse with ValueError, which the Spark
+operators quarantine as NULL columns; transcode them at ingest. The
+``encode_*`` functions write the media fixture (``fake_media_rows``).
 
 At scale: binary payloads dominate bytes, so every operator here
 column-prunes before the Python boundary and streams per Arrow batch
@@ -52,7 +28,9 @@ column-prunes before the Python boundary and streams per Arrow batch
 from __future__ import annotations
 
 import io
+import struct
 import wave
+import zlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -106,26 +84,16 @@ def encode_wav(samples: np.ndarray, rate: int = 16000) -> bytes:
 
 
 def decode_wav(payload: bytes) -> np.ndarray:
-    """REAL codec: 8/16/32-bit PCM WAV -> mono float32 waveform in [-1,1].
-
-    stdlib ``wave`` only — no external decode libraries needed.
-    Multi-channel input is averaged to mono.
+    """16-bit mono PCM WAV -> float32 waveform in [-1, 1] (stdlib
+    ``wave``). Other sample widths and channel counts raise ValueError.
     """
     with wave.open(io.BytesIO(payload), "rb") as w:
-        nch = w.getnchannels()
-        sw = w.getsampwidth()
+        if w.getsampwidth() != 2 or w.getnchannels() != 1:
+            raise ValueError(
+                f"unsupported WAV layout: {w.getsampwidth() * 8}-bit, "
+                f"{w.getnchannels()} channels (16-bit mono only)")
         raw = w.readframes(w.getnframes())
-    if sw == 2:
-        x = np.frombuffer(raw, dtype="<i2").astype(np.float32) / 32768.0
-    elif sw == 1:  # 8-bit WAV is unsigned
-        x = (np.frombuffer(raw, dtype=np.uint8).astype(np.float32) - 128.0) / 128.0
-    elif sw == 4:
-        x = np.frombuffer(raw, dtype="<i4").astype(np.float32) / 2147483648.0
-    else:
-        raise ValueError(f"unsupported PCM sample width {sw}")
-    if nch > 1:
-        x = x[: (len(x) // nch) * nch].reshape(-1, nch).mean(axis=1)
-    return x.astype(np.float32)
+    return np.frombuffer(raw, dtype="<i2").astype(np.float32) / 32768.0
 
 
 def wav_feature_vector(waveform: np.ndarray,
@@ -152,13 +120,10 @@ def encode_ppm(pixels: np.ndarray) -> bytes:
 
 
 def decode_ppm(payload: bytes) -> np.ndarray:
-    """REAL image codec: binary PPM (P6) -> uint8 RGB [h, w, 3].
+    """Binary PPM (P6, maxval 255) -> uint8 RGB [h, w, 3], pure numpy.
 
-    Pure numpy — no PIL needed. Handles the format's '#' comments and
-    arbitrary whitespace in the header, and 16-bit maxval (downscaled
-    to 8-bit). PPM is the interchange format every image tool can
-    write (`convert x.png x.ppm`), so at ingest time a 100 TB pipeline
-    transcodes once JVM/CLI-side and this column decodes everywhere.
+    Handles the format's '#' comments and arbitrary whitespace in the
+    header; other maxvals (16-bit PPM included) raise ValueError.
     """
     if payload[:2] != b"P6":
         raise ValueError("not a binary PPM (P6) payload")
@@ -179,41 +144,27 @@ def decode_ppm(payload: bytes) -> np.ndarray:
     # except text-mode Windows writers emit CRLF; treat that as one
     pos += 2 if payload[pos:pos + 2] == b"\r\n" else 1
     w, h, maxval = fields
-    if not (0 < maxval < 65536 and w > 0 and h > 0):
-        raise ValueError(f"bad PPM header: w={w} h={h} maxval={maxval}")
-    if maxval < 256:
-        px = np.frombuffer(payload, dtype=np.uint8, count=w * h * 3,
-                           offset=pos).reshape(h, w, 3)
-        if maxval != 255:
-            px = (px.astype(np.uint16) * 255 // maxval).astype(np.uint8)
-        return px.copy()
-    px16 = np.frombuffer(payload, dtype=">u2", count=w * h * 3,
-                         offset=pos).reshape(h, w, 3)
-    return (px16.astype(np.uint32) * 255 // maxval).astype(np.uint8)
+    if not (maxval == 255 and w > 0 and h > 0):
+        raise ValueError(f"unsupported PPM header: w={w} h={h} "
+                         f"maxval={maxval} (maxval 255 only)")
+    return np.frombuffer(payload, dtype=np.uint8, count=w * h * 3,
+                         offset=pos).reshape(h, w, 3).copy()
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
-# channels per PNG color type: gray, RGB, palette, gray+alpha, RGBA
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-# Adam7 interlace passes: (x_start, y_start, x_step, y_step), spec §8.2
-_ADAM7 = ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-          (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
 
 
 def _png_chunk(tag: bytes, body: bytes) -> bytes:
-    import struct
-    import zlib
     return (struct.pack(">I", len(body)) + tag + body
             + struct.pack(">I", zlib.crc32(tag + body)))
 
 
-def _paeth_pred(a: int, b: int, c: int) -> int:
-    """PNG Paeth predictor (spec §9.4) for scalars 0..255."""
+def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """PNG Paeth predictor (spec §9.4), element-wise over int16 arrays
+    of the left, up and up-left bytes."""
     p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
+    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
+    return np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
 
 
 def _filter_scanlines(px: np.ndarray, filter_type: int) -> bytes:
@@ -236,46 +187,30 @@ def _filter_scanlines(px: np.ndarray, filter_type: int) -> bytes:
             filt = cur - ((left + prev) >> 1)
         else:
             upleft = np.concatenate([np.zeros(bpp, np.int16), prev[:-bpp]])
-            pred = np.fromiter(
-                (_paeth_pred(int(a), int(b), int(c))
-                 for a, b, c in zip(left, prev, upleft)),
-                dtype=np.int16, count=w * bpp)
-            filt = cur - pred
+            filt = cur - _paeth(left, prev, upleft)
         lines.append(bytes([filter_type]) + (filt & 0xFF).astype(np.uint8)
                      .tobytes())
         prev = cur
     return b"".join(lines)
 
 
-def encode_png(pixels: np.ndarray, filter_type: int = 0,
-               interlace: bool = False) -> bytes:
+def encode_png(pixels: np.ndarray, filter_type: int = 0) -> bytes:
     """uint8 RGB [h, w, 3] -> PNG bytes (color type 2, bit depth 8).
 
     Every scanline uses ``filter_type`` (0=None 1=Sub 2=Up 3=Average
     4=Paeth) so each of ``decode_png``'s un-filter branches can be
     round-trip-tested; real encoders pick per-row, decode handles any
-    mix. ``interlace=True`` writes the Adam7 pass structure (each pass
-    filtered independently, spec §8.2)."""
-    import struct
-    import zlib
+    mix."""
     px = np.asarray(pixels, dtype=np.uint8)
     if px.ndim != 3 or px.shape[2] != 3:
         raise ValueError(f"expected [h, w, 3] RGB, got shape {px.shape}")
     if filter_type not in range(5):
         raise ValueError(f"filter_type must be 0..4, got {filter_type}")
     h, w = px.shape[:2]
-    if interlace:
-        parts = []
-        for x0, y0, xs, ys in _ADAM7:
-            sub = px[y0::ys, x0::xs]
-            if sub.shape[0] and sub.shape[1]:
-                parts.append(_filter_scanlines(sub, filter_type))
-        body = b"".join(parts)
-    else:
-        body = _filter_scanlines(px, filter_type)
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, int(interlace))
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
     return (_PNG_SIG + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", zlib.compress(body))
+            + _png_chunk(b"IDAT", zlib.compress(
+                _filter_scanlines(px, filter_type)))
             + _png_chunk(b"IEND", b""))
 
 
@@ -285,9 +220,7 @@ def _png_unfilter(raw: bytes, h: int, stride: int, bpp: int) -> np.ndarray:
     Filters 0/1/2 are fully vectorized (Sub via per-lane cumsum mod
     256); Average and Paeth carry a within-row left dependency, so
     those rows fall back to a per-pixel loop vectorized across the
-    pixel's byte lanes — fine for fixture/test scale. The 100 TB-scale
-    posture stays: transcode exotic media once at ingest (PPM decodes
-    allocation-free), decode_png makes PNG corpora work end-to-end."""
+    pixel's byte lanes — fine for fixture/test scale."""
     if len(raw) != h * (1 + stride):
         raise ValueError(
             f"bad PNG pixel payload: expected {h * (1 + stride)} bytes "
@@ -308,51 +241,33 @@ def _png_unfilter(raw: bytes, h: int, stride: int, bpp: int) -> np.ndarray:
                 .astype(np.uint8).reshape(-1)
         elif ft == 2:  # Up
             rec = cur + prev
-        elif ft == 3:  # Average
-            rec = cur
-            up = prev.astype(np.int16)
-            rec[:bpp] = (cur[:bpp].astype(np.int16)
-                         + (up[:bpp] >> 1)).astype(np.uint8)
-            for k in range(bpp, stride, bpp):
-                left = rec[k - bpp:k].astype(np.int16)
-                rec[k:k + bpp] = (cur[k:k + bpp]
-                                  + ((left + up[k:k + bpp]) >> 1)
-                                  .astype(np.uint8))
-        else:  # Paeth
+        else:  # Average (3) / Paeth (4): left is the reconstructed pixel
             rec = cur
             up = prev.astype(np.int16)
             upleft = np.concatenate([np.zeros(bpp, np.int16), up[:-bpp]])
-            rec[:bpp] = cur[:bpp] + up[:bpp].astype(np.uint8)
-            for k in range(bpp, stride, bpp):
-                left = rec[k - bpp:k].astype(np.int16)
-                b, c = up[k:k + bpp], upleft[k:k + bpp]
-                p = left + b - c
-                pa, pb, pc = np.abs(p - left), np.abs(p - b), np.abs(p - c)
-                pred = np.where((pa <= pb) & (pa <= pc), left,
-                                np.where(pb <= pc, b, c))
+            left = np.zeros(bpp, np.int16)
+            for k in range(0, stride, bpp):
+                b = up[k:k + bpp]
+                pred = ((left + b) >> 1 if ft == 3
+                        else _paeth(left, b, upleft[k:k + bpp]))
                 rec[k:k + bpp] = cur[k:k + bpp] + pred.astype(np.uint8)
+                left = rec[k:k + bpp].astype(np.int16)
         out[r] = rec
         prev = rec
     return out
 
 
 def decode_png(payload: bytes) -> np.ndarray:
-    """REAL image codec: PNG -> uint8 RGB [h, w, 3], stdlib zlib + numpy.
+    """PNG -> uint8 RGB [h, w, 3], stdlib zlib + numpy.
 
-    Supports bit depth 8/16 for gray / RGB / gray+alpha / RGBA, 8-bit
-    palette (PLTE, with tRNS alpha), and Adam7 interlacing (each pass
-    unfiltered independently, scattered into the pixel grid); tRNS on
-    gray/RGB is the spec's color key (matching pixels fully
-    transparent); 16-bit samples downscale to 8 (high byte, per spec
-    recommendation); alpha composites over black. Sub-byte depths
-    (1/2/4-bit) raise ValueError — rare in web corpora; transcode
+    8-bit RGB (color type 2), non-interlaced, any mix of the five
+    scanline filters. Other color types and bit depths, Adam7
+    interlacing and tRNS transparency raise ValueError — transcode
     those at ingest.
     """
-    import struct
-    import zlib
     if payload[:8] != _PNG_SIG:
         raise ValueError("not a PNG payload (bad signature)")
-    pos, ihdr, plte, trns, idat = 8, None, None, None, []
+    pos, ihdr, idat = 8, None, []
     while pos + 8 <= len(payload):
         (length,), tag = struct.unpack(">I", payload[pos:pos + 4]), \
             payload[pos + 4:pos + 8]
@@ -362,10 +277,8 @@ def decode_png(payload: bytes) -> np.ndarray:
             if len(body) != 13:
                 raise ValueError(f"truncated PNG IHDR ({len(body)} bytes)")
             ihdr = struct.unpack(">IIBBBBB", body)
-        elif tag == b"PLTE":
-            plte = np.frombuffer(body, dtype=np.uint8).reshape(-1, 3)
         elif tag == b"tRNS":
-            trns = body
+            raise ValueError("unsupported PNG transparency (tRNS)")
         elif tag == b"IDAT":
             idat.append(body)
         elif tag == b"IEND":
@@ -384,22 +297,15 @@ def decode_png(payload: bytes) -> np.ndarray:
             "arbitrary dimensions; raise MAX_DECODE_PIXELS deliberately")
     if comp or fmeth:
         raise ValueError(f"bad PNG compression/filter method {comp}/{fmeth}")
-    if interlace not in (0, 1):
-        raise ValueError(f"bad PNG interlace method {interlace}")
-    if ctype not in _PNG_CHANNELS:
-        raise ValueError(f"bad PNG color type {ctype}")
-    if depth not in (8, 16) or (ctype == 3 and depth != 8):
-        raise ValueError(f"unsupported PNG bit depth {depth} for color "
-                         f"type {ctype} (1/2/4-bit files: transcode at "
-                         "ingest)")
-    nch = _PNG_CHANNELS[ctype]
-    sample_bytes = depth // 8
-    bpp = nch * sample_bytes
+    if (depth, ctype, interlace) != (8, 2, 0):
+        raise ValueError(
+            f"unsupported PNG bit depth {depth}, color type {ctype}, "
+            f"interlace {interlace} (8-bit RGB non-interlaced only: "
+            "transcode at ingest)")
     # bound the inflate to what the declared geometry can legitimately
-    # produce (scanlines + filter bytes; Adam7 adds at most 7 extra
-    # part-scanline rows) — an unbounded zlib.decompress would fully
-    # materialize a zip bomb before any length check runs
-    max_raw = (h + 7) * (w * bpp + 1) + 1024
+    # produce — an unbounded zlib.decompress would fully materialize a
+    # zip bomb before any length check runs
+    max_raw = h * (w * 3 + 1)
     try:
         dec = zlib.decompressobj()
         raw = dec.decompress(b"".join(idat), max_raw + 1)
@@ -408,72 +314,7 @@ def decode_png(payload: bytes) -> np.ndarray:
     if len(raw) > max_raw or dec.unconsumed_tail:
         raise ValueError(
             "PNG IDAT inflates beyond the declared geometry (zip bomb)")
-    if interlace:  # Adam7: unfilter each pass, scatter into the grid
-        grid = np.zeros((h, w, bpp), dtype=np.uint8)
-        off = 0
-        for x0, y0, xs, ys in _ADAM7:
-            hp = len(range(y0, h, ys))
-            wp = len(range(x0, w, xs))
-            if not hp or not wp:
-                continue
-            nbytes = hp * (1 + wp * bpp)
-            sub = _png_unfilter(raw[off:off + nbytes], hp, wp * bpp, bpp)
-            off += nbytes
-            grid[y0::ys, x0::xs] = sub.reshape(hp, wp, bpp)
-        if off != len(raw):
-            raise ValueError(
-                f"bad PNG pixel payload: Adam7 passes expect {off} bytes "
-                f"after inflate, got {len(raw)}")
-        mat = grid.reshape(h, w * bpp)
-    else:
-        mat = _png_unfilter(raw, h, w * bpp, bpp)
-    if depth == 16:  # big-endian u2 -> high byte (spec's 16->8 downsample)
-        full = mat.reshape(h, w, nch, 2)
-        samples = full[:, :, :, 0]
-        samples_full = ((full[:, :, :, 0].astype(np.uint16) << 8)
-                        | full[:, :, :, 1])
-    else:
-        samples = mat.reshape(h, w, nch)
-        samples_full = samples.astype(np.uint16)
-    # tRNS on gray/RGB is a COLOR KEY: pixels exactly matching the key
-    # (compared at full bit depth) are fully transparent -> black under
-    # the composite-over-black contract
-    colorkey_mask = None
-    if trns is not None and ctype in (0, 2):
-        key = np.frombuffer(trns, dtype=">u2")
-        if len(key) >= nch:
-            colorkey_mask = (samples_full
-                             == key[:nch].astype(np.uint16)[None, None, :]
-                             ).all(axis=2)
-    if ctype == 3:
-        if plte is None:
-            raise ValueError("palette PNG without PLTE chunk")
-        codes = samples[:, :, 0]
-        if int(codes.max()) >= len(plte):
-            raise ValueError(
-                f"palette index {int(codes.max())} out of range "
-                f"(PLTE has {len(plte)} entries)")
-        rgb = plte[codes]
-        if trns is None:
-            return rgb.copy()
-        # tRNS: one alpha byte per palette entry (missing entries are
-        # opaque); composite over black like the RGBA/gray+alpha paths
-        alpha_tab = np.full(len(plte), 255, dtype=np.uint8)
-        alpha_tab[:min(len(trns), len(plte))] = \
-            np.frombuffer(trns[:len(plte)], dtype=np.uint8)
-        a = alpha_tab[codes].astype(np.uint16)[:, :, None]
-        return ((rgb.astype(np.uint16) * a) // 255).astype(np.uint8)
-    if ctype in (0, 2):
-        rgb = (np.repeat(samples, 3, axis=2) if ctype == 0
-               else samples).copy()
-        if colorkey_mask is not None:
-            rgb[colorkey_mask] = 0
-        return rgb
-    # alpha channels composite over black (feature contract wants RGB)
-    color, alpha = samples[:, :, :-1], samples[:, :, -1:].astype(np.uint16)
-    if ctype == 4:
-        color = np.repeat(color, 3, axis=2)
-    return ((color.astype(np.uint16) * alpha) // 255).astype(np.uint8)
+    return _png_unfilter(raw, h, w * 3, 3).reshape(h, w, 3)
 
 
 def image_thumbnail(pixels: np.ndarray, out_h: int = 8,
@@ -510,7 +351,7 @@ def image_feature_vector(pixels: np.ndarray,
 
 
 def encode_mp4_stub(duration_ms: int, width: int, height: int,
-                    timescale: int = 1000, mdat: bytes = b"",
+                    mdat: bytes = b"",
                     sample_sizes: list[int] | None = None,
                     keyframes: list[int] | None = None,
                     samples: list[bytes] | None = None) -> bytes:
@@ -523,7 +364,6 @@ def encode_mp4_stub(duration_ms: int, width: int, height: int,
     payloads — e.g. JPEG frames for an MJPEG track) the mdat holds
     them and stsc/stco carry REAL chunk offsets, so
     ``mp4_extract_samples`` can pull them back out."""
-    import struct
 
     def box(tag: bytes, payload: bytes) -> bytes:
         return struct.pack(">I", 8 + len(payload)) + tag + payload
@@ -531,15 +371,15 @@ def encode_mp4_stub(duration_ms: int, width: int, height: int,
     if samples is not None:
         sample_sizes = [len(s) for s in samples]
         mdat = b"".join(samples)
-    dur = int(duration_ms * timescale // 1000)
+    dur = int(duration_ms)  # in the 1000/s timescale written below
 
     def assemble(chunk_offset: int) -> tuple[bytes, int]:
-        mvhd = box(b"mvhd", struct.pack(">B3xIIII", 0, 0, 0, timescale,
+        mvhd = box(b"mvhd", struct.pack(">B3xIIII", 0, 0, 0, 1000,
                                         dur) + b"\x00" * 80)
         tkhd = box(b"tkhd", struct.pack(">B3xIIII", 0, 0, 0, 1, 0)
                    + struct.pack(">I", dur) + b"\x00" * 52
                    + struct.pack(">II", width << 16, height << 16))
-        mdhd = box(b"mdhd", struct.pack(">B3xIIII", 0, 0, 0, timescale,
+        mdhd = box(b"mdhd", struct.pack(">B3xIIII", 0, 0, 0, 1000,
                                         dur) + b"\x00" * 4)
         hdlr = box(b"hdlr", b"\x00" * 8 + b"vide" + b"\x00" * 12 + b"\x00")
         stbl = b""
@@ -583,147 +423,145 @@ def encode_mp4_stub(duration_ms: int, width: int, height: int,
 
 def _bmff_walk(buf: bytes, start: int, end: int):
     """Yield (tag, body_start, box_end) for each ISO-BMFF box in
-    [start, end) — the one box-walk shared by probe_mp4 and
-    mp4_extract_samples. ValueError (never struct.error) on truncated
-    or lying sizes, so the quarantine handlers catch every refusal."""
-    import struct
+    [start, end). 32-bit box sizes only: a 64-bit largesize (size 1)
+    or to-end-of-file (size 0) box refuses. ValueError (never
+    struct.error) on truncated or lying sizes, so the quarantine
+    handlers catch every refusal."""
     pos = start
     while pos + 8 <= end:
         (size,), tag = struct.unpack(">I", buf[pos:pos + 4]), \
             buf[pos + 4:pos + 8]
-        hdr = 8
-        if size == 1:  # 64-bit largesize
-            if pos + 16 > end:
-                raise ValueError("truncated MP4 largesize box")
-            (size,) = struct.unpack(">Q", buf[pos + 8:pos + 16])
-            hdr = 16
-        elif size == 0:  # box extends to EOF
-            size = end - pos
-        if size < hdr or pos + size > end:
+        if size < 8 or pos + size > end:
             raise ValueError(f"bad MP4 box size {size} at {pos}")
-        yield tag, pos + hdr, pos + size
+        yield tag, pos + 8, pos + size
         pos += size
 
 
-def mp4_extract_samples(payload: bytes, handler: str = "vide") -> list[bytes]:
-    """Pull the raw per-sample byte payloads of the first ``handler``
-    track out of an ISO-BMFF container — the stsz (sizes) + stsc
-    (chunk mapping) + stco/co64 (chunk offsets) walk every demuxer
+def _trak_boxes(buf: bytes, start: int, end: int,
+                prefix: bytes = b"") -> dict:
+    """{path: (body_start, box_end)} of the boxes in a trak, descending
+    through mdia/minf/stbl (paths like b"mdia/minf/stbl/stsz")."""
+    out = {}
+    for tag, b0, b1 in _bmff_walk(buf, start, end):
+        if tag in (b"mdia", b"minf", b"stbl"):
+            out.update(_trak_boxes(buf, b0, b1, prefix + tag + b"/"))
+        else:
+            out[prefix + tag] = (b0, b1)
+    return out
+
+
+def _moov(payload: bytes) -> tuple[tuple | None, list[dict]]:
+    """(mvhd span or None, one ``_trak_boxes`` dict per trak) — the one
+    container walk shared by ``probe_mp4`` and ``mp4_extract_samples``."""
+    if len(payload) < 12 or payload[4:8] != b"ftyp":
+        raise ValueError("not an ISO-BMFF payload (no ftyp box)")
+    mvhd, traks = None, []
+    for tag, b0, b1 in _bmff_walk(payload, 0, len(payload)):
+        if tag == b"moov":
+            for t2, c0, c1 in _bmff_walk(payload, b0, b1):
+                if t2 == b"mvhd":
+                    mvhd = (c0, c1)
+                elif t2 == b"trak":
+                    traks.append(_trak_boxes(payload, c0, c1))
+    return mvhd, traks
+
+
+def _u32s(buf: bytes, span: tuple, off: int, n: int, what: str) -> tuple:
+    """``n`` big-endian u32 at ``off`` into the box body ``span``; every
+    read is bounded by the BOX end, never the payload end, so a short
+    box refuses instead of reading its sibling's bytes."""
+    b0, b1 = span
+    if b1 - b0 < off + 4 * n:
+        raise ValueError(f"truncated MP4 {what}")
+    return struct.unpack(f">{n}I", buf[b0 + off:b0 + off + 4 * n])
+
+
+def _times(buf: bytes, span: tuple, what: str) -> tuple[int, int]:
+    """(timescale, duration) of a version-0 mvhd/mdhd box."""
+    ts, dur = _u32s(buf, span, 12, 2, what)
+    if buf[span[0]]:
+        raise ValueError(f"unsupported MP4 {what} version {buf[span[0]]} "
+                         "(64-bit times)")
+    return ts, dur
+
+
+def _handler(buf: bytes, boxes: dict) -> str:
+    """A trak's handler type ("vide", "soun", ...); hdlr is mandatory."""
+    if b"mdia/hdlr" not in boxes:
+        raise ValueError("MP4 trak without hdlr box")
+    span = boxes[b"mdia/hdlr"]
+    _u32s(buf, span, 8, 1, "hdlr")
+    return buf[span[0] + 8:span[0] + 12].decode("latin1")
+
+
+def _sample_sizes(buf: bytes, span: tuple) -> tuple:
+    """Per-sample byte sizes from an stsz box (the compact fixed-size
+    form refuses)."""
+    fixed, cnt = _u32s(buf, span, 4, 2, "stsz")
+    if fixed:
+        raise ValueError("unsupported MP4 fixed-size stsz")
+    return _u32s(buf, span, 12, cnt, "stsz table")
+
+
+def _entries(buf: bytes, span: tuple, width: int, what: str) -> tuple:
+    """The entry table of a full box whose body is (version/flags,
+    entry_count, entries of ``width`` u32 each)."""
+    (ne,) = _u32s(buf, span, 4, 1, what)
+    return _u32s(buf, span, 8, ne * width, what + " table")
+
+
+def mp4_extract_samples(payload: bytes) -> list[bytes]:
+    """Pull the raw per-sample byte payloads of the first video track
+    with a sample table out of an ISO-BMFF container — the stsz (sizes)
+    + stsc (chunk mapping) + stco (chunk offsets) walk every demuxer
     does. No codec: the samples come back as opaque bytes (for an
     MJPEG track each one is a complete JPEG image our own
     ``jpeg.decode_jpeg`` can decode). ValueError on missing/truncated
     sample tables or out-of-range offsets.
     """
-    import struct
-    probe_mp4(payload)  # validates container structure up front
-    walk = _bmff_walk  # re-walk for the raw tables (probe keeps stats)
+    stbl = b"mdia/minf/stbl/"
     n = len(payload)
     incomplete = None  # first matching-but-incomplete trak's error
-    for tag, b0, b1 in walk(payload, 0, n):
-        if tag != b"moov":
+    _mvhd, traks = _moov(payload)
+    for boxes in traks:
+        if _handler(payload, boxes) != "vide":
             continue
-        for t2, c0, c1 in walk(payload, b0, b1):
-            if t2 != b"trak":
-                continue
-            hdl, sizes, stsc, offsets = None, None, None, None
-            for t3, d0, d1 in walk(payload, c0, c1):
-                if t3 != b"mdia":
-                    continue
-                for t4, e0, e1 in walk(payload, d0, d1):
-                    if t4 == b"hdlr":
-                        hdl = payload[e0 + 8:e0 + 12].decode("latin1")
-                    elif t4 == b"minf":
-                        for t5, f0, f1 in walk(payload, e0, e1):
-                            if t5 != b"stbl":
-                                continue
-                            for t6, g0, g1 in walk(payload, f0, f1):
-                                if t6 == b"stsz":
-                                    if g1 - g0 < 12:
-                                        raise ValueError(
-                                            "truncated MP4 stsz")
-                                    fixed, cnt = struct.unpack(
-                                        ">II", payload[g0 + 4:g0 + 12])
-                                    if fixed:
-                                        sizes = [fixed] * cnt
-                                    elif g1 - g0 < 12 + 4 * cnt:
-                                        raise ValueError(
-                                            "truncated MP4 stsz table")
-                                    else:
-                                        sizes = list(struct.unpack(
-                                            f">{cnt}I",
-                                            payload[g0 + 12:g0 + 12 + 4 * cnt]))
-                                elif t6 == b"stsc":
-                                    if g1 - g0 < 8:
-                                        raise ValueError(
-                                            "truncated MP4 stsc")
-                                    (ne,) = struct.unpack(
-                                        ">I", payload[g0 + 4:g0 + 8])
-                                    if g1 - g0 < 8 + 12 * ne:
-                                        raise ValueError(
-                                            "truncated MP4 stsc table")
-                                    stsc = [struct.unpack(
-                                        ">III",
-                                        payload[g0 + 8 + 12 * i:
-                                                g0 + 20 + 12 * i])
-                                        for i in range(ne)]
-                                elif t6 in (b"stco", b"co64"):
-                                    if g1 - g0 < 8:
-                                        raise ValueError(
-                                            "truncated MP4 " +
-                                            t6.decode("latin1"))
-                                    (ne,) = struct.unpack(
-                                        ">I", payload[g0 + 4:g0 + 8])
-                                    fmt, w = (">Q", 8) if t6 == b"co64" \
-                                        else (">I", 4)
-                                    if g1 - g0 < 8 + w * ne:
-                                        raise ValueError(
-                                            "truncated MP4 chunk-offset "
-                                            "table")
-                                    offsets = [struct.unpack(
-                                        fmt, payload[g0 + 8 + w * i:
-                                                     g0 + 8 + w * (i + 1)])[0]
-                                        for i in range(ne)]
-            if hdl != handler:
-                continue
-            if not sizes or not stsc or not offsets:
-                # a handler-matching trak with incomplete tables must
-                # not end the search: a later matching trak may be
-                # complete (multi-track files). Remember the failure
-                # for the terminal error and keep walking.
-                incomplete = (
-                    f"track '{handler}' has no complete sample table "
-                    "(need stsz + stsc + stco/co64)")
-                continue
-            # expand stsc: samples-per-chunk for each chunk 1..len(offsets)
-            out, si = [], 0
-            for ci, off in enumerate(offsets, start=1):
-                spc = 0
-                for first, per, _desc in stsc:
-                    if ci >= first:
-                        spc = per
-                for _ in range(spc):
-                    if si >= len(sizes):
-                        break
-                    end = off + sizes[si]
-                    if end > n:
-                        raise ValueError(
-                            f"sample {si} at {off}+{sizes[si]} runs past "
-                            "the payload end")
-                    out.append(payload[off:end])
-                    off = end
-                    si += 1
-            if si < len(sizes):
-                # stsc's chunk map covers fewer samples than stsz
-                # declares: the tables are mutually inconsistent —
-                # loudly refuse rather than silently truncate the
-                # sample list (docstring contract)
-                raise ValueError(
-                    f"inconsistent MP4 sample tables: stsz declares "
-                    f"{len(sizes)} samples but the stsc chunk map only "
-                    f"covers {si}")
-            return out
+        if not all(stbl + t in boxes for t in (b"stsz", b"stsc", b"stco")):
+            # a video trak with incomplete tables must not end the
+            # search: a later one may be complete (multi-track files).
+            # Remember the failure for the terminal error.
+            incomplete = ("track 'vide' has no complete sample table "
+                          "(need stsz + stsc + stco)")
+            continue
+        sizes = _sample_sizes(payload, boxes[stbl + b"stsz"])
+        flat = _entries(payload, boxes[stbl + b"stsc"], 3, "stsc")
+        stsc = [flat[i:i + 3] for i in range(0, len(flat), 3)]
+        offsets = _entries(payload, boxes[stbl + b"stco"], 1, "stco")
+        # expand stsc: samples-per-chunk for each chunk 1..len(offsets)
+        out, covered = [], 0
+        for ci, off in enumerate(offsets, start=1):
+            spc = 0
+            for first, per, _desc in stsc:
+                if ci >= first:
+                    spc = per
+            for size in sizes[covered:covered + spc]:
+                if off + size > n:
+                    raise ValueError(
+                        f"sample {len(out)} at {off}+{size} runs past "
+                        "the payload end")
+                out.append(payload[off:off + size])
+                off += size
+            covered += spc
+        if covered != len(sizes):
+            # the chunk map and stsz disagree on the sample count:
+            # refuse rather than return a truncated sample list
+            raise ValueError(
+                f"inconsistent MP4 sample tables: stsz declares "
+                f"{len(sizes)} samples but the stsc chunk map "
+                f"covers {covered}")
+        return out
     raise ValueError(incomplete if incomplete is not None else
-                     f"no '{handler}' track with a sample table found")
+                     "no 'vide' track with a sample table found")
 
 
 def decode_mp4_frames(payload: bytes, max_frames: int | None = None
@@ -749,7 +587,7 @@ def decode_mp4_frames(payload: bytes, max_frames: int | None = None
 
 
 def probe_mp4(payload: bytes) -> dict:
-    """REAL ISO-BMFF (MP4/MOV) container metadata probe — stdlib only.
+    """ISO-BMFF (MP4/MOV) container metadata probe — stdlib only.
 
     Walks the public box structure (ISO 14496-12): ftyp brand,
     mvhd timescale/duration, per-trak tkhd width/height, hdlr handler
@@ -759,137 +597,57 @@ def probe_mp4(payload: bytes) -> dict:
     per 8.6.2 an absent stss means EVERY sample is sync). Returns
     {brand, duration_ms, tracks: [{handler, width, height, n_samples,
     sample_bytes, mean_sample_bytes, n_keyframes, keyframe_interval,
-    bitrate_kbps}]}. These are the filter-before-decode stats a 100 TB
-    video-curation pipeline gates on (bitrate floor, keyframe cadence
-    for frame sampling) — frame decode itself stays stubbed (no codec
-    libs). ValueError on non-BMFF or truncated structure.
+    bitrate_kbps}]} — the filter-before-decode stats a curation
+    pipeline gates on. ValueError on non-BMFF or truncated structure,
+    and on 64-bit (version 1) headers and fixed-size stsz.
     """
-    import struct
-    walk = _bmff_walk
-
-    if len(payload) < 12 or payload[4:8] != b"ftyp":
-        raise ValueError("not an ISO-BMFF payload (no ftyp box)")
+    stbl = b"mdia/minf/stbl/"
+    mvhd, traks = _moov(payload)
     out = {"brand": payload[8:12].decode("latin1"), "duration_ms": None,
            "tracks": []}
-    for tag, b0, b1 in walk(payload, 0, len(payload)):
-        if tag != b"moov":
-            continue
-        for t2, c0, c1 in walk(payload, b0, b1):
-            if t2 == b"mvhd":
-                # all reads bounded by the BOX end (c1), never the
-                # payload end — a short box must refuse, not read its
-                # sibling's bytes as timescale/duration
-                if c1 - c0 < 20:
-                    raise ValueError("truncated MP4 mvhd box")
-                ver = payload[c0]
-                if ver == 1:
-                    if c1 - c0 < 32:
-                        raise ValueError("truncated MP4 mvhd v1 box")
-                    ts, dur = struct.unpack(">IQ", payload[c0 + 20:c0 + 32])
-                else:
-                    ts, dur = struct.unpack(">II", payload[c0 + 12:c0 + 20])
-                out["duration_ms"] = int(dur * 1000 // max(ts, 1))
-            elif t2 == b"trak":
-                trk = {"handler": None, "width": None, "height": None,
-                       "n_samples": None, "sample_bytes": None,
-                       "mean_sample_bytes": None, "n_keyframes": None,
-                       "keyframe_interval": None, "bitrate_kbps": None}
-                md_ts = md_dur = None
-                stss_entries = None
-                for t3, d0, d1 in walk(payload, c0, c1):
-                    if t3 == b"tkhd":
-                        # v0 body is 84 bytes, v1 is 96; w/h are the
-                        # last 8 either way
-                        if d1 - d0 < 84:
-                            raise ValueError("truncated MP4 tkhd box")
-                        wfx, hfx = struct.unpack(">II",
-                                                 payload[d1 - 8:d1])
-                        trk["width"] = wfx >> 16
-                        trk["height"] = hfx >> 16
-                    elif t3 == b"mdia":
-                        for t4, e0, e1 in walk(payload, d0, d1):
-                            if t4 == b"hdlr":
-                                if e1 - e0 < 12:
-                                    raise ValueError(
-                                        "truncated MP4 hdlr box")
-                                trk["handler"] = payload[e0 + 8:e0 + 12] \
-                                    .decode("latin1")
-                            elif t4 == b"mdhd":
-                                if e1 - e0 < 20:
-                                    raise ValueError(
-                                        "truncated MP4 mdhd box")
-                                if payload[e0] == 1:
-                                    if e1 - e0 < 32:
-                                        raise ValueError(
-                                            "truncated MP4 mdhd v1 box")
-                                    md_ts, md_dur = struct.unpack(
-                                        ">IQ", payload[e0 + 20:e0 + 32])
-                                else:
-                                    md_ts, md_dur = struct.unpack(
-                                        ">II", payload[e0 + 12:e0 + 20])
-                            elif t4 == b"minf":
-                                for t5, f0, f1 in walk(payload, e0, e1):
-                                    if t5 != b"stbl":
-                                        continue
-                                    for t6, g0, g1 in walk(payload, f0, f1):
-                                        if t6 == b"stsz":
-                                            if g1 - g0 < 12:
-                                                raise ValueError(
-                                                    "truncated MP4 stsz")
-                                            fixed, cnt = struct.unpack(
-                                                ">II",
-                                                payload[g0 + 4:g0 + 12])
-                                            trk["n_samples"] = int(cnt)
-                                            if fixed:
-                                                total = fixed * cnt
-                                            else:
-                                                if g1 - g0 < 12 + 4 * cnt:
-                                                    raise ValueError(
-                                                        "truncated MP4 "
-                                                        "stsz table")
-                                                total = sum(struct.unpack(
-                                                    f">{cnt}I",
-                                                    payload[g0 + 12:
-                                                            g0 + 12 + 4 * cnt]))
-                                            trk["sample_bytes"] = int(total)
-                                        elif t6 == b"stss":
-                                            if g1 - g0 < 8:
-                                                raise ValueError(
-                                                    "truncated MP4 stss")
-                                            (ne,) = struct.unpack(
-                                                ">I", payload[g0 + 4:g0 + 8])
-                                            if g1 - g0 < 8 + 4 * ne:
-                                                raise ValueError(
-                                                    "truncated MP4 stss "
-                                                    "table")
-                                            stss_entries = struct.unpack(
-                                                f">{ne}I",
-                                                payload[g0 + 8:g0 + 8 + 4 * ne])
-                # derived sample stats (the filter-before-decode gates):
-                # mean sample size, keyframe cadence, track bitrate
-                n = trk["n_samples"]
-                if n:
-                    trk["mean_sample_bytes"] = round(
-                        trk["sample_bytes"] / n, 1)
-                    if stss_entries is not None:
-                        trk["n_keyframes"] = len(stss_entries)
-                        if len(stss_entries) >= 2:
-                            trk["keyframe_interval"] = round(
-                                (stss_entries[-1] - stss_entries[0])
-                                / (len(stss_entries) - 1), 1)
-                        else:
-                            trk["keyframe_interval"] = float(n)
-                    else:
-                        # ISO 14496-12 8.6.2: no stss => every sample
-                        # is a sync sample
-                        trk["n_keyframes"] = n
-                        trk["keyframe_interval"] = 1.0
-                    if md_ts and md_dur:
-                        sec = md_dur / md_ts
-                        if sec > 0:
-                            trk["bitrate_kbps"] = round(
-                                trk["sample_bytes"] * 8 / 1000 / sec, 1)
-                out["tracks"].append(trk)
+    if mvhd is not None:
+        ts, dur = _times(payload, mvhd, "mvhd")
+        out["duration_ms"] = int(dur * 1000 // max(ts, 1))
+    for boxes in traks:
+        trk = dict.fromkeys(("handler", "width", "height", "n_samples",
+                             "sample_bytes", "mean_sample_bytes",
+                             "n_keyframes", "keyframe_interval",
+                             "bitrate_kbps"))
+        trk["handler"] = _handler(payload, boxes)
+        if b"tkhd" in boxes:
+            # v0 body is 84 bytes, v1 is 96; w/h are the last 8 either way
+            d0, d1 = boxes[b"tkhd"]
+            if d1 - d0 < 84:
+                raise ValueError("truncated MP4 tkhd box")
+            wfx, hfx = struct.unpack(">II", payload[d1 - 8:d1])
+            trk["width"], trk["height"] = wfx >> 16, hfx >> 16
+        md_ts = md_dur = None
+        if b"mdia/mdhd" in boxes:
+            md_ts, md_dur = _times(payload, boxes[b"mdia/mdhd"], "mdhd")
+        if stbl + b"stsz" in boxes:
+            sizes = _sample_sizes(payload, boxes[stbl + b"stsz"])
+            trk["n_samples"], trk["sample_bytes"] = len(sizes), sum(sizes)
+        stss = (_entries(payload, boxes[stbl + b"stss"], 1, "stss")
+                if stbl + b"stss" in boxes else None)
+        # derived sample stats (the filter-before-decode gates):
+        # mean sample size, keyframe cadence, track bitrate
+        n = trk["n_samples"]
+        if n:
+            trk["mean_sample_bytes"] = round(trk["sample_bytes"] / n, 1)
+            if stss is not None:
+                trk["n_keyframes"] = len(stss)
+                trk["keyframe_interval"] = (
+                    round((stss[-1] - stss[0]) / (len(stss) - 1), 1)
+                    if len(stss) >= 2 else float(n))
+            else:
+                # ISO 14496-12 8.6.2: no stss => every sample is a sync
+                # sample
+                trk["n_keyframes"] = n
+                trk["keyframe_interval"] = 1.0
+            if md_ts and md_dur:
+                trk["bitrate_kbps"] = round(
+                    trk["sample_bytes"] * 8 / 1000 / (md_dur / md_ts), 1)
+        out["tracks"].append(trk)
     return out
 
 
@@ -905,30 +663,19 @@ def video_metadata(df: DataFrame, id_col: str = "media_id",
               "n_tracks long, width long, height long, "
               "n_samples long, mean_sample_bytes double, "
               "bitrate_kbps double, keyframe_interval double")
-    cols = ["media_id", "brand", "duration_ms", "n_tracks", "width",
-            "height", "n_samples", "mean_sample_bytes", "bitrate_kbps",
-            "keyframe_interval"]
+    cols = [field.split()[0] for field in schema.split(", ")]
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
         for pdf in batches:
-            if not len(pdf):
-                continue
             rows = []
             for mid, payload in zip(pdf["_id"], pdf["_payload"]):
                 try:
                     meta = probe_mp4(bytes(payload))
-                    vid = next((t for t in meta["tracks"]
-                                if t["handler"] == "vide"),
-                               meta["tracks"][0] if meta["tracks"] else None)
+                    tracks = meta["tracks"]
+                    vid = next((t for t in tracks if t["handler"] == "vide"),
+                               tracks[0] if tracks else {})
                     rows.append((mid, meta["brand"], meta["duration_ms"],
-                                 len(meta["tracks"]),
-                                 vid["width"] if vid else None,
-                                 vid["height"] if vid else None,
-                                 vid["n_samples"] if vid else None,
-                                 vid["mean_sample_bytes"] if vid else None,
-                                 vid["bitrate_kbps"] if vid else None,
-                                 vid["keyframe_interval"] if vid else None))
+                                 len(tracks), *map(vid.get, cols[4:])))
                 except (ValueError, struct.error, IndexError):
                     # quarantine contract: probe refusals are ValueError
                     # by design; struct/Index are belt-and-braces so one
@@ -939,192 +686,20 @@ def video_metadata(df: DataFrame, id_col: str = "media_id",
     return sel.mapInPandas(fn, schema)
 
 
-# MPEG audio frame-header tables (public spec, ISO 11172-3 / 13818-3):
-# bitrates (kbps) keyed by (version-group, layer), sample rates per
-# version. Version group 1 = MPEG1, 2 = MPEG2/2.5 (which share tables).
-_MP3_BITRATES = {
-    (1, 1): (0, 32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384,
-             416, 448),
-    (1, 2): (0, 32, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256,
-             320, 384),
-    (1, 3): (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224,
-             256, 320),
-    (2, 1): (0, 32, 48, 56, 64, 80, 96, 112, 128, 144, 160, 176, 192,
-             224, 256),
-    (2, 2): (0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144,
-             160),
-}
-_MP3_BITRATES[(2, 3)] = _MP3_BITRATES[(2, 2)]  # MPEG2 layers II+III share
-_MP3_RATES = {3: (44100, 48000, 32000),      # MPEG1
-              2: (22050, 24000, 16000),      # MPEG2
-              0: (11025, 12000, 8000)}       # MPEG2.5
-
-
-def encode_mp3_stub(duration_ms: int, bitrate_kbps: int = 128,
-                    sample_rate: int = 44100, xing: bool = False) -> bytes:
-    """Structurally-valid CBR MPEG1 Layer III stream for fixtures:
-    correct frame headers + zeroed payload (no real audio — the PROBE
-    walks headers; sample decode stays stubbed). ``xing=True`` writes
-    a real Xing VBR header (frame count + byte count, at the MPEG1-
-    stereo side-info offset) into the first frame, the way LAME tags
-    VBR files, so the frame-exact duration path is fixture-testable."""
-    import struct
-    br_idx = _MP3_BITRATES[(1, 3)].index(bitrate_kbps)
-    sr_idx = _MP3_RATES[3].index(sample_rate)
-    hdr = bytes([0xFF, 0xFB, (br_idx << 4) | (sr_idx << 2), 0x00])
-    frame_len = 144 * bitrate_kbps * 1000 // sample_rate
-    n_frames = max(1, duration_ms * sample_rate // (1152 * 1000))
-    frame = hdr + b"\x00" * (frame_len - 4)
-    out = frame * int(n_frames)
-    if xing:
-        tag = b"Xing" + struct.pack(">III", 0x3, int(n_frames),
-                                    len(out))
-        off = 4 + 32  # MPEG1, non-mono: 32 side-info bytes
-        out = out[:off] + tag + out[off + len(tag):]
-    return out
-
-
-def _mp3_header_at(payload: bytes, pos: int) -> dict | None:
-    """Parse a candidate MPEG-audio frame header at ``pos``; None when
-    the 4 bytes there are not a valid header. Returns the decoded
-    fields plus the computed frame length, used by ``probe_mp3``."""
-    n = len(payload)
-    if pos + 4 > n or payload[pos] != 0xFF \
-            or (payload[pos + 1] & 0xE0) != 0xE0:
-        return None
-    b1, b2, b3 = payload[pos + 1], payload[pos + 2], payload[pos + 3]
-    version = (b1 >> 3) & 0x3          # 3=MPEG1 2=MPEG2 0=MPEG2.5
-    layer = (b1 >> 1) & 0x3            # 1=III 2=II 3=I
-    br_idx = (b2 >> 4) & 0xF
-    sr_idx = (b2 >> 2) & 0x3
-    pad = (b2 >> 1) & 1
-    if version == 1 or layer == 0 or br_idx in (0, 15) or sr_idx == 3:
-        return None
-    rate = _MP3_RATES[version][sr_idx]
-    lyr = {1: 3, 2: 2, 3: 1}[layer]
-    vgrp = 1 if version == 3 else 2
-    kbps = _MP3_BITRATES[(vgrp, lyr)][br_idx]
-    if lyr == 1:  # Layer I: slots are 4 bytes
-        flen = (12 * kbps * 1000 // rate + pad) * 4
-    else:
-        per = 144 if (vgrp == 1 or lyr == 2) else 72
-        flen = per * kbps * 1000 // rate + pad
-    mode = (b3 >> 6) & 0x3
-    spf = 384 if lyr == 1 else (1152 if (lyr == 2 or vgrp == 1) else 576)
-    return {"b1": b1, "version": version, "vgrp": vgrp, "lyr": lyr,
-            "kbps": kbps, "rate": rate, "pad": pad, "mode": mode,
-            "flen": flen, "spf": spf}
-
-
-def probe_mp3(payload: bytes) -> dict:
-    """REAL MPEG-audio header probe — stdlib only.
-
-    Skips an ID3v2 tag (synchsafe size), syncs on the first frame
-    header, VERIFIES a second frame header follows at the computed
-    frame length (so random binary containing an accidental 0xFFEx is
-    not misclassified as audio), and reads version / layer / bitrate /
-    sample rate / channel mode with per-layer bitrate tables; duration
-    is estimated from stream bytes at the first frame's bitrate (exact
-    for CBR). A Xing/Info (LAME) or VBRI (Fraunhofer) header in the
-    first frame upgrades the estimate to the frame-exact duration and
-    mean bitrate — the CBR arithmetic is wrong for VBR streams, and
-    real-world VBR mp3s carry one of these tags. ValueError when no
-    verified frame sync is found.
-    """
-    import struct
-    pos = 0
-    if payload[:3] == b"ID3" and len(payload) >= 10:
-        size = ((payload[6] & 0x7F) << 21) | ((payload[7] & 0x7F) << 14) \
-            | ((payload[8] & 0x7F) << 7) | (payload[9] & 0x7F)
-        pos = 10 + size
-    n = len(payload)
-    while pos + 4 <= n:
-        h = _mp3_header_at(payload, pos)  # shared parse (see above)
-        if h is not None:
-                rate, lyr, vgrp = h["rate"], h["lyr"], h["vgrp"]
-                kbps, mode, b1 = h["kbps"], h["mode"], h["b1"]
-                flen, spf, version = h["flen"], h["spf"], h["version"]
-                # sync verification: a real stream has another frame
-                # header right after this one (skip for streams shorter
-                # than two frames)
-                nxt = pos + flen
-                if nxt + 2 <= n and not (
-                        payload[nxt] == 0xFF
-                        and (payload[nxt + 1] & 0xE0) == 0xE0):
-                    pos += 1
-                    continue
-                # bits / kbps = milliseconds (CBR-exact)
-                dur = (n - pos) * 8 // kbps if kbps else None
-                out = {"mpeg_version": {3: 1, 2: 2, 0: 25}[version],
-                       "layer": lyr,
-                       "bitrate_kbps": kbps, "sample_rate": rate,
-                       "channels": 1 if mode == 3 else 2,
-                       "duration_ms_est": dur,
-                       "vbr": False, "n_frames": None}
-                # Xing/Info (LAME) VBR header: sits after the side
-                # info of the first frame; "Info" tags CBR files the
-                # same way. VBRI (Fraunhofer) sits at a fixed +32.
-                # Frame counts give the EXACT duration — the CBR
-                # bytes/bitrate estimate is wrong for VBR streams.
-                if vgrp == 1:
-                    si = 17 if mode == 3 else 32
-                else:
-                    si = 9 if mode == 3 else 17
-                # protection_bit == 0 means a 16-bit CRC sits between
-                # the header and the side info — the Xing tag shifts
-                # with it (common in broadcast rips)
-                crc = 0 if (b1 & 1) else 2
-                xoff = pos + 4 + crc + si
-                tag = payload[xoff:xoff + 4]
-                if tag in (b"Xing", b"Info") and xoff + 8 <= n:
-                    (flags,) = struct.unpack(">I", payload[xoff + 4:xoff + 8])
-                    p2 = xoff + 8
-                    frames = total = None
-                    if flags & 0x1 and p2 + 4 <= n:
-                        (frames,) = struct.unpack(">I", payload[p2:p2 + 4])
-                        p2 += 4
-                    if flags & 0x2 and p2 + 4 <= n:
-                        (total,) = struct.unpack(">I", payload[p2:p2 + 4])
-                    if frames:
-                        out["vbr"] = tag == b"Xing"
-                        out["n_frames"] = int(frames)
-                        out["duration_ms_est"] = int(
-                            frames * spf * 1000 // rate)
-                        if total and out["duration_ms_est"]:
-                            out["bitrate_kbps"] = int(round(
-                                total * 8 / out["duration_ms_est"]))
-                elif payload[pos + 36:pos + 40] == b"VBRI" \
-                        and pos + 62 <= n:
-                    total, frames = struct.unpack(
-                        ">II", payload[pos + 46:pos + 54])
-                    if frames:
-                        out["vbr"] = True
-                        out["n_frames"] = int(frames)
-                        out["duration_ms_est"] = int(
-                            frames * spf * 1000 // rate)
-                        if total and out["duration_ms_est"]:
-                            out["bitrate_kbps"] = int(round(
-                                total * 8 / out["duration_ms_est"]))
-                return out
-        pos += 1
-    raise ValueError("no verified MPEG audio frame sync found")
-
-
 def audio_metadata(df: DataFrame, id_col: str = "media_id",
                    payload_col: str = "payload") -> DataFrame:
     """(media_id, container, sample_rate, channels, bitrate_kbps,
-    duration_ms_est) for WAV and MPEG-audio payloads — the
-    filter-before-decode companion of ``video_metadata``. Unknown
-    formats yield NULL columns (quarantine), never a task failure."""
+    duration_ms_est) from WAV headers — the filter-before-decode
+    companion of ``video_metadata``. Other payloads (truncated WAVs
+    included) yield NULL columns (quarantine), never a task failure."""
     sel = df.select(F.col(id_col).cast("long").alias("_id"),
                     F.col(payload_col).alias("_payload"))
     schema = ("media_id long, container string, sample_rate long, "
               "channels long, bitrate_kbps long, duration_ms_est long")
+    cols = [field.split()[0] for field in schema.split(", ")]
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not len(pdf):
-                continue
             rows = []
             for mid, payload in zip(pdf["_id"], pdf["_payload"]):
                 p = bytes(payload)
@@ -1142,38 +717,19 @@ def audio_metadata(df: DataFrame, id_col: str = "media_id",
                         # truncated RIFF raises EOFError from the chunk
                         # reader, not wave.Error — both quarantine
                         pass
-                else:
-                    try:
-                        m = probe_mp3(p)
-                        row = (mid, "mpeg", m["sample_rate"], m["channels"],
-                               m["bitrate_kbps"], m["duration_ms_est"])
-                    except ValueError:
-                        pass
                 rows.append(row)
-            yield pd.DataFrame(rows, columns=["media_id", "container",
-                                              "sample_rate", "channels",
-                                              "bitrate_kbps",
-                                              "duration_ms_est"])
+            yield pd.DataFrame(rows, columns=cols)
 
     return sel.mapInPandas(fn, schema)
 
 
-def decode_stub(payload: bytes, kind: str, fake: bool = False) -> np.ndarray:
-    """Codec boundary for the kinds WITHOUT a real decoder here
-    (video / compressed audio). Real decode of those needs ffmpeg —
-    absent in this container; WAV audio has the real ``decode_wav``,
-    PPM images ``decode_ppm``, PNG images ``decode_png``, JPEG images
-    ``jpeg.decode_jpeg``.
-
-    ``fake=True`` returns a deterministic pseudo-decode (seeded from the
-    payload's own bytes) with the right shape contract:
-      image -> float32[64] "pixel stats", audio -> float32[64] "frames",
-      video -> float32[64] "frame sample".
-    """
-    if not fake:
-        raise NotImplementedError(
-            "media decode requires PIL/soundfile/ffmpeg (not in this "
-            "container); pass fake=True for the deterministic stub")
+def decode_stub(payload: bytes, kind: str) -> np.ndarray:
+    """Codec boundary for the payloads WITHOUT a real decoder here
+    (non-MJPEG video, audio that is not WAV): their decode needs
+    ffmpeg, which is not a dependency. Returns a deterministic
+    pseudo-decode (seeded from the payload's own bytes and the kind)
+    with the feature contract's shape, float32[64], so the plumbing
+    around it stays exercisable."""
     pad = (-len(payload)) % 8
     u = np.frombuffer(payload + b"\x00" * pad, dtype=np.uint64)
     seed = hashing.fold64(u, seed={"image": 1, "audio": 2, "video": 3}.get(kind, 0))
@@ -1181,13 +737,12 @@ def decode_stub(payload: bytes, kind: str, fake: bool = False) -> np.ndarray:
     return rng.standard_normal(64).astype(np.float32)
 
 
-def _decode_one(payload: bytes, kind: str, mime: str | None,
-                fake: bool) -> np.ndarray:
+def _decode_one(payload: bytes, kind: str, mime: str | None) -> np.ndarray:
     """Dispatch: declared-WAV audio -> real codec; everything else ->
     stub. Audio with unknown/missing mime only tries the real decoder
     when the payload self-identifies as RIFF/WAVE — arbitrary audio
-    bytes under fake=True must keep flowing through the deterministic
-    stub, not die in wave.Error."""
+    bytes must keep flowing through the deterministic stub, not die in
+    wave.Error."""
     if kind == "audio":
         is_declared = mime == "audio/wav"
         is_riff = payload[:4] == b"RIFF" and payload[8:12] == b"WAVE"
@@ -1214,21 +769,19 @@ def _decode_one(payload: bytes, kind: str, mime: str | None,
                 return image_feature_vector(frames[0])
         except (NotImplementedError, ValueError):
             pass
-    return decode_stub(payload, kind, fake=fake)
+    return decode_stub(payload, kind)
 
 
 def extract_features(df: DataFrame, id_col: str = "media_id",
                      payload_col: str = "payload", kind_col: str = "kind",
-                     mime_col: str | None = "mime",
-                     fake: bool = True) -> DataFrame:
+                     mime_col: str | None = "mime") -> DataFrame:
     """(media_id, feature: array<float>[64]) via mapInPandas.
 
     Streams one Arrow batch of payloads at a time; the decode loop is
     per-item (codecs are inherently per-item) but everything around it
     is batch-shaped. WAV audio decodes for real (``decode_wav`` +
-    RMS-envelope features), PPM/PNG/JPEG images likewise; other kinds
-    go through ``decode_stub`` (NotImplementedError unless
-    ``fake=True`` — a CONFIGURATION error that still fails fast).
+    RMS-envelope features), PPM/PNG/JPEG images and MJPEG-in-MP4
+    video likewise; other payloads go through ``decode_stub``.
 
     Corrupt/mislabeled payloads quarantine: codec refusals (ValueError
     and the stdlib wave error classes) yield a NULL ``feature`` for
@@ -1250,13 +803,11 @@ def extract_features(df: DataFrame, id_col: str = "media_id",
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not len(pdf):
-                continue
             mimes = pdf["_mime"] if has_mime else [None] * len(pdf)
             feats = []
             for p, k, m in zip(pdf["_payload"], pdf["_kind"], mimes):
                 try:
-                    feats.append(_decode_one(bytes(p), k, m, fake))
+                    feats.append(_decode_one(bytes(p), k, m))
                 except (ValueError, wave.Error, EOFError):
                     feats.append(None)  # quarantine, never a task kill
             yield pd.DataFrame({"media_id": pdf["_id"].to_numpy(),
@@ -1267,16 +818,15 @@ def extract_features(df: DataFrame, id_col: str = "media_id",
 
 def fake_media_rows(n: int = 300, seed: int = 5) -> list:
     """Deterministic fake media rows matching MEDIA_SCHEMA — the
-    generator behind ``make_fake_media`` and the parquet fixture
-    (``io.fixtures.media_path``); pure Python, no Spark session.
+    generator behind the parquet fixture (``io.fixtures.media_path``);
+    pure Python, no Spark session.
 
-    Audio rows carry REAL (tiny) PCM WAV payloads and image rows REAL
-    PPM, PNG, or JPEG payloads (cycling; PNG filter types cycle 0..4,
-    JPEG alternates 4:4:4/4:2:0) — synthesized through ``encode_wav``
-    / ``encode_ppm`` / ``encode_png`` / ``jpeg.encode_jpeg`` — so all
-    four real decode paths are exercised end-to-end; video payloads
-    are minimal REAL MP4 containers (probe-able metadata) whose mdat
-    holds opaque junk, so frame decode still goes through the stub.
+    Audio rows are 16-bit mono 8 kHz WAV; image rows cycle PNG (filter
+    type ``i // 3 % 5``), PPM and JPEG (4:2:0 on odd ``i``, else 4:4:4);
+    odd video rows are MP4s holding 2-4 JPEG frames (MJPEG), even ones
+    carry a sample table over an opaque mdat and decode through
+    ``decode_stub``. Every payload is real bytes from the ``encode_*``
+    writers, so the decoders run end to end.
     """
     from sketchlib.spark.jpeg import encode_jpeg
     rng = np.random.default_rng(seed)
@@ -1308,13 +858,8 @@ def fake_media_rows(n: int = 300, seed: int = 5) -> list:
         else:
             dur = int(rng.integers(1000, 60000))
             wi, hi = int(rng.integers(16, 1920)), int(rng.integers(16, 1080))
-            # REAL (minimal) MP4 container with opaque junk in mdat:
-            # the metadata probe reads the box tree; frame decode
-            # stays the stub path
             gop = int(rng.integers(2, 12))
-            if i % 2:
-                # MJPEG track: REAL JPEG frames in mdat with real
-                # stsc/stco offsets — the full extract+decode path
+            if i % 2:  # MJPEG: JPEG frames at real stsc/stco offsets
                 fh, fw = int(rng.integers(8, 24)), int(rng.integers(8, 24))
                 n_samp = int(rng.integers(2, 5))
                 frames = [encode_jpeg(rng.integers(
@@ -1323,9 +868,7 @@ def fake_media_rows(n: int = 300, seed: int = 5) -> list:
                 payload = encode_mp4_stub(
                     dur, wi, hi, samples=frames,
                     keyframes=list(range(1, n_samp + 1, gop)))
-            else:
-                # opaque (non-MJPEG) track: sample STATS only, decode
-                # stays the stub path
+            else:  # opaque samples: probe stats only, stub decode
                 junk = rng.integers(0, 256, int(rng.integers(100, 3000)),
                                     dtype=np.uint8).tobytes()
                 n_samp = int(rng.integers(8, 120))
@@ -1339,8 +882,3 @@ def fake_media_rows(n: int = 300, seed: int = 5) -> list:
              "image/jpeg")[i % 3]
         rows.append((i, k, payload, mime, wi, hi, dur))
     return rows
-
-
-def make_fake_media(spark, n: int = 300, seed: int = 5):
-    """Deterministic fake media table (see ``fake_media_rows``)."""
-    return spark.createDataFrame(fake_media_rows(n, seed), MEDIA_SCHEMA)

@@ -1018,19 +1018,20 @@ def q_ann_approx_topk(spark, sf_dir):
 
 def q_media_features(spark, sf_dir):
     """Multimodal layer, driver-visible: a deterministic media table
-    (REAL in-repo codecs: PCM WAV, PPM, PNG incl. Adam7, baseline
-    JPEG, minimal MP4 containers — synthesized because the driver
-    fixtures carry no binary column and BASELINE.json forbids external
-    data) flows through the three production stages: JVM-side byte
-    metadata (media_metadata — never ships payloads to Python),
-    container probe (video_metadata: stbl walk for dimensions/sample
-    stats), and Arrow-batched feature extraction (extract_features:
-    real decode for WAV/PPM/PNG/JPEG/MJPEG-MP4, deterministic stub for
-    codecs that need ffmpeg). Output: one row per media item with
-    byte stats, probe dims, and a feature checksum (dim + rounded
-    sum) — rows-only driver check (binary fixtures have no DuckDB
-    view); per-codec exactness is pytest-enforced (test_multimodal,
-    test_jpeg)."""
+    (in-repo codecs: 16-bit PCM WAV, PPM, 8-bit RGB PNG, baseline
+    JPEG at 4:4:4 and 4:2:0, MP4 containers holding opaque or MJPEG
+    samples — synthesized because the driver fixtures carry no binary
+    column and BASELINE.json forbids external data) flows through the
+    production stages: JVM-side byte metadata (media_metadata — never
+    ships payloads to Python), container and header probes
+    (video_metadata: stbl walk for dimensions/sample stats;
+    audio_metadata: WAV rate and duration), and Arrow-batched feature
+    extraction (extract_features: real decode for WAV/PPM/PNG/JPEG/
+    MJPEG-MP4, deterministic stub for the opaque MP4 samples). Output:
+    one row per media item with byte stats, probe dims, audio header
+    fields and a feature checksum (dim + rounded sum) — rows-only
+    driver check (binary fixtures have no DuckDB view); per-codec
+    exactness is pytest-enforced (test_multimodal, test_jpeg)."""
     from sketchlib.spark import multimodal as M
     from sketchlib.io.fixtures import media_path
     # the media table is INPUT data (deterministic in (n, seed));
@@ -1045,7 +1046,7 @@ def q_media_features(spark, sf_dir):
     audio = (M.audio_metadata(media)
              .select("media_id", "sample_rate",
                      F.col("duration_ms_est").alias("audio_ms")))
-    feats = (M.extract_features(media, fake=True)
+    feats = (M.extract_features(media)
              .select("media_id", F.size("feature").alias("feat_dim"),
                      F.round(F.aggregate(
                          "feature", F.lit(0.0),

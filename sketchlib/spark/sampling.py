@@ -29,15 +29,6 @@ def _bucket(id_col: str, seed: int):
     return F.conv(h8, 16, 10).cast("long")
 
 
-def hash_sample(df: DataFrame, id_col: str, fraction: float,
-                seed: int = 0) -> DataFrame:
-    """Deterministic ~``fraction`` sample, stable per id across runs,
-    partitionings, and engines."""
-    if not (0.0 <= fraction <= 1.0):
-        raise ValueError(f"fraction must be in [0,1], got {fraction}")
-    return df.filter(_bucket(id_col, seed) < int(fraction * _BUCKETS))
-
-
 def hash_split(df: DataFrame, id_col: str, weights: dict[str, float],
                seed: int = 0, split_col: str = "split") -> DataFrame:
     """Assign every row a split label by cumulative hash-bucket ranges.
@@ -47,6 +38,8 @@ def hash_split(df: DataFrame, id_col: str, weights: dict[str, float],
     (id, seed, weights) — an id can never migrate between splits across
     runs, and adding rows later never reshuffles existing assignments.
     """
+    if any(not 0.0 <= w <= 1.0 for w in weights.values()):
+        raise ValueError(f"each fraction must be in [0,1], got {weights}")
     total = sum(weights.values())
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"weights must sum to 1, got {total}")
@@ -64,6 +57,6 @@ def hash_split(df: DataFrame, id_col: str, weights: dict[str, float],
     # a NULL id hashes to NULL, failing every when() and silently
     # landing in the otherwise() label (the last sorted split) —
     # give it a NULL label instead so no split gets fabricated
-    # membership; hash_sample's filter drops the same rows
+    # membership
     expr = F.when(F.col(id_col).isNull(), F.lit(None)).otherwise(expr)
     return df.withColumn(split_col, expr)

@@ -162,6 +162,12 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     key): per-doc shingle sets are deduplicated doc-locally, so two
     input rows sharing an id would keep separate (double-counted)
     sets rather than merging.
+
+    Not lazy: the call itself runs Spark jobs. It materializes the
+    per-doc shingle-hash table (``_materialize``: a checkpoint, or a
+    local checkpoint), and for integer ids it runs a min/max bounds
+    aggregate over that table (``.first()``) to choose the packed
+    pair key. The DataFrame it returns runs the join when acted on.
     """
     toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
     # Per-doc distinct shingles computed DOC-LOCALLY (array_distinct on

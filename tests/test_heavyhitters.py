@@ -189,3 +189,18 @@ def test_null_group_key_one_partial_per_partition(spark):
         assert run(df.coalesce(1)) == run(df.repartition(3)) == default
     finally:
         spark.conf.set(key, old)
+
+
+def test_max_groups_in_flight_below_one_refused(spark, pages_tiny):
+    """cms_heavy_hitters validates its state bound like build_partials:
+    both resolve it through one helper."""
+    import pytest
+    from sketchlib.spark.build import build_partials
+    from sketchlib.spark.specs import SketchSpec
+    with pytest.raises(ValueError, match="max_groups_in_flight"):
+        cms_heavy_hitters(pages_tiny, ["lang"], "text", k=5,
+                          max_groups_in_flight=0)
+    with pytest.raises(ValueError, match="max_groups_in_flight"):
+        build_partials(pages_tiny, ["lang"],
+                       [SketchSpec("h", "hll", "text")],
+                       max_groups_in_flight=0)

@@ -88,15 +88,18 @@ def test_singleton_group_pipeline(spark):
 
 def test_audio_unknown_mime_falls_back_to_stub():
     """kind='audio' with arbitrary (non-RIFF) bytes and no mime must go
-    through the deterministic stub under fake=True, not die in
-    wave.Error; self-identifying RIFF/WAVE bytes take the real codec."""
+    through the deterministic stub, not die in wave.Error;
+    self-identifying RIFF/WAVE bytes take the real codec."""
     import numpy as np
-    from sketchlib.spark.multimodal import _decode_one, encode_wav
-    out = _decode_one(b"\x00\x01 random not-wav bytes", "audio", None, True)
-    assert out.shape == (64,)
+    from sketchlib.spark.multimodal import (_decode_one, decode_stub,
+                                            decode_wav, encode_wav,
+                                            wav_feature_vector)
+    junk = b"\x00\x01 random not-wav bytes"
+    assert np.array_equal(_decode_one(junk, "audio", None),
+                          decode_stub(junk, "audio"))
     wav = encode_wav(np.sin(np.arange(800) / 20.0), 8000)
-    real = _decode_one(wav, "audio", None, False)  # RIFF-sniffed, no mime
-    assert real.shape == (64,) and real.max() > 0.1
+    real = _decode_one(wav, "audio", None)  # RIFF-sniffed, no mime
+    assert np.array_equal(real, wav_feature_vector(decode_wav(wav)))
 
 
 def test_checkpoint_in_place_overwrite_refused(spark, tmp_path):

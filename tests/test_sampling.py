@@ -4,7 +4,7 @@ stability under repartitioning, and proportion accuracy."""
 import pytest
 import pyspark.sql.functions as F
 
-from sketchlib.spark.sampling import hash_sample, hash_split
+from sketchlib.spark.sampling import hash_split
 
 
 @pytest.fixture(scope="module")
@@ -13,15 +13,19 @@ def ids(spark):
 
 
 def test_sample_fraction_and_determinism(spark, ids):
-    s1 = hash_sample(ids, "doc_id", 0.1, seed=3)
-    s2 = hash_sample(ids.repartition(13), "doc_id", 0.1, seed=3)
-    a = {r["doc_id"] for r in s1.collect()}
-    b = {r["doc_id"] for r in s2.collect()}
-    assert a == b  # identical membership regardless of partitioning
+    """A two-way split is a sample: identical labels under any
+    partitioning, the requested share, and a different seed gives a
+    (mostly) different sample."""
+    w = {"sample": 0.1, "rest": 0.9}
+
+    def sampled(df, seed):
+        return {r["doc_id"] for r in hash_split(df, "doc_id", w, seed=seed)
+                .filter("split = 'sample'").collect()}
+
+    a = sampled(ids, 3)
+    assert sampled(ids.repartition(13), 3) == a
     assert abs(len(a) / 20_000 - 0.1) < 0.01
-    # different seed -> a (mostly) different sample
-    c = {r["doc_id"] for r in hash_sample(ids, "doc_id", 0.1, seed=4).collect()}
-    assert len(a & c) < 0.03 * 20_000
+    assert len(a & sampled(ids, 4)) < 0.03 * 20_000
 
 
 def test_split_partition_of_ids(spark, ids):
@@ -50,7 +54,7 @@ def test_validation_errors(spark, ids):
     with pytest.raises(ValueError, match="sum to 1"):
         hash_split(ids, "doc_id", {"a": 0.5, "b": 0.2})
     with pytest.raises(ValueError, match="fraction"):
-        hash_sample(ids, "doc_id", 1.5)
+        hash_split(ids, "doc_id", {"a": 1.5, "b": -0.5})
 
 
 def test_no_python_in_plan(spark, ids):
