@@ -172,7 +172,7 @@ def ivf_train_centroids(df: DataFrame, id_col: str, vec_col: str, dim: int,
         StructField("vsum", ArrayType(DoubleType()), False),
     ])
 
-    def reduce_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def reduce_fn(key, pdf):
         # sequential fold in partition_id order: deterministic (total
         # order) and identical float-add sequence to a driver loop over
         # partition-ordered rows

@@ -42,7 +42,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import os
-import warnings
 
 import numpy as np
 import pandas as pd
@@ -50,7 +49,8 @@ import pyarrow as pa
 import pyarrow.compute as pa_compute
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
-from pyspark.sql.types import (BinaryType, BooleanType, IntegerType,
+from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
+                               FloatType, IntegerType, IntegralType,
                                LongType, StringType, StructField, StructType)
 
 from sketchlib.core.cms import CountMinSketch
@@ -63,8 +63,21 @@ from sketchlib.spark.specs import SketchSpec
 
 
 def calibrate(df: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Stage 1: exact per-group counts (n). Catalyst does partial agg."""
-    return df.groupBy(*group_cols).agg(F.count("*").alias("n"))
+    """Stage 1: exact per-group counts (n). Catalyst does partial agg.
+    A NaN group key counts in the null group, as in the build."""
+    return (_nan_keys_as_null(df, group_cols).groupBy(*group_cols)
+            .agg(F.count("*").alias("n")))
+
+
+def _nan_keys_as_null(df: DataFrame, group_cols: list[str]) -> DataFrame:
+    """``df`` with NaN read as null in its floating group columns. The
+    build cannot tell the two apart (pandas reads a null float as NaN),
+    so a NaN group key is the null group everywhere: every exact pass
+    over a build's groups goes through this first."""
+    nulled = {f.name: F.nanvl(f.name, F.lit(None).cast(f.dataType))
+              for f in df.schema.fields if f.name in group_cols
+              and isinstance(f.dataType, (FloatType, DoubleType))}
+    return df.withColumns(nulled) if nulled else df
 
 
 def task_partition_id() -> int:
@@ -227,20 +240,18 @@ def _feed(spec: SketchSpec, sketch, sub: pd.DataFrame,
         sketch.update_batch(vals)
 
 
-def _max_groups_in_flight(value: int | None) -> int:
-    """``value``, or env SKETCHLIB_MAX_GROUPS_IN_FLIGHT (default 8192)
-    when None: the per-task bound on in-memory (group, sketch) states of
-    every partial builder. ValueError below 1."""
-    if value is None:
-        value = int(os.environ.get("SKETCHLIB_MAX_GROUPS_IN_FLIGHT", "8192"))
+def _max_groups_in_flight() -> int:
+    """The per-task bound on in-memory (group, sketch) states of every
+    partial builder: the deployment setting
+    SKETCHLIB_MAX_GROUPS_IN_FLIGHT (default 8192). ValueError below 1."""
+    value = int(os.environ.get("SKETCHLIB_MAX_GROUPS_IN_FLIGHT", "8192"))
     if value < 1:
-        raise ValueError("max_groups_in_flight must be >= 1")
+        raise ValueError("SKETCHLIB_MAX_GROUPS_IN_FLIGHT must be >= 1")
     return value
 
 
 def _partial_task(df: DataFrame, group_cols: list[str],
-                  specs: list[SketchSpec],
-                  max_groups_in_flight: int | None):
+                  specs: list[SketchSpec]):
     """(projected input, per-partition build, partials schema): the
     pieces of ``build_partials``, which ``build_sketches`` also composes
     with the in-task fold."""
@@ -249,13 +260,22 @@ def _partial_task(df: DataFrame, group_cols: list[str],
     names = [s.name for s in specs]
     if len(set(names)) != len(names):
         raise ValueError(f"duplicate spec names: {names}")
-    max_groups_in_flight = _max_groups_in_flight(max_groups_in_flight)
     value_cols = sorted(({s.value_col for s in specs}
                          | {s.weight_col for s in specs if s.weight_col})
                         - set(group_cols))  # a group col can be sketched
-    sel = df.select(*group_cols, *value_cols)
+    # pandas reads a batch's integer column that holds a null as
+    # float64, which merges keys above 2**53: a nullable integral group
+    # column also crosses as a null-free copy, which the build groups
+    # on with the null mask put back
+    exact = {f.name: f"_exact_{f.name}" for f in df.schema.fields
+             if f.name in group_cols and f.nullable
+             and isinstance(f.dataType, IntegralType)}
+    sel = df.select(*group_cols, *value_cols,
+                    *(F.coalesce(c, F.lit(0)).alias(e)
+                      for c, e in exact.items()))
+    keys = [exact.get(c, c) for c in group_cols]
     n_groups = len(group_cols)
-    flush_at = max_groups_in_flight * len(specs)
+    flush_at = _max_groups_in_flight() * len(specs)
 
     def build_partition(batches: Iterator[pd.DataFrame]
                         ) -> Iterator[pd.DataFrame]:
@@ -268,12 +288,20 @@ def _partial_task(df: DataFrame, group_cols: list[str],
             for (gkey, si), (sk, n) in acc.items():
                 rows.append((*gkey, specs[si].name, sk.to_bytes(), n, pid,
                              chunk))
-            return pd.DataFrame(rows, columns=[*group_cols, "sketch_name",
-                                               "partial", "n_rows",
-                                               "partition_id", "chunk"])
+            frame = pd.DataFrame(rows, columns=[*group_cols, "sketch_name",
+                                                "partial", "n_rows",
+                                                "partition_id", "chunk"])
+            for i, c in enumerate(group_cols):
+                if c in exact:  # ints and None would read as float64
+                    frame[c] = pd.array([g[i] for g, _si in acc],
+                                        dtype="Int64")
+            return frame
 
         for pdf in batches:
-            for gkey, sub in pdf.groupby(group_cols, sort=False, dropna=False):
+            for c, e in exact.items():
+                pdf[e] = pd.arrays.IntegerArray(pdf[e].to_numpy(),
+                                                pdf[c].isna().to_numpy())
+            for gkey, sub in pdf.groupby(keys, sort=False, dropna=False):
                 if not isinstance(gkey, tuple):
                     gkey = (gkey,)
                 gkey = _norm_nan(gkey)
@@ -303,15 +331,14 @@ def _partial_task(df: DataFrame, group_cols: list[str],
 
 
 def build_partials(df: DataFrame, group_cols: list[str],
-                   specs: list[SketchSpec],
-                   max_groups_in_flight: int | None = None) -> DataFrame:
+                   specs: list[SketchSpec]) -> DataFrame:
     """Stage 2a: one partial sketch per (input partition, group, spec).
 
     Column-prunes to exactly the needed columns before the Python
     boundary so the parquet scan reads only those (ReadSchema check).
 
-    ``max_groups_in_flight`` (default env SKETCHLIB_MAX_GROUPS_IN_FLIGHT
-    or 8192) bounds task memory on HIGH-CARDINALITY group keys: when a
+    The deployment setting SKETCHLIB_MAX_GROUPS_IN_FLIGHT (default
+    8192) bounds task memory on HIGH-CARDINALITY group keys: when a
     task is holding that many (group, spec) states it FLUSHES them as
     partial rows (tagged with an increasing ``chunk``) and starts
     fresh, so memory is O(max_groups x state_bytes) instead of
@@ -322,8 +349,7 @@ def build_partials(df: DataFrame, group_cols: list[str],
     stay deterministic because the merge totally orders partial rows
     by (partition_id, chunk).
     """
-    sel, build, schema = _partial_task(df, group_cols, specs,
-                                       max_groups_in_flight)
+    sel, build, schema = _partial_task(df, group_cols, specs)
     return sel.mapInPandas(build, schema)
 
 
@@ -404,9 +430,13 @@ def _fold_in_task(keys: list[str], group_fold):
                 # split into duplicate rows
                 groups.setdefault(_norm_nan(key), []).append(sub)
         if groups:
+            # as object columns: the groups' frames differ in dtype
+            # where a key or read-out is null (or a frame is empty),
+            # and an integer key must not be read as float64
             yield pd.concat([group_fold(key, pd.concat(groups.pop(key),
                                                        ignore_index=True))
-                             for key in list(groups)], ignore_index=True)
+                             .astype(object) for key in list(groups)],
+                            ignore_index=True)
     return fold_partition
 
 
@@ -551,12 +581,7 @@ def _fold_once(sel: DataFrame, build, partials: DataFrame, fold,
         return None, flagged.filter(F.length(blob_col) > 0).drop(_SHIP)
     # every partial was shipped: the checkpoint is not needed
     flagged._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    with warnings.catch_warnings():
-        # pandas warns when it concatenates one-row frames holding a
-        # null key or read-out; the Arrow schema fixes the types anyway
-        warnings.simplefilter("ignore", FutureWarning)
-        folded = list(fold([parts.to_pandas(
-            types_mapper=_NULLABLE_INTS.get)]))
+    folded = list(fold([parts.to_pandas(types_mapper=_NULLABLE_INTS.get)]))
     return local_table(spark, pd.concat(folded or [
         pd.DataFrame(columns=out_schema.names)], ignore_index=True),
         out_schema), None
@@ -584,9 +609,12 @@ def _build_merged(sel: DataFrame, build, partials_schema, group_cols,
 
 def merge_partials(partials: DataFrame, group_cols: list[str],
                    fanout: int | str | list[int] | None = None,
-                   allow_narrow: bool = True,
                    readout: list | None = None) -> DataFrame:
     """Stage 2b: hierarchical merge of partial sketches per (group, spec).
+
+    A partials DataFrame always merges through the shuffle tree, which
+    holds one group per task: a store of partials read back as one
+    partition (the checkpointed build's) never folds in one task.
 
     ``fanout=S`` inserts one salted pre-merge level (treeAggregate
     depth-2): partials first merge within (group, partition_id % S)
@@ -613,20 +641,7 @@ def merge_partials(partials: DataFrame, group_cols: list[str],
     BENCH/builtin_compare.py). The merged blob column still ships, so
     the result stays persistable and mergeable.
     """
-    nparts, plan = _merge_plan(partials, fanout)
-    if nparts == 1 and not plan and allow_narrow:
-        # every partial row of a (group, spec) lives in the one input
-        # partition, so a NARROW per-partition fold is complete — no
-        # Exchange, no extra stage wave. Same per-group task and
-        # (partition_id, chunk) order as the shuffle path, so the
-        # result is bitwise-identical to it. For inputs where holding
-        # all partial blobs in one task is too much (a large checkpoint
-        # store read back as one partition), callers pass
-        # allow_narrow=False and take the shuffle path, which holds
-        # one group per task.
-        return partials.mapInPandas(_fold_partials(group_cols, readout),
-                                    _table_schema(partials, group_cols,
-                                                  readout))
+    _nparts, plan = _merge_plan(partials, fanout)
     return _merge_tree(partials, group_cols, plan, readout)
 
 
@@ -692,7 +707,7 @@ def build_sketches(df: DataFrame, group_cols: list[str],
     Returns one row per (group, sketch_name):
     (group_cols..., sketch_name, sketch binary, n_rows, n_partials).
     """
-    sel, build, schema = _partial_task(df, group_cols, specs, None)
+    sel, build, schema = _partial_task(df, group_cols, specs)
     return _build_merged(sel, build, schema, group_cols, fanout, readout,
                          _plan_bytes(specs))
 

@@ -202,15 +202,9 @@ def build_sketches_checkpointed(df: DataFrame, group_cols: list[str],
         remaining = df.filter(~F.spark_partition_id().isin(done)) if done else df
         new_partials = build_partials(remaining, group_cols, specs)
         ckpt.write(new_partials, fp, append=True)
-        # allow_narrow=False: a store read back as ONE partition
-        # would concentrate every group's partials in a single
-        # narrow-fold task; stored partials always merge via the
-        # shuffle path (one group per task)
         return merge_partials(ckpt.read_partials(), group_cols,
-                              fanout=fanout, allow_narrow=False,
-                              readout=readout)
+                              fanout=fanout, readout=readout)
     partials = build_partials(df, group_cols, specs)
     ckpt.write(partials, fp, append=False)
     return merge_partials(ckpt.read_partials(), group_cols,
-                          fanout=fanout, allow_narrow=False,
-                          readout=readout)
+                          fanout=fanout, readout=readout)

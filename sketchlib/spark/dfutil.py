@@ -8,9 +8,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
 
-def ensure_min_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Round-robin repartition ``df`` up to ``target`` partitions
-    (default ``sc.defaultParallelism``) IFF it currently has fewer —
+def ensure_min_parallelism(df: DataFrame) -> DataFrame:
+    """Round-robin repartition ``df`` up to ``sc.defaultParallelism``
+    partitions IFF it currently has fewer —
     the scale-adaptive guard for compute-heavy narrow stages (Arrow
     kernels, tokenize/shingle chains) whose parallelism is otherwise
     pinned to the scan's split count.
@@ -24,9 +24,7 @@ def ensure_min_parallelism(df: DataFrame, target: int | None = None) -> DataFram
     of ROW-LOCAL computations: a round-robin repartition changes batch
     composition, never per-row results.
     """
-    sc = df.sparkSession.sparkContext
-    if target is None:
-        target = sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if target > 1 and df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

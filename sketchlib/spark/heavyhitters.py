@@ -149,8 +149,7 @@ def _token_partials(group_cols: list[str], text_col: str, capacity: int,
 def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
                       k: int = 10, capacity: int = 256,
                       w: int = 16384, d: int = 5, seed: int = 0,
-                      conservative: bool = True,
-                      max_groups_in_flight: int | None = None) -> DataFrame:
+                      conservative: bool = True) -> DataFrame:
     """Top-k tokens per group with CMS estimates.
 
     Returns (group_cols..., token, est_cnt, rnk) — est_cnt >= true count
@@ -161,8 +160,8 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
     partial CMS tables — strictly tighter per-partition overestimates;
     the add-merge of CU partials remains overestimate-only.
 
-    ``max_groups_in_flight`` (default env SKETCHLIB_MAX_GROUPS_IN_FLIGHT
-    or 8192) bounds task memory on high-cardinality group keys exactly
+    The deployment setting SKETCHLIB_MAX_GROUPS_IN_FLIGHT (default
+    8192) bounds task memory on high-cardinality group keys exactly
     like ``build_partials``: full states flush as extra partial rows.
     Certification survives the split by pigeonhole — if a token's
     global count > N_total/capacity then some chunk has
@@ -177,11 +176,10 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
     a ``LocalRelation``; otherwise the partial states shuffle into a
     grouped merge.
     """
-    max_groups_in_flight = _max_groups_in_flight(max_groups_in_flight)
     sel = df.select(*group_cols, text_col)
     group_fields = [f for f in sel.schema.fields if f.name in group_cols]
     build = _token_partials(group_cols, text_col, capacity, w, d, seed,
-                            conservative, max_groups_in_flight)
+                            conservative, _max_groups_in_flight())
     out_schema = StructType(group_fields + [
         StructField("token", StringType(), False),
         StructField("est_cnt", LongType(), False),

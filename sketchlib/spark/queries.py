@@ -637,12 +637,10 @@ def q_simhash_pairs(spark, sf_dir):
 
 def q_content_fingerprint(spark, sf_dir):
     """Per-doc content fingerprint of the whitespace-normalized
-    lowercased text — md5-prefix flavor (pure JVM, engine-portable) so
-    the driver hash-checks it against DuckDB. The xxh throughput
-    flavor (vectorized 64-bit, 259k+ docs/s) shares the normalization
-    and is measured in BENCH/dedup_ladder.py."""
+    lowercased text: an md5 prefix (pure JVM, engine-portable), so the
+    driver hash-checks it against DuckDB."""
     return textops.content_fingerprint(load(spark, sf_dir, "documents"),
-                                       "doc_id", "text", method="md5")
+                                       "doc_id", "text")
 
 
 def q_decontamination(spark, sf_dir):

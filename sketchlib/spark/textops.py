@@ -2,9 +2,9 @@
 
 All operators follow the same execution posture as the sketch build:
 JVM-side DataFrame ops where Spark's built-ins express the semantics
-(exact dedup, token counts, quality ratios), Arrow-batched pandas UDFs
-with numpy kernels where they don't (minhash signatures, simhash,
-fingerprints). Never per-row Python.
+(exact dedup, token counts, quality ratios, content fingerprints),
+Arrow-batched pandas UDFs with numpy kernels where they don't (minhash
+signatures, simhash). Never per-row Python.
 
 Dedup ladder (each a separate operator, composable):
   exact        — groupBy(md5(text))                      [built-ins only]
@@ -25,16 +25,7 @@ from pyspark.sql.types import (ArrayType, BinaryType, LongType, StringType,
                                StructField, StructType)
 
 from sketchlib.core import hashing
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Shared eager-checkpoint util (see dfutil.materialize): reliable
-    checkpoint when a dir is configured, else localCheckpoint —
-    never .cache(), which lingers in the session cache manager.
-    Callers that cannot afford materialization-at-construction pass
-    their own pre-built ``signatures`` table instead."""
-    from sketchlib.spark.dfutil import materialize
-    return materialize(df)
+from sketchlib.spark.dfutil import materialize
 
 
 # ---------------------------------------------------------------------------
@@ -77,7 +68,7 @@ def dedup_clusters(pairs: DataFrame, a_col: str = "a_id",
     looping forever. Only nodes that appear in ``pairs`` are emitted
     (singletons are trivially their own cluster and never shuffle).
 
-    Every round's labels are eagerly checkpointed (``_materialize``:
+    Every round's labels are eagerly checkpointed (``materialize``:
     reliable checkpoint when the session has a checkpoint dir, local
     otherwise): the pointer jump is a SELF-join (labels referenced
     twice), so without lineage truncation the logical plan would
@@ -85,27 +76,27 @@ def dedup_clusters(pairs: DataFrame, a_col: str = "a_id",
     rounds; local-checkpoint blocks from prior rounds are released by
     the ContextCleaner when their DataFrames go out of scope.
     """
-    edges = _materialize(
+    edges = materialize(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .union(pairs.select(F.col(b_col).alias("src"),
                             F.col(a_col).alias("dst")))
         .distinct())
-    labels = _materialize(edges.select(F.col("src").alias("node")).distinct()
-                          .withColumn("label", F.col("node")))
+    labels = materialize(edges.select(F.col("src").alias("node")).distinct()
+                         .withColumn("label", F.col("node")))
     for _ in range(max_iter):
         nbr_min = (edges.join(labels, edges["src"] == labels["node"])
                    .groupBy(F.col("dst").alias("node"))
                    .agg(F.min("label").alias("nbr_label")))
         # (1) neighbor-min — materialized: the shortcut self-join below
         # reads it twice and must not double the lineage
-        tent = _materialize(
+        tent = materialize(
             labels.join(nbr_min, "node", "left")
             .select("node",
                     F.least("label", F.coalesce("nbr_label", "label"))
                     .alias("label")))
         # (2) pointer jump: label(v) <- min(label(v), label(label(v)))
         t, p = tent.alias("t"), tent.alias("p")
-        new_labels = _materialize(
+        new_labels = materialize(
             t.join(p, F.col("t.label") == F.col("p.node"), "left")
             .select(F.col("t.node").alias("node"),
                     F.least(F.col("t.label"),
@@ -164,7 +155,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     sets rather than merging.
 
     Not lazy: the call itself runs Spark jobs. It materializes the
-    per-doc shingle-hash table (``_materialize``: a checkpoint, or a
+    per-doc shingle-hash table (``materialize``: a checkpoint, or a
     local checkpoint), and for integer ids it runs a min/max bounds
     aggregate over that table (``.first()``) to choose the packed
     pair key. The DataFrame it returns runs the join when acted on.
@@ -186,7 +177,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     # identities. Docs with fewer than n tokens are filtered BEFORE the
     # sequence/slice expressions (sequence(0, negative) descends).
     from sketchlib.spark.dfutil import ensure_min_parallelism
-    base = _materialize(
+    base = materialize(
         ensure_min_parallelism(df.select(F.col(id_col).alias("doc"),
                                          F.col(text_col)))
         .select("doc", toks.alias("t"))
@@ -412,7 +403,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     components (unbiased estimator of true Jaccard).
 
     The signature plan feeds three join sides; by default it is
-    materialized ONCE via an eager checkpoint (``_materialize``:
+    materialized ONCE via an eager checkpoint (``materialize``:
     reliable when a checkpoint dir is set — survives executor loss on
     a real cluster — else local; signatures are 8*n_hashes bytes/doc).
     Unlike ``.cache()``, local-checkpoint blocks belong to the
@@ -427,7 +418,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
         raise ValueError("bands must divide n_hashes")
     rows_per_band = n_hashes // bands
     if signatures is None:
-        signatures = _materialize(minhash_signatures(
+        signatures = materialize(minhash_signatures(
             df, id_col, text_col, n_hashes, shingle_n, seed))
     sigs = signatures.withColumnRenamed("doc_id_mh", "doc")
 
@@ -534,66 +525,50 @@ def simhash(df: DataFrame, id_col: str, text_col: str, seed: int = 11) -> DataFr
 def simhash_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
                             max_hamming: int = 3, seed: int = 11,
                             signatures: DataFrame | None = None) -> DataFrame:
-    """Near-dup pairs with hamming(simhash) <= max_hamming.
+    """Near-dup pairs with hamming(simhash) <= max_hamming, for
+    ``max_hamming`` in 0..7 (ValueError otherwise: at 8 and above
+    every pair would be a candidate).
 
-    Banding on 4 x 16-bit chunks: two signatures within hamming 3 must
-    agree exactly on at least one chunk (pigeonhole), so candidates come
-    from 4 equi-joins, never a cross join. Signatures are materialized
-    once at call time via an eager checkpoint (``_materialize``;
-    8 bytes/doc; local-checkpoint blocks are released by the
-    ContextCleaner with the result, nothing left in the session's
-    cache manager); pass a materialized ``signatures`` table at
-    pipeline scale.
+    Multi-index over 8x8-bit chunks: hamming <= h damages at most h
+    chunks, so the pair agrees exactly on some (8-h)-subset of them.
+    Candidates come from one equi-join on every such subset, never a
+    cross join, and an exact hamming filter follows, so the result is
+    exact for every h. Signatures are materialized once at call time
+    via an eager checkpoint (``materialize``; 8 bytes/doc;
+    local-checkpoint blocks are released by the ContextCleaner with
+    the result, nothing left in the session's cache manager); pass a
+    materialized ``signatures`` table at pipeline scale.
     """
-    sh = signatures if signatures is not None else _materialize(
+    if not 0 <= max_hamming <= 7:
+        raise ValueError(f"max_hamming must be in 0..7, got {max_hamming}")
+    sh = signatures if signatures is not None else materialize(
         simhash(df, id_col, text_col, seed))
-    if max_hamming <= 3:
-        # Multi-index over 8x8-bit chunks: hamming <= h damages at most
-        # h chunks, so the pair agrees exactly on some (8-h)-subset —
-        # index every C(8, 8-h) subset as ONE packed <=46-bit key
-        # (subset id + the 5 chunk bytes). Same exact guarantee as the
-        # old 4x16 pigeonhole, but the join keys are ~40-bit instead of
-        # 16-bit: the old scheme's hot 16-bit buckets (3460 docs in one
-        # bucket at sf1.0) fanned out f^2/2 = 21.5M matched rows per
-        # query; 40-bit buckets only collide for genuinely near-equal
-        # signatures, so the join output is ~the true pair set
-        # (guide §2.5 hot keys / §1.2 fix the distributed algorithm
-        # first). Output rows are identical: both schemes are
-        # candidates ⊇ {hamming <= h} followed by the same exact filter.
-        from itertools import combinations
-        byte = [F.shiftright("simhash", 8 * i).bitwiseAND(F.lit(0xFF))
-                for i in range(8)]
-        keys = []
-        for ci, combo in enumerate(combinations(range(8), 8 - max_hamming)):
-            k = F.lit(ci).cast("long")
-            for j in combo:
-                k = k * F.lit(256) + byte[j]
-            keys.append(k)
-        # shuffle_hash: the subset-index side is ~56x the doc count —
-        # an auto-picked broadcast join would collect + hash-build
-        # those millions of rows on the driver (measured 6s at sf1.0);
-        # a shuffled hash join keeps both sides distributed AND the
-        # identical self-join subtrees share one Exchange
-        # (ReusedExchange), so the key explode is computed once.
-        chunks = sh.select("doc", "simhash",
-                           F.explode(F.array(*keys)).alias("val")) \
-            .hint("shuffle_hash")
-        join_keys = [(F.col("a.val") == F.col("b.val"))]
-    else:
-        # >3 bit budget: the 4x16 banding below only guarantees recall
-        # for hamming <= 3 (as before); kept for parameter
-        # compatibility.
-        chunks = sh.select(
-            "doc", "simhash",
-            F.explode(F.array(*[
-                F.struct(F.lit(i).alias("chunk"),
-                         F.shiftright("simhash", 16 * i)
-                         .bitwiseAND(F.lit(0xFFFF)).alias("val"))
-                for i in range(4)])).alias("c")
-        ).select("doc", "simhash", F.col("c.chunk").alias("chunk"),
-                 F.col("c.val").alias("val"))
-        join_keys = [(F.col("a.chunk") == F.col("b.chunk")),
-                     (F.col("a.val") == F.col("b.val"))]
+    # each of the C(8, 8-h) subsets is ONE packed long key: subset id,
+    # then its 8-h chunk bytes (shifts, not products: at h=0 the eight
+    # bytes fill all 64 bits). The keys are wide (~46 bits at h=3), not
+    # 16-bit bands: a 4x16 banding's hot 16-bit buckets (3460 docs in
+    # one bucket at sf1.0) fanned out f^2/2 = 21.5M matched rows per
+    # query; these buckets only collide for genuinely near-equal
+    # signatures, so the join output is ~the true pair set (guide §2.5
+    # hot keys / §1.2 fix the distributed algorithm first).
+    from itertools import combinations
+    byte = [F.shiftright("simhash", 8 * i).bitwiseAND(F.lit(0xFF))
+            for i in range(8)]
+    keys = []
+    for ci, combo in enumerate(combinations(range(8), 8 - max_hamming)):
+        k = F.lit(ci).cast("long")
+        for j in combo:
+            k = F.shiftleft(k, 8).bitwiseOR(byte[j])
+        keys.append(k)
+    # shuffle_hash: the subset-index side is ~56x the doc count — an
+    # auto-picked broadcast join would collect + hash-build those
+    # millions of rows on the driver (measured 6s at sf1.0); a
+    # shuffled hash join keeps both sides distributed AND the
+    # identical self-join subtrees share one Exchange
+    # (ReusedExchange), so the key explode is computed once.
+    chunks = sh.select("doc", "simhash",
+                       F.explode(F.array(*keys)).alias("val")) \
+        .hint("shuffle_hash")
     a = chunks.alias("a")
     b = chunks.alias("b")
     # the hamming predicate lives IN the join so it runs codegen-side on
@@ -606,10 +581,7 @@ def simhash_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
     # shuffle. Result rows are identical: hamming is a pure function of
     # the pair, so filtering before vs after dedup commutes.
     hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    cond = join_keys[0]
-    for jk in join_keys[1:]:
-        cond = cond & jk
-    cand = (a.join(b, cond
+    cand = (a.join(b, (F.col("a.val") == F.col("b.val"))
                    & (F.col("a.doc") < F.col("b.doc"))
                    & (hamming <= max_hamming))
             .select(F.col("a.doc").alias("a_id"), F.col("b.doc").alias("b_id"),
@@ -866,8 +838,7 @@ def canonical_url(df: DataFrame, url_col: str,
 
 def decontaminate(docs: DataFrame, id_col: str, text_col: str,
                   benchmark: DataFrame, bench_text_col: str,
-                  n: int = 3, use_bloom: bool = False,
-                  bloom_p: float = 0.001) -> DataFrame:
+                  n: int = 3) -> DataFrame:
     """Benchmark decontamination: per-doc count of word-n-grams shared
     with an evaluation corpus — the gate a training pipeline runs so
     eval answers don't leak into the training set. Returns
@@ -876,14 +847,8 @@ def decontaminate(docs: DataFrame, id_col: str, text_col: str,
     Exact plan: distinct doc shingles ⨝ broadcast(distinct benchmark
     shingles) -> count per doc -> left join back. The benchmark side
     is small by construction (eval sets are), so the join is
-    broadcast and no doc shingle ever shuffles.
-
-    ``use_bloom=True`` is the belt-and-braces scale path when the
-    benchmark shingle set outgrows the broadcast budget: a Bloom
-    built from the benchmark shingles (our own kernel, via
-    ``joinprune``) prunes doc shingles BEFORE the exact join; the
-    trailing join removes false positives, so the result is
-    bitwise-identical to the exact path (test-enforced).
+    broadcast and no doc shingle ever shuffles. The benchmark's
+    distinct shingle set must therefore fit a broadcast.
     """
     def shingles(df, id_cols, text):
         # shingles reduce to 64-bit xxhash64 identities doc-locally:
@@ -908,33 +873,21 @@ def decontaminate(docs: DataFrame, id_col: str, text_col: str,
         docs.select(F.col(id_col), F.col(text_col))),
         [F.col(id_col).alias("_id")], text_col)
     bsh = shingles(benchmark, [], bench_text_col).distinct()
-    if use_bloom:
-        from sketchlib.spark.joinprune import build_key_bloom, bloom_prune
-        bf = build_key_bloom(bsh, "sh", p=bloom_p)
-        dsh = bloom_prune(dsh, "sh", bf)
-        # bloom mode exists because bsh outgrew the broadcast budget —
-        # so do NOT force-broadcast it here: the pruned dsh is small
-        # (~p of the corpus shingles), and Spark picks the join
-        joined = dsh.join(bsh, "sh")
-    else:
-        joined = dsh.join(F.broadcast(bsh), "sh")
-    hits = joined.groupBy("_id").agg(F.count("*").alias("n_hits"))
+    hits = (dsh.join(F.broadcast(bsh), "sh")
+            .groupBy("_id").agg(F.count("*").alias("n_hits")))
     return (docs.select(F.col(id_col).alias("_id"))
             .join(hits, "_id", "left")
             .select(F.col("_id").alias(id_col),
                     F.coalesce("n_hits", F.lit(0)).alias("n_hits")))
 
 
-def content_fingerprint(df: DataFrame, id_col: str, text_col: str,
-                        seed: int = 13, method: str = "xxh") -> DataFrame:
+def content_fingerprint(df: DataFrame, id_col: str,
+                        text_col: str) -> DataFrame:
     """(id, fingerprint) — content hash of the whitespace-normalized
-    lowercased text (exact-dup fingerprinting).
-
-    method="xxh" (default): 64-bit vectorized hash as bigint — the
-    throughput path (one numpy fold per Arrow batch, 259k+ docs/s).
-    method="md5": first 16 hex chars of md5 as string — pure JVM
-    (whole-stage codegen, no python stage) and engine-portable, so the
-    result is DuckDB-oracle-checkable; 64 bits of digest either way.
+    lowercased text (exact-dup fingerprinting): the first 16 hex chars
+    (64 bits) of its md5, as a string. Pure JVM (whole-stage codegen,
+    no python stage) and engine-portable, so the result is
+    DuckDB-oracle-checkable.
     """
     # explicit whitespace class, NOT \s: Java's \s includes \x0B
     # (vertical tab) while the DuckDB oracle's RE2 \s does not, so a
@@ -942,31 +895,10 @@ def content_fingerprint(df: DataFrame, id_col: str, text_col: str,
     # and fail the hash check (ADVICE r5). [ \t\n\f\r] is exactly
     # RE2's \s, so both engines collapse the same characters.
     _WS = r"[ \t\n\f\r]+"
-    if method == "md5":
-        norm = F.lower(F.trim(F.regexp_replace(F.col(text_col),
-                                               _WS, " ")))
-        return (df.filter(F.col(text_col).isNotNull())
-                .select(F.col(id_col).cast("long").alias("doc"),
-                        F.substring(F.md5(norm), 1, 16).alias("fingerprint")))
-    if method != "xxh":
-        raise ValueError(f"unknown fingerprint method {method!r}")
-    schema = StructType([
-        StructField("doc", LongType(), False),
-        StructField("fingerprint", LongType(), False),
-    ])
-    sel = (df.filter(F.col(text_col).isNotNull())
-           .select(F.col(id_col).cast("long").alias("_id"),
-                   F.lower(F.trim(F.regexp_replace(F.col(text_col),
-                                                   _WS, " "))).alias("_t")))
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            h = hashing.hash64(pdf["_t"], seed).view(np.int64)
-            yield pd.DataFrame({"doc": pdf["_id"].to_numpy(), "fingerprint": h})
-
-    return sel.mapInPandas(fn, schema)
+    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), _WS, " ")))
+    return (df.filter(F.col(text_col).isNotNull())
+            .select(F.col(id_col).cast("long").alias("doc"),
+                    F.substring(F.md5(norm), 1, 16).alias("fingerprint")))
 
 
 def html_to_text(df: DataFrame, html_col: str,

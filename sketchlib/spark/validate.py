@@ -152,7 +152,6 @@ def bloom_validate(df: DataFrame, filters: dict, group_cols: list[str],
 
 
 def accuracy_table(df: DataFrame, group_cols: list[str], specs,
-                   merged: DataFrame | None = None,
                    quantile_rank_bound: float = 0.05) -> DataFrame:
     """Per-group est-vs-exact error table for distinct and quantile
     sketches — the reference's FPR validation loop (main.py:166-193)
@@ -174,11 +173,13 @@ def accuracy_table(df: DataFrame, group_cols: list[str], specs,
       cms / countsketch: use their top-k companion queries.
 
     Plan shape: one exact aggregation pass over df (partial-agg
-    friendly) + the sketch table (<= #groups rows) + one rank join for
-    the quantile kinds. Output: (group_cols..., sketch_name, kind,
-    metric, est, exact, err, bound, within_bound).
+    friendly) + the sketch table (<= #groups rows, the estimates read
+    out in the build's own fold) + one rank join for the quantile
+    kinds. A NaN group key is the null group, as in the build.
+    Output: (group_cols..., sketch_name, kind, metric, est, exact,
+    err, bound, within_bound).
     """
-    from sketchlib.spark.build import build_sketches
+    from sketchlib.spark.build import _nan_keys_as_null, build_sketches
 
     distinct_kinds = {"hll", "theta", "sample"}
     quantile_kinds = {"kll", "tdigest"}
@@ -187,16 +188,10 @@ def accuracy_table(df: DataFrame, group_cols: list[str], specs,
     if not todo:
         raise ValueError("accuracy_table needs hll/theta/sample/kll/"
                          "tdigest/wsample specs; bloom has bloom_validate")
-    # the estimates read out in the build's own fold; a caller's
-    # sketch table is read out through the SQL functions instead
-    if merged is None:
-        merged = build_sketches(df, group_cols, todo, readout=[
-            sqlfuncs.readout("__est", sqlfuncs.sketch_estimate),
-            sqlfuncs.readout("__q50", sqlfuncs.sketch_quantile, 0.5)])
-    else:
-        merged = merged.withColumns({
-            "__est": sqlfuncs.sketch_estimate("sketch"),
-            "__q50": sqlfuncs.sketch_quantile("sketch", F.lit(0.5))})
+    df = _nan_keys_as_null(df, group_cols)
+    merged = build_sketches(df, group_cols, todo, readout=[
+        sqlfuncs.readout("__est", sqlfuncs.sketch_estimate),
+        sqlfuncs.readout("__q50", sqlfuncs.sketch_quantile, 0.5)])
 
     def _bound(spec) -> float:
         if spec.kind == "hll":

@@ -14,7 +14,9 @@ the same bytes as the shuffle merge.
 
 import math
 import os
+import warnings
 
+import pandas as pd
 import pyarrow.compute as pc
 import pyspark.sql.functions as F
 import pytest
@@ -149,7 +151,7 @@ def _table(df, keys, readout_cols=()):
 def _fold_vs_tree(df, keys, readout=None, parts=1):
     """``build_sketches`` over ``parts`` partitions of ``df`` (one: the
     in-task fold; more: the driver fold) against the shuffle merge of
-    the same partials (``allow_narrow=False``)."""
+    the same partials (``merge_partials``)."""
     split = df.coalesce(1) if parts == 1 else df.repartition(parts)
     folded = build_sketches(split, keys, ALL_KINDS, readout=readout)
     if parts == 1:
@@ -157,7 +159,7 @@ def _fold_vs_tree(df, keys, readout=None, parts=1):
     else:
         assert _is_local(folded)
     shuffled = merge_partials(build_partials(split, keys, ALL_KINDS), keys,
-                              allow_narrow=False, readout=readout)
+                              readout=readout)
     cols = [c for c, _dtype, _fn in readout or ()]
     return _table(folded, keys, cols), _table(shuffled, keys, cols)
 
@@ -180,9 +182,9 @@ READOUT = [sqlfuncs.readout("est", sqlfuncs.sketch_estimate),
 
 def _case_vs_tree(spark, df, monkeypatch, case, parts):
     """Every kind, byte for byte, on one input ``case``: string group
-    keys; the memory-bounded flush (max_groups_in_flight=1, many chunks
-    per group); null and NaN group keys across 10-row Arrow batches;
-    empty input; ``readout=``."""
+    keys; the memory-bounded flush (SKETCHLIB_MAX_GROUPS_IN_FLIGHT=1,
+    many chunks per group); null and NaN group keys across 10-row
+    Arrow batches; empty input; ``readout=``."""
     keys, readout = ["lang"], None
     if case == "flush":
         monkeypatch.setenv("SKETCHLIB_MAX_GROUPS_IN_FLIGHT", "1")
@@ -287,8 +289,7 @@ def test_over_budget_partials_fall_back_to_the_tree(pages_tiny_multifile,
     # the tree reads the partials the build job kept: no MapInPandas
     assert [s for s in python_stages(out) if s] == \
         [["FlatMapGroupsInPandas"]]
-    tree = merge_partials(build_partials(df, ["lang"], ALL_KINDS), ["lang"],
-                          allow_narrow=False)
+    tree = merge_partials(build_partials(df, ["lang"], ALL_KINDS), ["lang"])
     assert _table(out, ["lang"]) == _table(tree, ["lang"])
 
 
@@ -300,8 +301,7 @@ def test_group_keys_count_against_the_budget(pages_tiny_multifile,
     it."""
     df = pages_tiny_multifile.withColumn("key", F.repeat("lang", 2000))
     specs = [SketchSpec("h", "hll", "url", {"b": 4})]
-    tree = merge_partials(build_partials(df, ["key"], specs), ["key"],
-                          allow_narrow=False)
+    tree = merge_partials(build_partials(df, ["key"], specs), ["key"])
     partials = build_partials(df, ["key"], specs).toArrow()
     blobs = sum(pc.binary_length(partials["partial"]).to_pylist())
     budget = 8 * blobs  # each task's share holds all blobs twice over
@@ -329,11 +329,56 @@ def test_driver_fold_keeps_bigint_keys_exact(spark):
              SketchSpec("q", "kll", "x", {"k": 128})]
     folded = build_sketches(df, ["k"], specs)
     assert _is_local(folded)
-    tree = merge_partials(build_partials(df, ["k"], specs), ["k"],
-                          allow_narrow=False)
+    tree = merge_partials(build_partials(df, ["k"], specs), ["k"])
     got = _table(folded, ["k"])
     assert got == _table(tree, ["k"])
     assert {key[0] for key in got} == {str(big), str(big + 1), "None"}
+
+
+@pytest.mark.parametrize("parts", [1, 4, 100])
+def test_nullable_bigint_group_keys_stay_exact(spark, parts):
+    """Keys above 2**53 sharing Arrow batches with a null key stay
+    exact on the in-task (1 partition), driver (4) and tree (100)
+    paths: pandas reads such a bigint column as float64, which would
+    round the first key and could merge distinct keys."""
+    big = 2 ** 53
+    df = spark.range(0, 300, numPartitions=parts).select(
+        F.when(F.col("id") % 3 > 0, F.lit(big) + F.col("id") % 3).alias("k"),
+        F.col("id").cast("string").alias("url"))
+    out = build_sketches(df, ["k"], [SketchSpec("h", "hll", "url", {"b": 10})])
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert {1: "MapInPandas" in plan and "Exchange" not in plan,
+            4: _is_local(out),
+            100: "FlatMapGroupsInPandas" in plan}[parts], plan
+    assert {r["k"]: r["n_rows"] for r in out.collect()} == \
+        {big + 1: 100, big + 2: 100, None: 100}
+
+
+def test_folds_need_no_dtype_guess_from_all_na_frames(spark, pages_kinds):
+    """A null group key next to an all-null read-out column: neither
+    the in-task fold (run here, in-process) nor the driver fold
+    concatenates frames whose result dtype pandas would derive from
+    their all-NA entries (a rule pandas warns it will change), and
+    both write the shuffle tree's bytes."""
+    keys, cols = ["g"], ["none"]
+    readout = [("none", "double", lambda name, sk: None)]
+
+    def tree(df):
+        return _table(merge_partials(build_partials(df, keys, ALL_KINDS),
+                                     keys, readout=readout), keys, cols)
+    one, four = pages_kinds.coalesce(1), pages_kinds.repartition(4)
+    sel, build_fn, _schema = build._partial_task(one, keys, ALL_KINDS)
+    batch = sel.toPandas()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        in_task = pd.concat(build._fold_partials(keys, readout)(
+            build_fn(iter([batch]))))
+        driver = build_sketches(four, keys, ALL_KINDS, readout=readout)
+    assert _is_local(driver)
+    assert _table(driver, keys, cols) == tree(four)
+    assert {(str(r.g), r.sketch_name): (r.sketch, r.n_rows, r.n_partials,
+                                         repr(r.none))
+            for r in in_task.itertuples()} == tree(one)
 
 
 def test_bloom_over_budget_goes_straight_to_the_tree(spark,
@@ -446,6 +491,5 @@ def test_fd_builds_fold_in_workers(spark):
     out = build_sketches(emb, ["g"], spec)
     assert "FlatMapGroupsInPandas" in \
         out._jdf.queryExecution().executedPlan().toString()
-    tree = merge_partials(build_partials(emb, ["g"], spec), ["g"],
-                          allow_narrow=False)
+    tree = merge_partials(build_partials(emb, ["g"], spec), ["g"])
     assert _table(out, ["g"]) == _table(tree, ["g"])

@@ -137,22 +137,24 @@ def test_heavy_hitters_no_token_shuffle(spark, pages_tiny,
     assert plan(tree).count("Exchange") == 1, plan(tree)
 
 
-def test_heavy_hitters_flush_preserves_topk(spark, pages_tiny_multifile):
-    """max_groups_in_flight=1 + tiny arrow batches: flushed partial
-    states must yield the SAME top-k as the unbounded run (CMS add and
-    candidate-union are order-free; certification survives chunking by
-    pigeonhole)."""
-    def run(mg):
+def test_heavy_hitters_flush_preserves_topk(spark, pages_tiny_multifile,
+                                            monkeypatch):
+    """SKETCHLIB_MAX_GROUPS_IN_FLIGHT=1 + tiny arrow batches: flushed
+    partial states must yield the SAME top-k as the unbounded run (CMS
+    add and candidate-union are order-free; certification survives
+    chunking by pigeonhole)."""
+    def run():
         return sorted((r["lang"], r["token"], r["est_cnt"], r["rnk"])
                       for r in cms_heavy_hitters(
-                          pages_tiny_multifile, ["lang"], "text", k=5,
-                          max_groups_in_flight=mg).collect())
-    unbounded = run(None)
+                          pages_tiny_multifile, ["lang"], "text",
+                          k=5).collect())
+    unbounded = run()
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "29")
+    monkeypatch.setenv("SKETCHLIB_MAX_GROUPS_IN_FLIGHT", "1")
     try:
-        assert run(1) == unbounded
+        assert run() == unbounded
     finally:
         spark.conf.set(key, old)
 
@@ -191,16 +193,16 @@ def test_null_group_key_one_partial_per_partition(spark):
         spark.conf.set(key, old)
 
 
-def test_max_groups_in_flight_below_one_refused(spark, pages_tiny):
+def test_max_groups_in_flight_below_one_refused(spark, pages_tiny,
+                                                 monkeypatch):
     """cms_heavy_hitters validates its state bound like build_partials:
     both resolve it through one helper."""
     import pytest
     from sketchlib.spark.build import build_partials
     from sketchlib.spark.specs import SketchSpec
-    with pytest.raises(ValueError, match="max_groups_in_flight"):
-        cms_heavy_hitters(pages_tiny, ["lang"], "text", k=5,
-                          max_groups_in_flight=0)
-    with pytest.raises(ValueError, match="max_groups_in_flight"):
+    monkeypatch.setenv("SKETCHLIB_MAX_GROUPS_IN_FLIGHT", "0")
+    with pytest.raises(ValueError, match="SKETCHLIB_MAX_GROUPS_IN_FLIGHT"):
+        cms_heavy_hitters(pages_tiny, ["lang"], "text", k=5)
+    with pytest.raises(ValueError, match="SKETCHLIB_MAX_GROUPS_IN_FLIGHT"):
         build_partials(pages_tiny, ["lang"],
-                       [SketchSpec("h", "hll", "text")],
-                       max_groups_in_flight=0)
+                       [SketchSpec("h", "hll", "text")])

@@ -3,8 +3,9 @@
 import pyspark.sql.functions as F
 
 from sketchlib.core.serde import sketch_from_bytes
-from sketchlib.spark.build import build_sketches
+from sketchlib.spark.build import build_sketches, calibrate
 from sketchlib.spark.specs import SketchSpec
+from sketchlib.spark.validate import accuracy_table
 
 
 def test_nulls_ignored_in_all_kernels(spark):
@@ -45,3 +46,21 @@ def test_empty_partitions_yield_no_partials(spark):
     rows = merged.collect()
     assert len(rows) == 1
     assert rows[0]["n_partials"] == 1  # 7 empty partitions emitted nothing
+
+
+def test_nan_group_key_is_the_null_group(spark):
+    """The build cannot tell a NaN group key from a null one (pandas
+    reads both as NaN), so calibrate and accuracy_table's exact pass
+    put NaN in the null group too: calibrate's counts equal the
+    build's n_rows, and the exact distinct count covers all its rows."""
+    df = spark.createDataFrame(
+        [(None, "a"), (float("nan"), "b"), (1.0, "c"), (None, "d"),
+         (float("nan"), "e")], "g double, url string").coalesce(1)
+    spec = [SketchSpec("h", "hll", "url", {"b": 10})]
+    counts = {r["g"]: r["n"] for r in calibrate(df, ["g"]).collect()}
+    built = {r["g"]: r["n_rows"]
+             for r in build_sketches(df, ["g"], spec).collect()}
+    assert counts == built == {None: 4, 1.0: 1}
+    exact = {r["g"]: r["exact"]
+             for r in accuracy_table(df, ["g"], spec).collect()}
+    assert exact == {None: 4.0, 1.0: 1.0}

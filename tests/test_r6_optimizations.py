@@ -31,10 +31,14 @@ def test_simhash_subset_index_equals_bruteforce(spark):
     """The 8x8-bit subset index (r6) is candidates ⊇ {hamming <= h}
     followed by an exact filter, so its output must EQUAL the
     brute-force hamming pair set over the same signatures — for every
-    h the index guarantee covers."""
+    h the index guarantee covers (0..7); 8 and above are refused."""
     docs = _noisy_corpus(spark)
     sigs = textops.simhash(docs, "doc_id", "text").collect()
-    for h in (1, 3):
+    for h in (-1, 8):
+        with pytest.raises(ValueError, match="max_hamming"):
+            textops.simhash_candidate_pairs(docs, "doc_id", "text",
+                                            max_hamming=h)
+    for h in (0, 1, 3, 4):
         got = {(r["a_id"], r["b_id"], r["hamming"])
                for r in textops.simhash_candidate_pairs(
                    docs, "doc_id", "text", max_hamming=h).collect()}

@@ -602,17 +602,17 @@ def test_repetition_scores_null_text_yields_nulls(spark):
 
 
 def test_materialize_uses_reliable_checkpoint_when_dir_set(spark, tmp_path):
-    """With a checkpoint dir configured, _materialize survives executor
+    """With a checkpoint dir configured, materialize survives executor
     loss (reliable checkpoint); without one it stays local."""
-    from sketchlib.spark.textops import _materialize
+    from sketchlib.spark.dfutil import materialize
     df = spark.range(10)
-    local = _materialize(df)
+    local = materialize(df)
     assert local.count() == 10
     sc = spark.sparkContext
     assert not sc._jsc.sc().getCheckpointDir().isDefined()
     sc.setCheckpointDir(str(tmp_path / "ck"))
     try:
-        reliable = _materialize(spark.range(7))
+        reliable = materialize(spark.range(7))
         assert reliable.count() == 7
         import os
         assert any(os.scandir(str(tmp_path / "ck")))  # files written
@@ -850,16 +850,6 @@ class TestDecontamination:
         assert got[2] == 0 and got[4] == 0
         assert set(got) == {1, 2, 3, 4}  # EVERY doc reported
 
-    def test_bloom_path_bitwise_matches_exact(self, spark):
-        from sketchlib.spark.textops import decontaminate
-        docs, bench = self._frames(spark)
-        exact = sorted(map(tuple, decontaminate(
-            docs, "doc_id", "text", bench, "btext").collect()))
-        bloom = sorted(map(tuple, decontaminate(
-            docs, "doc_id", "text", bench, "btext",
-            use_bloom=True).collect()))
-        assert exact == bloom
-
 
 class TestSparkLayerReviewRound4:
     """Spark-layer review findings (round 4, second pass)."""
@@ -867,28 +857,24 @@ class TestSparkLayerReviewRound4:
     def test_accuracy_table_tied_median_not_flagged(self, spark):
         """A constant column has rank interval [0, 1] around any exact
         median — the tied-data interval metric must not flag it."""
-        from sketchlib.spark.build import build_sketches
         from sketchlib.spark.validate import accuracy_table
         df = spark.createDataFrame([("en", 7.0)] * 100 + [("fr", float(i))
                                                           for i in range(100)],
                                    "lang string, v double")
         specs = [SketchSpec("k", "kll", "v", {"k": 128})]
-        merged = build_sketches(df, ["lang"], specs)
-        rows = accuracy_table(df, ["lang"], specs, merged=merged).collect()
+        rows = accuracy_table(df, ["lang"], specs).collect()
         med = {r["lang"]: r for r in rows if r["metric"] == "median_rank_err"}
         assert med["en"]["within_bound"], med["en"]  # ties: err == 0
         assert med["fr"]["within_bound"]
 
     def test_accuracy_table_keeps_null_group(self, spark):
-        from sketchlib.spark.build import build_sketches
         from sketchlib.spark.validate import accuracy_table
         df = spark.createDataFrame(
             [("en", f"u{i}") for i in range(20)] +
             [(None, f"x{i}") for i in range(10)],
             "lang string, url string")
         specs = [SketchSpec("h", "hll", "url", {"b": 10})]
-        merged = build_sketches(df, ["lang"], specs)
-        rows = accuracy_table(df, ["lang"], specs, merged=merged).collect()
+        rows = accuracy_table(df, ["lang"], specs).collect()
         langs = {r["lang"] for r in rows}
         assert None in langs, "null-key group dropped from accuracy table"
 

@@ -160,8 +160,9 @@ def test_auto_fanout_multi_level_on_wide_input(spark, pages_tiny):
     assert a == b
 
 
-def test_flush_bounded_memory_semantics(spark, pages_tiny_multifile):
-    """max_groups_in_flight=1 + tiny arrow batches forces repeated
+def test_flush_bounded_memory_semantics(spark, pages_tiny_multifile,
+                                       monkeypatch):
+    """SKETCHLIB_MAX_GROUPS_IN_FLIGHT=1 + tiny arrow batches forces repeated
     partial flushes. Lattice kernels must come back bitwise-identical
     to the unbounded build; the lossy quantile kernels get one more
     merge boundary (same class of effect as the partition split) and
@@ -173,22 +174,22 @@ def test_flush_bounded_memory_semantics(spark, pages_tiny_multifile):
              SketchSpec("k", "kll", "html_len", {"k": 128})]
     df = pages_tiny_multifile.withColumn(
         "html_len", F.length("html").cast("double"))
-    def run(mg):
-        parts = build_partials(df, ["lang"], specs,
-                               max_groups_in_flight=mg)
-        merged = merge_partials(parts, ["lang"])
+    def run():
+        merged = merge_partials(build_partials(df, ["lang"], specs),
+                                ["lang"])
         return {(r["lang"], r["sketch_name"]):
                 (bytes(r["sketch"]), r["n_rows"]) for r in merged.collect()}
-    unbounded = run(None)
+    unbounded = run()
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "37")
     try:
-        flushed = run(1)
-        flushed2 = run(1)
-        # the flush really fired: more partial rows than one per group
-        n_flush_rows = build_partials(df, ["lang"], specs,
-                                      max_groups_in_flight=1).count()
+        with monkeypatch.context() as m:
+            m.setenv("SKETCHLIB_MAX_GROUPS_IN_FLIGHT", "1")
+            flushed = run()
+            flushed2 = run()
+            # the flush really fired: more partial rows than one per group
+            n_flush_rows = build_partials(df, ["lang"], specs).count()
     finally:
         spark.conf.set(key, old)
     n_plain_rows = build_partials(df, ["lang"], specs).count()
@@ -264,8 +265,7 @@ def test_build_sketches_local_bitwise_matches_distributed(pages_tiny,
         assert "FlatMapGroupsInPandas" not in plan, plan
     else:
         assert plan.startswith("LocalTableScan"), plan
-    tree = merge_partials(build_partials(d, ["lang"], specs), ["lang"],
-                          allow_narrow=False)
+    tree = merge_partials(build_partials(d, ["lang"], specs), ["lang"])
     assert "FlatMapGroupsInPandas" in \
         tree._jdf.queryExecution().executedPlan().toString()
     dist = {(r["lang"], r["sketch_name"]): bytes(r["sketch"])
@@ -298,12 +298,12 @@ def test_build_sketches_local_equals_build_sketches_on_wide_input(
 
 
 def test_narrow_fold_null_numeric_group_key_across_batches(spark):
-    """Review r5: the narrow single-partition fold keys its group dict
+    """Review r5: the in-task single-partition fold keys its group dict
     on normalized keys — a null numeric group key spanning multiple
     Arrow batches must fold to ONE row per (group, spec), not split
     into duplicate partials (NaN != NaN as dict keys). Checked on the
-    fused build and on merge_partials' narrow fold of a partials
-    DataFrame, whose rows arrive in Arrow batches."""
+    fused build, and on merge_partials' shuffle tree over the same
+    partials, which must put the null key's chunks in one group too."""
     import os
     # interleave the null and non-null groups and force a 1-group
     # in-flight budget so the build FLUSHES many chunked partial rows
