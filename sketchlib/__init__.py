@@ -11,8 +11,11 @@ Layout:
     sketchlib.core   — pure numpy sketch kernels, zero Spark imports
     sketchlib.spark  — build / merge / validate / query layer (DataFrame ops)
     sketchlib.io     — deterministic synthetic `pages` fixture generator
+    sketchlib.zipcache — in PySpark workers on CPython < 3.12, skips the
+                       per-task re-read of unchanged zip archives
 """
 
+from sketchlib import zipcache
 from sketchlib.core.bloom import BloomFilter
 from sketchlib.core.hll import HyperLogLog
 from sketchlib.core.cms import CountMinSketch
@@ -25,6 +28,8 @@ from sketchlib.core.fd import FrequentDirections
 from sketchlib.core.serde import sketch_from_bytes
 
 __version__ = "0.2.0"
+
+zipcache.install()
 
 __all__ = [
     "BloomFilter",

@@ -250,6 +250,42 @@ def _max_groups_in_flight() -> int:
     return value
 
 
+def _exact_group_keys(df: DataFrame, group_cols: list[str],
+                      value_cols: list[str]):
+    """(projection, group-by keys, read_keys, write_keys) for a partial
+    builder that groups each Arrow batch of ``df``'s ``group_cols`` and
+    ``value_cols`` by ``group_cols``.
+
+    pandas reads a batch's integer column that holds a null as float64,
+    which merges keys above 2**53. So a nullable integral group column
+    also crosses as a null-free copy: ``read_keys(batch)`` turns each
+    copy into an ``Int64`` array with the null mask put back, and the
+    builder groups on ``keys`` (the copies in place of their columns).
+    ``write_keys(frame, group_keys)`` writes such columns of an output
+    frame, one key tuple per row, as ``Int64``: a list of ints and None
+    would also read as float64."""
+    exact = {f.name: f"_exact_{f.name}" for f in df.schema.fields
+             if f.name in group_cols and f.nullable
+             and isinstance(f.dataType, IntegralType)}
+    sel = df.select(*group_cols, *value_cols,
+                    *(F.coalesce(c, F.lit(0)).alias(e)
+                      for c, e in exact.items()))
+
+    def read_keys(pdf: pd.DataFrame) -> pd.DataFrame:
+        for c, e in exact.items():
+            pdf[e] = pd.arrays.IntegerArray(pdf[e].to_numpy(),
+                                            pdf[c].isna().to_numpy())
+        return pdf
+
+    def write_keys(frame: pd.DataFrame, group_keys: list) -> pd.DataFrame:
+        for i, c in enumerate(group_cols):
+            if c in exact:
+                frame[c] = pd.array([g[i] for g in group_keys],
+                                    dtype="Int64")
+        return frame
+    return sel, [exact.get(c, c) for c in group_cols], read_keys, write_keys
+
+
 def _partial_task(df: DataFrame, group_cols: list[str],
                   specs: list[SketchSpec]):
     """(projected input, per-partition build, partials schema): the
@@ -263,17 +299,8 @@ def _partial_task(df: DataFrame, group_cols: list[str],
     value_cols = sorted(({s.value_col for s in specs}
                          | {s.weight_col for s in specs if s.weight_col})
                         - set(group_cols))  # a group col can be sketched
-    # pandas reads a batch's integer column that holds a null as
-    # float64, which merges keys above 2**53: a nullable integral group
-    # column also crosses as a null-free copy, which the build groups
-    # on with the null mask put back
-    exact = {f.name: f"_exact_{f.name}" for f in df.schema.fields
-             if f.name in group_cols and f.nullable
-             and isinstance(f.dataType, IntegralType)}
-    sel = df.select(*group_cols, *value_cols,
-                    *(F.coalesce(c, F.lit(0)).alias(e)
-                      for c, e in exact.items()))
-    keys = [exact.get(c, c) for c in group_cols]
+    sel, keys, read_keys, write_keys = _exact_group_keys(df, group_cols,
+                                                         value_cols)
     n_groups = len(group_cols)
     flush_at = _max_groups_in_flight() * len(specs)
 
@@ -288,20 +315,14 @@ def _partial_task(df: DataFrame, group_cols: list[str],
             for (gkey, si), (sk, n) in acc.items():
                 rows.append((*gkey, specs[si].name, sk.to_bytes(), n, pid,
                              chunk))
-            frame = pd.DataFrame(rows, columns=[*group_cols, "sketch_name",
-                                                "partial", "n_rows",
-                                                "partition_id", "chunk"])
-            for i, c in enumerate(group_cols):
-                if c in exact:  # ints and None would read as float64
-                    frame[c] = pd.array([g[i] for g, _si in acc],
-                                        dtype="Int64")
-            return frame
+            return write_keys(pd.DataFrame(
+                rows, columns=[*group_cols, "sketch_name", "partial",
+                               "n_rows", "partition_id", "chunk"]),
+                [g for g, _si in acc])
 
         for pdf in batches:
-            for c, e in exact.items():
-                pdf[e] = pd.arrays.IntegerArray(pdf[e].to_numpy(),
-                                                pdf[c].isna().to_numpy())
-            for gkey, sub in pdf.groupby(keys, sort=False, dropna=False):
+            for gkey, sub in read_keys(pdf).groupby(keys, sort=False,
+                                                    dropna=False):
                 if not isinstance(gkey, tuple):
                     gkey = (gkey,)
                 gkey = _norm_nan(gkey)

@@ -36,10 +36,10 @@ from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from sketchlib.core.cms import CountMinSketch
-from sketchlib.spark.build import (_auto_fanout, _fold_in_task, _fold_once,
-                                   _group_fold, _max_groups_in_flight,
-                                   _merge_groups, _norm_nan,
-                                   update_from_token_counts)
+from sketchlib.spark.build import (_auto_fanout, _exact_group_keys,
+                                   _fold_in_task, _fold_once, _group_fold,
+                                   _max_groups_in_flight, _merge_groups,
+                                   _norm_nan, update_from_token_counts)
 
 
 class SpaceSaving:
@@ -105,12 +105,15 @@ def topk_from_cms(cms: CountMinSketch, candidates,
     return [cands[i] for i in order], [int(est[i]) for i in order]
 
 
-def _token_partials(group_cols: list[str], text_col: str, capacity: int,
-                    w: int, d: int, seed: int, conservative: bool,
-                    max_groups_in_flight: int):
-    """Per-partition build of ``cms_heavy_hitters``: one (cms, cands)
-    partial row per group, flushed every ``max_groups_in_flight``
-    groups."""
+def _token_partials(df: DataFrame, group_cols: list[str], text_col: str,
+                    capacity: int, w: int, d: int, seed: int,
+                    conservative: bool, max_groups_in_flight: int):
+    """(projected input, per-partition build) of ``cms_heavy_hitters``:
+    one (cms, cands) partial row per group, flushed every
+    ``max_groups_in_flight`` groups."""
+    sel, keys, read_keys, write_keys = _exact_group_keys(df, group_cols,
+                                                         [text_col])
+
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc: dict = {}  # gkey -> [cms, SpaceSaving]
 
@@ -122,11 +125,12 @@ def _token_partials(group_cols: list[str], text_col: str, capacity: int,
                 # replaces)
                 rows.append((*gkey, cms.to_bytes(),
                              sorted(t for t, _, _ in ss.items())))
-            return pd.DataFrame(rows,
-                                columns=[*group_cols, "cms", "cands"])
+            return write_keys(pd.DataFrame(
+                rows, columns=[*group_cols, "cms", "cands"]), list(acc))
 
         for pdf in batches:
-            for gkey, sub in pdf.groupby(group_cols, sort=False, dropna=False):
+            for gkey, sub in read_keys(pdf).groupby(keys, sort=False,
+                                                    dropna=False):
                 if not isinstance(gkey, tuple):
                     gkey = (gkey,)
                 # NaN keys are unequal, so a null group would otherwise
@@ -143,7 +147,7 @@ def _token_partials(group_cols: list[str], text_col: str, capacity: int,
                     acc.clear()
         if acc:
             yield emit()
-    return build
+    return sel, build
 
 
 def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
@@ -176,10 +180,9 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
     a ``LocalRelation``; otherwise the partial states shuffle into a
     grouped merge.
     """
-    sel = df.select(*group_cols, text_col)
+    sel, build = _token_partials(df, group_cols, text_col, capacity, w, d,
+                                 seed, conservative, _max_groups_in_flight())
     group_fields = [f for f in sel.schema.fields if f.name in group_cols]
-    build = _token_partials(group_cols, text_col, capacity, w, d, seed,
-                            conservative, _max_groups_in_flight())
     out_schema = StructType(group_fields + [
         StructField("token", StringType(), False),
         StructField("est_cnt", LongType(), False),

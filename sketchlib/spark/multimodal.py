@@ -821,9 +821,9 @@ def fake_media_rows(n: int = 300, seed: int = 5) -> list:
     generator behind the parquet fixture (``io.fixtures.media_path``);
     pure Python, no Spark session.
 
-    Audio rows are 16-bit mono 8 kHz WAV; image rows cycle PNG (filter
-    type ``i // 3 % 5``), PPM and JPEG (4:2:0 on odd ``i``, else 4:4:4);
-    odd video rows are MP4s holding 2-4 JPEG frames (MJPEG), even ones
+    Audio rows are 16-bit mono 8 kHz WAV; image rows cycle PNG, PPM and
+    JPEG (4:2:0 on odd ``i``, else 4:4:4), and successive PNG rows cycle
+    filter types 0-4, so every filter occurs; odd video rows are MP4s holding 2-4 JPEG frames (MJPEG), even ones
     carry a sample table over an opaque mdat and decode through
     ``decode_stub``. Every payload is real bytes from the ``encode_*``
     writers, so the decoders run end to end.
@@ -834,6 +834,7 @@ def fake_media_rows(n: int = 300, seed: int = 5) -> list:
         rng.integers(0, 3, n)]
     rate = 8000
     rows = []
+    n_png = 0
     for i in range(n):
         k = kinds[i]
         wi = hi = None
@@ -848,7 +849,8 @@ def fake_media_rows(n: int = 300, seed: int = 5) -> list:
             hi, wi = int(rng.integers(8, 64)), int(rng.integers(8, 64))
             px = rng.integers(0, 256, (hi, wi, 3), dtype=np.uint8)
             if i % 3 == 0:
-                payload = encode_png(px, filter_type=i // 3 % 5)
+                payload = encode_png(px, filter_type=n_png % 5)
+                n_png += 1
             elif i % 3 == 1:
                 payload = encode_ppm(px)
             else:

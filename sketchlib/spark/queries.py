@@ -560,19 +560,32 @@ def q_cms_top_tokens(spark, sf_dir):
 
 def q_countsketch_token_freq(spark, sf_dir):
     """Unbiased per-(lang, token) frequency estimates from the signed
-    count sketch for each lang's exact top-10 tokens (candidates join
-    in distributedly; exact companion heavy_tokens_lang). Estimates are
-    two-sided noise around the truth — the right read-out when the
-    counts feed downstream statistics rather than a keep/drop gate."""
-    merged = _doc_sketches(
+    count sketch for each lang's exact top-10 tokens (exact companion
+    heavy_tokens_lang). Estimates are two-sided noise around the truth
+    — the right read-out when the counts feed downstream statistics
+    rather than a keep/drop gate."""
+    top = q_heavy_tokens_lang(spark, sf_dir).select("lang", "token", "rnk")
+    cands = top.toArrow()
+    return (local_table(spark, cands, top.schema)
+            .join(_countsketch_counts(spark, sf_dir, cands), "lang")
+            .select("lang", "token", "rnk",
+                    F.col("cs_cnts")[F.col("token")].alias("est_cnt")))
+
+
+def _countsketch_counts(spark, sf_dir, cands) -> DataFrame:
+    """(lang, cs_cnts): each lang's count sketch over the documents'
+    tokens, read out in its build's fold for every token of ``cands``
+    (an Arrow table of candidates collected before the build) as one
+    token -> count map, under cms_count's read-out rule."""
+    tokens = sorted(set(cands.column("token").to_pylist()))
+    count = sqlfuncs.cms_count.read
+    return _doc_sketches(
         spark, sf_dir,
         [SketchSpec("cs", "countsketch", "text", {"w": 16384, "d": 5},
-                    tokenize=True)])
-    top = q_heavy_tokens_lang(spark, sf_dir).select("lang", "token", "rnk")
-    return (top.join(merged.filter(F.col("sketch_name") == "cs"), "lang")
-            .select("lang", "token", "rnk",
-                    sqlfuncs.cms_count(F.col("sketch"), F.col("token"))
-                    .alias("est_cnt")))
+                    tokenize=True)],
+        readout=[("cs_cnts", "map<string,bigint>",
+                  lambda _name, sk: {t: count(sk, t) for t in tokens})]
+    ).select("lang", "cs_cnts")
 
 
 def q_kll_quantiles_nchars(spark, sf_dir):
@@ -978,20 +991,9 @@ def q_token_freq_sketch_accuracy(spark, sf_dir):
     from sketchlib.spark.heavyhitters import cms_heavy_hitters
     docs = load(spark, sf_dir, "documents")
     hh = cms_heavy_hitters(docs, ["lang"], "text", k=10)
-    # the candidates (<= k per lang) are known before the count sketch
-    # is built, so its fold reads out every candidate's count: one
-    # token -> count map per lang, under cms_count's read-out rule
-    top = hh.toArrow()
-    tokens = sorted(set(top.column("token").to_pylist()))
-    count = sqlfuncs.cms_count.read
-    cs = _doc_sketches(
-        spark, sf_dir,
-        [SketchSpec("cs", "countsketch", "text", {"w": 16384, "d": 5},
-                    tokenize=True)],
-        readout=[("cs_cnts", "map<string,bigint>",
-                  lambda _name, sk: {t: count(sk, t) for t in tokens})])
+    top = hh.toArrow()  # <= k candidates per lang
     with_cs = (local_table(spark, top, hh.schema)
-               .join(cs.select("lang", "cs_cnts"), "lang")
+               .join(_countsketch_counts(spark, sf_dir, top), "lang")
                .select("lang", "token", F.col("est_cnt").alias("cms_cnt"),
                        F.col("cs_cnts")[F.col("token")].alias("cs_cnt")))
     toks = F.filter(F.split("text", " "), lambda x: x != "")

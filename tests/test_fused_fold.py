@@ -110,6 +110,14 @@ def test_at_most_one_python_operator_per_stage(spark, monkeypatch, name):
             (name, [s for s in stages if s])
 
 
+def test_countsketch_token_freq_reads_out_in_the_fold(spark):
+    """The exact candidates are collected first, so the count sketch's
+    fold reads every candidate out: the query's whole executed plan
+    holds ONE Python operator, with no read-out UDF after the build."""
+    out = queries.q_countsketch_token_freq(spark, SF)
+    assert sum(python_stages(out), []) == ["MapInPandas"]
+
+
 def test_single_partition_builds_are_one_python_operator(spark, pages_tiny):
     """One input partition: build, fold and read-out are ONE
     mapInPandas with no Exchange, for all three partial builders."""
@@ -335,16 +343,22 @@ def test_driver_fold_keeps_bigint_keys_exact(spark):
     assert {key[0] for key in got} == {str(big), str(big + 1), "None"}
 
 
+def _bigint_keys(spark, parts):
+    """(frame, 2**53): keys 2**53+1, 2**53+2 and null, 100 rows each,
+    sharing every Arrow batch."""
+    big = 2 ** 53
+    return spark.range(0, 300, numPartitions=parts).select(
+        F.when(F.col("id") % 3 > 0, F.lit(big) + F.col("id") % 3).alias("k"),
+        F.col("id").cast("string").alias("url")), big
+
+
 @pytest.mark.parametrize("parts", [1, 4, 100])
 def test_nullable_bigint_group_keys_stay_exact(spark, parts):
     """Keys above 2**53 sharing Arrow batches with a null key stay
     exact on the in-task (1 partition), driver (4) and tree (100)
     paths: pandas reads such a bigint column as float64, which would
     round the first key and could merge distinct keys."""
-    big = 2 ** 53
-    df = spark.range(0, 300, numPartitions=parts).select(
-        F.when(F.col("id") % 3 > 0, F.lit(big) + F.col("id") % 3).alias("k"),
-        F.col("id").cast("string").alias("url"))
+    df, big = _bigint_keys(spark, parts)
     out = build_sketches(df, ["k"], [SketchSpec("h", "hll", "url", {"b": 10})])
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert {1: "MapInPandas" in plan and "Exchange" not in plan,
@@ -352,6 +366,15 @@ def test_nullable_bigint_group_keys_stay_exact(spark, parts):
             100: "FlatMapGroupsInPandas" in plan}[parts], plan
     assert {r["k"]: r["n_rows"] for r in out.collect()} == \
         {big + 1: 100, big + 2: 100, None: 100}
+
+
+@pytest.mark.parametrize("parts", [1, 4])
+def test_heavy_hitters_keep_nullable_bigint_group_keys_exact(spark, parts):
+    """cms_heavy_hitters groups on the build's null-free key copy too:
+    read as float64, 2**53+1 would come back as 2**53."""
+    df, big = _bigint_keys(spark, parts)
+    out = heavyhitters.cms_heavy_hitters(df, ["k"], "url", k=3)
+    assert {r["k"] for r in out.collect()} == {big + 1, big + 2, None}
 
 
 def test_folds_need_no_dtype_guess_from_all_na_frames(spark, pages_kinds):

@@ -166,16 +166,17 @@ def test_null_group_key_one_partial_per_partition(spark):
     rows = [(None if i % 4 == 0 else i % 3,
              " ".join(["hot"] * (i % 5 + 1) + [f"t{i % 7}"]))
             for i in range(200)]
-    # the partition's Arrow batches as the build sees them: 10 rows
-    # each, the nullable int key as float64 with NaN for null
-    pdf = pd.DataFrame(rows, columns=["g", "text"]).astype({"g": "float64"})
-    build = _token_partials(["g"], "text", 256, 16384, 5, 0, True, 8192)
-    partials = pd.concat(build(pdf.iloc[i:i + 10]
+    df = spark.createDataFrame(rows, "g int, text string")
+    sel, build = _token_partials(df, ["g"], "text", 256, 16384, 5, 0, True,
+                                 8192)
+    # the partition's Arrow batches as the build sees them: frames of
+    # 10 rows each, the nullable int key as float64 with NaN for null
+    pdf = sel.toPandas()
+    assert pdf["g"].dtype == "float64"
+    partials = pd.concat(build(pdf.iloc[i:i + 10].copy()
                                for i in range(0, len(pdf), 10)))
     assert len(partials) == 4  # groups 0, 1, 2 and null
     assert partials["g"].isna().sum() == 1
-
-    df = spark.createDataFrame(rows, "g int, text string")
 
     def run(d):
         return sorted(((r["g"] is None, r["g"] or 0), r["token"],
