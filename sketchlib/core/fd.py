@@ -25,6 +25,7 @@ amortized O(dim * l) flops per row, independent of stream length.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 from sketchlib.core import serde
 
@@ -78,9 +79,12 @@ class FrequentDirections:
     # --- UDAF contract ---
 
     def update_batch(self, values) -> "FrequentDirections":
-        """values: iterable of fixed-length float vectors (list/np)."""
+        """values: iterable of fixed-length float vectors (list/np), or
+        an Arrow list array."""
         if len(values) == 0:
             return self
+        if isinstance(values, (pa.Array, pa.ChunkedArray)):
+            values = values.to_numpy(zero_copy_only=False)
         try:  # already-rectangular input: one conversion, no per-row loop
             rows = np.asarray(values, dtype=np.float64)
         except (ValueError, TypeError):

@@ -17,8 +17,11 @@ the quantile-test role are unchanged.
 
 from __future__ import annotations
 
+import hashlib
+import inspect
 import json
 import os
+import sys
 
 import numpy as np
 import pyarrow as pa
@@ -103,22 +106,41 @@ def generate_pages(n_rows: int, seed: int = 42,
     })
 
 
+def _cached(base_dir: str | None, stem: str, doc: dict, sources: list,
+            write) -> str:
+    """Path of ``<stem>_<digest>.parquet`` under ``base_dir`` (default
+    ``.fixtures/``), the digest taken over the generators' ``sources``:
+    ``write(path)`` writes it unless a file whose manifest equals
+    ``doc`` plus that digest is there, so an edited generator never
+    serves old bytes."""
+    digest = hashlib.sha256("".join(map(inspect.getsource, sources))
+                            .encode()).hexdigest()[:8]
+    base = base_dir or os.path.join(os.path.dirname(os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__)))), ".fixtures")
+    os.makedirs(base, exist_ok=True)
+    path = os.path.join(base, f"{stem}_{digest}.parquet")
+    doc = {**doc, "generator_digest": digest}
+    if os.path.exists(path) and os.path.exists(path + ".json"):
+        with open(path + ".json") as f:
+            if json.load(f) == doc:
+                return path
+    write(path)
+    with open(path + ".json", "w") as f:
+        json.dump(doc, f)
+    return path
+
+
 def pages_path(scale: str = "tiny", base_dir: str | None = None,
                seed: int = 42) -> str:
     """Generate (once, cached on disk) and return the parquet path."""
     n_rows = SCALES[scale] if scale in SCALES else int(scale)
-    base = base_dir or os.path.join(os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__)))), ".fixtures")
-    os.makedirs(base, exist_ok=True)
-    path = os.path.join(base, f"pages_{n_rows}_s{seed}.parquet")
-    manifest = path + ".json"
-    if os.path.exists(path) and os.path.exists(manifest):
-        return path
-    table = generate_pages(n_rows, seed=seed)
-    pq.write_table(table, path, row_group_size=8_192)  # small row groups -> parallel scan splits
-    with open(manifest, "w") as f:
-        json.dump({"n_rows": n_rows, "seed": seed, "generator": "sketchlib.io.fixtures"}, f)
-    return path
+    return _cached(
+        base_dir, f"pages_{n_rows}_s{seed}",
+        {"n_rows": n_rows, "seed": seed, "generator": "sketchlib.io.fixtures"},
+        [sys.modules[__name__]],
+        # small row groups -> parallel scan splits
+        lambda path: pq.write_table(generate_pages(n_rows, seed=seed), path,
+                                    row_group_size=8_192))
 
 
 def media_path(n: int = 120, seed: int = 5,
@@ -130,28 +152,17 @@ def media_path(n: int = 120, seed: int = 5,
     bench time measures the probe/extract operators, not fixture
     encoding (the media table is INPUT data, generated deterministically
     from (n, seed) by ``multimodal.fake_media_rows``)."""
-    base = base_dir or os.path.join(os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__)))), ".fixtures")
-    os.makedirs(base, exist_ok=True)
-    path = os.path.join(base, f"media_{n}_s{seed}.parquet")
-    manifest = path + ".json"
-    if os.path.exists(path) and os.path.exists(manifest):
-        return path
-    from sketchlib.spark.multimodal import fake_media_rows
-    rows = fake_media_rows(n, seed)
-    cols = list(zip(*rows))
-    table = pa.table({
-        "media_id": pa.array(cols[0], pa.int64()),
-        "kind": pa.array(cols[1], pa.string()),
-        "payload": pa.array(cols[2], pa.binary()),
-        "mime": pa.array(cols[3], pa.string()),
-        "width": pa.array(cols[4], pa.int64()),
-        "height": pa.array(cols[5], pa.int64()),
-        "duration_ms": pa.array(cols[6], pa.int64()),
-    })
-    # small row groups so the local scan splits across cores
-    pq.write_table(table, path, row_group_size=16)
-    with open(manifest, "w") as f:
-        json.dump({"n": n, "seed": seed,
-                   "generator": "sketchlib.spark.multimodal.fake_media_rows"}, f)
-    return path
+    from sketchlib.spark import jpeg, multimodal
+
+    def write(path):
+        from pyspark.sql.pandas.types import to_arrow_type
+        cols = zip(*multimodal.fake_media_rows(n, seed))
+        table = pa.table({f.name: pa.array(c, to_arrow_type(f.dataType))
+                          for f, c in zip(multimodal.MEDIA_SCHEMA, cols)})
+        # small row groups so the local scan splits across cores
+        pq.write_table(table, path, row_group_size=16)
+    return _cached(
+        base_dir, f"media_{n}_s{seed}",
+        {"n": n, "seed": seed,
+         "generator": "sketchlib.spark.multimodal.fake_media_rows"},
+        [multimodal, jpeg], write)

@@ -279,9 +279,9 @@ def ann_ivf_topk(df: DataFrame, id_col: str, vec_col: str, dim: int,
     # nprobe nearest cells per query: tiny driver-free cross join against
     # the broadcast centroid table (n_centroids rows)
     spark = df.sparkSession
-    cent_df = local_table(spark, pd.DataFrame({
+    cent_df = local_table(spark, {
         "cid": range(len(centroids)),
-        "cvec": [[float(x) for x in c] for c in centroids]}),
+        "cvec": [[float(x) for x in c] for c in centroids]},
         StructType([StructField("cid", LongType()),
                     StructField("cvec", ArrayType(DoubleType()))]))
     qc = (qn.crossJoin(F.broadcast(cent_df))

@@ -6,13 +6,13 @@ OR-merge :139-164) with the Spark-native architecture from SURVEY.md §4:
 
   1. ``calibrate``      — exact `groupBy().count()` (Catalyst partial
                           aggregation; the only full-row shuffle-free scan).
-  2. ``build_partials`` — ``mapInPandas`` over *input partitions*: one
+  2. ``build_partials`` — ``mapInArrow`` over *input partitions*: one
                           partial sketch per (group, spec) per partition.
                           Raw rows NEVER shuffle (the reference's
                           `groupByKey` at main.py:146 shuffles every row —
                           its known skew trap, SURVEY.md G1). Only
                           fixed-size sketch states cross the wire.
-  3. ``merge_partials`` — hierarchical merge via ``applyInPandas``;
+  3. ``merge_partials`` — hierarchical merge via ``applyInArrow``;
                           optional two-level (salted) fan-in for very
                           wide clusters, treeAggregate-style.
 
@@ -21,16 +21,20 @@ group's partials in the same (partition_id, chunk) order, so all write
 the same bytes:
 
   - in-task: a single-partition input folds its partials in the task
-    that built them (one ``mapInPandas``, lazy);
+    that built them (one ``mapInArrow``, lazy);
   - driver: a plan with no salt level whose partials fit Spark's
     ``spark.sql.execution.arrow.localRelationThreshold`` is built in
     one job, collected and folded on the driver, and returned as a
     ``LocalRelation`` (eager: the job runs at call time);
   - tree: every other input shuffles its partials through
-    ``merge_partials``' salted ``applyInPandas`` tree. A build whose
+    ``merge_partials``' salted ``applyInArrow`` tree. A build whose
     partials turned out too big for the driver in that one job merges
     the partials the job left in a local checkpoint: no input is
     built twice.
+
+Every Python step reads and writes Arrow: batches are grouped in Arrow
+(``_key_groups``), the kernels take Arrow arrays, and a bigint key with
+nulls stays an exact int64 from the scan to the fold.
 
 At 100 TB: the shuffle volume is (#input_partitions × #groups ×
 sketch_bytes) regardless of row count — the property that makes the
@@ -49,9 +53,10 @@ import pyarrow as pa
 import pyarrow.compute as pa_compute
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
-                               FloatType, IntegerType, IntegralType,
-                               LongType, StringType, StructField, StructType)
+                               FloatType, IntegerType, LongType, StringType,
+                               StructField, StructType)
 
 from sketchlib.core.cms import CountMinSketch
 from sketchlib.core.sample import WeightedBottomKSample
@@ -70,10 +75,10 @@ def calibrate(df: DataFrame, group_cols: list[str]) -> DataFrame:
 
 
 def _nan_keys_as_null(df: DataFrame, group_cols: list[str]) -> DataFrame:
-    """``df`` with NaN read as null in its floating group columns. The
-    build cannot tell the two apart (pandas reads a null float as NaN),
-    so a NaN group key is the null group everywhere: every exact pass
-    over a build's groups goes through this first."""
+    """``df`` with NaN read as null in its floating group columns: a
+    NaN group key is the null group everywhere. Every build projection
+    and every exact pass over a build's groups goes through this
+    first."""
     nulled = {f.name: F.nanvl(f.name, F.lit(None).cast(f.dataType))
               for f in df.schema.fields if f.name in group_cols
               and isinstance(f.dataType, (FloatType, DoubleType))}
@@ -125,46 +130,39 @@ def _partials_schema(df: DataFrame, group_cols: list[str]) -> StructType:
     ])
 
 
-def _norm_nan(key):
-    """pandas groupby(dropna=False) yields float NaN (pd.NA on a
-    nullable dtype) for null keys while Spark's collect() yields None —
-    normalize to None so per-group param dicts and validation
-    self-exclusion line up across the boundary."""
-    if isinstance(key, tuple):
-        return tuple(_norm_nan(k) for k in key)
-    if key is pd.NA or isinstance(key, float) and np.isnan(key):
-        return None
-    return key
-
-
-def tokens_arrow(col: pd.Series) -> "pa.Array":
+def tokens_arrow(col) -> "pa.Array":
     """Arrow-native tokenizer: drop nulls, split on single space, drop
-    empty tokens — identical semantics to the old pandas
-    split/explode path and the DuckDB oracles (parity-tested), but the
-    split/flatten/filter runs in Arrow C++ with no per-token Python
-    objects: measured 6.3x faster on the pages corpus, where
-    tokenization was 95% of the CMS build stage.
+    empty tokens — the semantics of the DuckDB oracles (parity-tested),
+    with the split/flatten/filter in Arrow C++ and no per-token Python
+    objects.
 
-    Non-string columns coerce via pandas astype(str) — Python str()
-    semantics (1.0 -> '1.0'), matching the old path, Spark's CAST AS
-    STRING, and the oracles; an arrow float->string cast would yield
+    ``col`` is an Arrow array or a pandas Series. Non-string values
+    coerce with Python ``str()`` (1.0 -> '1.0'), matching Spark's CAST
+    AS STRING and the oracles; an Arrow float->string cast would yield
     '1' and silently change token identity."""
-    col = col.dropna()
-    try:
-        arr = pa.array(col, type=pa.large_string())
-    except (pa.ArrowTypeError, pa.ArrowInvalid, pa.ArrowNotImplementedError):
-        # non-string / mixed batch: coerce per-element like the old
-        # pandas path (Python str() semantics: 1.0 -> '1.0')
-        arr = pa.array(col.astype(str), type=pa.large_string())
+    if isinstance(col, pd.Series):
+        col = col.dropna()
+        try:
+            col = pa.array(col, type=pa.large_string())
+        except (pa.ArrowTypeError, pa.ArrowInvalid,
+                pa.ArrowNotImplementedError):
+            col = pa.array(col.astype(str), type=pa.large_string())
+    col = col.drop_null()
+    if not any(f(col.type) for f in (pa.types.is_string, pa.types.is_binary,
+                                     pa.types.is_large_string,
+                                     pa.types.is_large_binary)):
+        col = pa.array([str(v) for v in col.to_pylist()], pa.large_string())
+    arr = col.cast(pa.large_string())
     toks = pa_compute.list_flatten(pa_compute.split_pattern(arr, " "))
     return toks.filter(pa_compute.not_equal(toks, ""))
 
 
-def update_from_token_counts(freq_sketch, tracker, col: pd.Series) -> bool:
+def update_from_token_counts(freq_sketch, tracker, col) -> bool:
     """Tokenize + value_counts + weighted frequency-sketch update, with
     an optional SpaceSaving-style tracker — the one token-feed shared
     by heavy hitters and its streaming twin (so the two cannot drift).
-    Returns False when the batch had no tokens."""
+    ``col`` as in ``tokens_arrow``. Returns False when the batch had
+    no tokens."""
     toks = tokens_arrow(col)
     if not len(toks):
         return False
@@ -176,36 +174,37 @@ def update_from_token_counts(freq_sketch, tracker, col: pd.Series) -> bool:
     return True
 
 
-def _values_for(spec: SketchSpec, sub: pd.DataFrame):
-    col = sub[spec.value_col]
+def _values_for(spec: SketchSpec, rows: pa.Table):
+    col = rows[spec.value_col]
     if spec.tokenize:
         return tokens_arrow(col)
-    if spec.numeric:
-        return col.to_numpy(dtype=np.float64, na_value=np.nan)
-    return col.dropna()
+    if spec.numeric:  # null reads as NaN, which the kernels drop
+        return np.asarray(col, dtype=np.float64)
+    return col.drop_null()
 
 
-def _feed(spec: SketchSpec, sketch, sub: pd.DataFrame,
+def _feed(spec: SketchSpec, sketch, rows: pa.Table,
           vcache: dict | None = None) -> None:
-    """Feed one pandas sub-frame into a sketch per its spec (tokenize /
-    numeric / weighted dispatch) — the single update path shared by the
-    batch build and both streaming builds, so semantics cannot drift.
+    """Feed one Arrow table of rows into a sketch per its spec
+    (tokenize / numeric / weighted dispatch) — the single update path
+    shared by the batch build and both streaming builds, so semantics
+    cannot drift.
 
     ``vcache`` memoizes extracted value columns across specs sharing a
-    (value_col, tokenize, numeric) triple within one sub-frame.
+    (value_col, tokenize, numeric) triple within one table.
     """
     if spec.weight_col is not None:  # cms/countsketch/wsample
-        vals = sub[spec.value_col]
-        w = pd.to_numeric(sub[spec.weight_col], errors="coerce")
+        vals = rows[spec.value_col]
+        w = np.asarray(rows[spec.weight_col], dtype=np.float64)  # null: NaN
         if isinstance(sketch, WeightedBottomKSample):
             # positive-float weights; the kernel applies the shared
             # null rules (null key / NaN weight drop the row) and
             # raises on non-positive weights
-            sketch.update_batch(vals, w.to_numpy(np.float64))
+            sketch.update_batch(vals, w)
             return
-        mask = (vals.notna() & w.notna()).to_numpy()
+        mask = np.asarray(vals.is_valid()) & ~np.isnan(w)
         if mask.any():
-            wf = w[mask].to_numpy(np.float64)
+            wf = w[mask]
             wi = np.rint(wf)
             # fractions are a caller bug, not something to round away
             # quietly; negative weights would decrement CMS cells and
@@ -220,12 +219,13 @@ def _feed(spec: SketchSpec, sketch, sub: pd.DataFrame,
                     f"weight_col {spec.weight_col!r} has negative "
                     "weights — CMS counters are overestimate-only; "
                     "use kind='countsketch' for delete streams")
-            sketch.update_batch(vals[mask], wi.astype(np.int64))
+            sketch.update_batch(vals.filter(pa.array(mask)),
+                                wi.astype(np.int64))
         return
     vk = (spec.value_col, spec.tokenize, spec.numeric)
     vals = vcache.get(vk) if vcache is not None else None
     if vals is None:
-        vals = _values_for(spec, sub)
+        vals = _values_for(spec, rows)
         if vcache is not None:
             vcache[vk] = vals
     if not len(vals):
@@ -250,40 +250,48 @@ def _max_groups_in_flight() -> int:
     return value
 
 
-def _exact_group_keys(df: DataFrame, group_cols: list[str],
-                      value_cols: list[str]):
-    """(projection, group-by keys, read_keys, write_keys) for a partial
-    builder that groups each Arrow batch of ``df``'s ``group_cols`` and
-    ``value_cols`` by ``group_cols``.
+def _key_groups(data: pa.Table | pa.RecordBatch, keys: list[str]):
+    """(key tuple, rows) for each ``keys`` group of ``data``: groups in
+    first-occurrence order, each group's rows in arrival order, so
+    chunk boundaries and fold orders are functions of the input alone.
+    A null key is its own group; a NaN is not null (see
+    ``_nan_keys_as_null``).
 
-    pandas reads a batch's integer column that holds a null as float64,
-    which merges keys above 2**53. So a nullable integral group column
-    also crosses as a null-free copy: ``read_keys(batch)`` turns each
-    copy into an ``Int64`` array with the null mask put back, and the
-    builder groups on ``keys`` (the copies in place of their columns).
-    ``write_keys(frame, group_keys)`` writes such columns of an output
-    frame, one key tuple per row, as ``Int64``: a list of ints and None
-    would also read as float64."""
-    exact = {f.name: f"_exact_{f.name}" for f in df.schema.fields
-             if f.name in group_cols and f.nullable
-             and isinstance(f.dataType, IntegralType)}
-    sel = df.select(*group_cols, *value_cols,
-                    *(F.coalesce(c, F.lit(0)).alias(e)
-                      for c, e in exact.items()))
+    Groups by dictionary codes (null encoded as a value) in numpy:
+    pyarrow's ``Table.group_by`` numbers groups in hash order and, on
+    a nullable fixed-width key after the first, splits the null group."""
+    table = (data if isinstance(data, pa.Table)
+             else pa.Table.from_batches([data]))
+    if not table.num_rows:
+        return
+    encoded = [table[k].combine_chunks().dictionary_encode(
+        null_encoding="encode") for k in keys]
+    codes = [e.indices.to_numpy() for e in encoded]
+    group = codes[0].astype(np.int64)
+    for c, e in zip(codes[1:], encoded[1:]):
+        # dense ids of the keys so far keep the product below rows**2
+        group = (np.unique(group, return_inverse=True)[1]
+                 * len(e.dictionary) + c)
+    _uniq, first, group = np.unique(group, return_index=True,
+                                    return_inverse=True)
+    rank = np.empty_like(first)
+    rank[np.argsort(first)] = np.arange(len(first))
+    group = rank[group]  # numbered by first occurrence
+    order = np.argsort(group, kind="stable")
+    values = [e.dictionary.to_pylist() for e in encoded]
+    ends = np.cumsum(np.bincount(group))
+    for start, end in zip(np.r_[0, ends[:-1]], ends):
+        row = order[start]
+        yield (tuple(v[c[row]] for v, c in zip(values, codes)),
+               table.take(order[start:end]))
 
-    def read_keys(pdf: pd.DataFrame) -> pd.DataFrame:
-        for c, e in exact.items():
-            pdf[e] = pd.arrays.IntegerArray(pdf[e].to_numpy(),
-                                            pdf[c].isna().to_numpy())
-        return pdf
 
-    def write_keys(frame: pd.DataFrame, group_keys: list) -> pd.DataFrame:
-        for i, c in enumerate(group_cols):
-            if c in exact:
-                frame[c] = pd.array([g[i] for g in group_keys],
-                                    dtype="Int64")
-        return frame
-    return sel, [exact.get(c, c) for c in group_cols], read_keys, write_keys
+def _batch(cols: dict, schema: pa.Schema) -> pa.RecordBatch:
+    """One ``schema`` batch from ``cols`` (field name -> Python values);
+    a float NaN is written as null."""
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[f.name], f.type, from_pandas=True) for f in schema],
+        schema=schema)
 
 
 def _partial_task(df: DataFrame, group_cols: list[str],
@@ -299,33 +307,25 @@ def _partial_task(df: DataFrame, group_cols: list[str],
     value_cols = sorted(({s.value_col for s in specs}
                          | {s.weight_col for s in specs if s.weight_col})
                         - set(group_cols))  # a group col can be sketched
-    sel, keys, read_keys, write_keys = _exact_group_keys(df, group_cols,
-                                                         value_cols)
+    sel = _nan_keys_as_null(df.select(*group_cols, *value_cols), group_cols)
+    schema = _partials_schema(df, group_cols)
+    out = to_arrow_schema(schema)
     n_groups = len(group_cols)
     flush_at = _max_groups_in_flight() * len(specs)
 
-    def build_partition(batches: Iterator[pd.DataFrame]
-                        ) -> Iterator[pd.DataFrame]:
+    def build_partition(batches: Iterator[pa.RecordBatch]
+                        ) -> Iterator[pa.RecordBatch]:
         pid = task_partition_id()
         acc: dict = {}  # (group_tuple, spec_idx) -> [sketch, n_rows]
         chunk = 0
 
         def emit():
-            rows = []
-            for (gkey, si), (sk, n) in acc.items():
-                rows.append((*gkey, specs[si].name, sk.to_bytes(), n, pid,
-                             chunk))
-            return write_keys(pd.DataFrame(
-                rows, columns=[*group_cols, "sketch_name", "partial",
-                               "n_rows", "partition_id", "chunk"]),
-                [g for g, _si in acc])
+            rows = [(*gkey, specs[si].name, sk.to_bytes(), n, pid, chunk)
+                    for (gkey, si), (sk, n) in acc.items()]
+            return _batch(dict(zip(out.names, zip(*rows))), out)
 
-        for pdf in batches:
-            for gkey, sub in read_keys(pdf).groupby(keys, sort=False,
-                                                    dropna=False):
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                gkey = _norm_nan(gkey)
+        for batch in batches:
+            for gkey, rows in _key_groups(batch, group_cols):
                 # extract each distinct (value_col, tokenize, numeric)
                 # once per group — specs often share a column (e.g. a
                 # Bloom and an HLL over url)
@@ -335,12 +335,10 @@ def _partial_task(df: DataFrame, group_cols: list[str],
                     if slot is None:
                         slot = [spec.make(gkey if n_groups > 1 else gkey[0]), 0]
                         acc[(gkey, si)] = slot
-                    _feed(spec, slot[0], sub, vcache)
-                    slot[1] += len(sub)
+                    _feed(spec, slot[0], rows, vcache)
+                    slot[1] += rows.num_rows
                 # checked per GROUP, not per batch: one wide arrow
-                # batch must not blow past the memory bound (pandas
-                # groupby iteration order is first-occurrence —
-                # deterministic, so chunk boundaries are too)
+                # batch must not blow past the memory bound
                 if len(acc) >= flush_at:
                     yield emit()
                     acc.clear()
@@ -348,7 +346,7 @@ def _partial_task(df: DataFrame, group_cols: list[str],
         if acc:
             yield emit()
 
-    return sel, build_partition, _partials_schema(df, group_cols)
+    return sel, build_partition, schema
 
 
 def build_partials(df: DataFrame, group_cols: list[str],
@@ -371,7 +369,7 @@ def build_partials(df: DataFrame, group_cols: list[str],
     by (partition_id, chunk).
     """
     sel, build, schema = _partial_task(df, group_cols, specs)
-    return sel.mapInPandas(build, schema)
+    return sel.mapInArrow(build, schema)
 
 
 def _table_schema(df: DataFrame, group_cols: list[str],
@@ -392,92 +390,91 @@ def _table_schema(df: DataFrame, group_cols: list[str],
 def _table_row(keys: list[str], readout: list | None = None):
     """The ``_group_fold`` emit that writes one ``_table_schema`` row:
     group ``key`` (values of ``keys``, sketch_name last) folded into
-    ``sk`` from its input rows ``pdf``. Raw partials carry no
-    n_partials column and count one each; merged inputs sum theirs.
+    ``sk`` from its input ``rows``. Raw partials carry no n_partials
+    column and count one each; merged inputs sum theirs.
     ``readout=[(col, dtype, fn), ...]`` appends ``fn(sketch_name, sk)``
     per entry, computed right after the fold in the same task."""
-    def emit(key, sk, pdf: pd.DataFrame) -> pd.DataFrame:
-        row = {c: [v] for c, v in zip(keys, key)}
-        row.update(sketch=[sk.to_bytes()], n_rows=[int(pdf["n_rows"].sum())],
-                   n_partials=[int(pdf["n_partials"].sum())
-                               if "n_partials" in pdf else len(pdf)])
+    def emit(key, sk, rows: pa.Table) -> dict:
+        cols = {c: [v] for c, v in zip(keys, key)}
+        cols.update(sketch=[sk.to_bytes()],
+                    n_rows=[pa_compute.sum(rows["n_rows"]).as_py()],
+                    n_partials=[pa_compute.sum(rows["n_partials"]).as_py()
+                                if "n_partials" in rows.column_names
+                                else rows.num_rows])
         for col, _dtype, fn in readout or ():
-            row[col] = [fn(key[-1], sk)]
-        return pd.DataFrame(row)
+            cols[col] = [fn(key[-1], sk)]
+        return cols
     return emit
 
 
-def _group_fold(blob_col: str, emit, by=None, ascending=True, context=None):
+def _group_fold(blob_col: str, emit, schema: StructType, by=None,
+                ascending=True, context=None):
     """Per-group merge task: stable-sort the group's rows by ``by`` (the
     entry point's fold order; None keeps arrival order), fold
-    ``blob_col`` with ``fold_blobs`` and return ``emit(key, sketch,
-    sorted_rows)``. ``context(key)`` prefixes kernel merge errors."""
-    def fn(key, pdf):
+    ``blob_col`` with ``fold_blobs`` and return the ``schema`` table
+    of ``emit(key, sketch, sorted_rows)``'s columns. ``context(key)``
+    prefixes kernel merge errors."""
+    out = to_arrow_schema(schema)
+    if by:
+        asc = ascending if isinstance(ascending, list) else \
+            [ascending] * len(by)
+        order = [(c, "ascending" if a else "descending")
+                 for c, a in zip(by, asc)]
+
+    def fn(key, rows: pa.Table) -> pa.Table:
         if by:
-            pdf = pdf.sort_values(by, ascending=ascending, kind="stable")
-        sk = fold_blobs(pdf[blob_col], context(key) if context else None)
-        return emit(key, sk, pdf)
+            rows = rows.sort_by(order)
+        sk = fold_blobs(rows[blob_col].to_pylist(),
+                        context(key) if context else None)
+        return pa.Table.from_batches([_batch(emit(key, sk, rows), out)])
     return fn
 
 
 def _merge_groups(df: DataFrame, keys: list[str], schema: StructType,
                   blob_col: str, emit, by=None, ascending=True,
                   context=None) -> DataFrame:
-    """``groupBy(keys).applyInPandas`` of one ``_group_fold`` task per
+    """``groupBy(keys).applyInArrow`` of one ``_group_fold`` task per
     group — the shuffle merge shared by every merge entry point."""
-    return df.groupBy(*keys).applyInPandas(
-        _group_fold(blob_col, emit, by, ascending, context), schema)
+    fold = _group_fold(blob_col, emit, schema, by, ascending, context)
+
+    def merge(key, rows):  # no hints: pyspark infers the form from them
+        return fold(tuple(k.as_py() for k in key), rows)
+    return df.groupBy(*keys).applyInArrow(merge, schema)
 
 
 def _fold_in_task(keys: list[str], group_fold):
-    """The in-task grouped fold: gather the rows of every frame a task
+    """The in-task grouped fold: gather the rows of every batch a task
     sees per ``keys`` group, then run ``group_fold(key, rows)`` (a
-    ``_group_fold`` task) once per group. Complete exactly when all of
-    a group's rows are task-local — a single-partition input.
+    ``_group_fold`` task) once per group and yield the results as one
+    batch. Complete exactly when all of a group's rows are task-local
+    — a single-partition input.
 
-    Memory shape: the frames' rows are held once, and each group's
+    Memory shape: the batches' rows are held once, and each group's
     accumulation is freed as it is folded, so the transient is all
-    rows plus ONE group's frame."""
-    def fold_partition(frames: Iterator[pd.DataFrame]
-                       ) -> Iterator[pd.DataFrame]:
+    rows plus ONE group's table."""
+    def fold_partition(batches: Iterator[pa.RecordBatch | pa.Table]
+                       ) -> Iterator[pa.RecordBatch]:
         groups: dict = {}
-        for pdf in frames:
-            for key, sub in pdf.groupby(keys, sort=False, dropna=False):
-                if not isinstance(key, tuple):
-                    key = (key,)
-                # normalize BEFORE the dict insert: distinct NaN
-                # objects are unequal, so a null numeric group key
-                # spanning multiple Arrow batches would otherwise
-                # split into duplicate rows
-                groups.setdefault(_norm_nan(key), []).append(sub)
+        for batch in batches:
+            for key, rows in _key_groups(batch, keys):
+                groups.setdefault(key, []).append(rows)
         if groups:
-            # as object columns: the groups' frames differ in dtype
-            # where a key or read-out is null (or a frame is empty),
-            # and an integer key must not be read as float64
-            yield pd.concat([group_fold(key, pd.concat(groups.pop(key),
-                                                       ignore_index=True))
-                             .astype(object) for key in list(groups)],
-                            ignore_index=True)
+            yield from pa.concat_tables(
+                [group_fold(key, pa.concat_tables(groups.pop(key)))
+                 for key in list(groups)]).combine_chunks().to_batches()
     return fold_partition
 
 
-def _build_and_fold(build, fold):
-    """One Python operator for a single-partition input: ``fold`` (an
-    ``_fold_in_task``) consumes the partial frames ``build`` yields, in
-    the task that built them."""
-    def build_and_fold(batches: Iterator[pd.DataFrame]
-                       ) -> Iterator[pd.DataFrame]:
-        return fold(build(batches))
-    return build_and_fold
-
-
-def _fold_partials(group_cols: list[str], readout: list | None):
-    """``_fold_in_task`` over ``_partials_schema`` frames: one
-    ``_table_schema`` row per (group, spec), folded in (partition_id,
-    chunk) order like every level of the shuffle tree."""
+def _fold_partials(group_cols: list[str], readout: list | None,
+                   schema: StructType):
+    """``_fold_in_task`` over ``_partials_schema`` batches: one
+    ``_table_schema`` row (``schema``) per (group, spec), folded in
+    (partition_id, chunk) order like every level of the shuffle
+    tree."""
     keys = [*group_cols, "sketch_name"]
     return _fold_in_task(keys, _group_fold(
-        "partial", _table_row(keys, readout), by=["partition_id", "chunk"]))
+        "partial", _table_row(keys, readout), schema,
+        by=["partition_id", "chunk"]))
 
 
 def _merge_plan(partials: DataFrame, fanout) -> tuple[int | None, list]:
@@ -507,13 +504,14 @@ def _merge_tree(partials: DataFrame, group_cols: list[str], plan: list,
     level_schema = StructType(_partials_schema(partials, group_cols).fields
                               + [StructField("n_partials", LongType(), False)])
 
-    def level_row(key, sk, pdf):
+    def level_row(key, sk, rows):
         # the bucket index (last key) becomes the next level's
         # partition_id: the fold order at every level is then a pure
         # function of the tree shape, not of task scheduling
-        return (_table_row(keys)(key[:-1], sk, pdf)
-                .rename(columns={"sketch": "partial"})
-                .assign(partition_id=int(key[-1]), chunk=0))
+        cols = _table_row(keys)(key[:-1], sk, rows)
+        cols.update(partial=cols.pop("sketch"), partition_id=[key[-1]],
+                    chunk=[0])
+        return cols
 
     for buckets in plan:
         salted = partials.withColumn(
@@ -529,36 +527,31 @@ def _merge_tree(partials: DataFrame, group_cols: list[str], plan: list,
 _SHIP = "_ship"
 
 
-def _frame_bytes(frame: pd.DataFrame) -> int:
-    """Arrow bytes of ``frame``, every column counted: what its rows
-    add to the table the driver collects."""
-    return pa.Table.from_pandas(frame, preserve_index=False).nbytes
-
-
 def _within_share(build, share: int, blob_col: str):
     """``build`` with a ``_SHIP`` flag on its rows: True while the
-    frames it has yielded hold at most ``share`` Arrow bytes; past
+    batches it has yielded hold at most ``share`` Arrow bytes; past
     that, the task yields ONE overflow marker (a shipped row whose
     ``blob_col`` is empty, which no serialized state is) and flags
     the rest of its rows False. It builds its whole partition either
     way: the unshipped rows are kept for the merge tree."""
-    def bounded(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def flagged(batch: pa.RecordBatch, ship: bool) -> pa.RecordBatch:
+        return batch.append_column(_SHIP,
+                                   pa.array([ship] * batch.num_rows))
+
+    def bounded(batches: Iterator[pa.RecordBatch]
+                ) -> Iterator[pa.RecordBatch]:
         used = 0
-        for frame in build(batches):
+        for batch in build(batches):
             if used <= share:
-                used += _frame_bytes(frame)
+                used += batch.nbytes
                 if used > share:
-                    yield frame.iloc[:1].assign(**{blob_col: [b""],
-                                                   _SHIP: True})
-            yield frame.assign(**{_SHIP: used <= share})
+                    head = batch.slice(0, 1)
+                    i = head.schema.get_field_index(blob_col)
+                    field = head.schema.field(i)
+                    yield flagged(head.set_column(
+                        i, field, pa.array([b""], field.type)), True)
+            yield flagged(batch, used <= share)
     return bounded
-
-
-# Spark's integer types read as pandas' nullable ones: a column holding
-# a null stays exact, where the default float64 merges distinct keys
-# above 2**53 (and pandas' groupby floats an object column of ints too)
-_NULLABLE_INTS = {pa.int8(): pd.Int8Dtype(), pa.int16(): pd.Int16Dtype(),
-                  pa.int32(): pd.Int32Dtype(), pa.int64(): pd.Int64Dtype()}
 
 
 def _fold_once(sel: DataFrame, build, partials: DataFrame, fold,
@@ -582,8 +575,9 @@ def _fold_once(sel: DataFrame, build, partials: DataFrame, fold,
     marker. The job keeps every partial in a local checkpoint, so on
     a marker the tree merges those rows instead of building again.
     ``min_bytes=None`` keeps the fold off the driver."""
-    if nparts == 1:
-        return sel.mapInPandas(_build_and_fold(build, fold), out_schema), None
+    if nparts == 1:  # one Python operator: build, then fold in the task
+        return sel.mapInArrow(lambda batches: fold(build(batches)),
+                              out_schema), None
     spark = sel.sparkSession
     # Spark's own spark.sql.execution.arrow.localRelationThreshold: the
     # size under which the Arrow table returned is a LocalRelation
@@ -591,7 +585,7 @@ def _fold_once(sel: DataFrame, build, partials: DataFrame, fold,
     if min_bytes is None or nparts * min_bytes > budget:
         return None, partials
     share = budget // max(nparts, 1)
-    flagged = sel.mapInPandas(
+    flagged = sel.mapInArrow(
         _within_share(build, share, blob_col),
         StructType(partials.schema.fields
                    + [StructField(_SHIP, BooleanType())])
@@ -602,10 +596,8 @@ def _fold_once(sel: DataFrame, build, partials: DataFrame, fold,
         return None, flagged.filter(F.length(blob_col) > 0).drop(_SHIP)
     # every partial was shipped: the checkpoint is not needed
     flagged._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    folded = list(fold([parts.to_pandas(types_mapper=_NULLABLE_INTS.get)]))
-    return local_table(spark, pd.concat(folded or [
-        pd.DataFrame(columns=out_schema.names)], ignore_index=True),
-        out_schema), None
+    return local_table(spark, pa.Table.from_batches(
+        fold([parts]), to_arrow_schema(out_schema)), out_schema), None
 
 
 def _build_merged(sel: DataFrame, build, partials_schema, group_cols,
@@ -617,12 +609,13 @@ def _build_merged(sel: DataFrame, build, partials_schema, group_cols,
     within the byte budget); every other input takes the shuffle tree.
     All three fold in (partition_id, chunk) order, so they write the
     same bytes."""
-    partials = sel.mapInPandas(build, partials_schema)
+    partials = sel.mapInArrow(build, partials_schema)
     nparts, plan = _merge_plan(partials, fanout)
     if not plan:
+        schema = _table_schema(partials, group_cols, readout)
         merged, partials = _fold_once(
-            sel, build, partials, _fold_partials(group_cols, readout),
-            _table_schema(partials, group_cols, readout), nparts, min_bytes)
+            sel, build, partials, _fold_partials(group_cols, readout, schema),
+            schema, nparts, min_bytes)
         if merged is not None:
             return merged
     return _merge_tree(partials, group_cols, plan, readout)
@@ -717,7 +710,7 @@ def build_sketches(df: DataFrame, group_cols: list[str],
     else a multi-level salt plan bounding every merge task's fan-in
     AND input bytes. With no salt level the partials fold without a
     shuffle and read out there (``readout=``, as in ``merge_partials``):
-    a single-partition input in ONE ``mapInPandas`` task; a wider one,
+    a single-partition input in ONE ``mapInArrow`` task; a wider one,
     when its partials fit ``spark.sql.execution.arrow.localRelationThreshold``
     (checked before the job from Bloom params, and in every task), on
     the driver — then the build job runs HERE, at call time, and the
@@ -815,7 +808,7 @@ def incremental_update(sketch_table: DataFrame, new_df: DataFrame,
                                       "n_partials")))
     # deterministic merge order for the lossy kernels: base first
     # (larger n_rows), then delta. Row arrival order inside
-    # applyInPandas is shuffle-dependent, so ties on n_rows (equal
+    # applyInArrow is shuffle-dependent, so ties on n_rows (equal
     # base/delta sizes, repeated updates) need a content-based
     # secondary key — the blob bytes — to make the fold a total order
     # independent of arrival order. readout= is the same fused

@@ -29,7 +29,6 @@ import hashlib
 import json
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -165,7 +164,7 @@ class PartialCheckpoint:
             "format": "parquet",
             "counters": _partial_counters(self.read_partials()),
         }
-        (local_table(self.spark, pd.DataFrame({"value": [json.dumps(man)]}),
+        (local_table(self.spark, {"value": [json.dumps(man)]},
                      StructType([StructField("value", StringType())]))
          .coalesce(1).write.mode("overwrite").text(self.manifest_path))
         return man

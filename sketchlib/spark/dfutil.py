@@ -2,9 +2,9 @@
 
 from __future__ import annotations
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 
@@ -52,16 +52,15 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def local_table(spark, data: pd.DataFrame | pa.Table,
+def local_table(spark, data: dict | pa.Table,
                 schema: StructType) -> DataFrame:
-    """``data`` as a DataFrame built on the driver from Arrow: a
+    """``data`` (an Arrow table, or a dict of column name -> Python
+    values) as a DataFrame built on the driver from Arrow: a
     ``LocalRelation`` up to Spark's
     ``spark.sql.execution.arrow.localRelationThreshold`` (Arrow batches
     decoded in the JVM above it), so reading it starts no Python
     worker. ``createDataFrame`` over a Python list instead unpickles
     its rows in a second pool of Python workers."""
-    if isinstance(data, pd.DataFrame):
-        from pyspark.sql.pandas.types import to_arrow_schema
-        data = pa.Table.from_pandas(data, schema=to_arrow_schema(schema),
-                                    preserve_index=False, safe=False)
+    if isinstance(data, dict):
+        data = pa.Table.from_pydict(data, schema=to_arrow_schema(schema))
     return spark.createDataFrame(data, schema)

@@ -29,17 +29,18 @@ from __future__ import annotations
 import heapq
 from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from sketchlib.core.cms import CountMinSketch
-from sketchlib.spark.build import (_auto_fanout, _exact_group_keys,
-                                   _fold_in_task, _fold_once, _group_fold,
-                                   _max_groups_in_flight, _merge_groups,
-                                   _norm_nan, update_from_token_counts)
+from sketchlib.spark.build import (_auto_fanout, _batch, _fold_in_task,
+                                   _fold_once, _group_fold, _group_fields,
+                                   _key_groups, _max_groups_in_flight,
+                                   _merge_groups, _nan_keys_as_null,
+                                   update_from_token_counts)
 
 
 class SpaceSaving:
@@ -108,46 +109,42 @@ def topk_from_cms(cms: CountMinSketch, candidates,
 def _token_partials(df: DataFrame, group_cols: list[str], text_col: str,
                     capacity: int, w: int, d: int, seed: int,
                     conservative: bool, max_groups_in_flight: int):
-    """(projected input, per-partition build) of ``cms_heavy_hitters``:
-    one (cms, cands) partial row per group, flushed every
-    ``max_groups_in_flight`` groups."""
-    sel, keys, read_keys, write_keys = _exact_group_keys(df, group_cols,
-                                                         [text_col])
+    """(projected input, per-partition build, partials schema) of
+    ``cms_heavy_hitters``: one (cms, cands) partial row per group,
+    flushed every ``max_groups_in_flight`` groups."""
+    sel = _nan_keys_as_null(df.select(*group_cols, text_col), group_cols)
+    schema = StructType(_group_fields(df, group_cols) + [
+        StructField("cms", BinaryType(), False),
+        StructField("cands", ArrayType(StringType()), False),
+    ])
+    out = to_arrow_schema(schema)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def build(batches: Iterator[pa.RecordBatch]
+              ) -> Iterator[pa.RecordBatch]:
         acc: dict = {}  # gkey -> [cms, SpaceSaving]
 
         def emit():
-            rows = []
-            for gkey, (cms, ss) in acc.items():
-                # emit the ENTIRE summary (not a top-C cut — cutting by
-                # local count would reintroduce the heuristic this
-                # replaces)
-                rows.append((*gkey, cms.to_bytes(),
-                             sorted(t for t, _, _ in ss.items())))
-            return write_keys(pd.DataFrame(
-                rows, columns=[*group_cols, "cms", "cands"]), list(acc))
+            # emit the ENTIRE summary (not a top-C cut — cutting by
+            # local count would reintroduce the heuristic this replaces)
+            rows = [(*gkey, cms.to_bytes(),
+                     sorted(t for t, _, _ in ss.items()))
+                    for gkey, (cms, ss) in acc.items()]
+            return _batch(dict(zip(out.names, zip(*rows))), out)
 
-        for pdf in batches:
-            for gkey, sub in read_keys(pdf).groupby(keys, sort=False,
-                                                    dropna=False):
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                # NaN keys are unequal, so a null group would otherwise
-                # take a new slot in every Arrow batch (as in build_partials)
-                gkey = _norm_nan(gkey)
+        for batch in batches:
+            for gkey, rows in _key_groups(batch, group_cols):
                 slot = acc.get(gkey)
                 if slot is None:
                     slot = [CountMinSketch(w, d, seed, conservative=conservative),
                             SpaceSaving(capacity)]
                     acc[gkey] = slot
-                update_from_token_counts(slot[0], slot[1], sub[text_col])
+                update_from_token_counts(slot[0], slot[1], rows[text_col])
                 if len(acc) >= max_groups_in_flight:
                     yield emit()
                     acc.clear()
         if acc:
             yield emit()
-    return sel, build
+    return sel, build, schema
 
 
 def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
@@ -174,45 +171,36 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
     final merge is order-free (CMS add + candidate-set union).
 
     Plan shape: the merge shapes of ``build_sketches`` — a
-    single-partition input builds and merges in ONE ``mapInPandas``
+    single-partition input builds and merges in ONE ``mapInArrow``
     task; up to 64 partitions whose partial states fit the driver
     budget merge on the driver after one (eager) build job, returning
     a ``LocalRelation``; otherwise the partial states shuffle into a
     grouped merge.
     """
-    sel, build = _token_partials(df, group_cols, text_col, capacity, w, d,
-                                 seed, conservative, _max_groups_in_flight())
-    group_fields = [f for f in sel.schema.fields if f.name in group_cols]
-    out_schema = StructType(group_fields + [
+    sel, build, partials_schema = _token_partials(
+        df, group_cols, text_col, capacity, w, d, seed, conservative,
+        _max_groups_in_flight())
+    out_schema = StructType(_group_fields(df, group_cols) + [
         StructField("token", StringType(), False),
         StructField("est_cnt", LongType(), False),
         StructField("rnk", IntegerType(), False),
     ])
 
-    def topk_rows(key, cms, pdf: pd.DataFrame) -> pd.DataFrame:
+    def topk_rows(key, cms, rows: pa.Table) -> dict:
         toks, ests = topk_from_cms(
-            cms, {t for lst in pdf["cands"] for t in lst}, k)
-        if not toks:
-            return pd.DataFrame(columns=[*group_cols, "token", "est_cnt", "rnk"])
-        return pd.DataFrame({
-            **{c: [key[i]] * len(toks) for i, c in enumerate(group_cols)},
-            "token": toks,
-            "est_cnt": ests,
-            "rnk": np.arange(1, len(toks) + 1, dtype=np.int32),
-        })
+            cms, {t for lst in rows["cands"].to_pylist() for t in lst}, k)
+        return {**{c: [key[i]] * len(toks) for i, c in enumerate(group_cols)},
+                "token": toks, "est_cnt": ests,
+                "rnk": list(range(1, len(toks) + 1))}
 
-    partials_schema = StructType(group_fields + [
-        StructField("cms", BinaryType(), False),
-        StructField("cands", ArrayType(StringType()), False),
-    ])
     # CMS merge is a cell-wise sum: any order is bitwise-identical, so
     # the partial tables fold in arrival order
-    partials = sel.mapInPandas(build, partials_schema)
+    partials = sel.mapInArrow(build, partials_schema)
     nparts = sel.rdd.getNumPartitions()
     if _auto_fanout(nparts) is None:
         top, partials = _fold_once(sel, build, partials, _fold_in_task(
-            group_cols, _group_fold("cms", topk_rows)), out_schema, nparts,
-            blob_col="cms")
+            group_cols, _group_fold("cms", topk_rows, out_schema)),
+            out_schema, nparts, blob_col="cms")
         if top is not None:
             return top
     return _merge_groups(partials, group_cols, out_schema, "cms", topk_rows)

@@ -28,8 +28,8 @@ Scale notes (100 TB):
   input partitions the old unbounded driver-side OR loop was a
   memory/CPU funnel; the tree bounds every merge task's fan-in and
   the collect at one merged blob.
-- The prune is one broadcast of the blob + an Arrow-batched
-  ``mapInPandas`` scan; no per-row Python. For a fact table that is
+- The prune is one broadcast of the blob + an Arrow-batched pandas
+  UDF over the key column; no per-row Python. For a fact table that is
   scanned anyway, the prune is bandwidth-bound, and every pruned row is
   a row that skips the join shuffle.
 """
@@ -39,8 +39,11 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from sketchlib.core.bloom import BloomFilter
 from sketchlib.core.params import bloom_params
@@ -62,7 +65,7 @@ def _key_bloom_merged_df(df: DataFrame, key_col: str, p: float,
     projection to unpersist after collecting (None when the caller
     supplied ``n_keys`` and no sizing count was needed).
 
-    Plan shape: pruned scan -> mapInPandas partial filters (one sparse
+    Plan shape: pruned scan -> mapInArrow partial filters (one sparse
     blob per input partition, merge_partials-shaped rows) -> one
     (sketch, n_rows) row, merged as ``build_sketches`` merges
     (fanout="auto"): in the build task for one partition, on the
@@ -70,7 +73,7 @@ def _key_bloom_merged_df(df: DataFrame, key_col: str, p: float,
     through the salted hierarchical merge tree. No raw key ever
     shuffles.
     """
-    from sketchlib.spark.build import _build_merged
+    from sketchlib.spark.build import _batch, _build_merged, task_partition_id
 
     keyed = _as_key(df, key_col, _KEY).select(_KEY).dropna()
     unpersist = None
@@ -87,22 +90,24 @@ def _key_bloom_merged_df(df: DataFrame, key_col: str, p: float,
         n_keys = keyed.count()
     m, k = bloom_params(max(int(n_keys), 1), p)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sketchlib.spark.build import task_partition_id
+    schema = StructType.fromDDL(
+        "g int, sketch_name string, partial binary, n_rows long, "
+        "partition_id int, chunk int")
+    out = to_arrow_schema(schema)
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         pid = task_partition_id()
         bf = BloomFilter(m, k, seed)
         n = 0
         for b in batches:
-            if len(b):
-                bf.update_batch(b[_KEY].to_numpy())
-                n += len(b)
+            if b.num_rows:
+                bf.update_batch(b.column(_KEY))
+                n += b.num_rows
         if n:
-            yield pd.DataFrame({"g": [1], "sketch_name": ["key_bloom"],
-                                "partial": [bf.to_bytes()], "n_rows": [n],
-                                "partition_id": [pid], "chunk": [0]})
+            yield _batch({"g": [1], "sketch_name": ["key_bloom"],
+                          "partial": [bf.to_bytes()], "n_rows": [n],
+                          "partition_id": [pid], "chunk": [0]}, out)
 
-    schema = ("g int, sketch_name string, partial binary, "
-              "n_rows long, partition_id int, chunk int")
     return (_build_merged(keyed, fn, schema, ["g"], "auto", None, m // 8),
             unpersist)
 

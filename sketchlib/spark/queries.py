@@ -264,7 +264,7 @@ def q_embedding_spectrum_exact(spark, sf_dir):
     schema = StructType.fromDDL("rnk int, sq_singular double")
     row = emb.first()  # dim probe only; schema says array<float>, not len
     if row is None:
-        return local_table(spark, pd.DataFrame(columns=schema.names), schema)
+        return local_table(spark, {c: [] for c in schema.names}, schema)
     dim = len(row["embedding"])
 
     def gram(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -287,9 +287,9 @@ def q_embedding_spectrum_exact(spark, sf_dir):
     for r in summed:
         g[r["pos"]] = r["v"]
     evals = np.linalg.eigvalsh(g.reshape(dim, dim))[::-1][:5]
-    return local_table(spark, pd.DataFrame({
+    return local_table(spark, {
         "rnk": range(1, len(evals) + 1),
-        "sq_singular": [round(float(v), 2) for v in evals]}), schema)
+        "sq_singular": [round(float(v), 2) for v in evals]}, schema)
 
 
 def _embedding_dim(emb):

@@ -18,6 +18,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (BinaryType, LongType, StringType, StructField,
@@ -41,10 +42,11 @@ def _restore_feed_update(state, specs, gkey, pdfs):
         sketches = [spec.make(gkey) for spec in specs]
         n_rows = 0
     for pdf in pdfs:
+        rows = pa.Table.from_pandas(pdf, preserve_index=False)
         vcache: dict = {}
         for si, spec in enumerate(specs):
-            _feed(spec, sketches[si], pdf, vcache)
-        n_rows += len(pdf)
+            _feed(spec, sketches[si], rows, vcache)
+        n_rows += rows.num_rows
     blobs = [sk.to_bytes() for sk in sketches]
     state.update(tuple(blobs) + (n_rows,))
     return blobs, n_rows

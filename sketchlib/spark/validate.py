@@ -10,7 +10,7 @@ designed p — plus the false-negative check the reference lacks
 Architecture notes vs the reference:
 - The reference used a Spark accumulator in ``foreach``
   (main.py:17-24,172-176), which double-counts on task retry (wart
-  W5). We emit per-partition partial counts from ``mapInPandas`` and
+  W5). We emit per-partition partial counts from ``mapInArrow`` and
   sum them with a deterministic ``groupBy().sum()`` — exactly-once.
 - The filters travel as a broadcast variable (the DataFrame-era
   version of the Hadoop side-file read, ValidationMapper.java:36-52).
@@ -21,14 +21,16 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import LongType, StructField, StructType
 
 from sketchlib.core.serde import sketch_from_bytes
 from sketchlib.spark import sqlfuncs
-from sketchlib.spark.build import _norm_nan
+from sketchlib.spark.build import (_batch, _group_fields, _key_groups,
+                                   _nan_keys_as_null)
 
 
 def collect_sketches(merged: DataFrame, group_cols: list[str],
@@ -93,27 +95,27 @@ def bloom_validate(df: DataFrame, filters: dict, group_cols: list[str],
             "(or raise the budget deliberately)")
     bc = df.sparkSession.sparkContext.broadcast(blobs)
     single = len(group_cols) == 1
-    sel = df.select(*group_cols, value_col)
-    group_fields = [f for f in sel.schema.fields if f.name in group_cols]
-    counts_schema = StructType(group_fields + [
+    sel = _nan_keys_as_null(df.select(*group_cols, value_col), group_cols)
+    counts_schema = StructType(_group_fields(df, group_cols) + [
         StructField("own", LongType(), False),
         StructField("fn", LongType(), False),
         StructField("probes", LongType(), False),
         StructField("fp", LongType(), False),
     ])
+    out = to_arrow_schema(counts_schema)
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def probe(batches: Iterator[pa.RecordBatch]
+              ) -> Iterator[pa.RecordBatch]:
         from sketchlib.core import hashing
         local = {k: sketch_from_bytes(b) for k, b in bc.value.items()}
         # per-partition partial counters keyed by the *filter's* group
         agg = {k: [0, 0, 0, 0] for k in local}  # own, fn, probes, fp
         seeds = sorted({bf.seed for bf in local.values()})
-        for pdf in batches:
-            for gkey, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                if isinstance(gkey, tuple) and single:
+        for batch in batches:
+            for gkey, rows in _key_groups(batch, group_cols):
+                if single:
                     gkey = gkey[0]
-                gkey = _norm_nan(gkey)
-                vals = sub[value_col].dropna()
+                vals = rows[value_col].drop_null()
                 if not len(vals):
                     continue
                 # hash once per seed, not once per filter: the murmur
@@ -129,16 +131,12 @@ def bloom_validate(df: DataFrame, filters: dict, group_cols: list[str],
                     else:
                         slot[2] += len(vals)
                         slot[3] += hits
-        rows = []
-        for fkey, v in agg.items():
-            if any(v):
-                kt = fkey if isinstance(fkey, tuple) else (fkey,)
-                rows.append((*kt, *v))
-        if rows:
-            yield pd.DataFrame(rows, columns=[*group_cols, "own", "fn",
-                                              "probes", "fp"])
+        counts = [(*(fkey if isinstance(fkey, tuple) else (fkey,)), *v)
+                  for fkey, v in agg.items() if any(v)]
+        if counts:
+            yield _batch(dict(zip(out.names, zip(*counts))), out)
 
-    partials = sel.mapInPandas(probe, counts_schema)
+    partials = sel.mapInArrow(probe, counts_schema)
     return (partials.groupBy(*group_cols)
             .agg(F.sum("own").alias("n_keys"),
                  F.sum("fn").alias("false_negatives"),
@@ -205,9 +203,9 @@ def accuracy_table(df: DataFrame, group_cols: list[str], specs,
     out = []
 
     def _join_groups(left, right):
-        """Null-safe group join: the build groups with dropna=False,
-        so null-key groups are first-class and must not vanish from
-        the accuracy table through a null-unsafe equi-join."""
+        """Null-safe group join: the build keeps a null-key group, which
+        must not vanish from the accuracy table through a null-unsafe
+        equi-join."""
         r = right
         for c in group_cols:
             r = r.withColumnRenamed(c, f"__g_{c}")

@@ -3,6 +3,7 @@ on heavy tails, merge laws, serde, spec/build integration."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from sketchlib.core.cms import CountMinSketch
@@ -125,10 +126,10 @@ def test_weighted_feed_negative_ok_for_countsketch():
     spec = SketchSpec("cs", "countsketch", "k", {"w": 4096, "d": 5},
                       weight_col="w")
     sk = spec.make("g")
-    _feed(spec, sk, pd.DataFrame({"k": ["a", "b", "a"], "w": [10, 4, -3]}))
+    _feed(spec, sk, pa.table({"k": ["a", "b", "a"], "w": [10, 4, -3]}))
     assert sk.query_batch(["a"])[0] == 7
     cms_spec = SketchSpec("c", "cms", "k", {"w": 64, "d": 3},
                           weight_col="w")
     with pytest.raises(ValueError, match="countsketch"):
         _feed(cms_spec, cms_spec.make("g"),
-              pd.DataFrame({"k": ["a"], "w": [-1]}))
+              pa.table({"k": ["a"], "w": [-1]}))

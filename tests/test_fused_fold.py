@@ -2,36 +2,41 @@
 
 A build whose input is one partition has every partial of a group in
 one task, so ``build_sketches``, ``cms_heavy_hitters`` and the key
-Bloom of ``build_key_bloom`` fold there: one ``mapInPandas``, no
+Bloom of ``build_key_bloom`` fold there: one ``mapInArrow``, no
 Exchange. A wider build with no salt level whose partials fit the
 driver budget (Spark's Arrow local-relation threshold) runs one build
 job, folds on the driver and returns a LocalRelation. These tests hold
 those plan shapes (at most one Python operator per stage, across the
 benchmarked sketch queries, three more catalog read-outs and the
 builds they run eagerly), the byte budget, and that both folds write
-the same bytes as the shuffle merge.
+the same bytes as the shuffle merge. Every build, fold and merge runs
+through Arrow operators: no plan holds a pandas one.
 """
 
 import math
 import os
-import warnings
 
-import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyspark.sql.functions as F
 import pytest
 
 from perfbench.workloads import QUERY_NAMES
-from sketchlib.spark import build, heavyhitters, joinprune, queries, sqlfuncs
-from sketchlib.spark.build import build_partials, build_sketches, merge_partials
+from sketchlib.spark import (build, heavyhitters, joinprune, queries, sqlfuncs,
+                             validate)
+from sketchlib.spark.build import (build_partials, build_sketches,
+                                   incremental_update, merge_partials,
+                                   rollup_sketches)
 from sketchlib.spark.specs import SketchSpec
 from tools.check_contract import SF_DIR
 
 SF = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 
 PYTHON_NODES = {"MapInPandas", "MapInArrow", "FlatMapGroupsInPandas",
-                "FlatMapCoGroupsInPandas", "ArrowEvalPython",
+                "FlatMapGroupsInArrow", "FlatMapCoGroupsInPandas",
+                "FlatMapCoGroupsInArrow", "ArrowEvalPython",
                 "BatchEvalPython", "AggregateInPandas", "WindowInPandas"}
+PANDAS_NODES = {"MapInPandas", "FlatMapGroupsInPandas"}
 
 
 def _children(node):
@@ -115,12 +120,12 @@ def test_countsketch_token_freq_reads_out_in_the_fold(spark):
     fold reads every candidate out: the query's whole executed plan
     holds ONE Python operator, with no read-out UDF after the build."""
     out = queries.q_countsketch_token_freq(spark, SF)
-    assert sum(python_stages(out), []) == ["MapInPandas"]
+    assert sum(python_stages(out), []) == ["MapInArrow"]
 
 
 def test_single_partition_builds_are_one_python_operator(spark, pages_tiny):
     """One input partition: build, fold and read-out are ONE
-    mapInPandas with no Exchange, for all three partial builders."""
+    mapInArrow with no Exchange, for all three partial builders."""
     assert pages_tiny.rdd.getNumPartitions() == 1
     plans = {
         "build_sketches": build_sketches(
@@ -132,7 +137,7 @@ def test_single_partition_builds_are_one_python_operator(spark, pages_tiny):
             pages_tiny, "url", 0.01, 10000, 0)[0],
     }
     for name, df in plans.items():
-        assert python_stages(df) == [["MapInPandas"]], name
+        assert python_stages(df) == [["MapInArrow"]], name
 
 
 ALL_KINDS = [
@@ -163,7 +168,7 @@ def _fold_vs_tree(df, keys, readout=None, parts=1):
     split = df.coalesce(1) if parts == 1 else df.repartition(parts)
     folded = build_sketches(split, keys, ALL_KINDS, readout=readout)
     if parts == 1:
-        assert python_stages(folded) == [["MapInPandas"]]
+        assert python_stages(folded) == [["MapInArrow"]]
     else:
         assert _is_local(folded)
     shuffled = merge_partials(build_partials(split, keys, ALL_KINDS), keys,
@@ -265,7 +270,7 @@ def test_under_budget_build_is_one_job(spark, pages_tiny_multifile,
     assert len(jobs) == 1, jobs
     assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
     ((partials, _table),) = arrow_collects
-    assert python_stages(partials, run=False) == [["MapInPandas"]]
+    assert python_stages(partials, run=False) == [["MapInArrow"]]
     assert _is_local(out)
     jobs, rows = _jobs(sc, "driver-fold-collect", out.collect)
     assert jobs == [] and rows
@@ -294,9 +299,9 @@ def test_over_budget_partials_fall_back_to_the_tree(pages_tiny_multifile,
     ((_partials, table),) = arrow_collects
     assert b"" in table.column("partial").to_pylist()
     assert _shipped_partials(table).nbytes <= budget
-    # the tree reads the partials the build job kept: no MapInPandas
+    # the tree reads the partials the build job kept: no MapInArrow
     assert [s for s in python_stages(out) if s] == \
-        [["FlatMapGroupsInPandas"]]
+        [["FlatMapGroupsInArrow"]]
     tree = merge_partials(build_partials(df, ["lang"], ALL_KINDS), ["lang"])
     assert _table(out, ["lang"]) == _table(tree, ["lang"])
 
@@ -352,20 +357,57 @@ def _bigint_keys(spark, parts):
         F.col("id").cast("string").alias("url")), big
 
 
+def _input_classes(spark, parts):
+    """(frame keyed by ``k`` with values in ``url``, {key: rows}) per
+    input class: bigint keys above 2**53 next to a null key; a double
+    key holding NaN and null, which is ONE null group; an empty input;
+    an all-null value column."""
+    df, big = _bigint_keys(spark, parts)
+    ids = spark.range(0, 300, numPartitions=parts)
+    url = F.col("id").cast("string").alias("url")
+    third = F.col("id") % 3
+    return {
+        "bigint": (df, {big + 1: 100, big + 2: 100, None: 100}),
+        "nan_null": (ids.select(
+            F.when(third == 0, F.lit(None).cast("double"))
+            .when(third == 1, F.lit(math.nan))
+            .otherwise(F.lit(2.0)).alias("k"), url), {None: 200, 2.0: 100}),
+        "empty": (df.filter(F.col("k") < 0), {}),
+        "all_null_values": (ids.select(
+            (F.col("id") % 2).alias("k"),
+            F.lit(None).cast("string").alias("url")), {0: 150, 1: 150}),
+    }
+
+
 @pytest.mark.parametrize("parts", [1, 4, 100])
 def test_nullable_bigint_group_keys_stay_exact(spark, parts):
-    """Keys above 2**53 sharing Arrow batches with a null key stay
-    exact on the in-task (1 partition), driver (4) and tree (100)
-    paths: pandas reads such a bigint column as float64, which would
-    round the first key and could merge distinct keys."""
-    df, big = _bigint_keys(spark, parts)
-    out = build_sketches(df, ["k"], [SketchSpec("h", "hll", "url", {"b": 10})])
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert {1: "MapInPandas" in plan and "Exchange" not in plan,
-            4: _is_local(out),
-            100: "FlatMapGroupsInPandas" in plan}[parts], plan
-    assert {r["k"]: r["n_rows"] for r in out.collect()} == \
-        {big + 1: 100, big + 2: 100, None: 100}
+    """Each input class through the in-task (1 partition), driver (4)
+    and tree (100) paths of ``build_sketches``, through
+    ``cms_heavy_hitters`` and through ``bloom_validate``: keys above
+    2**53 sharing Arrow batches with a null key stay exact (a float64
+    reading would round the first and could merge distinct keys), a
+    NaN key counts in the null group, and an empty input or an
+    all-null value column builds without error."""
+    specs = [SketchSpec("h", "hll", "url", {"b": 10}),
+             SketchSpec("b", "bloom", "url", {"m": 1 << 12, "k": 3})]
+    for name, (df, want) in _input_classes(spark, parts).items():
+        out = build_sketches(df, ["k"], specs)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert {1: "MapInArrow" in plan and "Exchange" not in plan,
+                4: _is_local(out),
+                100: "FlatMapGroupsInArrow" in plan}[parts], (name, plan)
+        rows = out.collect()
+        assert {r["k"]: r["n_rows"] for r in rows} == want, name
+        # keys with a value: the heavy hitters' groups, and the rows
+        # bloom_validate probes against each group's own filter
+        valued = {} if name == "all_null_values" else want
+        top = heavyhitters.cms_heavy_hitters(df, ["k"], "url", k=3).collect()
+        assert {r["k"] for r in top} == set(valued), name
+        filters = validate.collect_sketches(out, ["k"], "b")
+        counts = validate.bloom_validate(df, filters, ["k"], "url",
+                                         0.01).collect()
+        assert {r["k"]: r["n_keys"] for r in counts} == valued, name
+        assert all(r["false_negatives"] == 0 for r in counts), name
 
 
 @pytest.mark.parametrize("parts", [1, 4])
@@ -377,12 +419,11 @@ def test_heavy_hitters_keep_nullable_bigint_group_keys_exact(spark, parts):
     assert {r["k"] for r in out.collect()} == {big + 1, big + 2, None}
 
 
-def test_folds_need_no_dtype_guess_from_all_na_frames(spark, pages_kinds):
-    """A null group key next to an all-null read-out column: neither
-    the in-task fold (run here, in-process) nor the driver fold
-    concatenates frames whose result dtype pandas would derive from
-    their all-NA entries (a rule pandas warns it will change), and
-    both write the shuffle tree's bytes."""
+def test_folds_keep_a_null_key_next_to_an_all_null_readout(spark,
+                                                           pages_kinds):
+    """A null group key next to an all-null read-out column: the
+    in-task fold (run here, in-process, over the build's Arrow batches)
+    and the driver fold both write the shuffle tree's bytes."""
     keys, cols = ["g"], ["none"]
     readout = [("none", "double", lambda name, sk: None)]
 
@@ -391,17 +432,48 @@ def test_folds_need_no_dtype_guess_from_all_na_frames(spark, pages_kinds):
                                      keys, readout=readout), keys, cols)
     one, four = pages_kinds.coalesce(1), pages_kinds.repartition(4)
     sel, build_fn, _schema = build._partial_task(one, keys, ALL_KINDS)
-    batch = sel.toPandas()
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", FutureWarning)
-        in_task = pd.concat(build._fold_partials(keys, readout)(
-            build_fn(iter([batch]))))
-        driver = build_sketches(four, keys, ALL_KINDS, readout=readout)
+    fold = build._fold_partials(keys, readout,
+                                build._table_schema(one, keys, readout))
+    in_task = pa.Table.from_batches(
+        fold(build_fn(iter(sel.toArrow().to_batches()))))
+    driver = build_sketches(four, keys, ALL_KINDS, readout=readout)
     assert _is_local(driver)
     assert _table(driver, keys, cols) == tree(four)
-    assert {(str(r.g), r.sketch_name): (r.sketch, r.n_rows, r.n_partials,
-                                         repr(r.none))
-            for r in in_task.itertuples()} == tree(one)
+    assert {(str(r["g"]), r["sketch_name"]): (r["sketch"], r["n_rows"],
+                                              r["n_partials"],
+                                              repr(r["none"]))
+            for r in in_task.to_pylist()} == tree(one)
+
+
+@pytest.mark.parametrize("parts", [1, 4, 100])
+def test_no_build_plan_holds_a_pandas_operator(spark, pages_tiny,
+                                               monkeypatch, arrow_collects,
+                                               parts):
+    """Every build, fold and merge entry point runs through Arrow
+    operators (``mapInArrow``, ``applyInArrow``) on each merge path:
+    none of its executed plans, the driver fold's build jobs included,
+    holds a ``mapInPandas`` or ``applyInPandas``."""
+    df = (pages_tiny.coalesce(1) if parts == 1
+          else pages_tiny.repartition(parts))
+    specs = [SketchSpec("b", "bloom", "url", {"m": 1 << 12, "k": 3}),
+             SketchSpec("h", "hll", "url", {"b": 8})]
+    key_blooms = _record(monkeypatch, joinprune, "_key_bloom_merged_df",
+                         pick=lambda result: result[0])
+    table = build_sketches(df, ["lang"], specs)
+    filters = validate.collect_sketches(table, ["lang"], "b")
+    joinprune.build_key_bloom(df, "url", n_keys=10000)
+    plans = [table, merge_partials(build_partials(df, ["lang"], specs),
+                                   ["lang"]),
+             rollup_sketches(table, ["lang"], []),
+             incremental_update(table, df, ["lang"], specs),
+             heavyhitters.cms_heavy_hitters(df, ["lang"], "text", k=3),
+             validate.bloom_validate(df, filters, ["lang"], "url", 0.01),
+             *key_blooms]
+    ops = [set(sum(python_stages(out), [])) for out in plans]
+    ops += [set(sum(python_stages(built, run=False), []))
+            for built, _table in arrow_collects]
+    assert all(not found & PANDAS_NODES for found in ops), ops
+    assert set().union(*ops) & {"MapInArrow", "FlatMapGroupsInArrow"}
 
 
 def test_bloom_over_budget_goes_straight_to_the_tree(spark,
@@ -418,7 +490,7 @@ def test_bloom_over_budget_goes_straight_to_the_tree(spark,
         spark.sparkContext, "bloom-plan-time",
         lambda: joinprune._key_bloom_merged_df(df, "url", 0.01, 10 ** 6, 0))
     assert jobs == [] and arrow_collects == []
-    assert "FlatMapGroupsInPandas" in \
+    assert "FlatMapGroupsInArrow" in \
         merged._jdf.queryExecution().executedPlan().toString()
     (row,) = merged.collect()
     assert bytes(row["sketch"]) == joinprune.build_key_bloom(
@@ -512,7 +584,7 @@ def test_fd_builds_fold_in_workers(spark):
            .select(F.lit(1).alias("g"), "embedding").repartition(4))
     spec = [SketchSpec("f", "fd", "embedding", {"l": 32})]
     out = build_sketches(emb, ["g"], spec)
-    assert "FlatMapGroupsInPandas" in \
+    assert "FlatMapGroupsInArrow" in \
         out._jdf.queryExecution().executedPlan().toString()
     tree = merge_partials(build_partials(emb, ["g"], spec), ["g"])
     assert _table(out, ["g"]) == _table(tree, ["g"])

@@ -1,7 +1,7 @@
 """Scale-true CMS heavy hitters vs exact token counts."""
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
@@ -127,7 +127,7 @@ def test_heavy_hitters_no_token_shuffle(spark, pages_tiny,
         return df._jdf.queryExecution().executedPlan().toString()
 
     one = plan(cms_heavy_hitters(pages_tiny, ["lang"], "text", k=5))
-    assert one.count("Exchange") == 0 and "MapInPandas" in one, one
+    assert one.count("Exchange") == 0 and "MapInArrow" in one, one
     four = plan(cms_heavy_hitters(pages_tiny_multifile, ["lang"], "text", k=5))
     assert four.startswith("LocalTableScan"), four
     ((build, _table),) = arrow_collects
@@ -167,16 +167,16 @@ def test_null_group_key_one_partial_per_partition(spark):
              " ".join(["hot"] * (i % 5 + 1) + [f"t{i % 7}"]))
             for i in range(200)]
     df = spark.createDataFrame(rows, "g int, text string")
-    sel, build = _token_partials(df, ["g"], "text", 256, 16384, 5, 0, True,
-                                 8192)
-    # the partition's Arrow batches as the build sees them: frames of
-    # 10 rows each, the nullable int key as float64 with NaN for null
-    pdf = sel.toPandas()
-    assert pdf["g"].dtype == "float64"
-    partials = pd.concat(build(pdf.iloc[i:i + 10].copy()
-                               for i in range(0, len(pdf), 10)))
-    assert len(partials) == 4  # groups 0, 1, 2 and null
-    assert partials["g"].isna().sum() == 1
+    sel, build, _schema = _token_partials(df, ["g"], "text", 256, 16384, 5,
+                                          0, True, 8192)
+    # the partition's Arrow batches as the build sees them: 10 rows
+    # each, the nullable int key an int32 column with nulls
+    table = sel.toArrow()
+    assert pa.types.is_int32(table.schema.field("g").type)
+    partials = pa.Table.from_batches(list(build(iter(
+        table.to_batches(max_chunksize=10)))))
+    assert partials.num_rows == 4  # groups 0, 1, 2 and null
+    assert partials["g"].null_count == 1
 
     def run(d):
         return sorted(((r["g"] is None, r["g"] or 0), r["token"],

@@ -96,7 +96,7 @@ def test_build_collects_one_blob_at_1000_partitions(spark):
     # pre-merge levels (plan [64, 16, 4] at 1024 partials + final)
     plan = merged._jdf.queryExecution().executedPlan().toString() \
         .split("Initial Plan")[0]  # AQE prints final + initial sections
-    assert plan.count("FlatMapGroupsInPandas") == 4, plan
+    assert plan.count("FlatMapGroupsInArrow") == 4, plan
     # and the tree-merged filter answers membership exactly like a
     # single-partition build (bitwise: OR is order-independent)
     bf = build_key_bloom(dim, "d_key", p=0.01)

@@ -301,7 +301,7 @@ class TestRound2ReviewFixes:
         assert got == 0.25  # NULLs in denominator, like the SQL CASE
 
     def test_weighted_feed_rejects_negative_and_fractional(self):
-        import pandas as pd
+        import pyarrow as pa
         import pytest
         from sketchlib.spark.build import _feed
         from sketchlib.spark.specs import SketchSpec
@@ -310,7 +310,7 @@ class TestRound2ReviewFixes:
         for bad, msg in (([-1, 2], "countsketch"), ([0.5, 1], "integral")):
             sk = spec.make("g")
             with pytest.raises(ValueError, match=msg):
-                _feed(spec, sk, pd.DataFrame({"k": ["a", "b"], "w": bad}))
+                _feed(spec, sk, pa.table({"k": ["a", "b"], "w": bad}))
 
 
 class TestRound2ReviewFixes2:

@@ -219,11 +219,11 @@ class TestWeightedSpec:
     def test_weighted_cms_matches_manual(self):
         """weight_col through _feed == manual weighted update; null
         weights drop rows."""
-        import pandas as pd
+        import pyarrow as pa
         from sketchlib.spark.specs import SketchSpec
         from sketchlib.spark.build import _feed
-        sub = pd.DataFrame({"k": ["a", "b", "a", "c", None],
-                            "w": [3, 5, 2, None, 9]})
+        sub = pa.table({"k": ["a", "b", "a", "c", None],
+                        "w": [3, 5, 2, None, 9]})
         spec = SketchSpec("c", "cms", "k", {"w": 256, "d": 3},
                           weight_col="w")
         got = spec.make("g")

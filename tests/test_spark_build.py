@@ -120,7 +120,7 @@ def test_merge_topology_invariance(spark, pages):
 
 def test_partials_shuffle_only_sketch_bytes(spark, pages_tiny):
     """The physical plan must not shuffle raw rows: partials are built
-    from the scan (no Exchange before mapInPandas)."""
+    from the scan (no Exchange before mapInArrow)."""
     partials = build_partials(pages_tiny, ["lang"],
                               [SketchSpec("h", "hll", "url", {"b": 8})])
     plan = partials._jdf.queryExecution().executedPlan().toString()
@@ -145,14 +145,14 @@ def test_auto_fanout_multi_level_on_wide_input(spark, pages_tiny):
                         [SketchSpec("h", "hll", "url", {"b": 8})])
     plan = df._jdf.queryExecution().executedPlan().toString()
     # auto plan at 100 partials: [7, 2] salt levels + final fold
-    assert plan.count("FlatMapGroupsInPandas") == 3, plan
+    assert plan.count("FlatMapGroupsInArrow") == 3, plan
     narrow = build_sketches(pages_tiny, ["lang"],
                             [SketchSpec("h", "hll", "url", {"b": 8})])
     plan_n = narrow._jdf.queryExecution().executedPlan().toString()
-    # single-partition input: build and fold run in ONE mapInPandas
+    # single-partition input: build and fold run in ONE mapInArrow
     # task — no groupBy stage, no Exchange at all
-    assert plan_n.count("FlatMapGroupsInPandas") == 0, plan_n
-    assert plan_n.count("MapInPandas") == 1, plan_n
+    assert plan_n.count("FlatMapGroupsInArrow") == 0, plan_n
+    assert plan_n.count("MapInArrow") == 1, plan_n
     assert "Exchange" not in plan_n, plan_n
     # results identical either way (lattice merge)
     a = {(r["lang"]): bytes(r["sketch"]) for r in df.collect()}
@@ -261,12 +261,12 @@ def test_build_sketches_local_bitwise_matches_distributed(pages_tiny,
     built = build_sketches(d, ["lang"], specs)
     plan = built._jdf.queryExecution().executedPlan().toString()
     if narrow:
-        assert plan.count("MapInPandas") == 1, plan
-        assert "FlatMapGroupsInPandas" not in plan, plan
+        assert plan.count("MapInArrow") == 1, plan
+        assert "FlatMapGroupsInArrow" not in plan, plan
     else:
         assert plan.startswith("LocalTableScan"), plan
     tree = merge_partials(build_partials(d, ["lang"], specs), ["lang"])
-    assert "FlatMapGroupsInPandas" in \
+    assert "FlatMapGroupsInArrow" in \
         tree._jdf.queryExecution().executedPlan().toString()
     dist = {(r["lang"], r["sketch_name"]): bytes(r["sketch"])
             for r in tree.collect()}
@@ -289,7 +289,7 @@ def test_build_sketches_local_equals_build_sketches_on_wide_input(
     d = pages_tiny.repartition(100).withColumn(
         "html_len", F.length("html").cast("double"))
     built = build_sketches(d, ["lang"], specs)
-    assert "FlatMapGroupsInPandas" in \
+    assert "FlatMapGroupsInArrow" in \
         built._jdf.queryExecution().executedPlan().toString()
     dist = {(r["lang"], r["sketch_name"]): bytes(r["sketch"])
             for r in built.collect()}

@@ -26,9 +26,10 @@ dead branch inside a reached def is invisible to it. The trace mode runs
 code under ``sys.settrace`` and lists every statement of the traced
 modules that never ran. Spark runs Python operators in worker
 processes, which a tracer in this process cannot see, so every
-``mapInPandas`` / ``applyInPandas`` call made while the code runs is
-recorded with its input DataFrame and replayed here, under the tracer,
-over that input's Arrow batches (one partition holding every batch).
+``mapInPandas`` / ``mapInArrow`` / ``applyInPandas`` / ``applyInArrow``
+call made while the code runs is recorded with its input DataFrame and
+replayed here, under the tracer, over that input's Arrow batches (one
+partition holding every batch; pandas frames for the pandas forms).
 Refusal code is left out: every ``raise`` statement (so a block whose
 body only raises) and every ``except`` handler (the quarantine paths).
 ``pandas_udf`` bodies (the SQL read-out functions) are not replayed.
@@ -175,22 +176,30 @@ def _frames(df) -> list:
             for b in df.toArrow().to_batches()]
 
 
+def _arrow_groups(table, keys: list[str]):
+    """(key scalars, rows) per ``keys`` group of an Arrow table, as
+    ``applyInArrow`` hands them to its function."""
+    import pyarrow as pa
+    from sketchlib.spark.build import _key_groups
+    types = [table.schema.field(k).type for k in keys]
+    for key, rows in _key_groups(table, keys):
+        yield tuple(pa.scalar(v, t) for v, t in zip(key, types)), rows
+
+
 class _Recorder:
-    """Records every ``mapInPandas`` / ``applyInPandas`` call made while
-    active, then replays the recorded functions in this process."""
+    """Records every ``mapInPandas`` / ``mapInArrow`` / ``applyInPandas``
+    / ``applyInArrow`` call made while active, then replays the
+    recorded functions in this process."""
 
     def __enter__(self):
         from pyspark.sql.classic.dataframe import DataFrame
         from pyspark.sql.group import GroupedData
         self.calls = []
         self._saved = [(c, n, getattr(c, n)) for c, n in (
-            (DataFrame, "mapInPandas"), (DataFrame, "groupBy"),
-            (DataFrame, "groupby"), (GroupedData, "applyInPandas"))]
-        real_map, real_group, _, real_apply = (f for _, _, f in self._saved)
-
-        def map_in_pandas(df, fn, schema, *args, **kwargs):
-            self.calls.append((fn, df, None))
-            return real_map(df, fn, schema, *args, **kwargs)
+            (DataFrame, "groupBy"), (DataFrame, "groupby"),
+            (DataFrame, "mapInPandas"), (DataFrame, "mapInArrow"),
+            (GroupedData, "applyInPandas"), (GroupedData, "applyInArrow"))]
+        real_group = self._saved[0][2]
 
         def group_by(df, *cols):
             gd = real_group(df, *cols)
@@ -198,13 +207,18 @@ class _Recorder:
                 cols[0], (list, tuple)) else cols)
             return gd
 
-        def apply_in_pandas(gd, fn, schema):
-            self.calls.append((fn, gd._df, gd._trace_keys))
-            return real_apply(gd, fn, schema)
+        def recording(real, arrow, grouped):
+            def call(obj, fn, schema, *args, **kwargs):
+                self.calls.append((fn, obj._df if grouped else obj,
+                                   obj._trace_keys if grouped else None,
+                                   arrow))
+                return real(obj, fn, schema, *args, **kwargs)
+            return call
 
-        DataFrame.mapInPandas = map_in_pandas
         DataFrame.groupBy = DataFrame.groupby = group_by
-        GroupedData.applyInPandas = apply_in_pandas
+        for (cls, name, real), arrow in zip(self._saved[2:],
+                                            (False, True, False, True)):
+            setattr(cls, name, recording(real, arrow, cls is GroupedData))
         return self
 
     def __exit__(self, *exc):
@@ -213,21 +227,28 @@ class _Recorder:
 
     def replay(self) -> list[str]:
         """Run each recorded function over its input's batches (all in
-        one partition; groups split by pandas); return the failures."""
+        one partition; groups split by pandas or Arrow); return the
+        failures."""
         import pandas as pd
         failed = []
-        for fn, df, keys in self.calls:
+        for fn, df, keys, arrow in self.calls:
             try:
                 if keys is None:
-                    for _ in fn(iter(_frames(df))):
+                    batches = (df.toArrow().to_batches() if arrow
+                               else _frames(df))
+                    for _ in fn(iter(batches)):
                         pass
                     continue
                 if not all(isinstance(k, str) for k in keys):
                     raise TypeError("grouping keys are not column names")
-                pdf = pd.concat(_frames(df), ignore_index=True)
                 two = len(inspect.signature(fn).parameters) == 2
-                for key, sub in pdf.groupby(keys, sort=False, dropna=False):
-                    sub = sub.reset_index(drop=True)
+                if arrow:
+                    groups = _arrow_groups(df.toArrow(), keys)
+                else:
+                    pdf = pd.concat(_frames(df), ignore_index=True)
+                    groups = ((key, sub.reset_index(drop=True)) for key, sub
+                              in pdf.groupby(keys, sort=False, dropna=False))
+                for key, sub in groups:
                     fn(key, sub) if two else fn(sub)
             except Exception as e:  # noqa: BLE001 - reported, not fatal
                 failed.append(f"{fn.__qualname__}: {type(e).__name__}: {e}")
