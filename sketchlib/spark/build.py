@@ -16,21 +16,14 @@ OR-merge :139-164) with the Spark-native architecture from SURVEY.md §4:
                           optional two-level (salted) fan-in for very
                           wide clusters, treeAggregate-style.
 
-``build_sketches`` picks one of three merge shapes, all folding a
-group's partials in the same (partition_id, chunk) order, so all write
-the same bytes:
+``build_sketches`` picks one of two merge shapes (``_merge_plan``),
+both lazy and both folding a group's partials in the same
+(partition_id, chunk) order, so both write the same bytes:
 
   - in-task: a single-partition input folds its partials in the task
-    that built them (one ``mapInArrow``, lazy);
-  - driver: a plan with no salt level whose partials fit Spark's
-    ``spark.sql.execution.arrow.localRelationThreshold`` is built in
-    one job, collected and folded on the driver, and returned as a
-    ``LocalRelation`` (eager: the job runs at call time);
+    that built them (one ``mapInArrow``, no Exchange);
   - tree: every other input shuffles its partials through
-    ``merge_partials``' salted ``applyInArrow`` tree. A build whose
-    partials turned out too big for the driver in that one job merges
-    the partials the job left in a local checkpoint: no input is
-    built twice.
+    ``merge_partials``' salted ``applyInArrow`` tree.
 
 Every Python step reads and writes Arrow: batches are grouped in Arrow
 (``_key_groups``), the kernels take Arrow arrays, and a bigint key with
@@ -54,8 +47,8 @@ import pyarrow.compute as pa_compute
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
-                               FloatType, IntegerType, LongType, StringType,
+from pyspark.sql.types import (BinaryType, DoubleType, FloatType,
+                               IntegerType, LongType, StringType,
                                StructField, StructType)
 
 from sketchlib.core.cms import CountMinSketch
@@ -63,7 +56,7 @@ from sketchlib.core.sample import WeightedBottomKSample
 from sketchlib.core.countsketch import CountSketch
 from sketchlib.core.params import bloom_params
 from sketchlib.core.serde import fold_blobs, sketch_from_bytes
-from sketchlib.spark.dfutil import local_table
+from sketchlib.spark.dfutil import num_partitions
 from sketchlib.spark.specs import SketchSpec
 
 
@@ -477,21 +470,24 @@ def _fold_partials(group_cols: list[str], readout: list | None,
         by=["partition_id", "chunk"]))
 
 
-def _merge_plan(partials: DataFrame, fanout) -> tuple[int | None, list]:
-    """(partition count, salt-level bucket counts) for a merge of
-    ``partials``. The count is needed to resolve "auto", to detect the
-    single-partition case and to split the driver fold's byte budget;
-    an explicit multi-level fanout needs none of them, so the
-    DataFrame->RDD plan conversion is skipped then."""
+def _merge_plan(df: DataFrame, fanout) -> list | None:
+    """The merge shape of the partials built from ``df``, the one
+    decision of every build entry point: None when they fold in the
+    task that built them (one partition and no salt level), else the
+    salt-level bucket counts of the shuffle tree (empty: the final
+    fold alone). The partition count resolves "auto" and detects the
+    single partition; an explicit salt level needs neither."""
     nparts = None
     if fanout == "auto":
-        nparts = partials.rdd.getNumPartitions()
+        nparts = num_partitions(df)
         fanout = _auto_fanout(nparts)
     plan = list(fanout) if isinstance(fanout, (list, tuple)) else \
         ([int(fanout)] if fanout and fanout > 1 else [])
-    if not plan and nparts is None:
-        nparts = partials.rdd.getNumPartitions()
-    return nparts, plan
+    if plan:
+        return plan
+    if nparts is None:
+        nparts = num_partitions(df)
+    return None if nparts == 1 else []
 
 
 def _merge_tree(partials: DataFrame, group_cols: list[str], plan: list,
@@ -522,102 +518,20 @@ def _merge_tree(partials: DataFrame, group_cols: list[str], plan: list,
                          _table_row(keys, readout), by=order)
 
 
-# the flag column of the driver fold's build job: True on the rows
-# the driver collects
-_SHIP = "_ship"
-
-
-def _within_share(build, share: int, blob_col: str):
-    """``build`` with a ``_SHIP`` flag on its rows: True while the
-    batches it has yielded hold at most ``share`` Arrow bytes; past
-    that, the task yields ONE overflow marker (a shipped row whose
-    ``blob_col`` is empty, which no serialized state is) and flags
-    the rest of its rows False. It builds its whole partition either
-    way: the unshipped rows are kept for the merge tree."""
-    def flagged(batch: pa.RecordBatch, ship: bool) -> pa.RecordBatch:
-        return batch.append_column(_SHIP,
-                                   pa.array([ship] * batch.num_rows))
-
-    def bounded(batches: Iterator[pa.RecordBatch]
-                ) -> Iterator[pa.RecordBatch]:
-        used = 0
-        for batch in build(batches):
-            if used <= share:
-                used += batch.nbytes
-                if used > share:
-                    head = batch.slice(0, 1)
-                    i = head.schema.get_field_index(blob_col)
-                    field = head.schema.field(i)
-                    yield flagged(head.set_column(
-                        i, field, pa.array([b""], field.type)), True)
-            yield flagged(batch, used <= share)
-    return bounded
-
-
-def _fold_once(sel: DataFrame, build, partials: DataFrame, fold,
-               out_schema, nparts: int, min_bytes: int | None = 0,
-               blob_col: str = "partial"
-               ) -> tuple[DataFrame | None, DataFrame]:
-    """(merged, None): the merged table of ``fold`` (an
-    ``_fold_in_task``) over the ``partials`` that ``build`` makes from
-    ``sel``'s ``nparts`` partitions, with no shuffle — or (None,
-    partials) when they do not fit the driver, for the caller's
-    shuffle tree.
-
-    One partition: the fold runs in the task that built the partials
-    (lazy). More: one job builds the partials and collects them, the
-    driver folds them and returns a ``LocalRelation``. Spark's Arrow
-    local-relation threshold bounds the collect twice: before any
-    job, ``nparts * min_bytes`` (the params-fixed bytes of one group's
-    partial in every partition) must fit, else the lazy ``partials``
-    go to the tree; in the job, each task ships at most
-    budget / nparts Arrow bytes of partial rows, then one overflow
-    marker. The job keeps every partial in a local checkpoint, so on
-    a marker the tree merges those rows instead of building again.
-    ``min_bytes=None`` keeps the fold off the driver."""
-    if nparts == 1:  # one Python operator: build, then fold in the task
-        return sel.mapInArrow(lambda batches: fold(build(batches)),
-                              out_schema), None
-    spark = sel.sparkSession
-    # Spark's own spark.sql.execution.arrow.localRelationThreshold: the
-    # size under which the Arrow table returned is a LocalRelation
-    budget = int(spark._jconf.arrowLocalRelationThreshold())
-    if min_bytes is None or nparts * min_bytes > budget:
-        return None, partials
-    share = budget // max(nparts, 1)
-    flagged = sel.mapInArrow(
-        _within_share(build, share, blob_col),
-        StructType(partials.schema.fields
-                   + [StructField(_SHIP, BooleanType())])
-    ).localCheckpoint(eager=False)
-    parts = flagged.filter(F.col(_SHIP)).drop(_SHIP).toArrow()
-    if pa_compute.any(pa_compute.equal(
-            pa_compute.binary_length(parts[blob_col]), 0)).as_py():
-        return None, flagged.filter(F.length(blob_col) > 0).drop(_SHIP)
-    # every partial was shipped: the checkpoint is not needed
-    flagged._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    return local_table(spark, pa.Table.from_batches(
-        fold([parts]), to_arrow_schema(out_schema)), out_schema), None
-
-
 def _build_merged(sel: DataFrame, build, partials_schema, group_cols,
-                  fanout, readout: list | None,
-                  min_bytes: int | None = 0) -> DataFrame:
+                  fanout, readout: list | None) -> DataFrame:
     """The merged sketch table of the partials ``build`` makes from
-    ``sel``. A plan with no salt level folds without a shuffle when it
-    can (``_fold_once``: in the task for one partition, on the driver
-    within the byte budget); every other input takes the shuffle tree.
-    All three fold in (partition_id, chunk) order, so they write the
-    same bytes."""
+    ``sel``, lazily: a single-partition input with no salt level
+    builds, folds and reads out in ONE ``mapInArrow`` task; every
+    other input shuffles its partials through the salted tree. Both
+    fold in (partition_id, chunk) order, so they write the same
+    bytes."""
     partials = sel.mapInArrow(build, partials_schema)
-    nparts, plan = _merge_plan(partials, fanout)
-    if not plan:
+    plan = _merge_plan(partials, fanout)
+    if plan is None:
         schema = _table_schema(partials, group_cols, readout)
-        merged, partials = _fold_once(
-            sel, build, partials, _fold_partials(group_cols, readout, schema),
-            schema, nparts, min_bytes)
-        if merged is not None:
-            return merged
+        fold = _fold_partials(group_cols, readout, schema)
+        return sel.mapInArrow(lambda batches: fold(build(batches)), schema)
     return _merge_tree(partials, group_cols, plan, readout)
 
 
@@ -655,8 +569,8 @@ def merge_partials(partials: DataFrame, group_cols: list[str],
     BENCH/builtin_compare.py). The merged blob column still ships, so
     the result stays persistable and mergeable.
     """
-    _nparts, plan = _merge_plan(partials, fanout)
-    return _merge_tree(partials, group_cols, plan, readout)
+    return _merge_tree(partials, group_cols,
+                       _merge_plan(partials, fanout) or [], readout)
 
 
 def rollup_sketches(sketches: DataFrame, from_cols: list[str],
@@ -708,53 +622,23 @@ def build_sketches(df: DataFrame, group_cols: list[str],
     ``fanout="auto"`` (default) is resolved as in ``merge_partials``
     (see ``_auto_fanout``): single fold up to 64 partials per group,
     else a multi-level salt plan bounding every merge task's fan-in
-    AND input bytes. With no salt level the partials fold without a
-    shuffle and read out there (``readout=``, as in ``merge_partials``):
-    a single-partition input in ONE ``mapInArrow`` task; a wider one,
-    when its partials fit ``spark.sql.execution.arrow.localRelationThreshold``
-    (checked before the job from Bloom params, and in every task), on
-    the driver — then the build job runs HERE, at call time, and the
-    result is a ``LocalRelation`` whose actions run no job. Otherwise,
-    and for builds with an FD spec (see ``_plan_bytes``), the partials
-    shuffle through the merge tree.
+    AND input bytes. A single-partition input with no salt level
+    builds, folds and reads out (``readout=``, as in ``merge_partials``)
+    in ONE ``mapInArrow`` task; every other input shuffles its partials
+    through the merge tree. Lazy either way: no job runs before the
+    result's first action.
 
     Returns one row per (group, sketch_name):
     (group_cols..., sketch_name, sketch binary, n_rows, n_partials).
     """
     sel, build, schema = _partial_task(df, group_cols, specs)
-    return _build_merged(sel, build, schema, group_cols, fanout, readout,
-                         _plan_bytes(specs))
-
-
-def _plan_bytes(specs: list[SketchSpec]) -> int | None:
-    """Plan-time bytes of one group's partials in one partition, for
-    the driver fold's budget check: each Bloom spec's dense m/8 (the
-    smallest m over its groups); the other kinds' states are not sized
-    by their params and count 0. A partition whose share of a group
-    sets >= m/32 bits ships that much; a sparser partial ships less, so
-    the check can send a build to the tree that would have fit, but
-    never past the budget. None when the partials must not fold on the
-    driver: an FD merge's SVD differs in its last bits with the BLAS
-    thread count, which Spark pins to ``spark.task.cpus`` in Python
-    workers but not on the driver."""
-    if any(s.kind == "fd" for s in specs):
-        return None
-    total = 0
-    for spec in specs:
-        if spec.kind == "bloom":
-            ms = [p["m"] for p in (spec.per_group_params or {}).values()
-                  if "m" in p]
-            if "m" in spec.params:
-                ms.append(spec.params["m"])
-            total += min(ms, default=0) // 8
-    return total
+    return _build_merged(sel, build, schema, group_cols, fanout, readout)
 
 
 def build_sketches_local(df: DataFrame, group_cols: list[str],
                          specs: list[SketchSpec]) -> dict:
     """``build_sketches`` collected as {(group_key..., sketch_name):
-    sketch object}: its driver fold when the partials fit, its merge
-    tree otherwise."""
+    sketch object}: the same merge shape and the same bytes."""
     return {(*(r[c] for c in group_cols), r["sketch_name"]):
             sketch_from_bytes(bytes(r["sketch"]))
             for r in build_sketches(df, group_cols, specs).collect()}

@@ -25,9 +25,28 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     composition, never per-row results.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    if target > 1 and df.rdd.getNumPartitions() < target:
+    if target > 1 and num_partitions(df) < target:
         return df.repartition(target)
     return df
+
+
+def num_partitions(df: DataFrame) -> int:
+    """``df``'s partition count without running its plan's exchanges.
+
+    Under adaptive execution ``df.rdd`` runs every shuffle below it as
+    a job, and the later action runs it again. So the count comes from
+    the physical plan where the plan knows it (a ``repartition(n)``,
+    a ``coalesce(n)``, a range); a hash exchange AQE may still
+    coalesce gives its planned count, an upper bound. Only a plan that
+    does not know it (a file scan, a union) asks the RDD, which runs a
+    job only if an exchange lies below."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        # before any stage has run: the plan with its exchanges
+        n = plan.executedPlan().outputPartitioning().numPartitions()
+        if n > 0:
+            return n
+    return df.rdd.getNumPartitions()
 
 
 def materialize(df: DataFrame) -> DataFrame:

@@ -36,10 +36,10 @@ from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from sketchlib.core.cms import CountMinSketch
-from sketchlib.spark.build import (_auto_fanout, _batch, _fold_in_task,
-                                   _fold_once, _group_fold, _group_fields,
-                                   _key_groups, _max_groups_in_flight,
-                                   _merge_groups, _nan_keys_as_null,
+from sketchlib.spark.build import (_batch, _fold_in_task, _group_fold,
+                                   _group_fields, _key_groups,
+                                   _max_groups_in_flight, _merge_groups,
+                                   _merge_plan, _nan_keys_as_null,
                                    update_from_token_counts)
 
 
@@ -170,11 +170,9 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
     retains it (same argument that covers the partition split). The
     final merge is order-free (CMS add + candidate-set union).
 
-    Plan shape: the merge shapes of ``build_sketches`` — a
+    Plan shape: the merge shapes of ``build_sketches``, lazy — a
     single-partition input builds and merges in ONE ``mapInArrow``
-    task; up to 64 partitions whose partial states fit the driver
-    budget merge on the driver after one (eager) build job, returning
-    a ``LocalRelation``; otherwise the partial states shuffle into a
+    task; every other input shuffles its partial states into one
     grouped merge.
     """
     sel, build, partials_schema = _token_partials(
@@ -195,12 +193,10 @@ def cms_heavy_hitters(df: DataFrame, group_cols: list[str], text_col: str,
 
     # CMS merge is a cell-wise sum: any order is bitwise-identical, so
     # the partial tables fold in arrival order
-    partials = sel.mapInArrow(build, partials_schema)
-    nparts = sel.rdd.getNumPartitions()
-    if _auto_fanout(nparts) is None:
-        top, partials = _fold_once(sel, build, partials, _fold_in_task(
-            group_cols, _group_fold("cms", topk_rows, out_schema)),
-            out_schema, nparts, blob_col="cms")
-        if top is not None:
-            return top
-    return _merge_groups(partials, group_cols, out_schema, "cms", topk_rows)
+    if _merge_plan(sel, None) is None:
+        fold = _fold_in_task(group_cols,
+                             _group_fold("cms", topk_rows, out_schema))
+        return sel.mapInArrow(lambda batches: fold(build(batches)),
+                              out_schema)
+    return _merge_groups(sel.mapInArrow(build, partials_schema), group_cols,
+                         out_schema, "cms", topk_rows)

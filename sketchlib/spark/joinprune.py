@@ -20,14 +20,12 @@ Scale notes (100 TB):
   cannot be persisted or shared.
 - The build emits one partial filter per input partition
   (sparse-encoded blobs, see ``core.bloom.to_bytes``) and OR-merges
-  them through the sketch build's merge shapes: in the build task for
-  one partition, on the driver when the partials fit the byte budget
-  of ``build._fold_once`` (a filter whose m/8 bytes times the
-  partition count passes it skips that job), else through the SAME
-  salted merge tree the sketch build uses. At the 100 TB scan's ~800k
-  input partitions the old unbounded driver-side OR loop was a
-  memory/CPU funnel; the tree bounds every merge task's fan-in and
-  the collect at one merged blob.
+  them through the sketch build's two merge shapes: in the build task
+  for one partition, else through the SAME salted merge tree the
+  sketch build uses. At the 100 TB scan's ~800k input partitions the
+  old unbounded driver-side OR loop was a memory/CPU funnel; the tree
+  bounds every merge task's fan-in and the collect at one merged
+  blob.
 - The prune is one broadcast of the blob + an Arrow-batched pandas
   UDF over the key column; no per-row Python. For a fact table that is
   scanned anyway, the prune is bandwidth-bound, and every pruned row is
@@ -67,11 +65,9 @@ def _key_bloom_merged_df(df: DataFrame, key_col: str, p: float,
 
     Plan shape: pruned scan -> mapInArrow partial filters (one sparse
     blob per input partition, merge_partials-shaped rows) -> one
-    (sketch, n_rows) row, merged as ``build_sketches`` merges
-    (fanout="auto"): in the build task for one partition, on the
-    driver within its byte budget (the build job then runs here), else
-    through the salted hierarchical merge tree. No raw key ever
-    shuffles.
+    (sketch, n_rows) row, merged lazily as ``build_sketches`` merges
+    (fanout="auto"): in the build task for one partition, else through
+    the salted hierarchical merge tree. No raw key ever shuffles.
     """
     from sketchlib.spark.build import _batch, _build_merged, task_partition_id
 
@@ -108,8 +104,7 @@ def _key_bloom_merged_df(df: DataFrame, key_col: str, p: float,
                           "partial": [bf.to_bytes()], "n_rows": [n],
                           "partition_id": [pid], "chunk": [0]}, out)
 
-    return (_build_merged(keyed, fn, schema, ["g"], "auto", None, m // 8),
-            unpersist)
+    return _build_merged(keyed, fn, schema, ["g"], "auto", None), unpersist
 
 
 def build_key_bloom(df: DataFrame, key_col: str, p: float = 0.01,
@@ -126,10 +121,10 @@ def build_key_bloom(df: DataFrame, key_col: str, p: float = 0.01,
     runs at all.
 
     The OR-merge takes the sketch build's merge shapes: in the build
-    task, on the driver within its byte budget, or through the salted
-    merge tree; the caller gets one merged blob regardless of the
-    input's partition count (Bloom merge is associative+commutative,
-    so every shape is bitwise-identical to any sequential fold).
+    task for one partition, else through the salted merge tree; the
+    caller gets one merged blob regardless of the input's partition
+    count (Bloom merge is associative+commutative, so every shape is
+    bitwise-identical to any sequential fold).
     """
     merged, cached = _key_bloom_merged_df(df, key_col, p, n_keys, seed)
     try:

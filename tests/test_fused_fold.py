@@ -1,23 +1,22 @@
-"""Builds fold without a merge shuffle when they can.
+"""Builds merge in the build task or through the tree, and stay lazy.
 
 A build whose input is one partition has every partial of a group in
 one task, so ``build_sketches``, ``cms_heavy_hitters`` and the key
 Bloom of ``build_key_bloom`` fold there: one ``mapInArrow``, no
-Exchange. A wider build with no salt level whose partials fit the
-driver budget (Spark's Arrow local-relation threshold) runs one build
-job, folds on the driver and returns a LocalRelation. These tests hold
-those plan shapes (at most one Python operator per stage, across the
-benchmarked sketch queries, three more catalog read-outs and the
-builds they run eagerly), the byte budget, and that both folds write
-the same bytes as the shuffle merge. Every build, fold and merge runs
-through Arrow operators: no plan holds a pandas one.
+Exchange. A wider build shuffles only its partials, through one
+Exchange into the ``applyInArrow`` merge (more levels past 64
+partitions). Neither runs a job before the first action. These tests
+hold those plan shapes (at most one Python operator per stage, across
+the benchmarked sketch queries, three more catalog read-outs and the
+builds they run), and that both write the same bytes as the shuffle
+merge of ``merge_partials``. Every build, fold and merge runs through
+Arrow operators: no plan holds a pandas one.
 """
 
 import math
 import os
 
 import pyarrow as pa
-import pyarrow.compute as pc
 import pyspark.sql.functions as F
 import pytest
 
@@ -44,12 +43,11 @@ def _children(node):
     return [kids.apply(i) for i in range(kids.size())]
 
 
-def python_stages(df, run=True) -> list[list[str]]:
-    """Run ``df`` (unless it already ran) and list the Python operators
-    of each stage of its AQE-final physical plan. Stages split at query
-    stages, exchanges and reused exchanges."""
-    if run:
-        df.collect()
+def python_stages(df) -> list[list[str]]:
+    """Run ``df`` and list the Python operators of each stage of its
+    AQE-final physical plan. Stages split at query stages, exchanges
+    and reused exchanges."""
+    df.collect()
     stages: list[list[str]] = [[]]
 
     def walk(node, stage):
@@ -85,6 +83,21 @@ def _record(monkeypatch, module, name, pick=lambda result: result):
     return built
 
 
+def _exchanges(df) -> list:
+    """The Exchange nodes of ``df``'s physical plan, before it runs."""
+    found = []
+
+    def walk(node):
+        if node.nodeName() == "AdaptiveSparkPlan":
+            return walk(node.executedPlan())
+        if "Exchange" in node.nodeName():
+            found.append(node)
+        for child in _children(node):
+            walk(child)
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
 def _is_local(df) -> bool:
     return (df._jdf.queryExecution().logical().getClass().getSimpleName()
             == "LocalRelation")
@@ -98,10 +111,9 @@ READOUT_QUERIES = ["sketch_accuracy_lang", "token_freq_sketch_accuracy",
 @pytest.mark.parametrize("name", QUERY_NAMES + READOUT_QUERIES)
 def test_at_most_one_python_operator_per_stage(spark, monkeypatch, name):
     """Every benchmarked sketch query and catalog read-out, and every
-    build it runs (the eager ones included: the Bloom build of
-    bloom_fpr_validation and the key Bloom of bloom_semijoin), holds at
-    most one Python operator in any stage: a task never chains two
-    Python workers."""
+    build it runs (the Bloom build of bloom_fpr_validation and the key
+    Bloom of bloom_semijoin included), holds at most one Python
+    operator in any stage: a task never chains two Python workers."""
     builds = _record(monkeypatch, queries, "build_sketches")
     # validate.accuracy_table imports build_sketches at call time
     builds += _record(monkeypatch, build, "build_sketches")
@@ -163,14 +175,14 @@ def _table(df, keys, readout_cols=()):
 
 def _fold_vs_tree(df, keys, readout=None, parts=1):
     """``build_sketches`` over ``parts`` partitions of ``df`` (one: the
-    in-task fold; more: the driver fold) against the shuffle merge of
-    the same partials (``merge_partials``)."""
+    in-task fold; more: the tree) against the shuffle merge of the
+    same partials (``merge_partials``)."""
     split = df.coalesce(1) if parts == 1 else df.repartition(parts)
     folded = build_sketches(split, keys, ALL_KINDS, readout=readout)
     if parts == 1:
         assert python_stages(folded) == [["MapInArrow"]]
-    else:
-        assert _is_local(folded)
+    else:  # the tree adds one Exchange to the input's
+        assert len(_exchanges(folded)) == len(_exchanges(split)) + 1
     shuffled = merge_partials(build_partials(split, keys, ALL_KINDS), keys,
                               readout=readout)
     cols = [c for c, _dtype, _fn in readout or ()]
@@ -240,8 +252,8 @@ def test_fused_fold_readout_equals_shuffle_merge(spark, pages_kinds,
 @pytest.mark.parametrize("case, parts", [
     ("string_key", 2), ("string_key", 4), ("string_key", 7), ("flush", 4),
     ("null_nan_key", 4), ("empty", 4), ("readout", 7)])
-def test_driver_fold_bitwise_equals_shuffle_tree(spark, pages_kinds,
-                                                 monkeypatch, case, parts):
+def test_tree_build_bitwise_equals_merge_partials(spark, pages_kinds,
+                                                  monkeypatch, case, parts):
     _case_vs_tree(spark, pages_kinds, monkeypatch, case, parts)
 
 
@@ -255,97 +267,39 @@ def _jobs(sc, group, action):
     return sorted(sc.statusTracker().getJobIdsForGroup(group)), result
 
 
-def test_under_budget_build_is_one_job(spark, pages_tiny_multifile,
-                                       arrow_collects):
-    """Four partitions under the budget: ONE job (one stage, one Python
-    operator, no Exchange) builds and collects the partials; the
-    LocalRelation it returns runs no job when collected."""
-    sc = spark.sparkContext
+def test_wide_builds_stay_lazy_and_shuffle_only_partials(
+        spark, pages_tiny, pages_tiny_multifile):
+    """Four partitions: ``build_sketches``, ``cms_heavy_hitters`` and a
+    sized key Bloom run no job before their first action, and each
+    plan holds ONE Exchange, whose input is the partial builder's
+    output: only partial states shuffle. A ``repartition(4)`` input's
+    count is read from its plan, so its shuffle does not run at call
+    time either."""
     df = pages_tiny_multifile
-    assert df.rdd.getNumPartitions() == 4
     specs = [SketchSpec("b", "bloom", "url", {"m": 1 << 14, "k": 5}),
              SketchSpec("h", "hll", "url", {"b": 10})]
-    jobs, out = _jobs(sc, "driver-fold-build", lambda: build_sketches(
-        df, ["lang"], specs, readout=READOUT[:1]))
-    assert len(jobs) == 1, jobs
-    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
-    ((partials, _table),) = arrow_collects
-    assert python_stages(partials, run=False) == [["MapInArrow"]]
-    assert _is_local(out)
-    jobs, rows = _jobs(sc, "driver-fold-collect", out.collect)
-    assert jobs == [] and rows
-
-
-def _shipped_partials(table):
-    """The partial rows of a driver-fold collect, overflow markers
-    (empty blobs) dropped."""
-    return table.filter(pc.greater(pc.binary_length(table["partial"]), 0))
-
-
-def test_over_budget_partials_fall_back_to_the_tree(pages_tiny_multifile,
-                                                    arrow_collects,
-                                                    driver_budget):
-    """A budget the plan-time Bloom bytes fit (4 x 2 KiB) but the
-    partials do not: the tasks send overflow markers, the driver
-    collects no more than its budget, and the shuffle tree merges the
-    partials the build job kept (no second build) into the same
-    bytes."""
-    df = pages_tiny_multifile.withColumn(
-        "html_len", F.length("html").cast("double")).withColumn(
-        "w", (F.length("url") % 13 + 1).cast("double"))
-    budget = 10000
-    driver_budget(budget)
-    out = build_sketches(df, ["lang"], ALL_KINDS)
-    ((_partials, table),) = arrow_collects
-    assert b"" in table.column("partial").to_pylist()
-    assert _shipped_partials(table).nbytes <= budget
-    # the tree reads the partials the build job kept: no MapInArrow
-    assert [s for s in python_stages(out) if s] == \
-        [["FlatMapGroupsInArrow"]]
-    tree = merge_partials(build_partials(df, ["lang"], ALL_KINDS), ["lang"])
-    assert _table(out, ["lang"]) == _table(tree, ["lang"])
-
-
-def test_group_keys_count_against_the_budget(pages_tiny_multifile,
-                                             arrow_collects, driver_budget):
-    """Long group keys next to small states: the budget counts whole
-    partial rows, so keys that pass it send the build to the tree
-    although the blobs alone fit, and the collected rows stay within
-    it."""
-    df = pages_tiny_multifile.withColumn("key", F.repeat("lang", 2000))
-    specs = [SketchSpec("h", "hll", "url", {"b": 4})]
-    tree = merge_partials(build_partials(df, ["key"], specs), ["key"])
-    partials = build_partials(df, ["key"], specs).toArrow()
-    blobs = sum(pc.binary_length(partials["partial"]).to_pylist())
-    budget = 8 * blobs  # each task's share holds all blobs twice over
-    assert partials.nbytes > 2 * budget
-    driver_budget(budget)
-    out = build_sketches(df, ["key"], specs)
-    (_build, table) = arrow_collects[-1]
-    assert b"" in table.column("partial").to_pylist()
-    assert _shipped_partials(table).nbytes <= budget
-    assert not _is_local(out)
-    assert _table(out, ["key"]) == _table(tree, ["key"])
-
-
-def test_driver_fold_keeps_bigint_keys_exact(spark):
-    """A bigint group key column holding a null, collected to the
-    driver, keeps keys above 2**53 apart: the fold must not read it
-    as float64, which merges them into one group."""
-    big = 2 ** 53 + 1
-    # partition 0: keys big and big + 1; partition 1: the null key
-    df = spark.range(0, 400, numPartitions=2).select(
-        F.when(F.col("id") < 200, F.lit(big) + F.col("id") % 2).alias("k"),
-        F.col("id").cast("string").alias("url"),
-        F.col("id").cast("double").alias("x"))
-    specs = [SketchSpec("h", "hll", "url", {"b": 10}),
-             SketchSpec("q", "kll", "x", {"k": 128})]
-    folded = build_sketches(df, ["k"], specs)
-    assert _is_local(folded)
-    tree = merge_partials(build_partials(df, ["k"], specs), ["k"])
-    got = _table(folded, ["k"])
-    assert got == _table(tree, ["k"])
-    assert {key[0] for key in got} == {str(big), str(big + 1), "None"}
+    calls = {
+        "build_sketches": lambda: build_sketches(df, ["lang"], specs,
+                                                 readout=READOUT[:1]),
+        "cms_heavy_hitters": lambda: heavyhitters.cms_heavy_hitters(
+            df, ["lang"], "text", k=3),
+        "_key_bloom_merged_df": lambda: joinprune._key_bloom_merged_df(
+            df, "url", 0.01, 10000, 0)[0],
+    }
+    for name, call in calls.items():
+        jobs, out = _jobs(spark.sparkContext, f"lazy-{name}", call)
+        assert jobs == [], name
+        (below,) = _exchanges(out)
+        # the grouping Project only repeats the partials' key columns
+        while below.nodeName() in ("Exchange", "Project"):
+            (below,) = _children(below)
+        assert below.nodeName() == "MapInArrow", (name, below.toString())
+        assert [s for s in python_stages(out) if s] == \
+            [["FlatMapGroupsInArrow"], ["MapInArrow"]], name
+    jobs, _out = _jobs(spark.sparkContext, "lazy-repartition",
+                       lambda: build_sketches(pages_tiny.repartition(4),
+                                              ["lang"], specs))
+    assert jobs == []
 
 
 def _bigint_keys(spark, parts):
@@ -381,8 +335,8 @@ def _input_classes(spark, parts):
 
 @pytest.mark.parametrize("parts", [1, 4, 100])
 def test_nullable_bigint_group_keys_stay_exact(spark, parts):
-    """Each input class through the in-task (1 partition), driver (4)
-    and tree (100) paths of ``build_sketches``, through
+    """Each input class through the in-task (1 partition), tree (4)
+    and salted tree (100) paths of ``build_sketches``, through
     ``cms_heavy_hitters`` and through ``bloom_validate``: keys above
     2**53 sharing Arrow batches with a null key stay exact (a float64
     reading would round the first and could merge distinct keys), a
@@ -394,8 +348,9 @@ def test_nullable_bigint_group_keys_stay_exact(spark, parts):
         out = build_sketches(df, ["k"], specs)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert {1: "MapInArrow" in plan and "Exchange" not in plan,
-                4: _is_local(out),
-                100: "FlatMapGroupsInArrow" in plan}[parts], (name, plan)
+                4: plan.count("FlatMapGroupsInArrow") == 1,
+                100: plan.count("FlatMapGroupsInArrow") > 1}[parts], \
+            (name, plan)
         rows = out.collect()
         assert {r["k"]: r["n_rows"] for r in rows} == want, name
         # keys with a value: the heavy hitters' groups, and the rows
@@ -423,7 +378,7 @@ def test_folds_keep_a_null_key_next_to_an_all_null_readout(spark,
                                                            pages_kinds):
     """A null group key next to an all-null read-out column: the
     in-task fold (run here, in-process, over the build's Arrow batches)
-    and the driver fold both write the shuffle tree's bytes."""
+    and a four-partition build both write ``merge_partials``' bytes."""
     keys, cols = ["g"], ["none"]
     readout = [("none", "double", lambda name, sk: None)]
 
@@ -436,9 +391,8 @@ def test_folds_keep_a_null_key_next_to_an_all_null_readout(spark,
                                 build._table_schema(one, keys, readout))
     in_task = pa.Table.from_batches(
         fold(build_fn(iter(sel.toArrow().to_batches()))))
-    driver = build_sketches(four, keys, ALL_KINDS, readout=readout)
-    assert _is_local(driver)
-    assert _table(driver, keys, cols) == tree(four)
+    wide = build_sketches(four, keys, ALL_KINDS, readout=readout)
+    assert _table(wide, keys, cols) == tree(four)
     assert {(str(r["g"]), r["sketch_name"]): (r["sketch"], r["n_rows"],
                                               r["n_partials"],
                                               repr(r["none"]))
@@ -447,12 +401,11 @@ def test_folds_keep_a_null_key_next_to_an_all_null_readout(spark,
 
 @pytest.mark.parametrize("parts", [1, 4, 100])
 def test_no_build_plan_holds_a_pandas_operator(spark, pages_tiny,
-                                               monkeypatch, arrow_collects,
-                                               parts):
+                                               monkeypatch, parts):
     """Every build, fold and merge entry point runs through Arrow
     operators (``mapInArrow``, ``applyInArrow``) on each merge path:
-    none of its executed plans, the driver fold's build jobs included,
-    holds a ``mapInPandas`` or ``applyInPandas``."""
+    none of its executed plans holds a ``mapInPandas`` or
+    ``applyInPandas``."""
     df = (pages_tiny.coalesce(1) if parts == 1
           else pages_tiny.repartition(parts))
     specs = [SketchSpec("b", "bloom", "url", {"m": 1 << 12, "k": 3}),
@@ -470,31 +423,8 @@ def test_no_build_plan_holds_a_pandas_operator(spark, pages_tiny,
              validate.bloom_validate(df, filters, ["lang"], "url", 0.01),
              *key_blooms]
     ops = [set(sum(python_stages(out), [])) for out in plans]
-    ops += [set(sum(python_stages(built, run=False), []))
-            for built, _table in arrow_collects]
     assert all(not found & PANDAS_NODES for found in ops), ops
     assert set().union(*ops) & {"MapInArrow", "FlatMapGroupsInArrow"}
-
-
-def test_bloom_over_budget_goes_straight_to_the_tree(spark,
-                                                     pages_tiny_multifile,
-                                                     arrow_collects,
-                                                     driver_budget):
-    """A key Bloom whose m/8 bytes times the partition count pass the
-    budget plans the shuffle tree before any job runs: no build job is
-    wasted on the driver fold, and the filter is the one-partition
-    build's."""
-    df = pages_tiny_multifile
-    driver_budget(1 << 20)  # 4 partitions x m/8 (1.2 MB) > 1 MiB
-    jobs, (merged, _cached) = _jobs(
-        spark.sparkContext, "bloom-plan-time",
-        lambda: joinprune._key_bloom_merged_df(df, "url", 0.01, 10 ** 6, 0))
-    assert jobs == [] and arrow_collects == []
-    assert "FlatMapGroupsInArrow" in \
-        merged._jdf.queryExecution().executedPlan().toString()
-    (row,) = merged.collect()
-    assert bytes(row["sketch"]) == joinprune.build_key_bloom(
-        df.coalesce(1), "url", 0.01, 10 ** 6).to_bytes()
 
 
 def test_heavy_hitters_same_rows_on_one_or_many_partitions(pages_tiny):
@@ -579,7 +509,7 @@ def test_driver_tables_are_local_relations(spark, pages_tiny, monkeypatch,
 def test_fd_builds_fold_in_workers(spark):
     """An FD merge's SVD differs in its last bits with the BLAS thread
     count (one per Python worker, more on the driver), so a wider FD
-    build keeps the tree and its bytes."""
+    build merges in the workers' tree and writes its bytes."""
     emb = (spark.read.parquet(os.path.join(SF, "embeddings.parquet"))
            .select(F.lit(1).alias("g"), "embedding").repartition(4))
     spec = [SketchSpec("f", "fd", "embedding", {"l": 32})]

@@ -117,24 +117,17 @@ def test_heavy_hitters_match_exact_topk(spark, pages_tiny_multifile):
 
 
 def test_heavy_hitters_no_token_shuffle(spark, pages_tiny,
-                                       pages_tiny_multifile, arrow_collects,
-                                       driver_budget):
+                                       pages_tiny_multifile):
     # no raw token ever shuffles: one partition folds in the build task
-    # (no exchange); four fold their partial states on the driver after
-    # one build job with no exchange; over the driver budget they
-    # shuffle only the partial states
+    # (no exchange); four shuffle only their partial states, through
+    # one exchange
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
     one = plan(cms_heavy_hitters(pages_tiny, ["lang"], "text", k=5))
     assert one.count("Exchange") == 0 and "MapInArrow" in one, one
     four = plan(cms_heavy_hitters(pages_tiny_multifile, ["lang"], "text", k=5))
-    assert four.startswith("LocalTableScan"), four
-    ((build, _table),) = arrow_collects
-    assert plan(build).count("Exchange") == 0, plan(build)
-    driver_budget(0)
-    tree = cms_heavy_hitters(pages_tiny_multifile, ["lang"], "text", k=5)
-    assert plan(tree).count("Exchange") == 1, plan(tree)
+    assert four.count("Exchange") == 1, four
 
 
 def test_heavy_hitters_flush_preserves_topk(spark, pages_tiny_multifile,

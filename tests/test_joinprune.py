@@ -104,7 +104,7 @@ def test_build_collects_one_blob_at_1000_partitions(spark):
     assert bf.to_bytes() == one.to_bytes()
 
 
-def test_unsized_build_scans_source_once(spark, tmp_path, arrow_collects):
+def test_unsized_build_scans_source_once(spark, tmp_path):
     """n_keys=None needs a sizing count before any bit can be set, so
     the key projection is persisted across count+build: the parquet
     source is scanned by the count only, the build reads the cache
@@ -118,10 +118,7 @@ def test_unsized_build_scans_source_once(spark, tmp_path, arrow_collects):
     merged, cached = _key_bloom_merged_df(dim, "d_key", 0.01, None, 0)
     assert cached is not None  # sizing count materialized the cache
     merged.collect()
-    # a multi-partition dim folds on the driver: the build job is the
-    # one collected then, not the LocalRelation it returned
-    build = arrow_collects[0][0] if arrow_collects else merged
-    plan = build._jdf.queryExecution().executedPlan().toString() \
+    plan = merged._jdf.queryExecution().executedPlan().toString() \
         .split("Initial Plan")[0]
     assert "InMemoryTableScan" in plan, plan
     # the build job reads the cache, not the file
