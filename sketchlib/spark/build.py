@@ -38,6 +38,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import datetime
 import os
 
 import numpy as np
@@ -180,8 +181,8 @@ def _feed(spec: SketchSpec, sketch, rows: pa.Table,
           vcache: dict | None = None) -> None:
     """Feed one Arrow table of rows into a sketch per its spec
     (tokenize / numeric / weighted dispatch) — the single update path
-    shared by the batch build and both streaming builds, so semantics
-    cannot drift.
+    shared by the batch build and the windowed streaming build, so
+    semantics cannot drift.
 
     ``vcache`` memoizes extracted value columns across specs sharing a
     (value_col, tokenize, numeric) triple within one table.
@@ -281,9 +282,17 @@ def _key_groups(data: pa.Table | pa.RecordBatch, keys: list[str]):
 
 def _batch(cols: dict, schema: pa.Schema) -> pa.RecordBatch:
     """One ``schema`` batch from ``cols`` (field name -> Python values);
-    a float NaN is written as null."""
+    a float NaN is written as null. A tz-aware datetime (a timestamp
+    key read in the session time zone) is written as its instant:
+    pyarrow 16 would write its wall time as UTC."""
+    def values(f):
+        if pa.types.is_timestamp(f.type) and f.type.tz:
+            return [v if v is None or v.tzinfo is None
+                    else v.astimezone(datetime.timezone.utc)
+                    for v in cols[f.name]]
+        return cols[f.name]
     return pa.RecordBatch.from_arrays(
-        [pa.array(cols[f.name], f.type, from_pandas=True) for f in schema],
+        [pa.array(values(f), f.type, from_pandas=True) for f in schema],
         schema=schema)
 
 

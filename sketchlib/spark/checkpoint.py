@@ -16,8 +16,9 @@ so a resumed run:
 For the lossless sketches (Bloom/HLL/CMS) the resumed result is
 bitwise-identical to an uninterrupted run (test-enforced).
 
-Storage: a parquet partial table + a single-row JSON manifest, both
-written through Spark IO so any Hadoop-compatible filesystem works
+Storage: a parquet partial table written by Spark and a JSON
+``MANIFEST`` written through the Hadoop FileSystem API
+(``dfutil.write_control``), so any Hadoop-compatible filesystem works
 (file://, hdfs://, s3a://). The manifest records the spec fingerprint
 so a resume against changed specs or input is refused instead of
 silently mixing states.
@@ -31,10 +32,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
 from sketchlib.spark.build import build_partials, merge_partials
-from sketchlib.spark.dfutil import local_table
+from sketchlib.spark.dfutil import path_exists, read_control, write_control
 from sketchlib.spark.specs import SketchSpec
 
 def spec_fingerprint(df: DataFrame, group_cols: list[str],
@@ -104,18 +104,16 @@ def spec_fingerprint(df: DataFrame, group_cols: list[str],
 
 
 def _partial_counters(stored: DataFrame) -> dict:
-    """Lineage counters over a stored partial table. n_rows is carried
-    per (partition, group, spec); count one spec's worth, not the sum
-    over specs."""
-    one_spec = F.min("sketch_name")
+    """Lineage counters over a stored partial table, in one job. Every
+    spec's partial of a (partition, group, chunk) carries the same
+    n_rows, so the row count is the n_rows sum over the spec count."""
     c = stored.agg(
         F.count("*").alias("n_partials"),
         F.countDistinct("partition_id").alias("n_partitions"),
-        one_spec.alias("_s")).collect()[0]
-    n_rows = stored.filter(F.col("sketch_name") == c["_s"]) \
-        .agg(F.sum("n_rows")).collect()[0][0]
+        F.countDistinct("sketch_name").alias("n_specs"),
+        F.sum("n_rows").alias("n_rows")).collect()[0]
     return {"n_partials": int(c["n_partials"]),
-            "n_rows": int(n_rows or 0),
+            "n_rows": int(c["n_rows"] or 0) // max(int(c["n_specs"]), 1),
             "n_partitions": int(c["n_partitions"])}
 
 
@@ -126,27 +124,21 @@ class PartialCheckpoint:
         self.spark = spark
         self.path = path
         self.data_path = path.rstrip("/") + "/partials"
-        # manifest goes through Spark text IO so remote checkpoint
-        # paths (hdfs://, s3a://) work the same as local ones
+        # a file, or the part-file directory that earlier versions
+        # wrote with a Spark text job
         self.manifest_path = path.rstrip("/") + "/MANIFEST"
 
-    def _exists(self, path: str) -> bool:
-        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs.exists(jpath)
-
     def manifest(self) -> dict | None:
-        if not self._exists(self.manifest_path):
-            return None
-        rows = self.spark.read.text(self.manifest_path).collect()
-        return json.loads("".join(r["value"] for r in rows))
+        text = read_control(self.spark, self.manifest_path)
+        return None if text is None else json.loads(text)
 
     def completed_partitions(self) -> list[int]:
         """Partition ids with stored partials. A missing store is empty;
         any other read error propagates — treating a corrupt store as
         'nothing done' would append duplicate partials and silently
         double-count every merge thereafter."""
-        if self.manifest() is None or not self._exists(self.data_path):
+        if (self.manifest() is None
+                or not path_exists(self.spark, self.data_path)):
             return []
         rows = (self.spark.read.parquet(self.data_path)
                 .select("partition_id").distinct().collect())
@@ -164,9 +156,7 @@ class PartialCheckpoint:
             "format": "parquet",
             "counters": _partial_counters(self.read_partials()),
         }
-        (local_table(self.spark, {"value": [json.dumps(man)]},
-                     StructType([StructField("value", StringType())]))
-         .coalesce(1).write.mode("overwrite").text(self.manifest_path))
+        write_control(self.spark, self.manifest_path, json.dumps(man))
         return man
 
 
@@ -188,22 +178,17 @@ def build_sketches_checkpointed(df: DataFrame, group_cols: list[str],
     ckpt = PartialCheckpoint(df.sparkSession, ckpt_path)
     fp = spec_fingerprint(df, group_cols, specs)
     man = ckpt.manifest()
-    if man is not None:
-        if man["fingerprint"] != fp:
-            raise ValueError(
-                f"checkpoint at {ckpt_path} was built from different "
-                f"specs/input (fingerprint {man['fingerprint']} != {fp}); "
-                "use a new checkpoint path")
-        done = ckpt.completed_partitions()
-        # spark_partition_id() is evaluated at the scan, and filter is a
-        # narrow dependency, so partition numbering (the lineage key)
-        # is preserved; completed partitions cost a scan but no Python
-        remaining = df.filter(~F.spark_partition_id().isin(done)) if done else df
-        new_partials = build_partials(remaining, group_cols, specs)
-        ckpt.write(new_partials, fp, append=True)
-        return merge_partials(ckpt.read_partials(), group_cols,
-                              fanout=fanout, readout=readout)
-    partials = build_partials(df, group_cols, specs)
-    ckpt.write(partials, fp, append=False)
+    if man is not None and man["fingerprint"] != fp:
+        raise ValueError(
+            f"checkpoint at {ckpt_path} was built from different "
+            f"specs/input (fingerprint {man['fingerprint']} != {fp}); "
+            "use a new checkpoint path")
+    done = ckpt.completed_partitions() if man is not None else []
+    # spark_partition_id() is evaluated at the scan, and filter is a
+    # narrow dependency, so partition numbering (the lineage key) is
+    # preserved; completed partitions cost a scan but no Python
+    remaining = df.filter(~F.spark_partition_id().isin(done)) if done else df
+    ckpt.write(build_partials(remaining, group_cols, specs), fp,
+               append=man is not None)
     return merge_partials(ckpt.read_partials(), group_cols,
                           fanout=fanout, readout=readout)

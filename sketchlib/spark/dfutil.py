@@ -1,4 +1,5 @@
-"""Small DataFrame utilities shared across operator modules."""
+"""Small DataFrame and Hadoop-FS utilities shared across operator
+modules."""
 
 from __future__ import annotations
 
@@ -83,3 +84,57 @@ def local_table(spark, data: dict | pa.Table,
     if isinstance(data, dict):
         data = pa.Table.from_pydict(data, schema=to_arrow_schema(schema))
     return spark.createDataFrame(data, schema)
+
+
+def _hadoop_path(spark, path: str):
+    """(Hadoop ``Path``, its ``FileSystem``) for ``path``: any scheme
+    the session's Hadoop configuration serves (file://, hdfs://,
+    s3a://), without a Spark job."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+def path_exists(spark, path: str) -> bool:
+    jpath, fs = _hadoop_path(spark, path)
+    return bool(fs.exists(jpath))
+
+
+def read_control(spark, path: str) -> str | None:
+    """The text of the small control file at ``path`` (a commit marker,
+    a manifest), or None when it is absent. A DIRECTORY of ``part-*``
+    files, the shape a Spark text write leaves, reads as their
+    concatenation in name order. Any other IO error raises."""
+    jpath, fs = _hadoop_path(spark, path)
+    if not fs.exists(jpath):
+        return None
+    if fs.getFileStatus(jpath).isDirectory():
+        files = sorted((s.getPath() for s in fs.listStatus(jpath)
+                        if s.getPath().getName().startswith("part-")),
+                       key=lambda p: p.getName())
+    else:
+        files = [jpath]
+    text = []
+    for f in files:
+        stream = fs.open(f)
+        try:
+            text.append(stream.readAllBytes().decode("utf-8", "replace"))
+        finally:
+            stream.close()
+    return "".join(text)
+
+
+def write_control(spark, path: str, text: str) -> None:
+    """Publish ``text`` as the file ``path``: written to ``path.tmp``,
+    then renamed over whatever ``path`` held (a file or a part-file
+    directory). A crash before the rename leaves only the ``.tmp``,
+    which ``read_control`` never reads."""
+    jpath, fs = _hadoop_path(spark, path)
+    tmp = _hadoop_path(spark, path + ".tmp")[0]
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+    fs.delete(jpath, True)  # rename does not replace an existing path
+    if not fs.rename(tmp, jpath):
+        raise IOError(f"could not publish {path}")

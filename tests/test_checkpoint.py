@@ -1,6 +1,7 @@
 """Checkpoint/resume: interrupted build resumes without recomputation
 and (for lossless sketches) yields bitwise-identical final sketches."""
 
+import json
 import os
 import shutil
 
@@ -135,3 +136,36 @@ def test_checkpointed_build_fused_readout(spark, pages_tiny, tmp_path):
     for r in out:
         assert r["est"] == float(
             sketch_from_bytes(bytes(r["sketch"])).estimate())
+
+
+def _jobs(sc, group, action):
+    """How many Spark jobs ``action()`` ran, and its result."""
+    sc.setJobGroup(group, group)
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+
+def test_spark_text_manifest_still_resumes(spark, pages_tiny, tmp_path):
+    """A MANIFEST written as a Spark text job (a directory of part
+    files, the shape earlier versions wrote) still reads and resumes;
+    the resume replaces it with a manifest file. Reading a manifest
+    runs no Spark job."""
+    ckpt = str(tmp_path / "ck_text")
+    first = _sketch_bytes(build_sketches_checkpointed(
+        pages_tiny, ["lang"], SPECS, ckpt))
+    ck = PartialCheckpoint(spark, ckpt)
+    man = ck.manifest()
+    os.remove(ck.manifest_path)
+    spark.createDataFrame([(json.dumps(man),)], "value string") \
+        .coalesce(1).write.text(ck.manifest_path)
+    assert os.path.isdir(ck.manifest_path)
+    n_jobs, read_back = _jobs(spark.sparkContext, "ck-manifest", ck.manifest)
+    assert (n_jobs, read_back) == (0, man)
+    resumed = _sketch_bytes(build_sketches_checkpointed(
+        pages_tiny, ["lang"], SPECS, ckpt))
+    assert resumed == first
+    assert os.path.isfile(ck.manifest_path)
+    assert ck.manifest()["counters"] == man["counters"]

@@ -486,9 +486,10 @@ def test_readout_keeps_the_read_out_rule():
 def test_driver_tables_are_local_relations(spark, pages_tiny, monkeypatch,
                                            tmp_path):
     """Tables the driver makes from Python values (the exact embedding
-    spectrum, the IVF centroid table, a checkpoint manifest) are
-    LocalRelations built from Arrow, not Python RDDs whose rows a
-    second pool of Python workers would unpickle."""
+    spectrum, the IVF centroid table) are LocalRelations built from
+    Arrow, not Python RDDs whose rows a second pool of Python workers
+    would unpickle. A checkpoint manifest makes no table at all: it is
+    written through the Hadoop FS."""
     from sketchlib.spark.checkpoint import build_sketches_checkpointed
     made = []
     real = type(spark).createDataFrame
@@ -503,7 +504,7 @@ def test_driver_tables_are_local_relations(spark, pages_tiny, monkeypatch,
     build_sketches_checkpointed(pages_tiny, ["lang"],
                                 [SketchSpec("h", "hll", "url", {"b": 8})],
                                 str(tmp_path / "ckpt")).collect()
-    assert len(made) == 3 and all(_is_local(df) for df in made)
+    assert len(made) == 2 and all(_is_local(df) for df in made)
 
 
 def test_fd_builds_fold_in_workers(spark):

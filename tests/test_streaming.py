@@ -1,15 +1,17 @@
-"""Streaming sketch maintenance: final state equals the batch build
-for lattice sketches, across multiple micro-batches."""
+"""Streaming sketch maintenance through the sink: the maintained table
+equals the batch build bitwise, across multiple micro-batches."""
 
+import json
 import os
 
+import pyarrow as pa
 import pyarrow.parquet as pq
+import pyspark.sql.functions as F
 import pytest
 
-from sketchlib.core.serde import sketch_from_bytes
 from sketchlib.spark.build import build_sketches
 from sketchlib.spark.specs import SketchSpec
-from sketchlib.spark.streaming import streaming_build
+from sketchlib.spark.streaming import SketchTableSink, streaming_sketch_table
 
 SPECS = [SketchSpec("b", "bloom", "url", {"m": 1 << 14, "k": 5}),
          SketchSpec("h", "hll", "url", {"b": 10}),
@@ -27,38 +29,6 @@ def stream_dir(tmp_path_factory):
         part = tbl.slice(i * n, n if i < 2 else tbl.num_rows - 2 * n)
         pq.write_table(part, str(out / f"batch-{i:02d}.parquet"))
     return str(out)
-
-
-def test_streaming_matches_batch_build(spark, pages_tiny, stream_dir, tmp_path):
-    stream = (spark.readStream.schema(pages_tiny.schema)
-              .option("maxFilesPerTrigger", 1).parquet(stream_dir))
-    updates = streaming_build(stream, ["lang"], SPECS)
-    q = (updates.writeStream.format("memory").queryName("sk_updates")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    rows = spark.sql("SELECT * FROM sk_updates").collect()
-    assert rows, "no streaming updates emitted"
-    # last update per (lang, sketch) is the final state
-    final = {}
-    for r in rows:
-        final[(r["lang"], r["sketch_name"])] = (bytes(r["sketch"]), r["n_rows"])
-
-    batch = {(r["lang"], r["sketch_name"]): (bytes(r["sketch"]), r["n_rows"])
-             for r in build_sketches(
-                 spark.read.parquet(stream_dir), ["lang"], SPECS).collect()}
-    assert set(final) == set(batch)
-    for key in batch:
-        fb, fn_ = final[key]
-        bb, bn = batch[key]
-        assert fn_ == bn, key
-        # lattice states must be identical regardless of batch/stream path
-        assert sketch_from_bytes(fb) == sketch_from_bytes(bb), key
-    # incremental updates were emitted across micro-batches
-    langs_updates = sum(1 for r in rows if r["sketch_name"] == "h")
-    assert langs_updates > len({r["lang"] for r in rows})
 
 
 def test_streaming_sketch_table_matches_batch_build(spark, pages_tiny,
@@ -161,17 +131,21 @@ def test_sketch_table_prune_counts_committed_only(spark, pages_tiny,
     tbl = str(tmp_path / "sktbl3")
     sink = SketchTableSink(spark, tbl, ["lang"], SPECS, keep_versions=2)
 
-    def commit_fake(v):
-        # same marker shape the sink writes: a _COMMIT DIRECTORY
-        # holding text part files
-        os.makedirs(f"{tbl}/v={v}/_COMMIT", exist_ok=True)
-        with open(f"{tbl}/v={v}/_COMMIT/part-00000.txt", "w") as f:
-            f.write(json.dumps({"batch_id": v, "path": f"{tbl}/v={v}"}))
+    def commit_fake(v, shape):
+        doc = json.dumps({"batch_id": v, "path": f"{tbl}/v={v}"})
+        os.makedirs(f"{tbl}/v={v}", exist_ok=True)
+        if shape == "file":  # the marker shape the sink writes
+            with open(f"{tbl}/v={v}/_COMMIT", "w") as f:
+                f.write(doc)
+        else:  # a Spark text write: a directory of part files
+            os.makedirs(f"{tbl}/v={v}/_COMMIT", exist_ok=True)
+            with open(f"{tbl}/v={v}/_COMMIT/part-00000.txt", "w") as f:
+                f.write(doc)
 
-    commit_fake(1)
-    commit_fake(2)
+    commit_fake(1, "file")
+    commit_fake(2, "dir")
     os.makedirs(f"{tbl}/v=3", exist_ok=True)  # uncommitted junk
-    commit_fake(4)
+    commit_fake(4, "file")
     sink._prune(4)
     left = sorted(int(d[2:]) for d in os.listdir(tbl) if d.startswith("v="))
     # keep = newest 2 COMMITTED {2, 4}; junk v=3 and stale v=1 removed
@@ -180,34 +154,88 @@ def test_sketch_table_prune_counts_committed_only(spark, pages_tiny,
     shutil.rmtree(tbl)
 
 
-def test_streaming_wsample_matches_batch_bitwise(spark, pages_tiny,
-                                                 stream_dir, tmp_path):
-    """The weighted sample kernel through the streaming feed path:
-    final streamed state == batch-built state, bitwise (lattice)."""
-    import pyspark.sql.functions as F
-    from sketchlib.spark.specs import SketchSpec
-    from sketchlib.spark.streaming import streaming_build
-    spec = [SketchSpec("ws", "wsample", "url", {"k": 32},
-                       weight_col="w")]
-    add_w = lambda d: d.withColumn(
-        "w", (F.length("url") % 13 + 1).cast("double"))
+WEIGHTED = SPECS + [SketchSpec("ws", "wsample", "url", {"k": 32},
+                               weight_col="w")]
+
+
+def _with_weight(df):
+    return df.withColumn("w", (F.length("url") % 13 + 1).cast("double"))
+
+
+def _table(df, keys):
+    return {tuple(r[k] for k in keys): (bytes(r["sketch"]), r["n_rows"])
+            for r in df.collect()}
+
+
+@pytest.fixture(scope="module")
+def sink_vs_batch(spark, pages_tiny, stream_dir, tmp_path_factory):
+    """Three micro-batches through the sink and one batch build over all
+    the data, each as {(lang, sketch_name): (blob, n_rows)}."""
+    tmp = tmp_path_factory.mktemp("sink_vs_batch")
+    tbl = str(tmp / "sk_bitwise")
     stream = (spark.readStream.schema(pages_tiny.schema)
               .option("maxFilesPerTrigger", 1).parquet(stream_dir))
-    q = (streaming_build(add_w(stream), ["lang"], spec)
-         .writeStream.format("memory").queryName("ws_updates")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ws_ck"))
+    q = (streaming_sketch_table(_with_weight(stream), ["lang"], WEIGHTED,
+                                tbl, str(tmp / "ck_bitwise"))
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM ws_updates").collect()
-    assert rows
-    # last emitted state per lang (max n_rows) is the final one
-    final = {}
-    best = {}
-    for r in rows:
-        if r["n_rows"] >= best.get(r["lang"], -1):
-            best[r["lang"]] = r["n_rows"]
-            final[r["lang"]] = bytes(r["sketch"])
-    batch = {r["lang"]: bytes(r["sketch"]) for r in
-             build_sketches(add_w(pages_tiny), ["lang"], spec).collect()}
-    assert final == batch
+    assert q.exception() is None, q.exception()
+    sink = SketchTableSink(spark, tbl, ["lang"], WEIGHTED)
+    assert sink.latest()["batch_id"] == 2  # 3 files, 1 per trigger
+    keys = ["lang", "sketch_name"]
+    streamed = _table(sink.read_table(), keys)
+    batch = _table(build_sketches(_with_weight(
+        spark.read.parquet(stream_dir)), ["lang"], WEIGHTED), keys)
+    return streamed, batch
+
+
+def _only(table, names):
+    return {k: v for k, v in table.items() if k[1] in names}
+
+
+def test_streaming_matches_batch_build(sink_vs_batch):
+    """Every (lang, sketch) row of the Bloom, HLL and sample sketches the
+    sink maintains equals the batch build over all the data, blob and
+    n_rows."""
+    streamed, batch = sink_vs_batch
+    names = {"b", "h", "s"}
+    assert {k[1] for k in batch} >= names
+    assert _only(streamed, names) == _only(batch, names)
+
+
+def test_streaming_wsample_matches_batch_bitwise(sink_vs_batch):
+    """The weighted sample kernel through the sink: every lang's streamed
+    blob and n_rows equal the batch build's, and no other rows exist."""
+    streamed, batch = sink_vs_batch
+    assert {k[1] for k in batch} == {"b", "h", "s", "ws"}
+    assert _only(streamed, {"ws"})
+    assert _only(streamed, {"ws"}) == _only(batch, {"ws"})
+    assert set(streamed) == set(batch)
+
+
+def test_sink_nullable_bigint_matches_batch(spark, tmp_path):
+    """An id column with a null and values >= 2**53 folds through the
+    sink to the batch build's bytes (no float64 hop anywhere)."""
+    big = 2 ** 53
+    ids = [big + 1, None, big + 2, 7, big + 1, None, 7, big + 3]
+    schema = "g string, uid bigint, w double"
+
+    def frame(lo, hi):
+        return spark.createDataFrame(pa.table({
+            "g": pa.array(["a", "b"] * 4, pa.string())[lo:hi],
+            "uid": pa.array(ids, pa.int64())[lo:hi],
+            "w": pa.array([1.0, 2.0, 3.0, 4.0] * 2)[lo:hi]}), schema)
+
+    specs = [SketchSpec("b", "bloom", "uid", {"m": 1 << 10, "k": 4}),
+             SketchSpec("h", "hll", "uid", {"b": 8}),
+             SketchSpec("s", "sample", "uid", {"k": 4}),
+             SketchSpec("ws", "wsample", "uid", {"k": 4}, weight_col="w")]
+    sink = SketchTableSink(spark, str(tmp_path / "sk_bigint"), ["g"], specs)
+    sink(frame(0, 3), 0)
+    sink(frame(3, 8), 1)
+    keys = ["g", "sketch_name"]
+    streamed = _table(sink.read_table(), keys)
+    assert streamed == _table(build_sketches(frame(0, 8), ["g"], specs),
+                              keys)
+    assert sum(n for (_g, name), (_b, n) in streamed.items()
+               if name == "b") == len(ids)
