@@ -148,7 +148,7 @@ def cmd_update(args) -> int:
     """Fold delta rows into a stored sketch table (no base re-read)."""
     import os as _os
     from sketchlib.spark.session import get_spark
-    from sketchlib.spark.build import incremental_update
+    from sketchlib.spark.build import incremental_update, table_group_cols
     from sketchlib.io.sources import read_input
 
     if _os.path.realpath(args.out) == _os.path.realpath(args.sketches):
@@ -163,10 +163,8 @@ def cmd_update(args) -> int:
     table = spark.read.parquet(args.sketches)
     delta = read_input(spark, args.input, fmt=args.format)
     specs = [_parse_sketch(s) for s in args.sketch]
-    group_cols = [c for c in table.columns
-                  if c not in ("sketch_name", "sketch", "n_rows",
-                               "n_partials")]
-    updated = incremental_update(table, delta, group_cols, specs)
+    updated = incremental_update(table, delta, table_group_cols(table),
+                                 specs)
     updated.write.mode("overwrite").parquet(args.out)
     n = spark.read.parquet(args.out).count()
     print(f"{n} updated sketch rows -> {args.out}")
@@ -176,12 +174,11 @@ def cmd_update(args) -> int:
 
 def cmd_rollup(args) -> int:
     from sketchlib.spark.session import get_spark
-    from sketchlib.spark.build import rollup_sketches
+    from sketchlib.spark.build import rollup_sketches, table_group_cols
 
     spark = get_spark("sketchlib-rollup", cpus=args.cpus)
     df = spark.read.parquet(args.sketches)
-    from_cols = [c for c in df.columns
-                 if c not in ("sketch_name", "sketch", "n_rows", "n_partials")]
+    from_cols = table_group_cols(df)
     to_cols = [c.strip() for c in args.to.split(",") if c.strip()]
     bad = [c for c in to_cols if c not in from_cols]
     if bad:
@@ -197,6 +194,7 @@ def cmd_rollup(args) -> int:
 
 
 def cmd_estimate(args) -> int:
+    from sketchlib.spark.build import table_group_cols
     from sketchlib.spark.session import get_spark
     from sketchlib.spark.sqlfuncs import register_sql_functions
 
@@ -204,9 +202,7 @@ def cmd_estimate(args) -> int:
     register_sql_functions(spark)
     df = spark.read.parquet(args.sketches)
     df.createOrReplaceTempView("sketches")
-    group_cols = [c for c in df.columns
-                  if c not in ("sketch_name", "sketch", "n_rows", "n_partials")]
-    # a globally-rolled-up table has no group columns at all
+    group_cols = table_group_cols(df)  # none for a global table
     sel = ("".join(f"{c}, " for c in group_cols)).rstrip()
     order = ", ".join([*group_cols, "sketch_name"])
     import math

@@ -171,20 +171,7 @@ class BloomFilter:
             bf.bits = np.frombuffer(payload, dtype=np.uint8).copy()
         return bf
 
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "BloomFilter":
-        type_id, header, payload = serde.unpack(data)
-        if type_id != serde.TYPE_BLOOM:
-            raise ValueError("not a Bloom filter blob")
-        return cls._from_parts(header, payload)
-
-    def __eq__(self, other) -> bool:
-        # n_added included: it rides in the canonical bytes, so eq
-        # must imply identical serialization
-        return (isinstance(other, BloomFilter)
-                and (self.m, self.k, self.seed, self.n_added)
-                == (other.m, other.k, other.seed, other.n_added)
-                and np.array_equal(self.bits, other.bits))
+    __eq__ = serde.same_state
 
     def __repr__(self) -> str:
         return f"BloomFilter(m={self.m}, k={self.k}, n_added={self.n_added})"

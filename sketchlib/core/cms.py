@@ -16,36 +16,28 @@ import numpy as np
 
 from sketchlib.core import hashing
 from sketchlib.core import serde
+from sketchlib.core.counters import CounterTable
 from sketchlib.core.params import cms_params
 
 
 @serde.register_sketch(serde.TYPE_CMS)
-class CountMinSketch:
-    __slots__ = ("w", "d", "seed", "total", "table", "conservative",
-                 "cu_tainted")
+class CountMinSketch(CounterTable):
+    __slots__ = ("conservative",)
 
     def __init__(self, w: int, d: int, seed: int = 0,
                  conservative: bool = False):
-        """``conservative=True`` makes update_batch default to
-        conservative update (see update_batch) — settable here so the
-        Spark build path can request it via SketchSpec params.
-        ``cu_tainted`` records whether ANY update ever ran in CU mode
-        (including a per-call override on a plain sketch): once true,
-        cells may under-count bucket sums forever, so the
-        ``inner_product`` guard and the serialized ``cu`` header key
-        off the taint, not the default mode."""
-        if w < 1 or d < 1:
-            raise ValueError(f"w and d must be >= 1, got w={w}, d={d}")
-        if w * d > 0xFFFFFFFF:
-            # sparse serialization stores flat indices as uint32
-            raise ValueError(f"w*d = {w * d} exceeds 2^32-1 cells")
-        self.w = int(w)
-        self.d = int(d)
-        self.seed = int(seed)
-        self.total = 0
+        """``conservative=True`` selects conservative update (Estan &
+        Varghese 2002): each key's cells are raised only to
+        ``current_estimate + count`` instead of incremented, which
+        markedly tightens overestimates on heavy-tailed streams. The
+        overestimate-only guarantee is preserved — per row, a cell is
+        only ever maxed with est+c where est >= the key's true count
+        before the increment. ``merge`` stays elementwise add (still
+        overestimate-only, but looser than a single-sketch CU stream)
+        and ORs the mode, since CU cells may under-count bucket sums
+        forever (see ``inner_product``)."""
+        super().__init__(w, d, seed)
         self.conservative = bool(conservative)
-        self.cu_tainted = bool(conservative)
-        self.table = np.zeros((self.d, self.w), dtype=np.int64)
 
     @classmethod
     def from_error(cls, epsilon: float, delta: float, seed: int = 0) -> "CountMinSketch":
@@ -57,54 +49,16 @@ class CountMinSketch:
         h1, h2 = hashing.hash64_pair(values, self.seed)
         return hashing.km_indices(h1, h2, self.d, self.w)
 
-    def update_batch(self, values, counts=None,
-                     conservative: bool | None = None) -> "CountMinSketch":
-        """Add a batch of keys; optional per-key counts (weighted update).
-
-        ``conservative=True`` applies conservative update (Estan &
-        Varghese 2002): each key's cells are raised only to
-        ``current_estimate + count`` instead of incremented, which
-        markedly tightens overestimates on heavy-tailed streams.
-        The overestimate-only guarantee is preserved — per row, a cell
-        is only ever maxed with est+c where est >= the key's true count
-        before the increment. NOTE: conservative update is an
-        *update-path* option only; ``merge`` stays elementwise add
-        (still overestimate-only, but looser than a single-sketch CU
-        stream — pure-add merge of CU states cannot reproduce the
-        global CU stream). Keys duplicated within one batch are
-        pre-aggregated so each reads a consistent estimate.
-        """
-        if conservative is None:
-            conservative = self.conservative
-        n = len(values)
-        if n == 0:
-            return self
-        values, valid = hashing.valid_key_mask(values)  # null: no value
-        if valid is not None:
-            values = values.drop_null()
-            if counts is not None:
-                counts = np.asarray(counts, dtype=np.int64)[valid]
-            n = len(values)
-            if n == 0:
-                return self
-        if conservative:
-            # a single CU update makes cells under-count bucket sums
-            # FOREVER — taint the sketch so inner_product's guard and
-            # the serialized 'cu' header stay truthful even when CU was
-            # requested per-call on a plain-constructed sketch
-            self.cu_tainted = True
-        if counts is None:
-            counts = np.ones(n, dtype=np.int64)
-        else:
-            counts = np.asarray(counts, dtype=np.int64)
+    def _add(self, values, counts: np.ndarray) -> None:
         h1, h2 = hashing.hash64_pair(values, self.seed)
-        if conservative:
-            # pre-aggregate duplicate keys: h2 (and so every row
-            # index) is a pure function of h1, so a 1-D unique on h1
-            # gives the same grouping as the old lexicographic
-            # unique over the (n, d) index matrix, several times
-            # cheaper. Outcome is order-independent: all estimates
-            # read the pre-update table, then maximum.at writes.
+        if self.conservative:
+            # pre-aggregate duplicate keys so each reads a consistent
+            # estimate: h2 (and so every row index) is a pure function
+            # of h1, so a 1-D unique on h1 gives the same grouping as a
+            # lexicographic unique over the (n, d) index matrix,
+            # several times cheaper. Outcome is order-independent: all
+            # estimates read the pre-update table, then maximum.at
+            # writes.
             uh1, first, inv = np.unique(h1, return_index=True,
                                         return_inverse=True)
             agg = np.zeros(len(uh1), dtype=np.int64)
@@ -120,8 +74,6 @@ class CountMinSketch:
             idx = hashing.km_indices(h1, h2, self.d, self.w)
             for r in range(self.d):
                 np.add.at(self.table[r], idx[:, r].astype(np.int64), counts)
-        self.total += int(counts.sum())
-        return self
 
     def query_batch(self, values) -> np.ndarray:
         """Point estimates for a batch of keys. int64[n], >= true count."""
@@ -143,9 +95,9 @@ class CountMinSketch:
         BELOW the bucket's true frequency sum (they only reach the
         key's min-row estimate + count), so the min-row dot product
         loses the one-sided guarantee and can UNDERESTIMATE the true
-        join size. The ``cu`` header flag survives serde, so the check
-        holds for deserialized blobs too."""
-        if self.cu_tainted or other.cu_tainted:
+        join size. The mode survives serde and merge, so the check
+        holds for deserialized and merged states too."""
+        if self.conservative or other.conservative:
             raise ValueError(
                 "inner_product is overestimate-only for plain-add CMS "
                 "states; a conservative-update sketch voids that bound "
@@ -158,63 +110,20 @@ class CountMinSketch:
         return int(dots.min())
 
     def merge(self, other: "CountMinSketch") -> "CountMinSketch":
-        if (other.w, other.d, other.seed) != (self.w, self.d, self.seed):
-            raise ValueError("cannot merge CMS with different (w,d,seed)")
-        self.table += other.table
-        self.total += other.total
-        self.cu_tainted = self.cu_tainted or other.cu_tainted
+        super().merge(other)
+        self.conservative = self.conservative or other.conservative
         return self
 
-    def to_bytes(self) -> bytes:
-        """Canonical serialization, adaptive: narrowest dtype that holds
-        the max counter; sparse (idx,val) pairs when mostly zero.
-        Partial CMS states from one input partition shuffle 4-16x
-        smaller this way (same idea as Bloom sparse partials)."""
-        # 'cu' = taint (ever CU-updated: weakens inner_product bound);
-        # 'cum' = default update MODE. Separate fields: a plain-mode
-        # sketch that took one per-call CU update must round-trip as
-        # tainted-but-plain — folding taint into mode would silently
-        # switch its later default updates to CU (serde would change
-        # behavior). Pre-round-3 blobs wrote 'cu' as mode; they thaw as
-        # tainted plain-mode, the safe direction (estimates unchanged,
-        # future updates stay plain-add). Both omitted when False so
-        # old blobs stay readable.
-        header = {"w": self.w, "d": self.d, "seed": self.seed, "total": self.total}
-        if self.cu_tainted:
-            header["cu"] = 1
+    def _header(self) -> dict:
+        # a CU sketch writes both 'cu' and 'cum'; an older blob may
+        # carry 'cu' alone, and either flag thaws as a CU sketch
+        header = super()._header()
         if self.conservative:
-            header["cum"] = 1
-        fields, payload = serde.pack_table(self.table.reshape(-1))
-        header.update(fields)
-        return serde.pack(serde.TYPE_CMS, header, payload)
+            header.update(cu=1, cum=1)
+        return header
 
     @classmethod
     def _from_parts(cls, header: dict, payload: bytes) -> "CountMinSketch":
-        c = cls(header["w"], header["d"], header["seed"],
-                conservative=bool(header.get("cum", 0)))
-        c.cu_tainted = bool(header.get("cu", 0)) or c.conservative
-        c.total = header["total"]
-        c.table = serde.unpack_table(header, payload,
-                                     c.w * c.d).reshape(c.d, c.w)
+        c = super()._from_parts(header, payload)
+        c.conservative = bool(header.get("cu") or header.get("cum"))
         return c
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "CountMinSketch":
-        type_id, header, payload = serde.unpack(data)
-        if type_id != serde.TYPE_CMS:
-            raise ValueError("not a CMS blob")
-        return cls._from_parts(header, payload)
-
-    def __eq__(self, other) -> bool:
-        # FULL state: total / conservative / cu_tainted ride in the
-        # canonical bytes and change behavior (inner_product refusal),
-        # so eq must imply same-bytes-and-behavior
-        return (isinstance(other, CountMinSketch)
-                and (self.w, self.d, self.seed, self.total,
-                     self.conservative, self.cu_tainted)
-                == (other.w, other.d, other.seed, other.total,
-                    other.conservative, other.cu_tainted)
-                and np.array_equal(self.table, other.table))
-
-    def __repr__(self) -> str:
-        return f"CountMinSketch(w={self.w}, d={self.d}, total={self.total})"

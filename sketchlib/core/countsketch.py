@@ -25,24 +25,17 @@ import numpy as np
 
 from sketchlib.core import hashing
 from sketchlib.core import serde
+from sketchlib.core.counters import CounterTable
 
 
 @serde.register_sketch(serde.TYPE_COUNTSKETCH)
-class CountSketch:
-    __slots__ = ("w", "d", "seed", "total", "table")
+class CountSketch(CounterTable):
+    __slots__ = ()
 
     def __init__(self, w: int, d: int = 5, seed: int = 0):
-        if w < 1 or d < 1:
-            raise ValueError(f"w and d must be >= 1, got w={w}, d={d}")
+        super().__init__(w, d, seed)
         if d % 2 == 0:
             raise ValueError(f"d must be odd for an unbiased median, got {d}")
-        if w * d > 0xFFFFFFFF:
-            raise ValueError(f"w*d = {w * d} exceeds 2^32-1 cells")
-        self.w = int(w)
-        self.d = int(d)
-        self.seed = int(seed)
-        self.total = 0
-        self.table = np.zeros((self.d, self.w), dtype=np.int64)
 
     @classmethod
     def from_error(cls, epsilon: float, d: int = 5, seed: int = 0) -> "CountSketch":
@@ -61,29 +54,10 @@ class CountSketch:
         sign = 1 - 2 * (hv >> np.uint64(63)).astype(np.int64)
         return bucket, sign
 
-    # --- UDAF contract ---
-
-    def update_batch(self, values, counts=None) -> "CountSketch":
-        n = len(values)
-        if n == 0:
-            return self
-        values, valid = hashing.valid_key_mask(values)  # null: no value
-        if valid is not None:
-            values = values.drop_null()
-            if counts is not None:
-                counts = np.asarray(counts, dtype=np.int64)[valid]
-            n = len(values)
-            if n == 0:
-                return self
-        if counts is None:
-            counts = np.ones(n, dtype=np.int64)
-        else:
-            counts = np.asarray(counts, dtype=np.int64)
+    def _add(self, values, counts: np.ndarray) -> None:
         bucket, sign = self._indices_signs(values)
         for r in range(self.d):
             np.add.at(self.table[r], bucket[:, r], sign[:, r] * counts)
-        self.total += int(counts.sum())
-        return self
 
     def query_batch(self, values) -> np.ndarray:
         """Unbiased point estimates. int64[n] (may under- or over-shoot)."""
@@ -94,48 +68,9 @@ class CountSketch:
                          for r in range(self.d)], axis=1)
         return np.median(ests, axis=1).astype(np.int64)
 
-    def merge(self, other: "CountSketch") -> "CountSketch":
-        if (other.w, other.d, other.seed) != (self.w, self.d, self.seed):
-            raise ValueError("cannot merge count sketches with different (w,d,seed)")
-        self.table += other.table
-        self.total += other.total
-        return self
-
     def l2_estimate(self) -> float:
         """Estimated ||f||_2 of the stream: median over rows of the
         row's L2 norm (each row's sum of squares is an unbiased
         estimator of sum f_k^2 + cross terms that cancel in expectation)."""
         return float(np.median(np.sqrt((self.table.astype(np.float64) ** 2)
                                        .sum(axis=1))))
-
-    # --- serialization (canonical; sparse when mostly zero) ---
-
-    def to_bytes(self) -> bytes:
-        header = {"w": self.w, "d": self.d, "seed": self.seed,
-                  "total": self.total}
-        fields, payload = serde.pack_table(self.table.reshape(-1))
-        header.update(fields)
-        return serde.pack(serde.TYPE_COUNTSKETCH, header, payload)
-
-    @classmethod
-    def _from_parts(cls, header: dict, payload: bytes) -> "CountSketch":
-        c = cls(header["w"], header["d"], header["seed"])
-        c.total = header["total"]
-        c.table = serde.unpack_table(header, payload,
-                                     c.w * c.d).reshape(c.d, c.w)
-        return c
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "CountSketch":
-        type_id, header, payload = serde.unpack(data)
-        if type_id != serde.TYPE_COUNTSKETCH:
-            raise ValueError("not a count sketch blob")
-        return cls._from_parts(header, payload)
-
-    def __eq__(self, other) -> bool:
-        return (isinstance(other, CountSketch)
-                and (self.w, self.d, self.seed) == (other.w, other.d, other.seed)
-                and np.array_equal(self.table, other.table))
-
-    def __repr__(self) -> str:
-        return f"CountSketch(w={self.w}, d={self.d}, total={self.total})"

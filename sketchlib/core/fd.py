@@ -166,16 +166,7 @@ class FrequentDirections:
             f._used = n
         return f
 
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "FrequentDirections":
-        type_id, header, payload = serde.unpack(data)
-        if type_id != serde.TYPE_FD:
-            raise ValueError("not a frequent-directions blob")
-        return cls._from_parts(header, payload)
-
-    def __eq__(self, other) -> bool:
-        return (isinstance(other, FrequentDirections)
-                and self.to_bytes() == other.to_bytes())
+    __eq__ = serde.same_state
 
     def __repr__(self) -> str:
         return (f"FrequentDirections(l={self.l}, dim={self.dim}, "

@@ -185,17 +185,7 @@ class HyperLogLog:
             h.registers = np.frombuffer(payload, dtype=np.uint8).copy()
         return h
 
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "HyperLogLog":
-        type_id, header, payload = serde.unpack(data)
-        if type_id != serde.TYPE_HLL:
-            raise ValueError("not an HLL blob")
-        return cls._from_parts(header, payload)
-
-    def __eq__(self, other) -> bool:
-        return (isinstance(other, HyperLogLog)
-                and (self.b, self.seed) == (other.b, other.seed)
-                and np.array_equal(self.registers, other.registers))
+    __eq__ = serde.same_state
 
     def __repr__(self) -> str:
         return f"HyperLogLog(b={self.b}, est={self.estimate():.1f})"

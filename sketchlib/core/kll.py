@@ -178,12 +178,5 @@ class KLL:
             s.levels = [np.zeros(0, dtype=np.float64)]
         return s
 
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "KLL":
-        type_id, header, payload = serde.unpack(data)
-        if type_id != serde.TYPE_KLL:
-            raise ValueError("not a KLL blob")
-        return cls._from_parts(header, payload)
-
     def __repr__(self) -> str:
         return f"KLL(k={self.k}, n={self.n}, levels={len(self.levels)})"

@@ -34,22 +34,70 @@ import pyarrow as pa
 
 from sketchlib.core import hashing
 from sketchlib.core import serde
+from sketchlib.core.theta import kmv_estimate, kmv_theta_raw
 
 _MAX_U64 = float(2 ** 64)
 _EMPTY_PAYLOADS = np.zeros(0, dtype=object)
 
 
-@serde.register_sketch(serde.TYPE_SAMPLE)
-class BottomKSample:
+class _BottomK:
+    """What the two bottom-k samples share: (k, seed), the retained
+    payloads, and one codec. The blob is header {k, seed, n}, then
+    each ``_COLUMNS`` state array (n 8-byte values, wire order), the
+    int64 payload lengths, and the payload bytes."""
     __slots__ = ("k", "seed", "tags", "payloads")
+    _COLUMNS = ("tags",)
 
     def __init__(self, k: int = 1024, seed: int = 0):
         if k < 1:
             raise ValueError(f"sample size k must be >= 1, got {k}")
         self.k = int(k)
         self.seed = int(seed)
-        self.tags = np.zeros(0, dtype=np.uint64)      # sorted, distinct
+        self.tags = np.zeros(0, dtype=np.uint64)      # value hashes
         self.payloads = _EMPTY_PAYLOADS               # bytes, tag-aligned
+
+    def _check_merge(self, other) -> None:
+        if (other.k, other.seed) != (self.k, self.seed):
+            raise ValueError("cannot merge samples with different (k,seed)")
+
+    def sample(self) -> list[bytes]:
+        """The retained payloads (<= k distinct values)."""
+        return [bytes(p) for p in self.payloads]
+
+    def rel_error(self) -> float:
+        return 1.0 / np.sqrt(max(self.k - 2, 1))
+
+    # --- serialization (canonical: state is already canonical) ---
+
+    def to_bytes(self) -> bytes:
+        lens = np.fromiter((len(p) for p in self.payloads),
+                           dtype=np.int64, count=len(self.payloads))
+        header = {"k": self.k, "seed": self.seed, "n": len(self.tags)}
+        return serde.pack(self.TYPE_ID, header, b"".join(
+            [getattr(self, c).tobytes() for c in self._COLUMNS]
+            + [lens.tobytes(), *self.payloads]))
+
+    @classmethod
+    def _from_parts(cls, header: dict, payload: bytes):
+        s = cls(header["k"], header["seed"])
+        n = header["n"]
+        for i, c in enumerate(cls._COLUMNS):  # dtypes of the empty state
+            setattr(s, c, np.frombuffer(payload, dtype=getattr(s, c).dtype,
+                                        count=n, offset=8 * n * i).copy())
+        width = 8 * n * len(cls._COLUMNS)
+        lens = np.frombuffer(payload, dtype=np.int64, count=n, offset=width)
+        offs = width + 8 * n + np.concatenate([[0], np.cumsum(lens)])
+        if n:
+            s.payloads = np.array([payload[offs[i]:offs[i + 1]]
+                                   for i in range(n)], dtype=object)
+        return s
+
+    __eq__ = serde.same_state
+
+
+@serde.register_sketch(serde.TYPE_SAMPLE)
+class BottomKSample(_BottomK):
+    __slots__ = ()
 
     # --- UDAF contract: new / update_batch / merge / estimate / serde ---
 
@@ -74,8 +122,7 @@ class BottomKSample:
         return self._absorb(uniq, np.array(arr.to_pylist(), dtype=object))
 
     def merge(self, other: "BottomKSample") -> "BottomKSample":
-        if (other.k, other.seed) != (self.k, self.seed):
-            raise ValueError("cannot merge samples with different (k,seed)")
+        self._check_merge(other)
         return self._absorb(other.tags, other.payloads)
 
     def _absorb(self, tags: np.ndarray, payloads: np.ndarray) -> "BottomKSample":
@@ -88,66 +135,19 @@ class BottomKSample:
         self.payloads = all_pay[idx[: self.k]]
         return self
 
-    def sample(self) -> list[bytes]:
-        """The retained payloads (<= k distinct values, uniform)."""
-        return [bytes(p) for p in self.payloads]
-
     def theta(self) -> float:
-        if len(self.tags) < self.k:
-            return 1.0
-        return float(self.tags[-1]) / _MAX_U64
+        return kmv_theta_raw(self.tags, self.k) / _MAX_U64
 
     def estimate(self) -> float:
         """KMV distinct estimate (exact below saturation)."""
-        if len(self.tags) < self.k:
-            return float(len(self.tags))
-        return (self.k - 1) / self.theta()
-
-    def rel_error(self) -> float:
-        return 1.0 / np.sqrt(max(self.k - 2, 1))
-
-    # --- serialization (canonical: state is already canonical) ---
-
-    def to_bytes(self) -> bytes:
-        lens = np.fromiter((len(p) for p in self.payloads),
-                           dtype=np.int64, count=len(self.payloads))
-        header = {"k": self.k, "seed": self.seed, "n": len(self.tags)}
-        return serde.pack(serde.TYPE_SAMPLE, header,
-                          self.tags.tobytes() + lens.tobytes()
-                          + b"".join(self.payloads))
-
-    @classmethod
-    def _from_parts(cls, header: dict, payload: bytes) -> "BottomKSample":
-        s = cls(header["k"], header["seed"])
-        n = header["n"]
-        s.tags = np.frombuffer(payload, dtype=np.uint64, count=n).copy()
-        lens = np.frombuffer(payload, dtype=np.int64, count=n, offset=8 * n)
-        offs = 16 * n + np.concatenate([[0], np.cumsum(lens)])
-        s.payloads = np.array([payload[offs[i]:offs[i + 1]]
-                               for i in range(n)], dtype=object)
-        if n == 0:
-            s.payloads = _EMPTY_PAYLOADS
-        return s
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "BottomKSample":
-        type_id, header, payload = serde.unpack(data)
-        if type_id != serde.TYPE_SAMPLE:
-            raise ValueError("not a bottom-k sample blob")
-        return cls._from_parts(header, payload)
-
-    def __eq__(self, other) -> bool:
-        return (isinstance(other, BottomKSample)
-                and (self.k, self.seed) == (other.k, other.seed)
-                and np.array_equal(self.tags, other.tags)
-                and list(self.payloads) == list(other.payloads))
+        return kmv_estimate(self.tags, self.k)
 
     def __repr__(self) -> str:
         return f"BottomKSample(k={self.k}, n_retained={len(self.tags)})"
 
 
 @serde.register_sketch(serde.TYPE_WSAMPLE)
-class WeightedBottomKSample:
+class WeightedBottomKSample(_BottomK):
     """Mergeable WEIGHTED bottom-k sample (Efraimidis–Spirakis A-ES
     with deterministic per-value jitter) — the mixture-sampling
     primitive of a training pipeline: "sample k docs per lang with
@@ -177,17 +177,13 @@ class WeightedBottomKSample:
     update is one vectorized hash pass + an argpartition per batch.
     """
 
-    __slots__ = ("k", "seed", "keys", "tags", "weights", "payloads")
+    __slots__ = ("keys", "weights")
+    _COLUMNS = ("keys", "tags", "weights")
 
     def __init__(self, k: int = 1024, seed: int = 0):
-        if k < 1:
-            raise ValueError(f"sample size k must be >= 1, got {k}")
-        self.k = int(k)
-        self.seed = int(seed)
+        super().__init__(k, seed)
         self.keys = np.zeros(0, dtype=np.float64)     # sorted ascending
-        self.tags = np.zeros(0, dtype=np.uint64)      # key-aligned
-        self.weights = np.zeros(0, dtype=np.float64)
-        self.payloads = _EMPTY_PAYLOADS
+        self.weights = np.zeros(0, dtype=np.float64)  # key-aligned
 
     # --- UDAF contract ---------------------------------------------
 
@@ -232,8 +228,7 @@ class WeightedBottomKSample:
         return self._absorb(keys_s, tags_s, w_s, pay)
 
     def merge(self, other: "WeightedBottomKSample") -> "WeightedBottomKSample":
-        if (other.k, other.seed) != (self.k, self.seed):
-            raise ValueError("cannot merge samples with different (k,seed)")
+        self._check_merge(other)
         return self._absorb(other.keys, other.tags, other.weights,
                             other.payloads)
 
@@ -260,9 +255,6 @@ class WeightedBottomKSample:
 
     # --- read-outs --------------------------------------------------
 
-    def sample(self) -> list[bytes]:
-        return [bytes(p) for p in self.payloads]
-
     def sample_weights(self) -> list[float]:
         return [float(w) for w in self.weights]
 
@@ -276,53 +268,6 @@ class WeightedBottomKSample:
     def estimate(self) -> float:
         """Alias read-out used by generic SQL surfaces."""
         return self.weight_estimate()
-
-    def rel_error(self) -> float:
-        return 1.0 / np.sqrt(max(self.k - 2, 1))
-
-    # --- serde (state is already canonical) -------------------------
-
-    def to_bytes(self) -> bytes:
-        lens = np.fromiter((len(p) for p in self.payloads),
-                           dtype=np.int64, count=len(self.payloads))
-        header = {"k": self.k, "seed": self.seed, "n": len(self.tags)}
-        return serde.pack(serde.TYPE_WSAMPLE, header,
-                          self.keys.tobytes() + self.tags.tobytes()
-                          + self.weights.tobytes() + lens.tobytes()
-                          + b"".join(self.payloads))
-
-    @classmethod
-    def _from_parts(cls, header: dict, payload: bytes):
-        s = cls(header["k"], header["seed"])
-        n = header["n"]
-        s.keys = np.frombuffer(payload, dtype=np.float64, count=n).copy()
-        s.tags = np.frombuffer(payload, dtype=np.uint64, count=n,
-                               offset=8 * n).copy()
-        s.weights = np.frombuffer(payload, dtype=np.float64, count=n,
-                                  offset=16 * n).copy()
-        lens = np.frombuffer(payload, dtype=np.int64, count=n,
-                             offset=24 * n)
-        offs = 32 * n + np.concatenate([[0], np.cumsum(lens)])
-        s.payloads = np.array([payload[offs[i]:offs[i + 1]]
-                               for i in range(n)], dtype=object)
-        if n == 0:
-            s.payloads = _EMPTY_PAYLOADS
-        return s
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "WeightedBottomKSample":
-        type_id, header, payload = serde.unpack(data)
-        if type_id != serde.TYPE_WSAMPLE:
-            raise ValueError("not a weighted bottom-k sample blob")
-        return cls._from_parts(header, payload)
-
-    def __eq__(self, other) -> bool:
-        return (isinstance(other, WeightedBottomKSample)
-                and (self.k, self.seed) == (other.k, other.seed)
-                and np.array_equal(self.keys, other.keys)
-                and np.array_equal(self.tags, other.tags)
-                and np.array_equal(self.weights, other.weights)
-                and list(self.payloads) == list(other.payloads))
 
     def __repr__(self) -> str:
         return (f"WeightedBottomKSample(k={self.k}, "

@@ -10,7 +10,10 @@ self-describing envelope so sketch bytes stored in a parquet
     header (utf-8 JSON of params) | payload (numpy buffers)
 
 ``to_bytes`` is canonical: a given logical sketch state always produces
-identical bytes (required by the merge-order property tests).
+identical bytes (required by the merge-order property tests). The rest
+of the state contract lives here too: ``register_sketch`` gives every
+kernel its type-checked ``from_bytes``, and ``same_state`` (byte
+equality) is the ``__eq__`` of the kernels that define one.
 """
 
 from __future__ import annotations
@@ -37,11 +40,29 @@ _REGISTRY: dict[int, type] = {}
 
 
 def register_sketch(type_id: int):
+    """Class decorator: register ``cls`` under ``type_id`` and install
+    its type-checked ``from_bytes`` (the class supplies
+    ``_from_parts(header, payload)``)."""
     def deco(cls):
         cls.TYPE_ID = type_id
+        cls.from_bytes = classmethod(_from_bytes)
         _REGISTRY[type_id] = cls
         return cls
     return deco
+
+
+def _from_bytes(cls, data: bytes):
+    type_id, header, payload = unpack(data)
+    if type_id != cls.TYPE_ID:
+        raise ValueError(f"not a {cls.__name__} blob (type id {type_id})")
+    return cls._from_parts(header, payload)
+
+
+def same_state(a, b) -> bool:
+    """The ``__eq__`` of the kernels that define one: same class and
+    same canonical bytes, so equal sketches serialize, merge and
+    answer alike."""
+    return type(a) is type(b) and a.to_bytes() == b.to_bytes()
 
 
 def pack(type_id: int, header: dict, payload: bytes) -> bytes:
@@ -61,47 +82,6 @@ def unpack(data: bytes) -> tuple[int, dict, bytes]:
     if version != VERSION:
         raise ValueError(f"unsupported sketch version {version}")
     return type_id, header, data[off + hlen:]
-
-
-def pack_table(flat) -> tuple[dict, bytes]:
-    """Adaptive counter-table encoding shared by CMS and count sketch:
-    narrowest dtype that holds the value range (unsigned tiers when
-    non-negative, signed otherwise), sparse (uint32 idx + values) when
-    smaller than dense. Returns (header_fields, payload); decode with
-    ``unpack_table``. Encoding is a pure function of the values, so
-    canonical-bytes guarantees are preserved."""
-    import numpy as np
-    vmax = int(flat.max(initial=0))
-    vmin = int(flat.min(initial=0))
-    if vmin < 0:
-        dt = (np.int16 if -0x8000 <= vmin and vmax <= 0x7FFF else
-              np.int32 if -0x80000000 <= vmin and vmax <= 0x7FFFFFFF
-              else np.int64)
-    else:
-        dt = (np.uint16 if vmax <= 0xFFFF else
-              np.uint32 if vmax <= 0xFFFFFFFF else np.int64)
-    nz = np.flatnonzero(flat)
-    fields = {"dtype": np.dtype(dt).name}
-    if len(nz) * (4 + dt().itemsize) < flat.size * dt().itemsize:
-        fields["enc"] = "sparse"
-        payload = nz.astype(np.uint32).tobytes() + flat[nz].astype(dt).tobytes()
-    else:
-        fields["enc"] = "dense"
-        payload = flat.astype(dt).tobytes()
-    return fields, payload
-
-
-def unpack_table(header: dict, payload: bytes, size: int):
-    """Inverse of ``pack_table``: int64[size] flat counter array."""
-    import numpy as np
-    dt = np.dtype(header.get("dtype", "int64"))
-    if header.get("enc", "dense") == "sparse":
-        n = len(payload) // (4 + dt.itemsize)
-        flat = np.zeros(size, dtype=np.int64)
-        idx = np.frombuffer(payload[:4 * n], dtype=np.uint32).astype(np.int64)
-        flat[idx] = np.frombuffer(payload[4 * n:], dtype=dt).astype(np.int64)
-        return flat
-    return np.frombuffer(payload, dtype=dt).astype(np.int64)
 
 
 def sketch_from_bytes(data: bytes):

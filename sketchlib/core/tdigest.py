@@ -172,13 +172,6 @@ class TDigest:
         td.vmax = float(header["vmax"]) if header["vmax"] is not None else -np.inf
         return td
 
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "TDigest":
-        type_id, header, payload = serde.unpack(data)
-        if type_id != serde.TYPE_TDIGEST:
-            raise ValueError("not a t-digest blob")
-        return cls._from_parts(header, payload)
-
     def __repr__(self) -> str:
         self._flush()
         return f"TDigest(delta={self.delta}, centroids={len(self.means)})"

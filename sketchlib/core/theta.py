@@ -28,6 +28,19 @@ from sketchlib.core import serde
 _MAX_U64 = float(2 ** 64)
 
 
+def kmv_theta_raw(hashes: np.ndarray, k: int) -> int:
+    """KMV sampling threshold of a sorted bottom-k hash state as a raw
+    uint64: the k-th smallest hash, or 2^64 below saturation."""
+    return int(hashes[-1]) if len(hashes) >= k else 2 ** 64
+
+
+def kmv_estimate(hashes: np.ndarray, k: int) -> float:
+    """KMV distinct estimate (k - 1) / theta; exact below saturation."""
+    if len(hashes) < k:
+        return float(len(hashes))
+    return (k - 1) / (kmv_theta_raw(hashes, k) / _MAX_U64)
+
+
 @serde.register_sketch(serde.TYPE_THETA)
 class ThetaSketch:
     __slots__ = ("k", "seed", "hashes")
@@ -65,19 +78,14 @@ class ThetaSketch:
         return self
 
     def _theta_raw(self) -> int:
-        """Sampling threshold as a raw uint64 (2^64 == unsaturated)."""
-        if len(self.hashes) < self.k:
-            return 2 ** 64
-        return int(self.hashes[-1])
+        return kmv_theta_raw(self.hashes, self.k)
 
     def theta(self) -> float:
         """Sampling threshold in (0, 1]."""
         return self._theta_raw() / _MAX_U64
 
     def estimate(self) -> float:
-        if len(self.hashes) < self.k:
-            return float(len(self.hashes))  # exact below saturation
-        return (self.k - 1) / self.theta()
+        return kmv_estimate(self.hashes, self.k)
 
     def _valid_samples(self, other: "ThetaSketch"):
         """(a, b, raw_theta): both sketches' hashes STRICTLY below the
@@ -130,17 +138,7 @@ class ThetaSketch:
         s.hashes = np.frombuffer(payload, dtype=np.uint64).copy()
         return s
 
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "ThetaSketch":
-        type_id, header, payload = serde.unpack(data)
-        if type_id != serde.TYPE_THETA:
-            raise ValueError("not a theta sketch blob")
-        return cls._from_parts(header, payload)
-
-    def __eq__(self, other) -> bool:
-        return (isinstance(other, ThetaSketch)
-                and (self.k, self.seed) == (other.k, other.seed)
-                and np.array_equal(self.hashes, other.hashes))
+    __eq__ = serde.same_state
 
     def __repr__(self) -> str:
         return f"ThetaSketch(k={self.k}, n_retained={len(self.hashes)})"

@@ -248,8 +248,8 @@ def _key_groups(data: pa.Table | pa.RecordBatch, keys: list[str]):
     """(key tuple, rows) for each ``keys`` group of ``data``: groups in
     first-occurrence order, each group's rows in arrival order, so
     chunk boundaries and fold orders are functions of the input alone.
-    A null key is its own group; a NaN is not null (see
-    ``_nan_keys_as_null``).
+    No ``keys``: one group, ``()``. A null key is its own group; a NaN
+    is not null (see ``_nan_keys_as_null``).
 
     Groups by dictionary codes (null encoded as a value) in numpy:
     pyarrow's ``Table.group_by`` numbers groups in hash order and, on
@@ -257,6 +257,9 @@ def _key_groups(data: pa.Table | pa.RecordBatch, keys: list[str]):
     table = (data if isinstance(data, pa.Table)
              else pa.Table.from_batches([data]))
     if not table.num_rows:
+        return
+    if not keys:  # an ungrouped build: every row in the one group
+        yield (), table
         return
     encoded = [table[k].combine_chunks().dictionary_encode(
         null_encoding="encode") for k in keys]
@@ -335,7 +338,8 @@ def _partial_task(df: DataFrame, group_cols: list[str],
                 for si, spec in enumerate(specs):
                     slot = acc.get((gkey, si))
                     if slot is None:
-                        slot = [spec.make(gkey if n_groups > 1 else gkey[0]), 0]
+                        slot = [spec.make(gkey[0] if n_groups == 1
+                                          else gkey), 0]
                         acc[(gkey, si)] = slot
                     _feed(spec, slot[0], rows, vcache)
                     slot[1] += rows.num_rows
@@ -387,6 +391,13 @@ def _table_schema(df: DataFrame, group_cols: list[str],
         StructField("n_partials", LongType(), False),
     ] + [StructField(col, _parse_datatype_string(dtype), True)
          for col, dtype, _fn in readout or ()])
+
+
+def table_group_cols(table: DataFrame) -> list[str]:
+    """The group columns of a stored ``_table_schema`` sketch table
+    (empty for an ungrouped or globally rolled-up one)."""
+    return [c for c in table.columns
+            if c not in ("sketch_name", "sketch", "n_rows", "n_partials")]
 
 
 def _table_row(keys: list[str], readout: list | None = None):
@@ -638,7 +649,8 @@ def build_sketches(df: DataFrame, group_cols: list[str],
     result's first action.
 
     Returns one row per (group, sketch_name):
-    (group_cols..., sketch_name, sketch binary, n_rows, n_partials).
+    (group_cols..., sketch_name, sketch binary, n_rows, n_partials);
+    with no ``group_cols``, one row per spec over the whole input.
     """
     sel, build, schema = _partial_task(df, group_cols, specs)
     return _build_merged(sel, build, schema, group_cols, fanout, readout)

@@ -37,14 +37,13 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
 
 from sketchlib.core.bloom import BloomFilter
 from sketchlib.core.params import bloom_params
+from sketchlib.spark.build import build_sketches
+from sketchlib.spark.specs import SketchSpec
 
 _KEY = "__jp_key"
 
@@ -63,14 +62,12 @@ def _key_bloom_merged_df(df: DataFrame, key_col: str, p: float,
     projection to unpersist after collecting (None when the caller
     supplied ``n_keys`` and no sizing count was needed).
 
-    Plan shape: pruned scan -> mapInArrow partial filters (one sparse
-    blob per input partition, merge_partials-shaped rows) -> one
-    (sketch, n_rows) row, merged lazily as ``build_sketches`` merges
-    (fanout="auto"): in the build task for one partition, else through
-    the salted hierarchical merge tree. No raw key ever shuffles.
+    Plan shape: the ungrouped ``build_sketches`` of one Bloom spec over
+    the pruned key scan — one sparse partial filter per input
+    partition, merged in the build task for one partition, else
+    through the salted hierarchical merge tree. No raw key ever
+    shuffles.
     """
-    from sketchlib.spark.build import _batch, _build_merged, task_partition_id
-
     keyed = _as_key(df, key_col, _KEY).select(_KEY).dropna()
     unpersist = None
     if n_keys is None:
@@ -85,26 +82,9 @@ def _key_bloom_merged_df(df: DataFrame, key_col: str, p: float,
         unpersist = keyed
         n_keys = keyed.count()
     m, k = bloom_params(max(int(n_keys), 1), p)
-
-    schema = StructType.fromDDL(
-        "g int, sketch_name string, partial binary, n_rows long, "
-        "partition_id int, chunk int")
-    out = to_arrow_schema(schema)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pid = task_partition_id()
-        bf = BloomFilter(m, k, seed)
-        n = 0
-        for b in batches:
-            if b.num_rows:
-                bf.update_batch(b.column(_KEY))
-                n += b.num_rows
-        if n:
-            yield _batch({"g": [1], "sketch_name": ["key_bloom"],
-                          "partial": [bf.to_bytes()], "n_rows": [n],
-                          "partition_id": [pid], "chunk": [0]}, out)
-
-    return _build_merged(keyed, fn, schema, ["g"], "auto", None), unpersist
+    spec = SketchSpec("key_bloom", "bloom", _KEY,
+                      {"m": m, "k": k, "seed": seed})
+    return build_sketches(keyed, [], [spec]), unpersist
 
 
 def build_key_bloom(df: DataFrame, key_col: str, p: float = 0.01,

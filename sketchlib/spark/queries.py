@@ -207,10 +207,9 @@ def q_fd_embedding_spectrum(spark, sf_dir):
     values + the sketch's spectral error bound. The one-pass input to
     PCA whitening / IVF seeding at 10^12 rows; accuracy vs the exact
     eigenvalues is test-enforced (test_fd)."""
-    emb = (load(spark, sf_dir, "embeddings")
-           .select(F.lit(1).alias("g"), "embedding"))
     merged = build_sketches(
-        emb, ["g"], [SketchSpec("f", "fd", "embedding", {"l": 32})],
+        load(spark, sf_dir, "embeddings"), [],
+        [SketchSpec("f", "fd", "embedding", {"l": 32})],
         readout=[sqlfuncs.readout("spectrum", sqlfuncs.fd_spectrum, 5)])
     return (merged.select(F.posexplode("spectrum").alias("rnk", "sq_singular"))
             .select((F.col("rnk") + 1).alias("rnk"), "sq_singular"))
@@ -396,17 +395,14 @@ def q_cms_join_size(spark, sf_dir):
     # build and input coalescing both came out ~equal to this raw
     # per-partition build (the dense 1.5M-cell partial states dominate,
     # not the key hashing) — kept as-is deliberately
-    li = (load(spark, sf_dir, "lineitem")
-          .select(F.lit(1).alias("g"), "l_orderkey"))
-    orders = (load(spark, sf_dir, "orders")
-              .select(F.lit(1).alias("g"), "o_orderkey"))
     # the inner product runs on the driver, not as a UDF chained after
     # the builds' Python operators: each side is one row whose blob is
     # at most w*d*8 bytes (12 MiB here), known from params before any job
-    a, b = (build_sketches(t, ["g"], [SketchSpec(n, "cms", c, params)])
+    a, b = (build_sketches(load(spark, sf_dir, t), [],
+                           [SketchSpec(n, "cms", c, params)])
             .select("sketch").collect()
-            for n, t, c in (("a", li, "l_orderkey"),
-                            ("b", orders, "o_orderkey")))
+            for n, t, c in (("a", "lineitem", "l_orderkey"),
+                            ("b", "orders", "o_orderkey")))
     est = [F.lit(sqlfuncs.cms_join_size.read(
         sketch_from_bytes(bytes(x["sketch"])),
         sketch_from_bytes(bytes(y["sketch"])))) for x in a for y in b]

@@ -467,9 +467,9 @@ def test_query_readout_equals_sql_function(spark, monkeypatch, name):
 def test_cms_join_size_equals_sql_function(spark, monkeypatch):
     built = _record(monkeypatch, queries, "build_sketches")
     (row,) = queries.q_cms_join_size(spark, SF).collect()
-    a, b = (t.select("g", F.col("sketch").alias(s))
+    a, b = (t.select(F.col("sketch").alias(s))
             for t, s in zip(built, ("sa", "sb")))
-    (sql,) = (a.join(b, "g")
+    (sql,) = (a.crossJoin(b)  # one ungrouped sketch per side
               .select(sqlfuncs.cms_join_size("sa", "sb").alias("n"))
               .collect())
     assert row["join_rows_est"] == sql["n"] > 0

@@ -622,26 +622,24 @@ def test_materialize_uses_reliable_checkpoint_when_dir_set(spark, tmp_path):
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(none)
 
 
-def test_cms_per_call_cu_override_taints_sketch():
-    """update_batch(conservative=True) on a plain-constructed sketch
-    must taint it: inner_product refuses, and the 'cu' header flag
-    survives serde and merge (review finding: the guard was
-    bypassable)."""
-    s = CountMinSketch(64, 2, seed=1)
-    s.update_batch(["a", "b"], conservative=True)
+def test_cms_cu_mode_survives_serde_and_merge():
+    """A CU sketch built with the constructor refuses inner_product
+    after serde, and so does a plain sketch it was merged into: CU
+    cells may under-count bucket sums forever, so the mode rides in
+    the blob and is OR-ed on merge."""
+    cu = CountMinSketch(64, 2, seed=1, conservative=True)
+    cu.update_batch(["a", "b"])
     plain = CountMinSketch(64, 2, seed=1).update_batch(["a"])
-    with pytest.raises(ValueError, match="conservative"):
-        s.inner_product(plain)
-    thawed = CountMinSketch.from_bytes(s.to_bytes())
+    thawed = CountMinSketch.from_bytes(cu.to_bytes())
+    assert thawed.conservative is True
     with pytest.raises(ValueError, match="conservative"):
         plain.inner_product(thawed)
-    # taint propagates through merge of a plain target
     merged = CountMinSketch(64, 2, seed=1).update_batch(["c"]).merge(thawed)
+    assert merged.conservative is True
     with pytest.raises(ValueError, match="conservative"):
         merged.inner_product(plain)
-    # default update mode unchanged by the taint: a later default-mode
-    # batch on s is plain-add (total still counts adds exactly)
-    assert s.conservative is False and s.cu_tainted is True
+    with pytest.raises(ValueError, match="conservative"):
+        CountMinSketch.from_bytes(merged.to_bytes()).inner_product(plain)
 
 
 def test_bloom_validate_budget_uses_inflated_size(spark):
@@ -687,23 +685,26 @@ def test_props_json_plan_jvm_only(spark):
     assert "ReadSchema: struct<event_type:string,props:string>" in plan
 
 
-def test_cms_serde_separates_taint_from_default_mode():
-    """A plain-mode sketch that took one per-call CU update round-trips
-    as tainted-but-plain: later default updates stay plain-add, so
-    identical update sequences give identical tables whether or not the
-    sketch crossed serde (e.g. a shuffle boundary)."""
-    a = CountMinSketch(8, 2, seed=3)
-    a.update_batch(["x", "y"], conservative=True)
-    b = CountMinSketch.from_bytes(a.to_bytes())
-    assert b.cu_tainted is True and b.conservative is False
-    a.update_batch(["x", "x", "y"])  # default mode: plain add
-    b.update_batch(["x", "x", "y"])
-    assert np.array_equal(a.table, b.table)
-    # constructor-CU sketches keep their mode through serde
+def test_cms_legacy_cu_only_blob_loads_as_cu():
+    """A blob whose header carries 'cu' without 'cum' (a plain sketch
+    that once took a CU update) loads as a CU sketch: it refuses
+    inner_product, and later updates are conservative. A CU sketch
+    round-trips byte-identically, writing both flags."""
+    from sketchlib.core import serde
     c = CountMinSketch(8, 2, seed=3, conservative=True)
     c.update_batch(["x"])
-    d = CountMinSketch.from_bytes(c.to_bytes())
-    assert d.conservative is True and d.cu_tainted is True
+    blob = c.to_bytes()
+    type_id, header, payload = serde.unpack(blob)
+    assert header["cu"] == 1 and header["cum"] == 1
+    assert CountMinSketch.from_bytes(blob).to_bytes() == blob
+    del header["cum"]
+    legacy = CountMinSketch.from_bytes(serde.pack(type_id, header, payload))
+    assert legacy.conservative is True
+    with pytest.raises(ValueError, match="conservative"):
+        legacy.inner_product(CountMinSketch(8, 2, seed=3))
+    legacy.update_batch(["x", "x", "y"])
+    c.update_batch(["x", "x", "y"])
+    assert legacy == c
 
 
 class TestCanonicalUrl:

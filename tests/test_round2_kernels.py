@@ -160,10 +160,10 @@ class TestCMSConservative:
         stream = self._zipf_stream(50_000, 5000)
         vals, counts = np.unique(stream, return_counts=True)
         plain = CountMinSketch(256, 4).update_batch(stream)
-        cons = CountMinSketch(256, 4)
+        cons = CountMinSketch(256, 4, conservative=True)
         # feed in batches, as the build path does
         for off in range(0, len(stream), 8192):
-            cons.update_batch(stream[off:off + 8192], conservative=True)
+            cons.update_batch(stream[off:off + 8192])
         e_plain = plain.query_batch(vals).astype(np.int64)
         e_cons = cons.query_batch(vals).astype(np.int64)
         assert (e_cons >= counts).all()  # still overestimate-only
@@ -174,14 +174,14 @@ class TestCMSConservative:
         stream = self._zipf_stream(40_000, 3000, seed=1)
         vals, counts = np.unique(stream, return_counts=True)
         half = len(stream) // 2
-        a = CountMinSketch(256, 4).update_batch(stream[:half], conservative=True)
-        b = CountMinSketch(256, 4).update_batch(stream[half:], conservative=True)
+        a = CountMinSketch(256, 4, conservative=True).update_batch(stream[:half])
+        b = CountMinSketch(256, 4, conservative=True).update_batch(stream[half:])
         a.merge(b)
         assert (a.query_batch(vals).astype(np.int64) >= counts).all()
 
     def test_duplicates_within_batch_consistent(self):
-        c = CountMinSketch(1024, 3)
-        c.update_batch(["x", "x", "x", "y"], conservative=True)
+        c = CountMinSketch(1024, 3, conservative=True)
+        c.update_batch(["x", "x", "x", "y"])
         assert int(c.query_batch(["x"])[0]) >= 3
         assert int(c.query_batch(["y"])[0]) >= 1
         assert c.total == 4

@@ -90,11 +90,10 @@ def test_conservative_cms_bounds(stream):
     toks = [f"t{t}" for t, _ in stream]
     cnts = np.array([c for _, c in stream], dtype=np.int64)
     plain = CountMinSketch(32, 3).update_batch(toks, cnts)
-    cons = CountMinSketch(32, 3)
+    cons = CountMinSketch(32, 3, conservative=True)
     third = max(1, len(toks) // 3)
     for off in range(0, len(toks), third):
-        cons.update_batch(toks[off:off + third], cnts[off:off + third],
-                          conservative=True)
+        cons.update_batch(toks[off:off + third], cnts[off:off + third])
     uniq = sorted(set(toks))
     true = {t: 0 for t in uniq}
     for t, c in stream:

@@ -1,12 +1,71 @@
 """Property tests: adaptive serde encodings round-trip losslessly at
-every fill level, and encoding choice never changes logical state."""
+every fill level, encoding choice never changes logical state, and
+every registered kind keeps the serde contract (typed ``from_bytes``,
+``==`` as byte equality)."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
+from sketchlib.core import serde
 from sketchlib.core.bloom import BloomFilter
 from sketchlib.core.cms import CountMinSketch
+from sketchlib.core.countsketch import CountSketch
+from sketchlib.core.fd import FrequentDirections
 from sketchlib.core.hll import HyperLogLog
+from sketchlib.core.kll import KLL
+from sketchlib.core.sample import BottomKSample, WeightedBottomKSample
+from sketchlib.core.tdigest import TDigest
+from sketchlib.core.theta import ThetaSketch
+
+# one maker per registered kind: (keys, floats) -> sketch
+MAKERS = {
+    BloomFilter: lambda ks, xs: BloomFilter(1 << 12, 4).update_batch(ks),
+    HyperLogLog: lambda ks, xs: HyperLogLog(8).update_batch(ks),
+    CountMinSketch: lambda ks, xs: CountMinSketch(
+        64, 3, conservative=len(ks) % 2 == 1).update_batch(ks),
+    TDigest: lambda ks, xs: TDigest(20).update_batch(xs),
+    KLL: lambda ks, xs: KLL(16).update_batch(xs),
+    ThetaSketch: lambda ks, xs: ThetaSketch(16).update_batch(ks),
+    BottomKSample: lambda ks, xs: BottomKSample(8).update_batch(ks),
+    CountSketch: lambda ks, xs: CountSketch(64, 3).update_batch(ks),
+    FrequentDirections: lambda ks, xs: FrequentDirections(4, 3)
+    .update_batch(np.c_[xs, -xs, xs * xs]),
+    WeightedBottomKSample: lambda ks, xs: WeightedBottomKSample(8)
+    .update_batch(ks, xs + 1.0),
+}
+
+
+def test_makers_cover_every_registered_kind():
+    assert set(MAKERS) == set(serde._REGISTRY.values())
+
+
+def _inputs(n, salt):
+    keys = [f"k{salt}-{i % 40}" for i in range(n)]
+    return keys, np.arange(n, dtype=np.float64) % (7 + salt % 5)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.integers(min_value=0, max_value=300),
+       st.integers(min_value=0, max_value=2),
+       st.integers(min_value=0, max_value=2))
+def test_every_kind_roundtrips_and_eq_is_byte_equality(n, salt_a, salt_b):
+    blobs = {}
+    for cls, make in MAKERS.items():
+        a, b = make(*_inputs(n, salt_a)), make(*_inputs(n, salt_b))
+        blob = a.to_bytes()
+        back = cls.from_bytes(blob)
+        assert type(back) is cls and back.to_bytes() == blob
+        assert type(serde.sketch_from_bytes(blob)) is cls
+        if cls.__eq__ is serde.same_state:
+            assert back == a
+            assert (a == b) == (blob == b.to_bytes())
+        blobs[cls] = blob
+    for cls in MAKERS:
+        for other, blob in blobs.items():
+            if other is not cls:
+                with pytest.raises(ValueError, match="not a"):
+                    cls.from_bytes(blob)
 
 
 @settings(max_examples=40, deadline=None)

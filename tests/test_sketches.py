@@ -301,7 +301,7 @@ class TestKernelReviewRound4:
         c1 = CountMinSketch(w=64, d=2).update_batch(["x"])
         c2 = CountMinSketch(w=64, d=2).update_batch(["x"])
         assert c1 == c2
-        c2.cu_tainted = True
+        c2.conservative = True
         assert c1 != c2  # inner_product would refuse c2 but not c1
 
     def test_truncated_blobs_refuse(self):

@@ -335,3 +335,23 @@ def test_narrow_fold_null_numeric_group_key_across_batches(spark):
             assert r["n_rows"] == 40, r
             # the scenario really happened: many chunked partials folded
             assert r["n_partials"] > 1, r
+
+
+@pytest.mark.parametrize("parts", [1, 4])
+def test_ungrouped_build_equals_constant_group(pages_tiny, parts):
+    """``build_sketches(df, [], specs)`` builds one sketch per spec over
+    the whole input, with the bytes and counts of a build grouped by a
+    constant column, on the in-task fold (one partition) and through
+    the merge tree."""
+    specs = [SketchSpec("b", "bloom", "url", {"m": 1 << 14, "k": 4}),
+             SketchSpec("c", "cms", "text", {"w": 512, "d": 3},
+                        tokenize=True),
+             SketchSpec("k", "kll", "html_len", {"k": 64})]
+    d = pages_tiny.repartition(parts).withColumn(
+        "html_len", F.length("html").cast("double"))
+    cols = ["sketch_name", "sketch", "n_rows", "n_partials"]
+    ungrouped = build_sketches(d, [], specs)
+    assert ungrouped.columns == cols
+    constant = build_sketches(d.withColumn("g", F.lit(1)), ["g"], specs)
+    assert (sorted(map(tuple, ungrouped.collect()))
+            == sorted(map(tuple, constant.select(*cols).collect())))

@@ -44,10 +44,17 @@ The media trace runs ``q_media_features`` and the fixture generator
 the expected list with a reason per entry, and
 ``tests/test_reachability.py`` asserts the two match. ``--trace all``
 runs every catalog entry over the tables in SF_DIR and prints, per
-sketchlib module, unexecuted/listed statement counts; code that ran
-only when its module was imported, before tracing began, counts as
-unexecuted there (the media trace reloads its modules under the
-tracer).
+sketchlib module, unexecuted/listed statement counts. It runs the
+catalog twice: as read, and with every table ``queries.load`` returns
+repartitioned to 4, because a one-file table is one partition and its
+builds fold in the task that built them, so only the second pass runs
+the shuffle merge tree and the kernels' ``merge``. Blind spots of
+``--trace all``: code that ran only when its module was imported,
+before tracing began, counts as unexecuted (the media trace reloads
+its modules under the tracer); so does code reached only from outside
+the catalog (the CLI, the benchmarks, the streaming operators) and
+every ``pandas_udf`` body; and each replay runs its recorded operator
+over one partition holding every batch.
 """
 from __future__ import annotations
 
@@ -311,21 +318,32 @@ def media_trace(spark) -> list[str]:
 
 
 def package_trace(spark, sf_dir: str) -> tuple[Counter, Counter, list[str]]:
-    """Run every catalog entry over the tables in ``sf_dir``; return
-    per-module counts of listed and of unexecuted statements, and the
-    entries and replays that failed."""
+    """Run every catalog entry over the tables in ``sf_dir`` twice: as
+    read, and with every table ``queries.load`` returns repartitioned
+    to 4 (so the builds take the shuffle merge tree and the kernels
+    merge). Return per-module counts of listed and of unexecuted
+    statements, and the entries and replays that failed."""
     import __spark_entry__ as E
+    from sketchlib.spark import queries as Q
     rels = sorted(os.path.relpath(p, REPO) for p in glob.glob(
         os.path.join(REPO, "sketchlib/**/*.py"), recursive=True))
     failed = []
+    load = Q.load
 
     def run(rec):
-        for name, query in E.queries().items():
+        for parts in (None, 4):
+            Q.load = load if parts is None else (
+                lambda *a, **kw: load(*a, **kw).repartition(parts))
             try:
-                query(spark, sf_dir).collect()
-            except Exception as e:  # noqa: BLE001 - reported, not fatal
-                failed.append(f"{name}: {type(e).__name__}: {e}")
-            failed.extend(rec.replay())
+                for name, query in E.queries().items():
+                    try:
+                        query(spark, sf_dir).collect()
+                    except Exception as e:  # noqa: BLE001 - reported
+                        failed.append(f"{name} (partitions: {parts}): "
+                                      f"{type(e).__name__}: {e}")
+                    failed.extend(rec.replay())
+            finally:
+                Q.load = load
 
     hit, more = run_traced(run, rels)
     listed = Counter({rel: len(statements(rel)) for rel in rels})
